@@ -295,7 +295,7 @@ def main() -> None:
     elif args.cmd == "query-multifield":
         from pyf_aggregator_spark.search.wand import (
             load_multifield_index,
-            wand_topk_multifield,
+            wand_topk,
         )
 
         weights = {
@@ -304,7 +304,7 @@ def main() -> None:
             if kv.strip()
         }
         idx = load_multifield_index(spark, args.index_dir)
-        rows = wand_topk_multifield(idx, weights, args.query, k=args.k).collect()
+        rows = wand_topk(idx, args.query, k=args.k, weights=weights).collect()
         out = {
             "cmd": "query-multifield",
             "hits": [(r["doc_id"], r["score"]) for r in rows],

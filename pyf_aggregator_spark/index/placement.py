@@ -63,7 +63,9 @@ def perfect_salts(keys: list) -> dict:
 def salt_col(salts: dict, key_col):
     """The placement column as a literal-map EXPRESSION over ``key_col``
     (no join, no broadcast): keys outside the map (none by construction)
-    get NULL and still group correctly, just without placement."""
+    get NULL and still group correctly, just without placement.
+    ``try_element_at`` keeps that NULL under ANSI mode, where
+    ``element_at`` raises MAP_KEY_DOES_NOT_EXIST instead."""
     from pyspark.sql import functions as F
 
     pairs = [
@@ -71,4 +73,4 @@ def salt_col(salts: dict, key_col):
         for kv in sorted(salts.items(), key=lambda it: str(it[0]))
         for v in kv
     ]
-    return F.element_at(F.create_map(*pairs), key_col)
+    return F.try_element_at(F.create_map(*pairs), key_col)

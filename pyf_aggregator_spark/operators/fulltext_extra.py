@@ -180,10 +180,9 @@ def ft_multifield_5field(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass (weight folded into idf, per-term avgdl). The DataFrame-engine
     twin (bm25_topk_multifield over query-time indexes) stays as the
     pytest cross-check in tests/test_multifield_pipeline.py."""
-    from pyf_aggregator_spark.search.wand import wand_topk_multifield
-
-    return wand_topk_multifield(
-        documents_multifield_index(spark, sf_dir), _5F_WEIGHTS, _5F_QUERY, k=25
+    return wand_topk(
+        documents_multifield_index(spark, sf_dir), _5F_QUERY, k=25,
+        weights=_5F_WEIGHTS,
     )
 
 
@@ -531,7 +530,7 @@ def ft_typesense_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``prefix``: last-token autocomplete with Typesense's
       single-completion scoring — the expansion set is one kernel SLOT,
       each doc scores its BEST completion (search/prefix.py +
-      wand_topk_slots; the oracle replays expansion + slot-max from
+      wand_topk's slot_terms; the oracle replays expansion + slot-max from
       dfreq independently);
     - ``infix``: within-word matching (Typesense infix) — the token
       expands to the vocabulary words CONTAINING it, one slot, per-doc
@@ -733,11 +732,11 @@ def ft_mf_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
       (field, term) pairs;
     - ``drop``: drop_tokens over multifield AND — rightmost token
       dropped per retry, exact found from the same kernel pass
-      (search/fallback.py::drop_tokens_mf_with_found);
+      (search/fallback.py::drop_tokens_with_found, weights=);
     - ``prefix``: last-token expansion against the summed-df
       vocabulary; per field the expansion set is ONE scoring slot (best
-      completion), fields sum under their weights (_mf_spec's
-      field×token slots);
+      completion), fields sum under their weights (the
+      field×token slots of wand._query_spec);
     - ``typo``: num_typos=2 correction against the artifact's summed-df
       vocabulary, then the weighted disjunctive query;
     - ``infix``: within-word expansion (vocabulary ``contains``,
@@ -751,21 +750,19 @@ def ft_mf_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
       df-chosen rewrite from mfvocab in SQL
       (oracle/sql.py::split_join_multifield_sql)."""
     from pyf_aggregator_spark.functions.tokenize import tokenize_py
-    from pyf_aggregator_spark.search.fallback import drop_tokens_mf_with_found
+    from pyf_aggregator_spark.search.fallback import drop_tokens_with_found
     from pyf_aggregator_spark.search.infix import expand_infix
     from pyf_aggregator_spark.search.prefix import expand_prefix
     from pyf_aggregator_spark.search.typo import correct_terms
-    from pyf_aggregator_spark.search.wand import wand_topk_multifield
-
     mf = documents_multifield_index(spark, sf_dir)
     sum_stats = mf["term_stats"].groupBy("term").agg(F.sum("df").alias("df"))
 
-    and_side = wand_topk_multifield(
-        mf, _5F_WEIGHTS, _MF_AND_Q, k=_MF_K, mode="and"
+    and_side = wand_topk(
+        mf, _MF_AND_Q, k=_MF_K, mode="and", weights=_5F_WEIGHTS
     ).select(F.lit("and").alias("behavior"), "doc_id", "score")
 
-    drop_hits, _used, _found = drop_tokens_mf_with_found(
-        mf, _5F_WEIGHTS, tokenize_py(_MF_DROP_Q), k=_MF_K, threshold=1
+    drop_hits, _used, _found = drop_tokens_with_found(
+        mf, _MF_DROP_Q, k=_MF_K, threshold=1, weights=_5F_WEIGHTS
     )
     drop_side = spark.createDataFrame(
         [(h["doc_id"], h["score"]) for h in drop_hits],
@@ -775,8 +772,9 @@ def ft_mf_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     *fixed, last = tokenize_py(_MF_PREFIX_Q)
     expansions = expand_prefix(sum_stats, last) or [last]
     slot_terms = [[t] for t in dict.fromkeys(fixed)] + [expansions]
-    prefix_side = wand_topk_multifield(
-        mf, _5F_WEIGHTS, "", k=_MF_K, mode="or", slot_terms=slot_terms
+    prefix_side = wand_topk(
+        mf, "", k=_MF_K, mode="or", slot_terms=slot_terms,
+        weights=_5F_WEIGHTS,
     ).select(F.lit("prefix").alias("behavior"), "doc_id", "score")
 
     from pyf_aggregator_spark.search.wand import _known_terms
@@ -786,15 +784,16 @@ def ft_mf_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
         known_terms=_known_terms(mf, tokenize_py(_MF_TYPO_Q)),
     )
     corrected = sorted({v for v in mapping.values() if v is not None})
-    typo_side = wand_topk_multifield(
-        mf, _5F_WEIGHTS, " ".join(corrected), k=_MF_K, mode="or"
+    typo_side = wand_topk(
+        mf, " ".join(corrected), k=_MF_K, mode="or", weights=_5F_WEIGHTS
     ).select(F.lit("typo").alias("behavior"), "doc_id", "score")
 
     infix_slot = list(
         dict.fromkeys([_MF_INFIX_Q] + expand_infix(sum_stats, _MF_INFIX_Q))
     )
-    infix_side = wand_topk_multifield(
-        mf, _5F_WEIGHTS, "", k=_MF_K, mode="or", slot_terms=[infix_slot]
+    infix_side = wand_topk(
+        mf, "", k=_MF_K, mode="or", slot_terms=[infix_slot],
+        weights=_5F_WEIGHTS,
     ).select(F.lit("infix").alias("behavior"), "doc_id", "score")
 
     # split_join × query_by through the FACADE (the wrapper probes the

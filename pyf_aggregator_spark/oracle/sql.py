@@ -244,7 +244,7 @@ def prefix_multifield_sql(
     SUMMED-df vocabulary (replayed here from mfvocab, independently of
     the engine); per FIELD the expansion set contributes each doc's
     BEST completion (max), fixed tokens contribute normally, fields
-    sum under their weights — mirroring _mf_spec's (field, token)
+    sum under their weights — mirroring wand._query_spec's (field, token)
     scoring slots. Disjunctive."""
     toks = tokenize_py(query)
     assert toks, "prefix oracle needs a non-empty query"
@@ -530,7 +530,7 @@ def prefix_topk_sql(query: str, k: int = 10, max_expansions: int = 50) -> str:
     capped — replayed HERE from dfreq, independently of the engine's
     expansion), fixed tokens score normally, and the expansion set
     contributes each doc's BEST completion (MAX), mirroring
-    search/prefix.py + wand.py::wand_topk_slots. Disjunctive across
+    search/prefix.py + wand.py::wand_topk(slot_terms=). Disjunctive across
     slots."""
     toks = tokenize_py(query)
     assert toks, "prefix oracle needs a non-empty query"
@@ -580,7 +580,7 @@ def infix_topk_sql(query: str, k: int = 10, max_expansions: int = 50) -> str:
     the vocabulary words CONTAINING it (df-ranked, capped — replayed
     here from dfreq with a LIKE '%tok%' scan, independently of the
     engine's expansion), and the expansion set scores each doc's BEST
-    matched word (MAX), mirroring search/infix.py + wand_topk_slots'
+    matched word (MAX), mirroring search/infix.py + wand_topk's
     single-slot scoring."""
     toks = tokenize_py(query)
     assert len(toks) == 1, "infix oracle grades a single-token probe"

@@ -19,7 +19,8 @@ applies silently) and returns a Typesense-shaped response dict:
                          16-20 uses 10,10,5,3,1 over name,title,
                          first_chapter,main_content,changelog); routed
                          to the build-time multifield artifact through
-                         one WAND pass (wand_topk_multifield)
+                         one WAND pass (the wand_* entry points with
+                         weights=)
     filter_by            "field:=value" / "field:=[v1,v2]", joined by &&
     facet_by             comma list of facet fields
     max_facet_values     cap on listed values per facet field (default
@@ -484,8 +485,9 @@ def _search_one(spark: SparkSession, sf_dir: str, params: dict) -> dict:
     from pyf_aggregator_spark.search.fallback import drop_tokens_with_found
     from pyf_aggregator_spark.search.typo import correct_terms
     from pyf_aggregator_spark.search.wand import (
+        _known_terms,
         wand_match_ids,
-        wand_match_ids_multifield,
+        wand_score_matches,
         wand_topk_with_found,
     )
 
@@ -661,12 +663,13 @@ def _search_one(spark: SparkSession, sf_dir: str, params: dict) -> dict:
 
     # ---------------- ranked search
     # query_by / query_by_weights (the reference's PRIMARY surface,
-    # AGENTS.md:16-20) route to the build-time multifield artifact
-    # through wand_topk_multifield — same engine as the graded
-    # ft_multifield_5field_weighted row. Typo correction then uses the
-    # artifact's own vocabulary (df summed across fields).
+    # AGENTS.md:16-20) route to the build-time multifield artifact: idx
+    # is then the multifield handle and every wand_* call below carries
+    # weights= — same engine as the graded ft_multifield_5field_weighted
+    # row. Typo correction then uses the artifact's own vocabulary (df
+    # summed across fields).
     query_by = params.get("query_by")
-    mf = weights = None
+    weights = None
     if query_by:
         from pyf_aggregator_spark.operators.fulltext_extra import (
             documents_multifield_index,
@@ -683,17 +686,16 @@ def _search_one(spark: SparkSession, sf_dir: str, params: dict) -> dict:
             weights = dict(zip(fields, wvals))
         else:
             weights = {f: 1.0 for f in fields}
-        mf = documents_multifield_index(spark, sf_dir)
-        unknown = sorted(set(fields) - set(mf["avgdl_by_field"]))
+        idx = documents_multifield_index(spark, sf_dir)
+        unknown = sorted(set(fields) - set(idx["avgdl_by_field"]))
         if unknown:
             raise ValueError(f"unknown query_by fields: {unknown}")
-        typo_stats = mf["term_stats"].groupBy("term").agg(
+        typo_stats = idx["term_stats"].groupBy("term").agg(
             F.sum("df").alias("df")
         )
-        typo_dir = mf["dir"]
     else:
         idx = documents_segment_index(spark, sf_dir)
-        typo_stats, typo_dir = idx["term_stats"], idx["dir"]
+        typo_stats = idx["term_stats"]
     terms = phrase_terms if phrase_terms is not None else tokenize_py(q)
     num_typos = int(params.get("num_typos", 2))
     infix_mode = str(params.get("infix", "off")).lower()
@@ -703,11 +705,9 @@ def _search_one(spark: SparkSession, sf_dir: str, params: dict) -> dict:
         num_typos = 0
         infix_mode = "off"
     if num_typos > 0:
-        from pyf_aggregator_spark.search.wand import _known_terms
-
         mapping = correct_terms(
-            spark, typo_dir, terms, typo_stats, num_typos=num_typos,
-            known_terms=_known_terms(mf if mf is not None else idx, terms),
+            spark, idx["dir"], terms, typo_stats, num_typos=num_typos,
+            known_terms=_known_terms(idx, terms),
         )
         if infix_mode == "off":
             # a failed correction contributes NOTHING (typo.correct_terms
@@ -791,7 +791,6 @@ def _search_one(spark: SparkSession, sf_dir: str, params: dict) -> dict:
     phrase_verified = None
     if phrase_terms is not None:
         from pyf_aggregator_spark.search.phrase import phrase_regex
-        from pyf_aggregator_spark.search.wand import wand_score_matches
 
         mode = "and"  # adjacency implies every token present
         phrase_verified = (
@@ -809,16 +808,18 @@ def _search_one(spark: SparkSession, sf_dir: str, params: dict) -> dict:
         # completion in and-mode, contradicting found)
         if phrase_verified is not None:
             return phrase_verified.select("doc_id")
-        if mf is not None:
-            return wand_match_ids_multifield(
-                mf, sorted(weights), query, allowed=allowed,
-                mode=mode, slot_terms=slot_terms,
-            )
         return wand_match_ids(
-            idx, query, mode=mode, allowed=allowed, slot_terms=slot_terms
+            idx, query, mode=mode, allowed=allowed, slot_terms=slot_terms,
+            weights=weights,
         )
 
     drop_threshold = int(params.get("drop_tokens_threshold", 0))
+    # prefix/infix (slot_terms) and phrases take precedence over the
+    # drop cascade, on both index kinds
+    _drop_case = (
+        phrase_verified is None and slot_terms is None
+        and drop_threshold and mode == "and"
+    )
 
     def _drop_cascade_rewrite():
         # Typesense's drop cascade on the NON-top-k ranked paths
@@ -831,25 +832,12 @@ def _search_one(spark: SparkSession, sf_dir: str, params: dict) -> dict:
         # top-k path keeps its consuming variant (its hits ride the
         # same kernel passes).
         nonlocal terms, query
-        if not (
-            phrase_verified is None and slot_terms is None
-            and drop_threshold and mode == "and"
-        ):
+        if not _drop_case:
             return None
-        from pyf_aggregator_spark.search.fallback import (
-            drop_tokens_mf_with_found,
+        _, used, found = drop_tokens_with_found(
+            idx, query, k=1, mode="and", threshold=drop_threshold,
+            allowed=allowed, weights=weights,
         )
-
-        if mf is not None:
-            _, used, found = drop_tokens_mf_with_found(
-                mf, weights, terms, k=1, threshold=drop_threshold,
-                allowed=allowed,
-            )
-        else:
-            _, used, found = drop_tokens_with_found(
-                idx, query, k=1, mode="and", threshold=drop_threshold,
-                allowed=allowed,
-            )
         terms = used
         query = " ".join(used)
         return found
@@ -929,26 +917,10 @@ def _search_one(spark: SparkSession, sf_dir: str, params: dict) -> dict:
             g = grouped_from_scored(
                 phrase_verified, docs, group_by, limit, with_counts=True
             )
-        elif mf is not None:
-            from pyf_aggregator_spark.search.wand import (
-                wand_score_matches_multifield,
-            )
-
-            scored_set = wand_score_matches_multifield(
-                mf, weights, query, allowed=allowed,
-                mode=mode, slot_terms=slot_terms,
-            )
-            if want_facets:
-                scored_set = scored_set.persist()
-            g = grouped_from_scored(
-                scored_set, docs, group_by, limit, with_counts=True
-            )
         else:
-            from pyf_aggregator_spark.search.wand import wand_score_matches
-
             scored_set = wand_score_matches(
                 idx, query, mode=mode, allowed=allowed,
-                slot_terms=slot_terms,
+                slot_terms=slot_terms, weights=weights,
             )
             if want_facets:
                 scored_set = scored_set.persist()
@@ -1012,10 +984,6 @@ def _search_one(spark: SparkSession, sf_dir: str, params: dict) -> dict:
     # curation probe from it — the same reuse the phrase path pioneered.
     # The drop_tokens cascade keeps its own consuming passes (its found
     # counts drive the rewrite), so it stays on the two-pass shape.
-    _drop_case = (
-        phrase_verified is None and slot_terms is None
-        and drop_threshold and mode == "and"
-    )
     ranked_scored = None
     if phrase_verified is not None:
         # top-k + exact found from the verified set (two bounded
@@ -1030,22 +998,10 @@ def _search_one(spark: SparkSession, sf_dir: str, params: dict) -> dict:
         ]
         found = phrase_verified.count()
     elif params.get("facet_by") and not _drop_case:
-        if mf is not None:
-            from pyf_aggregator_spark.search.wand import (
-                wand_score_matches_multifield,
-            )
-
-            ranked_scored = wand_score_matches_multifield(
-                mf, weights, query, allowed=allowed,
-                mode=mode, slot_terms=slot_terms,
-            ).persist()
-        else:
-            from pyf_aggregator_spark.search.wand import wand_score_matches
-
-            ranked_scored = wand_score_matches(
-                idx, query, mode=mode, allowed=allowed,
-                slot_terms=slot_terms,
-            ).persist()
+        ranked_scored = wand_score_matches(
+            idx, query, mode=mode, allowed=allowed,
+            slot_terms=slot_terms, weights=weights,
+        ).persist()
         topk = (
             ranked_scored.orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
@@ -1055,44 +1011,10 @@ def _search_one(spark: SparkSession, sf_dir: str, params: dict) -> dict:
             {"doc_id": r["doc_id"], "score": r["score"]} for r in topk
         ]
         found = ranked_scored.count()
-    elif mf is not None:
-        from pyf_aggregator_spark.search.fallback import (
-            drop_tokens_mf_with_found,
-        )
-        from pyf_aggregator_spark.search.wand import (
-            wand_topk_multifield_with_found,
-        )
-
-        # defaults compose on the PRIMARY multifield surface (VERDICT
-        # r4's largest parity gap): prefix rides in as slot_terms
-        # (per-field best-completion scoring), and-mode requires every
-        # token in some queried field, and drop_tokens cascades over
-        # multifield and-mode passes. Prefix takes precedence over the
-        # drop cascade, mirroring the single-field branch order.
-        if slot_terms is None and drop_threshold and mode == "and":
-            all_rows, used_terms, found = drop_tokens_mf_with_found(
-                mf, weights, terms, k=k, threshold=drop_threshold,
-                allowed=allowed,
-            )
-            terms = used_terms
-            query = " ".join(used_terms)
-        else:
-            all_rows, found = wand_topk_multifield_with_found(
-                mf, weights, query, k=k, allowed=allowed,
-                mode=mode, slot_terms=slot_terms,
-            )
-    elif slot_terms is not None:
-        from pyf_aggregator_spark.search.wand import (
-            wand_topk_slots_with_found,
-        )
-
-        all_rows, found = wand_topk_slots_with_found(
-            idx, slot_terms, k=k, mode=mode, allowed=allowed
-        )
-    elif drop_threshold and mode == "and":
+    elif _drop_case:
         all_rows, used_terms, found = drop_tokens_with_found(
             idx, query, k=k, mode=mode, threshold=drop_threshold,
-            allowed=allowed,
+            allowed=allowed, weights=weights,
         )
         terms = used_terms  # highlight/facets mark the SURVIVING tokens
         query = " ".join(used_terms)
@@ -1102,7 +1024,8 @@ def _search_one(spark: SparkSession, sf_dir: str, params: dict) -> dict:
         # engine a ranked search touches (no documents_index build, no
         # full-match scoring job)
         all_rows, found = wand_topk_with_found(
-            idx, query, k=k, mode=mode, allowed=allowed
+            idx, query, k=k, mode=mode, allowed=allowed,
+            slot_terms=slot_terms, weights=weights,
         )
     if pinned or hidden_ids:
         # membership + score + existence of the curated ids, against
@@ -1129,21 +1052,10 @@ def _search_one(spark: SparkSession, sf_dir: str, params: dict) -> dict:
             # tombstone-exact, so membership+score of the curated ids is
             # a bounded isin over it — no extra kernel pass
             m = ranked_scored.filter(F.col("doc_id").isin(curated_ids))
-        elif mf is not None:
-            from pyf_aggregator_spark.search.wand import (
-                wand_score_matches_multifield,
-            )
-
-            m = wand_score_matches_multifield(
-                mf, weights, query, allowed=tiny_allowed,
-                mode=mode, slot_terms=slot_terms,
-            )
         else:
-            from pyf_aggregator_spark.search.wand import wand_score_matches
-
             m = wand_score_matches(
                 idx, query, mode=mode, allowed=tiny_allowed,
-                slot_terms=slot_terms,
+                slot_terms=slot_terms, weights=weights,
             )
         curated_scores = {r["doc_id"]: r["score"] for r in m.collect()}
         existing_ids = {

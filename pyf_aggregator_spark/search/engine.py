@@ -152,7 +152,8 @@ def bm25_topk_batch(
     assigned by a row_number window over the QUERIES df — single
     partition, but that df is the query batch (driver-created, ≪ corpus;
     200 rows in the bench), not data.  The string comes back via the
-    qstats broadcast, so the public schema is unchanged.
+    qstats broadcast, so the public schema is unchanged. A repeated
+    query_id is answered as separate queries sharing that id.
     """
     from pyspark.sql import Window
 
@@ -161,8 +162,12 @@ def bm25_topk_batch(
             F.split(F.lower("query"), r"[\s.\-_@/]+"), lambda t: t != F.lit("")
         )
     )
+    # ordered on EVERY query column: the qt and qstats branches each
+    # evaluate this window, and a tie (a repeated query_id) could number
+    # the rows differently in each, pairing one query's terms with
+    # another's mode and k
     queries = queries.withColumn(
-        "qid", F.row_number().over(Window.orderBy("query_id"))
+        "qid", F.row_number().over(Window.orderBy(*queries.columns))
     )
     qt = queries.select("qid", F.explode(toks).alias("term"))
     qstats = queries.select(

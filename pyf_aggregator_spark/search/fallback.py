@@ -52,11 +52,15 @@ def drop_tokens_with_found(
     mode: str = "and",
     threshold: int = 1,
     allowed=None,
+    weights: dict[str, float] | None = None,
 ) -> tuple[list[dict], list[str], int]:
     """Facade variant: → (hits, used_terms, found). Each retry is one
     wand_topk_with_found pass, so the threshold check uses the EXACT
     match count (no extra probe job) and the final ``found`` is
-    Typesense's — all from the same kernel passes."""
+    Typesense's — all from the same kernel passes. ``weights`` makes it
+    the multifield cascade (query_by × drop_tokens_threshold — the
+    reference's primary surface runs BOTH defaults): and-mode then
+    requires every token in at least one queried field."""
     from pyf_aggregator_spark.search.wand import wand_topk_with_found
 
     terms = tokenize_py(query)
@@ -64,36 +68,8 @@ def drop_tokens_with_found(
         return [], [], 0
     while True:
         hits, found = wand_topk_with_found(
-            idx, " ".join(terms), k=k, mode=mode, allowed=allowed
-        )
-        if len(terms) == 1 or found >= threshold:
-            return hits, terms, found
-        terms = terms[:-1]  # right-to-left, Typesense's default
-
-
-def drop_tokens_mf_with_found(
-    mf: dict,
-    weights: dict[str, float],
-    terms: list[str],
-    k: int = 10,
-    threshold: int = 1,
-    allowed=None,
-) -> tuple[list[dict], list[str], int]:
-    """Multifield drop_tokens cascade (query_by × drop_tokens_threshold
-    — the reference's primary surface runs BOTH defaults): and-mode over
-    token groups (every token must match in at least one queried field),
-    rightmost token dropped per retry, each retry one multifield WAND
-    pass with the exact match count riding the same kernel pass. →
-    (hits, used_terms, found)."""
-    from pyf_aggregator_spark.search.wand import (
-        wand_topk_multifield_with_found,
-    )
-
-    if not terms:
-        return [], [], 0
-    while True:
-        hits, found = wand_topk_multifield_with_found(
-            mf, weights, " ".join(terms), k=k, allowed=allowed, mode="and"
+            idx, " ".join(terms), k=k, mode=mode, allowed=allowed,
+            weights=weights,
         )
         if len(terms) == 1 or found >= threshold:
             return hits, terms, found

@@ -72,10 +72,10 @@ def wand_topk_infix(
     containing it and scores as one slot (per-doc max over the matched
     words) — the engine behind the facade's infix param and the graded
     ``ft_typesense_defaults`` infix branch."""
-    from pyf_aggregator_spark.search.wand import wand_topk_slots
+    from pyf_aggregator_spark.search.wand import wand_topk
 
     spark = idx["segments"].sparkSession
     slot_terms = infix_slot_terms(idx, query, max_expansions)
     if not slot_terms:
         return spark.createDataFrame([], "doc_id long, score double")
-    return wand_topk_slots(idx, slot_terms, k=k, mode=mode)
+    return wand_topk(idx, "", k=k, mode=mode, slot_terms=slot_terms)

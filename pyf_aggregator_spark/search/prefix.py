@@ -108,10 +108,10 @@ def wand_topk_prefix(
     and expanded against the vocabulary; fixed tokens stay exact. The
     expansion set scores as one slot (max over completions) — rank-
     identical to Typesense's best-completion scoring."""
-    from pyf_aggregator_spark.search.wand import wand_topk_slots
+    from pyf_aggregator_spark.search.wand import wand_topk
 
     spark = idx["segments"].sparkSession
     slot_terms = prefix_slot_terms(idx, query, max_expansions)
     if not slot_terms:
         return spark.createDataFrame([], "doc_id long, score double")
-    return wand_topk_slots(idx, slot_terms, k=k, mode=mode)
+    return wand_topk(idx, "", k=k, mode=mode, slot_terms=slot_terms)

@@ -14,6 +14,16 @@ Process intervals in descending upper-bound order; once the bound falls
 below the current k-th exact score, every remaining interval is
 prunable and decoding stops. Exact scores use the same float64 math as
 the DataFrame engine, so results stay rank-identical to the oracle.
+
+Entry points: ``load_index`` / ``load_multifield_index`` open a handle;
+``wand_topk``, ``wand_topk_with_found``, ``wand_match_ids`` and
+``wand_score_matches`` answer one query on either handle kind, and
+``wand_topk_batch`` answers many on a single-field handle. Every
+single-query call runs the same three steps: ``_query_spec`` turns the
+query (or prefix/infix ``slot_terms``, plus ``weights`` on multifield
+handles) into plain kernel inputs, ``_kernel_input`` scans the blocks
+and unions the sentinel rows, and ``_kernel`` builds the one
+``applyInPandas`` function for the requested output kind.
 """
 
 from __future__ import annotations
@@ -194,40 +204,27 @@ def _known_terms(idx: dict, terms: list[str]) -> set[str] | None:
     return {t for t in terms if t in vocab}
 
 
-def _idf_rows(idx: dict, terms: list[str]) -> list[tuple[str, float]]:
-    """(term, idf) for the terms present in the index — dictionary hit
-    when loaded, pushed-down term_stats scan otherwise."""
+def _idf_lookup(
+    idx: dict, terms: list[str], fields: list[str] | None = None
+) -> dict:
+    """idf of the keys present in the index: ``{term: idf}``, or
+    ``{(field, term): idf}`` when ``fields`` is given (multifield) —
+    dictionary hit when loaded, pushed-down term_stats scan otherwise."""
     d = _term_dict(idx)
+    keys = terms if fields is None else [(f, t) for f in fields for t in terms]
     if d is not None:
-        return [(t, d[t]) for t in terms if t in d]
+        return {key: d[key] for key in keys if key in d}
+    cond = F.col("term").isin(terms)
+    if fields is None:
+        rows = idx["term_stats"].filter(cond).select("term", "idf").collect()
+        return {r["term"]: r["idf"] for r in rows}
     rows = (
         idx["term_stats"]
-        .filter(F.col("term").isin(terms))
-        .select("term", "idf")
-        .collect()
-    )
-    return [(r["term"], r["idf"]) for r in rows]
-
-
-def _mf_idf_rows(
-    idx: dict, terms: list[str], fields: list[str]
-) -> list[tuple[str, str, float]]:
-    """Multifield twin of _idf_rows: (field, term, idf) rows."""
-    d = _term_dict(idx)
-    if d is not None:
-        return [
-            (f, t, d[(f, t)])
-            for f in fields
-            for t in terms
-            if (f, t) in d
-        ]
-    rows = (
-        idx["term_stats"]
-        .filter(F.col("term").isin(terms) & F.col("field").isin(fields))
+        .filter(cond & F.col("field").isin(fields))
         .select("field", "term", "idf")
         .collect()
     )
-    return [(r["field"], r["term"], r["idf"]) for r in rows]
+    return {(r["field"], r["term"]): r["idf"] for r in rows}
 
 
 def _split_tombstones(
@@ -585,55 +582,35 @@ def _score_matches_one_query(
     return uids, sums
 
 
-def _score_matches_partition(
-    idf_map: dict[str, float], avgdl, mode: str, n_query_terms: int,
-    filtered: bool = False,
-    slots: dict[str, int] | None = None,
-    groups: dict[str, int] | None = None,
+def _kernel(
+    spec: dict, kind: str, k: int, bound_factor: dict[int, float],
+    filtered: bool,
 ):
-    """applyInPandas kernel emitting the full (doc_id, raw_score) match
-    set of one doc-range partition (no top-k cut) — the distributed
-    input to exact grouped search. bound_factor is irrelevant here:
-    block maxima only drive pruning, and this path prunes nothing."""
+    """The single-query applyInPandas kernel: blocks of one doc-range
+    partition → the ``kind`` of local answer the caller reduces.
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf, tomb_ids, allowed_map = _split_tombstones(pdf)
-        allowed = (allowed_map or {}).get("")
-        if filtered and allowed is None:
-            allowed = np.empty(0, dtype=np.int64)
-        if pdf.empty or (filtered and allowed.size == 0):
-            return pd.DataFrame({"doc_id": [], "raw_score": []}).astype(
-                {"doc_id": "int64", "raw_score": "float64"}
-            )
-        blocks = _PartitionBlocks(pdf, idf_map, avgdl)
-        ids, scores = _score_matches_one_query(
-            blocks, sorted(idf_map), mode, n_query_terms, tomb_ids,
-            allowed, slots, groups,
-        )
-        return pd.DataFrame({"doc_id": ids, "raw_score": scores})
+    - ``topk``: local top-k by block-max WAND. ``bound_factor[part_id]``
+      inflates stored block maxima when the corpus avgdl grew past the
+      partition's build-time avgdl after incremental appends (see
+      index/incremental.py).
+    - ``found``: the top-k plus one sentinel row (doc_id = COUNT_DOC_ID,
+      raw_score = exact local match count after tombstones/filter), so
+      Typesense's ``found`` comes out of the SAME kernel pass as the
+      top-k — no second engine, no full-score job.
+    - ``ids``: the exact local match set, unscored (facet input).
+    - ``scores``: every local match with its exact score, no top-k cut
+      (grouped-search input: nothing is pruned, so block maxima and
+      bound factors are unused).
 
-    return fn
-
-
-def _wand_partition(idf_map: dict[str, float], avgdl: float, k: int, mode: str,
-                    n_query_terms: int, bound_factor: dict[int, float],
-                    filtered: bool = False, count_matches: bool = False,
-                    slots: dict[str, int] | None = None,
-                    groups: dict[str, int] | None = None):
-    """applyInPandas kernel: blocks of one doc-range partition → local
-    top-k. ``bound_factor[part_id]`` inflates stored block maxima when
-    the corpus avgdl grew past the partition's build-time avgdl after
-    incremental appends (see index/incremental.py). Tombstones and the
-    optional filter allow-set arrive as sentinel rows in the same
-    partition group (see _split_tombstones); ``filtered`` marks the
-    filter active so a partition with an EMPTY allow set matches
-    nothing instead of everything.
-
-    ``count_matches`` additionally emits one sentinel row per partition
-    (doc_id = COUNT_DOC_ID, raw_score = exact local match count after
-    tombstones/filter) so Typesense's ``found`` comes out of the SAME
-    kernel pass as the top-k — no second engine, no full-score job
-    (VERDICT r3 "what's wrong" #2)."""
+    Tombstones and the optional filter allow-set arrive as sentinel
+    rows in the same partition group (see _split_tombstones);
+    ``filtered`` marks the filter active so a partition with an EMPTY
+    allow set matches nothing instead of everything. The closure holds
+    plain Python values only — never the handle or a DataFrame."""
+    idf_map, avgdl, mode = spec["idf_map"], spec["avgdl"], spec["mode"]
+    terms, n_groups = sorted(idf_map), spec["n_groups"]
+    slots, groups = spec["slots"], spec["groups"]
+    cols = ["doc_id"] if kind == "ids" else ["doc_id", "raw_score"]
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         part_id = int(pdf["part_id"].iloc[0])
@@ -642,20 +619,29 @@ def _wand_partition(idf_map: dict[str, float], avgdl: float, k: int, mode: str,
         if filtered and allowed is None:
             allowed = np.empty(0, dtype=np.int64)
         if pdf.empty or (filtered and allowed.size == 0):
-            return pd.DataFrame({"doc_id": [], "raw_score": []}).astype(
-                {"doc_id": "int64", "raw_score": "float64"}
-            )
+            return pd.DataFrame(
+                {"doc_id": np.empty(0, np.int64), "raw_score": np.empty(0)}
+            )[cols]
         blocks = _PartitionBlocks(pdf, idf_map, avgdl)
+        if kind == "ids":
+            return pd.DataFrame({"doc_id": _match_ids_one_query(
+                blocks, terms, mode, n_groups, tomb_ids, allowed, groups
+            )})
+        if kind == "scores":
+            ids, scores = _score_matches_one_query(
+                blocks, terms, mode, n_groups, tomb_ids, allowed, slots,
+                groups,
+            )
+            return pd.DataFrame({"doc_id": ids, "raw_score": scores})
         hits = _topk_one_query(
-            blocks, sorted(idf_map), k, mode, n_query_terms,
-            bound_factor.get(part_id, 1.0), tomb_ids, allowed, slots, groups,
+            blocks, terms, k, mode, n_groups, bound_factor.get(part_id, 1.0),
+            tomb_ids, allowed, slots, groups,
         )
         ids = [d for d, _ in hits]
         scores = [s for _, s in hits]
-        if count_matches:
+        if kind == "found":
             n = _match_ids_one_query(
-                blocks, sorted(idf_map), mode, n_query_terms, tomb_ids,
-                allowed, groups if groups is not None else slots,
+                blocks, terms, mode, n_groups, tomb_ids, allowed, groups
             ).size
             ids.append(COUNT_DOC_ID)
             scores.append(float(n))
@@ -713,7 +699,7 @@ _SEG_COLS = [
 
 
 def _sentinel_rows(
-    ranges: DataFrame, ids: DataFrame, block_id: int, kb_expr=None
+    ranges: DataFrame, ids: DataFrame, block_id: int, kb_expr
 ) -> DataFrame:
     """doc_id rows → kernel sentinel rows keyed to their owning part(s).
 
@@ -737,10 +723,10 @@ def _sentinel_rows(
     )
     # _kb MUST agree with the segment rows' placement key for the same
     # part — a mismatch would split a part's sentinels and blocks into
-    # different kernel groups and silently skip the delete/allow filter
-    kb_col = (kb_expr if kb_expr is not None else F.col("part_id")).cast("int")
+    # different kernel groups and silently skip the delete/allow filter.
+    # ``kb_expr`` is the handle's own layout expression, so it does.
     return ids.join(F.broadcast(ranges), cond).select(
-        kb_col.alias("_kb"),
+        kb_expr.cast("int").alias("_kb"),
         F.col("part_id").cast("int").alias("part_id"),
         term_col.alias("term"),
         F.lit(block_id).alias("block_id"),
@@ -754,33 +740,46 @@ def _sentinel_rows(
     )
 
 
-def _seg_with_tombstones(
-    idx: dict, seg: DataFrame, allowed: DataFrame | None = None
+FIELD_SEP = "\x1f"  # namespaces per-field terms in the multifield scan
+
+
+def _kernel_input(
+    idx: dict, terms: list[str], fields: list[str] | None = None,
+    allowed: DataFrame | None = None,
 ) -> DataFrame:
-    """Union tombstone (and optional filter allow-set) sentinel rows
-    into the kernel input so both travel the same partition-keyed
-    shuffle as the blocks. At real scale the allow-set sentinels would
-    be a precomputed attribute-aligned bitmap file per partition; the
+    """The kernel's input rows. The segment scan is filtered to
+    ``terms`` (parquet pushdown); on a multifield handle it is also
+    pruned to ``fields`` (partition pruning) and the field namespace is
+    folded into the term column (``field␟term``), so every doc-range
+    partition answers a weighted query in one kernel pass.
+
+    Tombstone (and optional filter allow-set) sentinel rows are unioned
+    in, so both travel the same partition-keyed shuffle as the blocks
+    and are never collected to the driver — heavy churn can't bloat
+    task closures. At real scale the allow-set sentinels would be a
+    precomputed attribute-aligned bitmap file per partition; the
     dataflow shape (partition-local membership, no driver set) is the
     same."""
-    if "_kb" not in seg.columns:  # hand-built frames: identity placement
-        seg = seg.withColumn("_kb", F.col("part_id").cast("int"))
-        kb_expr = None
+    seg = idx["segments"]
+    if fields is None:
+        seg = seg.filter(F.col("term").isin(terms))
     else:
-        salts = idx.get("kb_salts")
-        kb_expr = _kb_col(salts) if salts else None
+        seg = seg.filter(
+            F.col("term").isin(terms) & F.col("field").isin(fields)
+        ).withColumn("term", F.concat("field", F.lit(FIELD_SEP), "term"))
     out = seg.select("_kb", *_SEG_COLS)
     ranges = idx["meta_ranges"].select("part_id", "doc_lo", "doc_hi")
     tomb = idx.get("tombstones")
     if tomb is not None:
         out = out.unionByName(
-            _sentinel_rows(ranges, tomb, TOMBSTONE_BLOCK_ID, kb_expr)
+            _sentinel_rows(ranges, tomb, TOMBSTONE_BLOCK_ID, idx["kb_expr"])
         )
     if allowed is not None:
         cols = ["doc_id"] + (["owner"] if "owner" in allowed.columns else [])
         out = out.unionByName(
             _sentinel_rows(
-                ranges, allowed.select(*cols), ALLOWED_BLOCK_ID, kb_expr
+                ranges, allowed.select(*cols), ALLOWED_BLOCK_ID,
+                idx["kb_expr"],
             )
         )
     return out
@@ -794,23 +793,7 @@ from pyf_aggregator_spark.index.placement import (  # noqa: E402
 )
 
 
-def _kb_col(salts: dict[int, int]):
-    """The _kb placement column as a literal-map EXPRESSION of part_id
-    (no join, no broadcast): parts outside the map (none by
-    construction) get NULL and still group correctly."""
-    return _salt_col(salts, F.col("part_id"))
-
-
-def _kernel_salts(part_ids: list[int]) -> dict[int, int] | None:
-    """The placement salts for an index's live parts, or None when the
-    literal-map expression would be unreasonable (no parts, or more
-    than _SALT_MAP_MAX_PARTS)."""
-    if not part_ids or len(part_ids) > _SALT_MAP_MAX_PARTS:
-        return None
-    return _perfect_salts(part_ids)
-
-
-def _partition_for_kernel(seg: DataFrame, part_ids: list[int]) -> DataFrame:
+def _partition_for_kernel(seg: DataFrame, part_ids: list[int]):
     """Lay the segment table out pre-clustered for the WAND kernels —
     every kernel is ``groupBy("_kb", "part_id").applyInPandas`` — so a
     caller that caches the handle (bench, the facade index caches,
@@ -827,22 +810,27 @@ def _partition_for_kernel(seg: DataFrame, part_ids: list[int]) -> DataFrame:
     the exact Murmur3 Spark applies, one salt per part so pmod(
     hash(salt), P) is a bijection: P tasks, one part each, no empties
     (batch −47%, sequential latency no worse, same-session interleaved
-    A/B). Mutated indexes (tombstones/allow-sets) union sentinel rows,
-    which drops the derived partitioning and correctly restores the
-    per-query exchange."""
-    salts = _kernel_salts(part_ids)
-    if salts is None:
-        if not part_ids:
-            return seg.withColumn("_kb", F.col("part_id").cast("int"))
+    A/B). Past _SALT_MAP_MAX_PARTS parts the literal-map expression
+    would be unreasonable, so ``_kb`` is the part_id itself. Mutated
+    indexes (tombstones/allow-sets) union sentinel rows, which drops
+    the derived partitioning and correctly restores the per-query
+    exchange.
+
+    → (frame, kb_expr): the handle stores ``kb_expr`` next to
+    ``segments`` so sentinel rows are keyed by the very expression the
+    blocks were laid out with."""
+    if part_ids and len(part_ids) <= _SALT_MAP_MAX_PARTS:
+        kb_expr = _salt_col(_perfect_salts(part_ids), F.col("part_id"))
+        n_buckets = len(part_ids)
+    else:
         from pyf_aggregator_spark.index.segments import _max_encode_buckets
 
+        kb_expr = F.col("part_id")
         n_buckets = int(min(3 * len(part_ids), _max_encode_buckets()))
-        return seg.withColumn(
-            "_kb", F.col("part_id").cast("int")
-        ).repartition(n_buckets, "_kb")
-    return seg.withColumn("_kb", _kb_col(salts).cast("int")).repartition(
-        len(salts), "_kb"
-    )
+    out = seg.withColumn("_kb", kb_expr.cast("int"))
+    if part_ids:
+        out = out.repartition(n_buckets, "_kb")
+    return out, kb_expr
 
 
 def load_index(spark: SparkSession, index_dir: str) -> dict:
@@ -871,11 +859,12 @@ def load_index(spark: SparkSession, index_dir: str) -> dict:
     }
     from pyf_aggregator_spark.index.incremental import load_tombstones
 
+    segments, kb_expr = _partition_for_kernel(
+        spark.read.parquet(f"{index_dir}/segments"), sorted(bound_factor)
+    )
     return {
-        "segments": _partition_for_kernel(
-            spark.read.parquet(f"{index_dir}/segments"),
-            sorted(bound_factor),
-        ),
+        "segments": segments,
+        "kb_expr": kb_expr,
         "term_stats": spark.read.parquet(f"{index_dir}/term_stats"),
         "meta_ranges": spark.read.parquet(f"{index_dir}/meta").select(
             "part_id", "doc_lo", "doc_hi"
@@ -883,308 +872,9 @@ def load_index(spark: SparkSession, index_dir: str) -> dict:
         "n_docs": corpus["n_docs"],
         "avgdl": avgdl,
         "bound_factor": bound_factor,
-        "kb_salts": _kernel_salts(sorted(bound_factor)),
         "tombstones": load_tombstones(spark, index_dir),
         "dir": index_dir,
     }
-
-
-def _wand_local(
-    idx: dict, query: str, k: int, mode: str,
-    allowed: DataFrame | None, count_matches: bool = False,
-) -> DataFrame | None:
-    """Shared front half of the single-query kernel paths: term lookup,
-    zero-hit short-circuit (returns None), sentinel union, one
-    applyInPandas pass → local candidates DataFrame."""
-    spark = idx["segments"].sparkSession
-    from pyf_aggregator_spark.session import ensure_py_files
-
-    ensure_py_files(spark)  # WAND kernel imports this package on workers
-    terms = sorted(set(tokenize_py(query)))
-    if not terms:
-        return None
-    idf_map = dict(_idf_rows(idx, terms))
-    if not idf_map or (mode == "and" and len(idf_map) < len(terms)):
-        return None
-
-    # K3 deletes: tombstones filter inside the kernel (pre-heap),
-    # shipped as sentinel rows through the partition shuffle — never
-    # collected to the driver, so heavy churn can't bloat task closures.
-    seg = idx["segments"].filter(F.col("term").isin(list(idf_map)))
-    return _seg_with_tombstones(idx, seg, allowed).groupBy("_kb", "part_id").applyInPandas(
-        _wand_partition(
-            idf_map, idx["avgdl"], k, mode, len(terms),
-            idx.get("bound_factor", {}), filtered=allowed is not None,
-            count_matches=count_matches,
-        ),
-        "doc_id long, raw_score double",
-    )
-
-
-def wand_topk(
-    idx: dict, query: str, k: int = 10, mode: str = "or",
-    allowed: DataFrame | None = None,
-) -> DataFrame:
-    """→ DataFrame(doc_id long, score double): segment-backed top-k,
-    rank-identical to engine.bm25_topk (same rounding + tie-break).
-
-    ``allowed`` (DataFrame of doc_id) is the §2.8 filter_by pushdown:
-    the predicate's doc set rides the partition shuffle as sentinel rows
-    and is applied INSIDE the kernel pre-heap, so each partition's local
-    top-k is already the filtered top-k — no oversized candidate pull,
-    no corpus-fraction broadcast."""
-    spark = idx["segments"].sparkSession
-    local = _wand_local(idx, query, k, mode, allowed)
-    if local is None:
-        return spark.createDataFrame([], "doc_id long, score double")
-    return (
-        local.select(
-            "doc_id", F.round("raw_score", SCORE_DECIMALS).alias("score")
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-
-
-def wand_topk_with_found(
-    idx: dict, query: str, k: int = 10, mode: str = "or",
-    allowed: DataFrame | None = None,
-) -> tuple[list[dict], int]:
-    """Top-k AND Typesense's exact ``found`` from ONE kernel pass.
-
-    → ([{doc_id, score}, ...] (k rows, rank-identical to wand_topk),
-       found = exact size of the filtered match set).
-
-    The per-partition match counts ride the kernel output as sentinel
-    rows (doc_id = COUNT_DOC_ID); the driver merges ≤ (k+1)·P rows —
-    one Spark job, no second engine, no corpus-proportional scoring
-    (VERDICT r3 "what's wrong" #2). Partitions are disjoint doc ranges,
-    so the count sum is exact."""
-    local = _wand_local(idx, query, k, mode, allowed, count_matches=True)
-    if local is None:
-        return [], 0
-    rows = local.collect()
-    found = int(sum(r["raw_score"] for r in rows if r["doc_id"] == COUNT_DOC_ID))
-    cand = [
-        {"doc_id": r["doc_id"], "score": float(_rnd(r["raw_score"]))}
-        for r in rows
-        if r["doc_id"] != COUNT_DOC_ID
-    ]
-    cand.sort(key=lambda h: (-h["score"], h["doc_id"]))
-    return cand[:k], found
-
-
-def _slots_spec(
-    idx: dict, slot_terms: list[list[str]], mode: str
-) -> tuple[dict[str, float], dict[str, int]] | None:
-    """slot groups → (idf_map, term→slot), or None when zero-hit by
-    construction (no term present; and-mode with a dead slot)."""
-    all_terms = sorted({t for g in slot_terms for t in g})
-    if not all_terms:
-        return None
-    present = dict(_idf_rows(idx, all_terms))
-    # a term may belong to SEVERAL slots (overlapping expansion sets):
-    # membership is a tuple, and a doc matching the term satisfies
-    # every slot that contains it
-    memb: dict[str, list[int]] = {}
-    for si, g in enumerate(slot_terms):
-        for t in dict.fromkeys(g):
-            if t in present:
-                memb.setdefault(t, []).append(si)
-    if not memb:
-        return None
-    if mode == "and" and len(
-        {s for v in memb.values() for s in v}
-    ) < len(slot_terms):
-        return None  # a slot with no live member can never match
-    slots = {t: tuple(v) for t, v in memb.items()}
-    idf_map = {t: present[t] for t in slots}
-    return idf_map, slots
-
-
-def wand_topk_slots(
-    idx: dict,
-    slot_terms: list[list[str]],
-    k: int = 10,
-    mode: str = "or",
-    allowed: DataFrame | None = None,
-) -> DataFrame:
-    """Slotted top-k: each group in ``slot_terms`` scores as the MAX
-    over its matched members; groups sum. This is Typesense's prefix
-    semantics — the expansion set of a prefix token is ONE slot (the
-    best single completion scores, the prefix counts as one query
-    token), fixed tokens are singleton slots."""
-    spark = idx["segments"].sparkSession
-    from pyf_aggregator_spark.session import ensure_py_files
-
-    ensure_py_files(spark)
-    spec = _slots_spec(idx, slot_terms, mode)
-    if spec is None:
-        return spark.createDataFrame([], "doc_id long, score double")
-    idf_map, slots = spec
-    seg = idx["segments"].filter(F.col("term").isin(list(idf_map)))
-    local = _seg_with_tombstones(idx, seg, allowed).groupBy("_kb", "part_id").applyInPandas(
-        _wand_partition(
-            idf_map, idx["avgdl"], k, mode, len(slot_terms),
-            idx.get("bound_factor", {}), filtered=allowed is not None,
-            slots=slots,
-        ),
-        "doc_id long, raw_score double",
-    )
-    return (
-        local.select(
-            "doc_id", F.round("raw_score", SCORE_DECIMALS).alias("score")
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-
-
-def wand_topk_slots_with_found(
-    idx: dict,
-    slot_terms: list[list[str]],
-    k: int = 10,
-    mode: str = "or",
-    allowed: DataFrame | None = None,
-) -> tuple[list[dict], int]:
-    """Slotted twin of wand_topk_with_found (one kernel pass → top-k +
-    exact found, slot-max scoring)."""
-    spark = idx["segments"].sparkSession
-    from pyf_aggregator_spark.session import ensure_py_files
-
-    ensure_py_files(spark)
-    spec = _slots_spec(idx, slot_terms, mode)
-    if spec is None:
-        return [], 0
-    idf_map, slots = spec
-    seg = idx["segments"].filter(F.col("term").isin(list(idf_map)))
-    local = _seg_with_tombstones(idx, seg, allowed).groupBy("_kb", "part_id").applyInPandas(
-        _wand_partition(
-            idf_map, idx["avgdl"], k, mode, len(slot_terms),
-            idx.get("bound_factor", {}), filtered=allowed is not None,
-            count_matches=True, slots=slots,
-        ),
-        "doc_id long, raw_score double",
-    )
-    rows = local.collect()
-    found = int(sum(r["raw_score"] for r in rows if r["doc_id"] == COUNT_DOC_ID))
-    cand = [
-        {"doc_id": r["doc_id"], "score": float(_rnd(r["raw_score"]))}
-        for r in rows
-        if r["doc_id"] != COUNT_DOC_ID
-    ]
-    cand.sort(key=lambda h: (-h["score"], h["doc_id"]))
-    return cand[:k], found
-
-
-def wand_match_ids(
-    idx: dict, query: str, mode: str = "or",
-    allowed: DataFrame | None = None,
-    slot_terms: list[list[str]] | None = None,
-) -> DataFrame:
-    """→ DataFrame(doc_id long): the exact (filtered) match set as a
-    DISTRIBUTED frame — the input to hit-set facet aggregation. Stays on
-    the segment index (term-pruned scan, no scoring); never collected,
-    so facets over a huge match set aggregate map-side like any groupBy.
-
-    ``slot_terms`` (optional, overrides ``query``) carries prefix
-    expansion groups: a group matches when ANY member matches and
-    and-mode requires every GROUP — the same membership semantics as
-    wand_topk_slots, so facet/sort match sets agree with the slotted
-    hits/found (ADVICE r4: the flat expansion required every completion
-    in and-mode)."""
-    spark = idx["segments"].sparkSession
-    from pyf_aggregator_spark.session import ensure_py_files
-
-    ensure_py_files(spark)
-    if slot_terms is not None:
-        spec = _slots_spec(idx, slot_terms, mode)
-        if spec is None:
-            return spark.createDataFrame([], "doc_id long")
-        idf_map, groups = spec
-        n_query_terms = len(slot_terms)
-    else:
-        terms = sorted(set(tokenize_py(query)))
-        if not terms:
-            return spark.createDataFrame([], "doc_id long")
-        idf_map = dict(_idf_rows(idx, terms))
-        if not idf_map or (mode == "and" and len(idf_map) < len(terms)):
-            return spark.createDataFrame([], "doc_id long")
-        groups = None
-        n_query_terms = len(terms)
-    filtered = allowed is not None
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf, tomb_ids, allowed_map = _split_tombstones(pdf)
-        allow = (allowed_map or {}).get("")
-        if filtered and allow is None:
-            allow = np.empty(0, dtype=np.int64)
-        if pdf.empty or (filtered and allow.size == 0):
-            return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-        blocks = _PartitionBlocks(pdf, idf_map, 1.0)  # avgdl unused: no scoring
-        ids = _match_ids_one_query(
-            blocks, sorted(idf_map), mode, n_query_terms, tomb_ids, allow,
-            groups,
-        )
-        return pd.DataFrame({"doc_id": ids})
-
-    seg = idx["segments"].filter(F.col("term").isin(list(idf_map)))
-    return (
-        _seg_with_tombstones(idx, seg, allowed)
-        .groupBy("_kb", "part_id")
-        .applyInPandas(fn, "doc_id long")
-    )
-
-
-def wand_score_matches(
-    idx: dict, query: str, mode: str = "or",
-    allowed: DataFrame | None = None,
-    slot_terms: list[list[str]] | None = None,
-) -> DataFrame:
-    """→ DataFrame(doc_id long, score double): the exact (filtered)
-    match set WITH scores, as a DISTRIBUTED frame — the input to exact
-    grouped search (per-group top-N must see every group in the match
-    set, so a driver-side candidate pool can't be the source; VERDICT
-    r4 "what's wrong" #2). One term-pruned kernel pass, never
-    collected: the group window downstream shuffles match-set-sized
-    data by group key, which is the inherent cost of Typesense's
-    grouped semantics, not a plan defect.
-
-    ``slot_terms`` carries prefix expansion groups (slot-max scoring +
-    any-member membership), matching wand_topk_slots."""
-    spark = idx["segments"].sparkSession
-    from pyf_aggregator_spark.session import ensure_py_files
-
-    ensure_py_files(spark)
-    if slot_terms is not None:
-        spec = _slots_spec(idx, slot_terms, mode)
-        if spec is None:
-            return spark.createDataFrame([], "doc_id long, score double")
-        idf_map, slots = spec
-        n_query_terms = len(slot_terms)
-    else:
-        terms = sorted(set(tokenize_py(query)))
-        if not terms:
-            return spark.createDataFrame([], "doc_id long, score double")
-        idf_map = dict(_idf_rows(idx, terms))
-        if not idf_map or (mode == "and" and len(idf_map) < len(terms)):
-            return spark.createDataFrame([], "doc_id long, score double")
-        slots = None
-        n_query_terms = len(terms)
-    seg = idx["segments"].filter(F.col("term").isin(list(idf_map)))
-    local = _seg_with_tombstones(idx, seg, allowed).groupBy("_kb", "part_id").applyInPandas(
-        _score_matches_partition(
-            idf_map, idx["avgdl"], mode, n_query_terms,
-            filtered=allowed is not None, slots=slots,
-        ),
-        "doc_id long, raw_score double",
-    )
-    return local.select(
-        "doc_id", F.round("raw_score", SCORE_DECIMALS).alias("score")
-    )
-
-
-FIELD_SEP = "\x1f"  # namespaces per-field terms in the multifield scan
 
 
 def load_multifield_index(spark: SparkSession, index_dir: str) -> dict:
@@ -1217,204 +907,190 @@ def load_multifield_index(spark: SparkSession, index_dir: str) -> dict:
     meta_ranges = meta.groupBy("part_id").agg(
         F.min("doc_lo").alias("doc_lo"), F.max("doc_hi").alias("doc_hi")
     )
+    segments, kb_expr = _partition_for_kernel(
+        spark.read.parquet(f"{index_dir}/segments"), sorted(bound_factor)
+    )
     return {
-        "segments": _partition_for_kernel(
-            spark.read.parquet(f"{index_dir}/segments"),
-            sorted(bound_factor),
-        ),
+        "segments": segments,
+        "kb_expr": kb_expr,
         "term_stats": spark.read.parquet(f"{index_dir}/term_stats"),
         "avgdl_by_field": avgdl_by_field,
         "meta_ranges": meta_ranges,
         "bound_factor": bound_factor,
-        "kb_salts": _kernel_salts(sorted(bound_factor)),
         "tombstones": load_tombstones(spark, index_dir),
         "dir": index_dir,
     }
 
 
-def _mf_spec(
+def _query_spec(
     idx: dict,
-    weights: dict[str, float],
     query: str,
     slot_terms: list[list[str]] | None,
     mode: str,
-):
-    """Shared stat lookup for the multifield kernel paths.
+    weights: dict[str, float] | None,
+) -> dict | None:
+    """The one spec builder: a query → plain-Python kernel inputs, or
+    None when the query cannot match (no term present; and-mode with a
+    token group that has no live member).
 
-    Token groups come from ``slot_terms`` (prefix expansion sets) or
-    one singleton group per query token. → None when zero-hit by
-    construction, else (raw_terms, idf_map, avgdl_map, slots, groups,
-    n_groups) over field-namespaced ``field␟term`` keys:
+    Token groups come from ``slot_terms`` (prefix/infix expansion sets)
+    or one singleton group per distinct query token. A term may belong
+    to SEVERAL groups (an expansion set collapsing into a fixed token,
+    or a repeated token): memberships are tuples end to end, and a doc
+    matching the term satisfies — and scores for — every group that
+    contains it.
 
-    - groups[key] = the token-group index of the key's raw term — a
-      token matches when ANY (field, member-term) matches, and-mode
-      requires every token (Typesense's multifield AND).
-    - slots[key] = a (field, token-group) scoring slot — within one
-      field a prefix token scores its BEST completion (max), fields
-      still SUM; None when no group has expansions (singleton slots ≡
-      plain sum, so the hot plain-query path skips the slot machinery).
-    """
+    On a multifield handle (``weights`` required there, refused on a
+    single-field handle) kernel keys are ``field␟term``, the field
+    weight is folded into idf (score is linear in idf) and avgdl is per
+    key (each posting scores under its own field's normalization):
+
+    - groups[key]: the token groups of the key's term — a token matches
+      when ANY (field, member) matches; and-mode requires every group.
+    - slots[key]: the (field, token-group) scoring slots — within one
+      field a group scores its BEST member (max); slots sum.
+
+    Slots are dropped only when every slot holds exactly one key
+    (singleton groups, no term in two groups): slot-max is then the
+    plain sum, so plain queries keep the kernel's fast no-slots path.
+    Groups go with them when they add nothing (or-mode, or one key per
+    group)."""
+    mf = "avgdl_by_field" in idx
+    if mf != (weights is not None):
+        raise ValueError(
+            "weights= is required on a multifield index handle and "
+            "refused on a single-field one"
+        )
     if slot_terms is None:
-        token_groups = [[t] for t in dict.fromkeys(tokenize_py(query))]
-    else:
-        token_groups = slot_terms
-    raw_terms = sorted({t for g in token_groups for t in g})
-    if not raw_terms:
-        return None
-    fields = sorted(weights)
-    stats = _mf_idf_rows(idx, raw_terms, fields)
-    if not stats:
-        return None
-    # multi-membership: a term shared by several token groups (e.g. a
-    # prefix expansion collapsing into a fixed token) satisfies EVERY
-    # one of them — memberships are tuples end to end
+        slot_terms = [[t] for t in sorted(set(tokenize_py(query)))]
     term_groups: dict[str, list[int]] = {}
-    for gi, g in enumerate(token_groups):
+    for gi, g in enumerate(slot_terms):
         for t in dict.fromkeys(g):
             term_groups.setdefault(t, []).append(gi)
-    n_groups = len(token_groups)
-    field_idx = {f: i for i, f in enumerate(fields)}
-    idf_map, avgdl_map, slots, groups = {}, {}, {}, {}
-    live_terms = set()
-    for fld, term, idf in stats:
-        key = fld + FIELD_SEP + term
-        idf_map[key] = idf * weights[fld]
-        avgdl_map[key] = idx["avgdl_by_field"][fld]
-        gis = term_groups[term]
-        groups[key] = tuple(gis)
-        slots[key] = tuple(
-            field_idx[fld] * n_groups + gi for gi in gis
-        )
-        live_terms.add(term)
-    if mode == "and" and len(
-        {g for t in live_terms for g in term_groups[t]}
-    ) < n_groups:
-        return None  # a token with no live member in any field
-    if all(len(g) == 1 for g in token_groups):
-        slots = None  # singleton slots ≡ sum — keep the fast path
-    if mode == "or" and slots is None:
-        # or-mode membership is nmatch>0 regardless of grouping — drop
-        # groups too so the plain weighted query keeps the fast path
-        groups = None
-    return raw_terms, idf_map, avgdl_map, slots, groups, n_groups
+    if not term_groups:
+        return None
+    n_groups = len(slot_terms)
+    fields = sorted(weights) if mf else None
+    present = _idf_lookup(idx, list(term_groups), fields)
+    idf_map, slots, groups = {}, {}, {}
+    avgdl = {} if mf else idx["avgdl"]
+    for fi, fld in enumerate(fields or [None]):
+        for t, gis in term_groups.items():
+            if ((fld, t) if mf else t) not in present:
+                continue
+            if mf:
+                key = fld + FIELD_SEP + t
+                idf_map[key] = present[(fld, t)] * weights[fld]
+                avgdl[key] = idx["avgdl_by_field"][fld]
+            else:
+                key = t
+                idf_map[key] = present[t]
+            groups[key] = tuple(gis)
+            slots[key] = tuple(fi * n_groups + gi for gi in gis)
+    live = {g for v in groups.values() for g in v}
+    if not idf_map or (mode == "and" and len(live) < n_groups):
+        return None
+    if all(len(g) == 1 for g in slot_terms) and all(
+        len(v) == 1 for v in term_groups.values()
+    ):
+        slots = None
+        if mode == "or" or not mf or len(fields) == 1:
+            groups = None
+    return {
+        "idf_map": idf_map, "avgdl": avgdl, "mode": mode,
+        "n_groups": n_groups, "slots": slots, "groups": groups,
+        # the scan: present terms (single-field), or every raw term over
+        # the queried fields (multifield, field partitions pruned)
+        "scan_terms": sorted(term_groups) if mf else list(idf_map),
+        "fields": fields,
+    }
 
 
-def _mf_seg_scan(idx: dict, raw_terms: list[str], fields: list[str]):
-    """The shared multifield segment scan: term IN-filter + field
-    partition pruning (both pushed to the parquet read), then the field
-    namespace folded into the term column (``field␟term``) so every
-    doc-range partition answers the query in one kernel pass. Every
-    multifield kernel path (top-k, match-ids, score-matches) reads
-    through here — one place to keep the namespacing/_SEG_COLS contract."""
-    seg = idx["segments"].filter(
-        F.col("term").isin(raw_terms) & F.col("field").isin(fields)
-    ).withColumn("term", F.concat("field", F.lit(FIELD_SEP), "term"))
-    kb = ["_kb"] if "_kb" in seg.columns else []
-    return seg.select(*kb, *_SEG_COLS)
-
-
-def _wand_mf_local(
-    idx: dict,
-    weights: dict[str, float],
-    query: str,
-    k: int,
-    allowed: DataFrame | None = None,
-    count_matches: bool = False,
-    mode: str = "or",
-    slot_terms: list[list[str]] | None = None,
+def _local(
+    idx: dict, kind: str, query: str, mode: str,
+    allowed: DataFrame | None, slot_terms, weights, k: int = 0,
 ) -> DataFrame | None:
-    """Shared front half of the multifield kernel paths: per-(field,
-    term) stat lookup, field-namespaced scan, one applyInPandas pass.
-
-    ``mode='and'`` requires every token group to match in at least one
-    field (Typesense multifield AND); ``slot_terms`` carries prefix
-    expansion groups (per-field best-completion scoring)."""
-    spark = idx["segments"].sparkSession
+    """Spec → kernel input → one applyInPandas pass: the per-partition
+    answers of one query, or None when it cannot match."""
     from pyf_aggregator_spark.session import ensure_py_files
 
-    ensure_py_files(spark)
-    spec = _mf_spec(idx, weights, query, slot_terms, mode)
+    ensure_py_files(idx["segments"].sparkSession)  # kernel imports this package
+    spec = _query_spec(idx, query, slot_terms, mode, weights)
     if spec is None:
         return None
-    raw_terms, idf_map, avgdl_map, slots, groups, n_groups = spec
-    # one scan: term IN-filter + field partition pruning pushed to the
-    # parquet read; the field namespace rides the term column so every
-    # doc-range partition answers the weighted query in one kernel pass.
-    # Tombstones (upsert_multifield) and bound factors (stored max_norms
-    # of pre-upsert parts under the old per-field avgdl) ride the same
-    # mechanisms as the single-field path; a fresh build has neither.
-    seg = _mf_seg_scan(idx, raw_terms, sorted(weights))
-    return _seg_with_tombstones(idx, seg, allowed).groupBy("_kb", "part_id").applyInPandas(
-        _wand_partition(
-            idf_map, avgdl_map, k, mode, n_groups,
-            idx.get("bound_factor", {}),
-            filtered=allowed is not None,
-            count_matches=count_matches,
-            slots=slots, groups=groups,
-        ),
-        "doc_id long, raw_score double",
-    )
-
-
-def wand_topk_multifield(
-    idx: dict,
-    weights: dict[str, float],
-    query: str,
-    k: int = 10,
-    allowed: DataFrame | None = None,
-    mode: str = "or",
-    slot_terms: list[list[str]] | None = None,
-) -> DataFrame:
-    """Weighted multi-field top-k on the SEGMENT path — the scale form
-    of §2.8 query_by + query_by_weights (reference AGENTS.md:16-20).
-
-    ``idx`` is a build-time multifield artifact (build_multifield_
-    segments / load_multifield_index): per-field posting blocks over one
-    shared doc-id space, segments partitioned by (field, part_id). The
-    query folds into ONE block-max WAND pass: the scan is filtered to
-    the query terms (parquet pushdown) and the query's fields (partition
-    pruning), terms are namespaced ``field␟term``, the field weight is
-    folded into idf (score is linear in idf), and per-term avgdl routes
-    each posting through its field's BM25 normalization. Exact over the
-    combined weighted score — block upper bounds Σ w_f·idf_f·max_norm_f
-    dominate every true score, so pruning never drops a winner. No
-    query-time index construction, no per-field top-k merge error.
-    ``allowed`` is the filter_by allow-set, applied pre-heap in the
-    kernel like the single-field path. ``mode='and'`` requires every
-    query token in at least one queried field; ``slot_terms`` carries
-    prefix expansion groups (per-field best-completion scoring, fields
-    sum)."""
-    spark = idx["segments"].sparkSession
-    local = _wand_mf_local(
-        idx, weights, query, k, allowed, mode=mode, slot_terms=slot_terms
-    )
-    if local is None:
-        return spark.createDataFrame([], "doc_id long, score double")
     return (
-        local.select(
-            "doc_id", F.round("raw_score", SCORE_DECIMALS).alias("score")
+        _kernel_input(idx, spec["scan_terms"], spec["fields"], allowed)
+        .groupBy("_kb", "part_id")
+        .applyInPandas(
+            _kernel(
+                spec, kind, k, idx.get("bound_factor", {}),
+                allowed is not None,
+            ),
+            "doc_id long" if kind == "ids" else "doc_id long, raw_score double",
         )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
     )
 
 
-def wand_topk_multifield_with_found(
-    idx: dict,
-    weights: dict[str, float],
-    query: str,
-    k: int = 10,
+def _rounded(local: DataFrame) -> DataFrame:
+    return local.select(
+        "doc_id", F.round("raw_score", SCORE_DECIMALS).alias("score")
+    )
+
+
+def wand_topk(
+    idx: dict, query: str, k: int = 10, mode: str = "or",
     allowed: DataFrame | None = None,
-    mode: str = "or",
     slot_terms: list[list[str]] | None = None,
+    weights: dict[str, float] | None = None,
+) -> DataFrame:
+    """→ DataFrame(doc_id long, score double): segment-backed top-k,
+    rank-identical to engine.bm25_topk (same rounding + tie-break).
+
+    ``allowed`` (DataFrame of doc_id) is the §2.8 filter_by pushdown:
+    the predicate's doc set rides the partition shuffle as sentinel rows
+    and is applied INSIDE the kernel pre-heap, so each partition's local
+    top-k is already the filtered top-k — no oversized candidate pull,
+    no corpus-fraction broadcast.
+
+    ``slot_terms`` (overrides ``query``) carries prefix/infix expansion
+    groups: each group scores as the MAX over its matched members and
+    groups sum — Typesense's best-completion semantics (the expansion
+    set of a prefix token is ONE slot and counts as one query token).
+
+    ``weights`` ({field: weight}) is required on a multifield handle
+    (load_multifield_index): §2.8 query_by + query_by_weights on the
+    build-time artifact. The query folds into ONE block-max WAND pass
+    over the queried fields; block upper bounds Σ w_f·idf_f·max_norm_f
+    dominate every true score, so pruning never drops a winner, and
+    there is no per-field top-k merge error. ``mode='and'`` then
+    requires every query token in at least one queried field; an
+    expansion group scores its best completion per field, fields sum."""
+    local = _local(idx, "topk", query, mode, allowed, slot_terms, weights, k)
+    if local is None:
+        return idx["segments"].sparkSession.createDataFrame(
+            [], "doc_id long, score double"
+        )
+    return _rounded(local).orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def wand_topk_with_found(
+    idx: dict, query: str, k: int = 10, mode: str = "or",
+    allowed: DataFrame | None = None,
+    slot_terms: list[list[str]] | None = None,
+    weights: dict[str, float] | None = None,
 ) -> tuple[list[dict], int]:
-    """Multifield twin of wand_topk_with_found: top-k + Typesense's
-    exact ``found`` (docs matching in ANY queried field, deduplicated;
-    and-mode: every token group matched) from one kernel pass."""
-    local = _wand_mf_local(
-        idx, weights, query, k, allowed, count_matches=True,
-        mode=mode, slot_terms=slot_terms,
-    )
+    """Top-k AND Typesense's exact ``found`` from ONE kernel pass.
+
+    → ([{doc_id, score}, ...] (k rows, rank-identical to wand_topk),
+       found = exact size of the filtered match set — on a multifield
+       handle, docs matching in ANY queried field, deduplicated).
+
+    The per-partition match counts ride the kernel output as sentinel
+    rows (doc_id = COUNT_DOC_ID); the driver merges ≤ (k+1)·P rows —
+    one Spark job, no second engine, no corpus-proportional scoring
+    (VERDICT r3 "what's wrong" #2). Partitions are disjoint doc ranges,
+    so the count sum is exact. Parameters as for wand_topk."""
+    local = _local(idx, "found", query, mode, allowed, slot_terms, weights, k)
     if local is None:
         return [], 0
     rows = local.collect()
@@ -1428,85 +1104,49 @@ def wand_topk_multifield_with_found(
     return cand[:k], found
 
 
-def wand_match_ids_multifield(
-    idx: dict,
-    fields: list[str],
-    query: str,
+def wand_match_ids(
+    idx: dict, query: str, mode: str = "or",
     allowed: DataFrame | None = None,
-    mode: str = "or",
     slot_terms: list[list[str]] | None = None,
+    weights: dict[str, float] | None = None,
 ) -> DataFrame:
-    """→ DataFrame(doc_id long): docs matching query terms in any of
-    ``fields`` (deduplicated), post tombstones/filter — the multifield
-    twin of wand_match_ids, feeding facet/grouped/sort_by paths. No
-    scoring; the scan stays term- and field-pruned. ``mode='and'``
-    requires every token group in at least one field; ``slot_terms``
-    carries prefix expansion groups (a group matches via any member) —
-    the same membership semantics as the slotted top-k, so facet/sort
-    sets agree with hits/found."""
-    spark = idx["segments"].sparkSession
-    from pyf_aggregator_spark.session import ensure_py_files
+    """→ DataFrame(doc_id long): the exact (filtered) match set as a
+    DISTRIBUTED frame — the input to hit-set facet aggregation. Stays on
+    the segment index (term-pruned scan, no scoring); never collected,
+    so facets over a huge match set aggregate map-side like any groupBy.
 
-    ensure_py_files(spark)
-    spec = _mf_spec(idx, dict.fromkeys(fields, 1.0), query, slot_terms, mode)
-    if spec is None:
-        return spark.createDataFrame([], "doc_id long")
-    raw_terms, idf_map, _avgdl, _slots, groups, n_groups = spec
-    filtered = allowed is not None
+    Membership follows wand_topk exactly (a ``slot_terms`` group
+    matches when ANY member matches, and-mode requires every GROUP;
+    on a multifield handle a token matches in any ``weights`` field),
+    so facet/sort match sets agree with the hits/found (ADVICE r4: the
+    flat expansion required every completion in and-mode)."""
+    local = _local(idx, "ids", query, mode, allowed, slot_terms, weights)
+    if local is None:
+        return idx["segments"].sparkSession.createDataFrame([], "doc_id long")
+    return local
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf, tomb_ids, allowed_map = _split_tombstones(pdf)
-        allow = (allowed_map or {}).get("")
-        if filtered and allow is None:
-            allow = np.empty(0, dtype=np.int64)
-        if pdf.empty or (filtered and allow.size == 0):
-            return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-        blocks = _PartitionBlocks(pdf, idf_map, 1.0)
-        ids = _match_ids_one_query(
-            blocks, sorted(idf_map), mode, n_groups, tomb_ids, allow, groups
+
+def wand_score_matches(
+    idx: dict, query: str, mode: str = "or",
+    allowed: DataFrame | None = None,
+    slot_terms: list[list[str]] | None = None,
+    weights: dict[str, float] | None = None,
+) -> DataFrame:
+    """→ DataFrame(doc_id long, score double): the exact (filtered)
+    match set WITH scores, as a DISTRIBUTED frame — the input to exact
+    grouped search (per-group top-N must see every group in the match
+    set, so a driver-side candidate pool can't be the source; VERDICT
+    r4 "what's wrong" #2). One term-pruned kernel pass, never
+    collected: the group window downstream shuffles match-set-sized
+    data by group key, which is the inherent cost of Typesense's
+    grouped semantics, not a plan defect. Scores and membership equal
+    wand_topk's at k = ∞."""
+    local = _local(idx, "scores", query, mode, allowed, slot_terms, weights)
+    if local is None:
+        return idx["segments"].sparkSession.createDataFrame(
+            [], "doc_id long, score double"
         )
-        return pd.DataFrame({"doc_id": ids})
-
-    seg = _mf_seg_scan(idx, raw_terms, sorted(fields))
-    return (
-        _seg_with_tombstones(idx, seg, allowed)
-        .groupBy("_kb", "part_id")
-        .applyInPandas(fn, "doc_id long")
-    )
-
-
-def wand_score_matches_multifield(
-    idx: dict,
-    weights: dict[str, float],
-    query: str,
-    allowed: DataFrame | None = None,
-    mode: str = "or",
-    slot_terms: list[list[str]] | None = None,
-) -> DataFrame:
-    """Multifield twin of wand_score_matches: the exact weighted score
-    of EVERY matching doc as a distributed frame (exact grouped search
-    over the query_by surface). Same spec as the mf top-k kernel —
-    field-namespaced terms, weight folded into idf, per-term avgdl,
-    token-group membership, (field, token-group) scoring slots."""
-    spark = idx["segments"].sparkSession
-    from pyf_aggregator_spark.session import ensure_py_files
-
-    ensure_py_files(spark)
-    spec = _mf_spec(idx, weights, query, slot_terms, mode)
-    if spec is None:
-        return spark.createDataFrame([], "doc_id long, score double")
-    raw_terms, idf_map, avgdl_map, slots, groups, n_groups = spec
-    seg = _mf_seg_scan(idx, raw_terms, sorted(weights))
-    local = _seg_with_tombstones(idx, seg, allowed).groupBy("_kb", "part_id").applyInPandas(
-        _score_matches_partition(
-            idf_map, avgdl_map, mode, n_groups,
-            filtered=allowed is not None, slots=slots, groups=groups,
-        ),
-        "doc_id long, raw_score double",
-    )
-    return local.select(
-        "doc_id", F.round("raw_score", SCORE_DECIMALS).alias("score")
-    )
+    return _rounded(local)
 
 
 def wand_topk_batch(
@@ -1517,7 +1157,8 @@ def wand_topk_batch(
     for the whole set. The segment scan filters on the union of all
     query terms (pushed down), each partition answers every query
     against its blocks with shared decodes, and a per-query window takes
-    the final top-k.
+    the final top-k. ``query_id`` must be unique in the batch
+    (ValueError otherwise).
 
     ``allowed`` (optional per query, DataFrame of doc_id) is the §2.8
     filter_by pushdown on the batch path: every query's allow-set rides
@@ -1533,10 +1174,17 @@ def wand_topk_batch(
     artifact), then each query rewrites under the single-query
     contract — failed corrections drop the token; a query whose every
     token fails falls back to its original (zero-hit) form."""
+    from collections import Counter
+
     from pyspark.sql import Window
 
     from pyf_aggregator_spark.session import ensure_py_files
 
+    # a repeated id would give ``ks`` two rows for it: the join below
+    # doubles every hit and one window ranks both queries' hits together
+    dup = [i for i, n in Counter(q["query_id"] for q in queries).items() if n > 1]
+    if dup:
+        raise ValueError(f"wand_topk_batch: duplicate query_id {dup}")
     spark = idx["segments"].sparkSession
     ensure_py_files(spark)
 
@@ -1562,7 +1210,7 @@ def wand_topk_batch(
     all_terms = sorted(
         {t for q in queries for t in set(tokenize_py(q["query"]))}
     )
-    idf_map = dict(_idf_rows(idx, all_terms))
+    idf_map = _idf_lookup(idx, all_terms)
     qspec = []
     allow_parts = []
     for q in queries:
@@ -1596,8 +1244,9 @@ def wand_topk_batch(
         allowed = allow_parts[0]
         for a in allow_parts[1:]:
             allowed = allowed.unionByName(a)
-    seg = idx["segments"].filter(F.col("term").isin(list(idf_map)))
-    local = _seg_with_tombstones(idx, seg, allowed).groupBy("_kb", "part_id").applyInPandas(
+    local = _kernel_input(idx, list(idf_map), allowed=allowed).groupBy(
+        "_kb", "part_id"
+    ).applyInPandas(
         _wand_partition_batch(
             qspec, idf_map, idx["avgdl"], idx.get("bound_factor", {})
         ),

@@ -13,6 +13,7 @@ reproduce; the failing params dict is printed in the assert message.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import random
 
@@ -360,18 +361,12 @@ def test_batch_fuzz_matches_model(spark, corpus):
         )
 
 
-def test_seed1301_shared_slot_prune_regression(spark, tmp_path_factory):
-    """Pinned regression for the shared-slot-member WAND bound: a term
-    belonging to SEVERAL slots can feed each slot's max, so the
-    interval upper bound must weight it by its slot multiplicity — the
-    unweighted Σ under-estimated docs matching ONLY shared members and
-    pruned them out of small-k pages (found by this fuzz at seed 1301,
-    draw 72: 'vector vec' + prefix + infix=always expands both tokens
-    into overlapping sets; doc 25, true rank 4, vanished from the
-    k = 2×3 page while found stayed exact)."""
-    seed = 1301
+@contextlib.contextmanager
+def _pinned_corpus(spark, tmp_path_factory, seed: int, name: str):
+    """The fuzz corpus of ``seed`` as a fresh documents table with its own
+    segment cache → (sf_dir, docs)."""
     docs = _gen_docs(random.Random(seed))
-    base = tmp_path_factory.mktemp("seed1301")
+    base = tmp_path_factory.mktemp(name)
     sf_dir = str(base / "corpus")
     os.makedirs(sf_dir)
     spark.createDataFrame(
@@ -384,6 +379,27 @@ def test_seed1301_shared_slot_prune_regression(spark, tmp_path_factory):
     old = os.environ.get("PYFAGG_SEG_CACHE")
     os.environ["PYFAGG_SEG_CACHE"] = str(base / "segcache")
     try:
+        yield sf_dir, docs
+    finally:
+        if old is None:
+            os.environ.pop("PYFAGG_SEG_CACHE", None)
+        else:
+            os.environ["PYFAGG_SEG_CACHE"] = old
+
+
+def test_seed1301_shared_slot_prune_regression(spark, tmp_path_factory):
+    """Pinned regression for the shared-slot-member WAND bound: a term
+    belonging to SEVERAL slots can feed each slot's max, so the
+    interval upper bound must weight it by its slot multiplicity — the
+    unweighted Σ under-estimated docs matching ONLY shared members and
+    pruned them out of small-k pages (found by this fuzz at seed 1301,
+    draw 72: 'vector vec' + prefix + infix=always expands both tokens
+    into overlapping sets; doc 25, true rank 4, vanished from the
+    k = 2×3 page while found stayed exact)."""
+    seed = 1301
+    with _pinned_corpus(spark, tmp_path_factory, seed, "seed1301") as (
+        sf_dir, docs,
+    ):
         params = {
             "q": "vector vec", "mode": "and", "num_typos": 2,
             "page": 2, "per_page": 3, "prefix": True, "infix": "always",
@@ -397,8 +413,27 @@ def test_seed1301_shared_slot_prune_regression(spark, tmp_path_factory):
         # the doc the under-estimated bound pruned leads the page
         assert [h["document"]["doc_id"] for h in got["hits"]] == [25, 29, 16]
         assert got["found"] == 37
-    finally:
-        if old is None:
-            os.environ.pop("PYFAGG_SEG_CACHE", None)
-        else:
-            os.environ["PYFAGG_SEG_CACHE"] = old
+
+
+def test_seed1301_multifield_repeated_token_scores_per_slot(
+    spark, tmp_path_factory
+):
+    """Pinned regression for a repeated token on the multifield path:
+    with prefix, 'tables tables' becomes the slots [['tables'],
+    ['tables']] — every group a singleton, but one term in two groups.
+    A term scores once per slot it belongs to (the seed-1301 shared-slot
+    rule), so the spec may drop slots only when no term is shared; the
+    multifield spec used to drop them here and score the term once
+    (2.2637 where the model and the single-field path give 4.5273)."""
+    seed = 1301
+    with _pinned_corpus(spark, tmp_path_factory, seed, "seed1301mf") as (
+        sf_dir, docs,
+    ):
+        params = {
+            "q": "tables tables", "prefix": True, "num_typos": 0,
+            "query_by": "title",
+        }
+        got = search(spark, sf_dir, dict(params))
+        want = FacadeModel(docs).search({**params, "_clauses": []})
+        assert want["hits"], "the pinned query must match"
+        _assert_same(got, want, f"pinned seed={seed} params={params}")

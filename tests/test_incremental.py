@@ -722,3 +722,30 @@ def test_compact_crash_dir_swap_roll_forward(spark, tmp_path, monkeypatch):
     assert after == before
     # staging table must not ride into the live dir
     assert not _os.path.isdir(_os.path.join(d, "postings_src"))
+
+
+def test_tombstones_hidden_without_kb_salts(spark, tmp_path):
+    """Sentinel rows take their placement key from the handle's own
+    layout expression (``kb_expr``, stored next to ``segments``), never
+    from a parallel salt map: a handle without a ``kb_salts`` entry must
+    still hide every tombstoned doc of a salted index."""
+    from pyf_aggregator_spark.index.incremental import delete_docs
+    from pyf_aggregator_spark.search.wand import (
+        wand_match_ids,
+        wand_topk_with_found,
+    )
+
+    d = str(tmp_path / "salted")
+    docs = assign_doc_ids(transcripts_df(spark, 800), num_partitions=4)
+    build_segments(docs, d, num_partitions=4, lineage="salted")
+    idx = load_index(spark, d)
+    assert len(idx["bound_factor"]) > 1  # several parts → salted layout
+    victims = sorted(
+        r["doc_id"] for r in wand_match_ids(idx, "w00000").collect()
+    )
+    assert victims
+    delete_docs(spark, d, victims)
+    idx = load_index(spark, d)
+    idx.pop("kb_salts", None)
+    hits, found = wand_topk_with_found(idx, "w00000", k=10)
+    assert (hits, found) == ([], 0)

@@ -94,7 +94,7 @@ def test_wand_multifield_matches_dataframe_engine(spark, sf_dir, tmp_path, monke
     from pyf_aggregator_spark.index.builder import build_index
     from pyf_aggregator_spark.registry import load
     from pyf_aggregator_spark.search.engine import bm25_topk_multifield
-    from pyf_aggregator_spark.search.wand import wand_topk_multifield
+    from pyf_aggregator_spark.search.wand import wand_topk
 
     monkeypatch.setenv("PYFAGG_SEG_CACHE", str(tmp_path / "segcache"))
     monkeypatch.setattr(fx, "_MF_CACHE", {})
@@ -104,7 +104,7 @@ def test_wand_multifield_matches_dataframe_engine(spark, sf_dir, tmp_path, monke
     for q in [fx._5F_QUERY, "spark", "vector window src3", "zzz-no-hit", ""]:
         a = [
             (r["doc_id"], r["score"])
-            for r in wand_topk_multifield(mf, fx._5F_WEIGHTS, q, k=25).collect()
+            for r in wand_topk(mf, q, k=25, weights=fx._5F_WEIGHTS).collect()
         ]
         b = [
             (r["doc_id"], r["score"])
@@ -124,7 +124,7 @@ def test_upsert_multifield_equals_rebuild(spark, tmp_path):
     from pyf_aggregator_spark.index.segments import build_multifield_segments
     from pyf_aggregator_spark.search.wand import (
         load_multifield_index,
-        wand_topk_multifield,
+        wand_topk,
     )
 
     fields = ["name", "title", "body"]
@@ -167,11 +167,11 @@ def test_upsert_multifield_equals_rebuild(spark, tmp_path):
     for q in ["quantum", "quantum w3", "title", "pkg3 body", "zzz-none"]:
         a = [
             (r["doc_id"], r["score"])
-            for r in wand_topk_multifield(idx, weights, q, k=15).collect()
+            for r in wand_topk(idx, q, k=15, weights=weights).collect()
         ]
         b = [
             (r["doc_id"], r["score"])
-            for r in wand_topk_multifield(ref, weights, q, k=15).collect()
+            for r in wand_topk(ref, q, k=15, weights=weights).collect()
         ]
         assert a == b, q
     # and the stats tables agree exactly (not just the top-k)
@@ -195,7 +195,7 @@ def test_multifield_delete_docs(spark, tmp_path):
     from pyf_aggregator_spark.index.segments import build_multifield_segments
     from pyf_aggregator_spark.search.wand import (
         load_multifield_index,
-        wand_topk_multifield,
+        wand_topk,
     )
 
     fields = ["name", "body"]
@@ -223,11 +223,11 @@ def test_multifield_delete_docs(spark, tmp_path):
     idx, ref = load_multifield_index(spark, d), load_multifield_index(spark, d2)
     got = [
         r["doc_id"]
-        for r in wand_topk_multifield(idx, weights, "quantum", k=30).collect()
+        for r in wand_topk(idx, "quantum", k=30, weights=weights).collect()
     ]
     want = [
         r["doc_id"]
-        for r in wand_topk_multifield(ref, weights, "quantum", k=30).collect()
+        for r in wand_topk(ref, "quantum", k=30, weights=weights).collect()
     ]
     # stats drift is expected (Lucene delete model: df/idf keep deleted
     # docs until compaction) so compare the HIT SETS, and assert the

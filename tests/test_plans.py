@@ -281,6 +281,27 @@ def test_kernel_placement_salts_match_spark_hash(spark):
         assert len({_mm3_int(s) % P for s in salts.values()}) == P
 
 
+def test_salt_col_missing_key_is_null_under_ansi(spark):
+    """placement.salt_col promises NULL for a key outside its map, also
+    under ANSI mode, where a plain element_at map lookup may raise
+    MAP_KEY_DOES_NOT_EXIST (Spark 3.x does); the try_ form makes the
+    NULL contract explicit."""
+    from pyf_aggregator_spark.index.placement import salt_col
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        rows = (
+            spark.createDataFrame([(1,), (7,)], "k int")
+            .select("k", salt_col({1: 5}, F.col("k")).alias("kb"))
+            .orderBy("k")
+            .collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert [(r["k"], r["kb"]) for r in rows] == [(1, 5), (7, None)]
+
+
 def test_cached_kernel_layout_one_part_per_task_no_exchange(spark, tmp_path):
     """load_index's salted layout must (a) place exactly one part per
     cache partition with zero empty partitions, and (b) let the WAND

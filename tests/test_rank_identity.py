@@ -125,3 +125,23 @@ def test_rle_postings_edge_docs(spark):
     # AQE final plan and once in the initial plan — never a
     # postings-sized one
     assert len(shuffles) <= 2, tree
+
+
+def test_batch_duplicate_query_ids_pair_deterministically(corpus, spark):
+    """Two queries sharing a query_id are answered as two queries: the
+    qid surrogate orders on every query column, so each query's terms
+    stay paired with its own mode and k."""
+    index, oracle = corpus
+    qs = [("dup", "w00000", "or", 3), ("dup", "w00001 w00002", "and", 5)]
+    qdf = spark.createDataFrame(
+        qs, "query_id string, query string, mode string, k int"
+    )
+    got = sorted(
+        (r["rank"], r["doc_id"]) for r in bm25_topk_batch(index, qdf).collect()
+    )
+    want = sorted(
+        (rank, d)
+        for _, q, mode, k in qs
+        for rank, d, _ in oracle.topk(q, k=k, mode=mode)
+    )
+    assert got == want

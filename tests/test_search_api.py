@@ -154,7 +154,7 @@ def test_search_grouped_drop_tokens(spark, sf_dir):
 
 def test_search_query_by_drop_tokens_grouped_and_sorted(spark, sf_dir):
     """The drop cascade's MULTIFIELD branches on the grouped and
-    sort_by paths (drop_tokens_mf_with_found call sites): fuzz families
+    sort_by paths (drop_tokens_with_found weights= call sites): fuzz families
     never combine query_by with group_by/sort_by, so these run only
     here. The query with an unknown tail must behave exactly like the
     query without it on both paths."""
@@ -265,7 +265,7 @@ def test_search_query_by_weights_matches_graded_engine(spark, sf_dir):
     the graded multifield query's answer (r3 missing #3: the engine
     existed but the facade never composed it)."""
     import pyf_aggregator_spark.operators.fulltext_extra as fx
-    from pyf_aggregator_spark.search.wand import wand_topk_multifield
+    from pyf_aggregator_spark.search.wand import wand_topk
 
     res = search(
         spark, sf_dir,
@@ -274,9 +274,9 @@ def test_search_query_by_weights_matches_graded_engine(spark, sf_dir):
          "query_by_weights": "10,10,5,3,1",
          "per_page": 25, "num_typos": 0},
     )
-    direct = wand_topk_multifield(
-        fx.documents_multifield_index(spark, sf_dir), fx._5F_WEIGHTS,
-        fx._5F_QUERY, k=25,
+    direct = wand_topk(
+        fx.documents_multifield_index(spark, sf_dir), fx._5F_QUERY, k=25,
+        weights=fx._5F_WEIGHTS,
     ).collect()
     assert [
         (h["document"]["doc_id"], h["text_match"]) for h in res["hits"]
@@ -487,7 +487,7 @@ def test_search_query_by_prefix_uses_slot_scoring(spark, sf_dir):
     )
     from pyf_aggregator_spark.functions.tokenize import tokenize_py
     from pyf_aggregator_spark.search.prefix import expand_prefix
-    from pyf_aggregator_spark.search.wand import wand_topk_multifield
+    from pyf_aggregator_spark.search.wand import wand_topk
 
     q = "vector s"
     res = search(
@@ -505,8 +505,8 @@ def test_search_query_by_prefix_uses_slot_scoring(spark, sf_dir):
     *fixed, last = tokenize_py(q)
     expansions = expand_prefix(sum_stats, last) or [last]
     slot_terms = [[t] for t in dict.fromkeys(fixed)] + [expansions]
-    direct = wand_topk_multifield(
-        mf, _5F_WEIGHTS, "", k=10, mode="or", slot_terms=slot_terms
+    direct = wand_topk(
+        mf, "", k=10, mode="or", slot_terms=slot_terms, weights=_5F_WEIGHTS
     ).collect()
     assert [
         (h["document"]["doc_id"], h["text_match"]) for h in res["hits"]
@@ -846,7 +846,7 @@ def test_search_infix_fallback_expands_unknown_token(spark, sf_dir):
     the words containing it, scored as one slot — rank-identical to the
     directly-invoked slotted kernel."""
     from pyf_aggregator_spark.search.infix import expand_infix
-    from pyf_aggregator_spark.search.wand import wand_topk_slots
+    from pyf_aggregator_spark.search.wand import wand_topk
 
     idx, sub = _infix_probe(spark, sf_dir)
     exp = expand_infix(idx["term_stats"], sub)
@@ -854,8 +854,8 @@ def test_search_infix_fallback_expands_unknown_token(spark, sf_dir):
     res = search(spark, sf_dir,
                  {"q": sub, "per_page": 5, "num_typos": 0,
                   "infix": "fallback"})
-    direct = wand_topk_slots(
-        idx, [list(dict.fromkeys([sub] + exp))], k=5
+    direct = wand_topk(
+        idx, "", k=5, slot_terms=[list(dict.fromkeys([sub] + exp))]
     ).collect()
     assert [
         (h["document"]["doc_id"], h["text_match"]) for h in res["hits"]
@@ -885,7 +885,7 @@ def test_search_infix_always_expands_known_token(spark, sf_dir):
     """infix=always: every token expands (exact postings ride in the
     same slot) — agrees with the directly-built slots."""
     from pyf_aggregator_spark.search.infix import expand_infix
-    from pyf_aggregator_spark.search.wand import wand_topk_slots
+    from pyf_aggregator_spark.search.wand import wand_topk
 
     from pyf_aggregator_spark.operators.fulltext_extra import (
         documents_segment_index,
@@ -899,7 +899,7 @@ def test_search_infix_always_expands_known_token(spark, sf_dir):
     res = search(spark, sf_dir,
                  {"q": "spark vector", "per_page": 5, "num_typos": 0,
                   "infix": "always"})
-    direct = wand_topk_slots(idx, slots, k=5).collect()
+    direct = wand_topk(idx, "", k=5, slot_terms=slots).collect()
     assert [
         (h["document"]["doc_id"], h["text_match"]) for h in res["hits"]
     ] == [(r["doc_id"], r["score"]) for r in direct]
@@ -1125,3 +1125,12 @@ def test_ranked_facets_single_kernel_pass(spark, sf_dir, monkeypatch):
         h["document"]["doc_id"] for h in plain["hits"]
     ]
     assert res["found"] == plain["found"]
+    # second input: the same ranked + faceted request on the multifield
+    # path (query_by) also takes exactly one score-matches pass
+    calls.update(score=0, ids=0, topk_found=0)
+    search(
+        spark, sf_dir,
+        {"q": "spark vector", "query_by": "name,title", "facet_by": "lang",
+         "per_page": 10, "num_typos": 0},
+    )
+    assert calls == {"score": 1, "ids": 0, "topk_found": 0}

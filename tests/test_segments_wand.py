@@ -120,6 +120,39 @@ def test_wand_batch_matches_oracle(built, spark):
         ], q
 
 
+def test_wand_batch_rejects_duplicate_query_ids(built):
+    """A repeated query_id would double every hit of that id in the
+    broadcast k-join and rank both queries' hits in one window."""
+    from pyf_aggregator_spark.search.wand import wand_topk_batch
+
+    spark, _, index_dir, _, _ = built
+    idx = load_index(spark, index_dir)
+    qs = [
+        {"query_id": "a", "query": "w00000", "mode": "or", "k": 3},
+        {"query_id": "a", "query": "w00001", "mode": "or", "k": 3},
+    ]
+    with pytest.raises(ValueError, match="duplicate query_id"):
+        wand_topk_batch(idx, qs)
+
+
+def test_query_spec_slots_only_when_a_term_is_shared(built):
+    """Plain queries keep the kernel's no-slots/no-groups path; a term
+    in two groups (a repeated token under prefix) keeps its slots, so it
+    scores once per group."""
+    from pyf_aggregator_spark.search.wand import _query_spec
+
+    spark, _, index_dir, _, _ = built
+    idx = load_index(spark, index_dir)
+    for mode in ("or", "and"):
+        spec = _query_spec(idx, "w00001 w00000 w00001", None, mode, None)
+        assert spec["slots"] is None and spec["groups"] is None, mode
+        assert spec["n_groups"] == 2
+    shared = _query_spec(idx, "", [["w00000"], ["w00000"]], "and", None)
+    assert shared["slots"] == shared["groups"] == {"w00000": (0, 1)}
+    with pytest.raises(ValueError, match="weights"):
+        _query_spec(idx, "w00000", None, "or", {"title": 1.0})
+
+
 def test_wand_filtered_allowed_set(built):
     """Kernel-pushed filter_by: WAND with an allow-set returns exactly
     the DataFrame engine's filtered ranking (filter applied pre-heap,
@@ -265,11 +298,11 @@ def test_score_matches_equals_full_df_engine_set(built):
 
 
 def test_score_matches_slots_equals_slot_topk_full(built):
-    """Slotted score-matches ≡ wand_topk_slots at k=∞ (same slot-max
+    """Slotted score-matches ≡ slotted wand_topk at k=∞ (same slot-max
     scoring, same membership)."""
     from pyf_aggregator_spark.search.wand import (
         wand_score_matches,
-        wand_topk_slots,
+        wand_topk,
     )
 
     spark, docs, index_dir, stats, oracle = built
@@ -283,8 +316,8 @@ def test_score_matches_slots_equals_slot_topk_full(built):
     }
     want = {
         r["doc_id"]: r["score"]
-        for r in wand_topk_slots(
-            idx, slot_terms, k=10_000_000, mode="and"
+        for r in wand_topk(
+            idx, "", k=10_000_000, mode="and", slot_terms=slot_terms
         ).collect()
     }
     assert got == want and len(got) > 0

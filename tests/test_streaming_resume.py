@@ -231,7 +231,7 @@ def test_stream_upsert_multifield_exactly_once(spark, tmp_path):
     from pyf_aggregator_spark.index.segments import build_multifield_segments
     from pyf_aggregator_spark.search.wand import (
         load_multifield_index,
-        wand_topk_multifield,
+        wand_topk,
     )
     from pyf_aggregator_spark.streaming.live_index import (
         stream_upsert_multifield,
@@ -286,11 +286,11 @@ def test_stream_upsert_multifield_exactly_once(spark, tmp_path):
     for q in ["quantum", "quantum w3", "pkg3 body", "zzz-none"]:
         a = [
             (r["doc_id"], r["score"])
-            for r in wand_topk_multifield(idx, weights, q, k=15).collect()
+            for r in wand_topk(idx, q, k=15, weights=weights).collect()
         ]
         b = [
             (r["doc_id"], r["score"])
-            for r in wand_topk_multifield(ref, weights, q, k=15).collect()
+            for r in wand_topk(ref, q, k=15, weights=weights).collect()
         ]
         assert a == b, q
 
@@ -309,7 +309,7 @@ def test_stream_mf_replay_after_torn_commit_reapplies(
     from pyf_aggregator_spark.index.segments import build_multifield_segments
     from pyf_aggregator_spark.search.wand import (
         load_multifield_index,
-        wand_topk_multifield,
+        wand_topk,
     )
     from pyf_aggregator_spark.streaming.live_index import (
         stream_upsert_multifield,
@@ -362,7 +362,7 @@ def test_stream_mf_replay_after_torn_commit_reapplies(
     idx, ref = load_multifield_index(spark, d), load_multifield_index(spark, d2)
     for q in ["quantum", "pkg2 body", "w1"]:
         a = [(r["doc_id"], r["score"])
-             for r in wand_topk_multifield(idx, weights, q, k=10).collect()]
+             for r in wand_topk(idx, q, k=10, weights=weights).collect()]
         b = [(r["doc_id"], r["score"])
-             for r in wand_topk_multifield(ref, weights, q, k=10).collect()]
+             for r in wand_topk(ref, q, k=10, weights=weights).collect()]
         assert a == b, q
