@@ -8,6 +8,16 @@ Varbyte: little-endian 7-bit groups, high bit = continuation (set on
 every byte except the last of a value) — the classic format
 (Manning/Raghavan/Schütze IR book §5.3; same scheme Lucene calls VInt).
 
+Segment blocks: a block row carries ``n`` postings as three payloads
+(``docs_vb``, ``tfs_vb``, ``dls_vb``), and every block RESTARTS the doc
+delta chain — its first doc id is stored absolute, not as a gap from the
+previous block, so any block decodes alone. ``decode_blocks`` decodes a
+whole batch of block rows at once: one ``varbyte_decode`` per joined
+payload column, then one delta cumsum re-based at each block start
+(``cumsum(n)``). Readers decode a batch of rows in one call rather than
+looping over rows; a batch whose ``Σn`` disagrees with the decoded
+lengths raises ``ValueError``.
+
 Everything is numpy array ops — no per-value Python loops; the only
 Python-level loop is over the ≤10 byte positions of a 64-bit value.
 """
@@ -108,3 +118,35 @@ def decode_postings(docs_vb: bytes, counts_vb: bytes) -> tuple[np.ndarray, np.nd
         delta_decode(varbyte_decode(docs_vb)),
         varbyte_decode(counts_vb),
     )
+
+
+def decode_blocks(
+    n, docs_vb, tfs_vb, dls_vb
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """A batch of segment block rows → flat (doc_ids, tfs, dls) uint64
+    arrays, block after block in input order.
+
+    ``n`` is the per-block posting count; the payload arguments are
+    sequences of per-block bytes. Each block restarts absolute (see the
+    module docstring), so the doc-id cumsum runs over the whole batch
+    and is re-based at every block start; uint64 arithmetic wraps
+    modulo 2**64, which keeps the re-basing exact. Raises ValueError
+    when Σn disagrees with the decoded length of any column."""
+    n = np.asarray(n, dtype=np.int64)
+    deltas = varbyte_decode(b"".join(docs_vb))
+    tfs = varbyte_decode(b"".join(tfs_vb))
+    dls = varbyte_decode(b"".join(dls_vb))
+    total = int(n.sum())
+    if not deltas.size == tfs.size == dls.size == total:
+        raise ValueError(
+            f"decode_blocks: blocks declare {total} postings, payloads "
+            f"decode to {deltas.size}/{tfs.size}/{dls.size} (docs/tfs/dls)"
+        )
+    run = np.cumsum(deltas, dtype=np.uint64)
+    # running sum just before each block start; subtracting it makes the
+    # block's first (absolute) value its own prefix
+    starts = np.cumsum(n) - n
+    base = np.zeros(n.size, dtype=np.uint64)
+    nz = starts > 0
+    base[nz] = run[starts[nz] - 1]
+    return run - np.repeat(base, n), tfs, dls

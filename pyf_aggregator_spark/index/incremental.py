@@ -380,7 +380,7 @@ def load_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
             # the delete came FIRST: an upsert with scope s appends its
             # new version as part s, so any later delete sees max part
             # ≥ s and gets scope ≥ s+1. The upsert's live version in
-    # part ≥ s therefore stands (the posting-level scope filter
+            # part ≥ s therefore stands (the posting-level scope filter
             # already keeps it; this keeps compact's doc_stats carry in
             # agreement).
             F.expr(
@@ -518,45 +518,41 @@ def append_segments(
 
 
 def _decode_live_postings(seg: DataFrame, tomb: DataFrame | None) -> DataFrame:
-    """Segment blocks → (part_id, term, doc_id, tf, doc_len) rows, with
-    scoped tombstones applied as a distributed anti-join (a posting in a
-    part ≥ its doc's tombstone scope is the live re-added version and
-    survives). Never collects the tombstone set to the driver."""
+    """Segment blocks → ([field,] part_id, term, doc_id, tf, doc_len)
+    rows, with scoped tombstones applied as a distributed anti-join (a
+    posting in a part ≥ its doc's tombstone scope is the live re-added
+    version and survives). Never collects the tombstone set to the
+    driver. A multifield segment table (one with a ``field`` column)
+    keeps the field key; tombstones are per-DOC there too — an upsert
+    replaces every field of the document atomically, so one scope
+    covers all fields.
+
+    Each Arrow batch of block rows decodes in one ``decode_blocks``
+    call; the key columns repeat per block over its ``n`` postings."""
+    import numpy as np
     import pandas as pd
 
-    from pyf_aggregator_spark.index.codec import decode_postings, varbyte_decode
+    from pyf_aggregator_spark.index.codec import decode_blocks
+
+    multifield = "field" in seg.columns
+    keys = ["field"] * multifield + ["part_id", "term"]
 
     def decode_rows(it):
         for pdf in it:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                ids, tfs = decode_postings(r.docs_vb, r.tfs_vb)
-                dls = varbyte_decode(r.dls_vb)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "part_id": int(r.part_id),
-                            "term": r.term,
-                            "doc_id": ids.astype("int64"),
-                            "tf": tfs.astype("int64"),
-                            "doc_len": dls.astype("int64"),
-                        }
-                    )
-                )
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame(
-                    {"part_id": pd.Series(dtype="int32"),
-                     "term": pd.Series(dtype=str),
-                     "doc_id": pd.Series(dtype="int64"),
-                     "tf": pd.Series(dtype="int64"),
-                     "doc_len": pd.Series(dtype="int64")}
-                )
+            n = pdf["n"].to_numpy(np.int64)
+            ids, tfs, dls = decode_blocks(
+                n, pdf["docs_vb"], pdf["tfs_vb"], pdf["dls_vb"]
             )
+            out = {k: np.repeat(pdf[k].to_numpy(), n) for k in keys}
+            out["doc_id"] = ids.astype(np.int64)
+            out["tf"] = tfs.astype(np.int64)
+            out["doc_len"] = dls.astype(np.int64)
+            yield pd.DataFrame(out)
 
-    postings = seg.mapInPandas(
-        decode_rows, "part_id int, term string, doc_id long, tf long, doc_len long"
+    postings = seg.select(*keys, "n", "docs_vb", "tfs_vb", "dls_vb").mapInPandas(
+        decode_rows,
+        ("field string, " if multifield else "")
+        + "part_id int, term string, doc_id long, tf long, doc_len long",
     )
     if tomb is not None:
         t = tomb.select(
@@ -591,18 +587,33 @@ def upsert_docs(
     compaction to reconcile. New ids are plain inserts.
 
     The maintenance math is all DataFrame algebra: the only driver
-    values are 4 scalars + the affected part list (partition pruning
-    for the old-postings decode)."""
+    values are two aggregate rows (one over the input, one over the
+    updated ids) + the affected part list (partition pruning for the
+    old-postings decode)."""
+    from pyf_aggregator_spark import TOKEN_SEP_RE
+    from pyf_aggregator_spark.index.builder import _doc_len_col
+
     _reconcile_pending_blocking(index_dir)
+    # doc_len is a per-row expression (token count == Σ tf), so the new
+    # doc_stats rows are a projection of the input — no tf groupBy/join
     docs = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
+        F.col("doc_id").cast("long").alias("doc_id"),
+        "text",
+        _doc_len_col("text").alias("doc_len"),
     ).persist()
-    n_upsert = docs.count()
+    # every input scalar in ONE job over the persisted input
+    n_upsert, n_distinct, lo, hi, new_len = docs.agg(
+        F.count("*"),
+        F.count_distinct("doc_id"),
+        F.min("doc_id"),
+        F.max("doc_id"),
+        F.coalesce(F.sum("doc_len"), F.lit(0)),
+    ).collect()[0]
     # one version per id per call — duplicate ids would double-count in
     # the stats adjustment (callers sequence multiple versions as
     # separate upsert calls, like the reference's queue of point
     # upserts). Hard error, not assert: -O must not strip the guard.
-    if docs.select("doc_id").distinct().count() != n_upsert:
+    if n_distinct != n_upsert:
         docs.unpersist()
         raise ValueError("upsert_docs: input contains duplicate doc_ids")
     if n_upsert == 0:
@@ -617,7 +628,13 @@ def upsert_docs(
 
     ids = docs.select("doc_id")
     existing = ids.join(old_doc_stats.select("doc_id"), "doc_id", "left_semi").persist()
-    n_updated = existing.count()
+    # the updated docs' OLD rows give both the count and the length to
+    # subtract (doc_stats holds one row per doc) in one job
+    n_updated, old_len = (
+        old_doc_stats.join(existing, "doc_id", "left_semi")
+        .agg(F.count("*"), F.coalesce(F.sum("doc_len"), F.lit(0)))
+        .collect()[0]
+    )
     n_new = n_upsert - n_updated
 
     # ---- old live postings of the updated docs (partition-pruned scan)
@@ -644,43 +661,29 @@ def upsert_docs(
             F.count("*").cast("long").alias("df_sub"),
             F.sum("tf").cast("long").alias("cf_sub"),
         )
-        old_len = (
-            old_doc_stats.join(existing, "doc_id", "left_semi")
-            .agg(F.coalesce(F.sum("doc_len"), F.lit(0)))
-            .collect()[0][0]
-        )
     else:
         old_term = None
-        old_len = 0
 
     # ---- new tokenization stats
-    from pyf_aggregator_spark import TOKEN_SEP_RE
-
     tokens = docs.select(
         "doc_id", F.explode(F.split(F.lower("text"), TOKEN_SEP_RE)).alias("term")
     ).filter(F.col("term") != "")
-    tf_new = tokens.groupBy("term", "doc_id").agg(
-        F.count("*").cast("long").alias("tf")
+    new_term = (
+        tokens.groupBy("term", "doc_id")
+        .agg(F.count("*").cast("long").alias("tf"))
+        .groupBy("term")
+        .agg(
+            F.count("*").cast("long").alias("df_add"),
+            F.sum("tf").cast("long").alias("cf_add"),
+        )
     )
-    new_term = tf_new.groupBy("term").agg(
-        F.count("*").cast("long").alias("df_add"),
-        F.sum("tf").cast("long").alias("cf_add"),
-    )
-    new_doc_stats = (
-        docs.select("doc_id")
-        .join(tf_new.groupBy("doc_id").agg(F.sum("tf").alias("doc_len")), "doc_id", "left")
-        .select("doc_id", F.coalesce("doc_len", F.lit(0)).cast("long").alias("doc_len"))
-        .persist()
-    )
-    new_len = new_doc_stats.agg(F.coalesce(F.sum("doc_len"), F.lit(0))).collect()[0][0]
+    new_doc_stats = docs.select("doc_id", "doc_len")
 
     n_docs_new = int(corpus_old["n_docs"]) + n_new
     total_len_new = int(corpus_old["total_len"]) - int(old_len) + int(new_len)
     avgdl_new = total_len_new / n_docs_new
 
     # ---- STAGE every artifact; live dirs stay untouched until commit
-    lo = int(docs.agg(F.min("doc_id")).collect()[0][0])
-    hi = int(docs.agg(F.max("doc_id")).collect()[0][0])
     span = hi - lo + 1
     import math as _math
 
@@ -755,7 +758,6 @@ def upsert_docs(
 
     docs.unpersist()
     existing.unpersist()
-    new_doc_stats.unpersist()
     return {
         "n_upserted": int(n_upsert),
         "n_new": int(n_new),
@@ -763,63 +765,6 @@ def upsert_docs(
         "part_base": part_base,
         "avgdl": float(avgdl_new),
     }
-
-
-def _decode_live_postings_mf(seg: DataFrame, tomb: DataFrame | None) -> DataFrame:
-    """Multifield twin of _decode_live_postings: blocks → (field,
-    part_id, term, doc_id, tf, doc_len) rows with scoped tombstones
-    applied (tombstones are per-DOC — an upsert replaces every field of
-    the document atomically, so one scope covers all fields)."""
-    import pandas as pd
-
-    from pyf_aggregator_spark.index.codec import decode_postings, varbyte_decode
-
-    def decode_rows(it):
-        for pdf in it:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                ids, tfs = decode_postings(r.docs_vb, r.tfs_vb)
-                dls = varbyte_decode(r.dls_vb)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "field": r.field,
-                            "part_id": int(r.part_id),
-                            "term": r.term,
-                            "doc_id": ids.astype("int64"),
-                            "tf": tfs.astype("int64"),
-                            "doc_len": dls.astype("int64"),
-                        }
-                    )
-                )
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame(
-                    {"field": pd.Series(dtype=str),
-                     "part_id": pd.Series(dtype="int32"),
-                     "term": pd.Series(dtype=str),
-                     "doc_id": pd.Series(dtype="int64"),
-                     "tf": pd.Series(dtype="int64"),
-                     "doc_len": pd.Series(dtype="int64")}
-                )
-            )
-
-    postings = seg.mapInPandas(
-        decode_rows,
-        "field string, part_id int, term string, doc_id long, tf long, doc_len long",
-    )
-    if tomb is not None:
-        t = tomb.select(
-            F.col("doc_id").alias("t_doc"), F.col("scope_part").alias("t_scope")
-        )
-        postings = postings.join(
-            t,
-            (F.col("doc_id") == F.col("t_doc"))
-            & (F.col("part_id") < F.col("t_scope")),
-            "left_anti",
-        ).drop("t_doc", "t_scope")
-    return postings
 
 
 def upsert_multifield(
@@ -903,7 +848,7 @@ def upsert_multifield(
         seg = spark.read.parquet(f"{index_dir}/segments").filter(
             F.col("part_id").isin(hit_parts) if hit_parts else F.lit(False)
         )
-        old_rows = _decode_live_postings_mf(seg, tomb).join(
+        old_rows = _decode_live_postings(seg, tomb).join(
             existing, "doc_id", "left_semi"
         )
         old_term = old_rows.groupBy("field", "term").agg(
@@ -1089,9 +1034,6 @@ def compact(spark: SparkSession, index_dir: str, num_partitions: int | None = No
     The index is self-contained: segments decode back to (term, doc_id,
     tf, doc_len) without the original corpus. Output replaces the index
     dirs atomically (write-new + dir swap)."""
-    import pandas as pd
-
-    from pyf_aggregator_spark.index.codec import decode_postings, varbyte_decode
     from pyf_aggregator_spark.session import ensure_py_files
 
     ensure_py_files(spark)

@@ -386,9 +386,11 @@ def build_multifield_segments(
                 _max_encode_buckets(),
             )
         )
-        parted = keyed.withColumn(
-            "_kb", F.col("part_id").cast("int")
-        ).repartition(n_buckets, "_kb")
+        # hash the (field, part) pair, not part_id alone: keying on the
+        # part would send every field of a part to one encode bucket
+        parted = keyed.withColumn("_kb", F.hash(pair_col)).repartition(
+            n_buckets, "_kb"
+        )
     tokens = parted.select(
         "_kb", "field", "part_id", "doc_id",
         F.explode(F.split(F.lower("text"), TOKEN_SEP_RE)).alias("term"),

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from pyf_aggregator_spark import B, K1
 from pyf_aggregator_spark.functions.tokenize import tokenize_py
-from pyf_aggregator_spark.index.codec import decode_postings, varbyte_decode
+from pyf_aggregator_spark.index.codec import decode_blocks
 from pyf_aggregator_spark.search.engine import SCORE_DECIMALS
 
 
@@ -112,15 +112,12 @@ class _PartitionBlocks:
         if t not in self._decoded:
             g = self.per_term[t]
             av = self.avgdl[t] if isinstance(self.avgdl, dict) else self.avgdl
-            ids_all, scores_all = [], []
-            for r in g.itertuples(index=False):
-                ids, tfs = decode_postings(r.docs_vb, r.tfs_vb)
-                dls = varbyte_decode(r.dls_vb)
-                ids_all.append(ids.astype(np.int64))
-                scores_all.append(_score_block(tfs, dls, self.idf_map[t], av))
+            ids, tfs, dls = decode_blocks(
+                g["n"].to_numpy(np.int64), g["docs_vb"], g["tfs_vb"], g["dls_vb"]
+            )
             self._decoded[t] = (
-                np.concatenate(ids_all),
-                np.concatenate(scores_all),
+                ids.astype(np.int64),
+                _score_block(tfs, dls, self.idf_map[t], av),
             )
         return self._decoded[t]
 
@@ -173,12 +170,18 @@ def _term_dict(idx: dict):
     if n > _termdict_max():
         idx["_term_dict_too_big"] = ver
         return None
-    if "field" in idx["term_stats"].columns:
-        rows = idx["term_stats"].select("field", "term", "idf").collect()
-        d = {(r["field"], r["term"]): r["idf"] for r in rows}
-    else:
-        rows = idx["term_stats"].select("term", "idf").collect()
-        d = {r["term"]: r["idf"] for r in rows}
+    # collected as Arrow columns, not Row objects: the dictionary is
+    # vocabulary-sized and rebuilt on the first query after every reload
+    multifield = "field" in idx["term_stats"].columns
+    tbl = (
+        idx["term_stats"]
+        .select(*(["field"] if multifield else []), "term", "idf")
+        .toArrow()
+    )
+    keys = tbl.column("term").to_pylist()
+    if multifield:
+        keys = zip(tbl.column("field").to_pylist(), keys)
+    d = dict(zip(keys, tbl.column("idf").to_pylist()))
     idx["_term_dict"] = (ver, d)
     return d
 

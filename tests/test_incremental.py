@@ -749,3 +749,54 @@ def test_tombstones_hidden_without_kb_salts(spark, tmp_path):
     idx.pop("kb_salts", None)
     hits, found = wand_topk_with_found(idx, "w00000", k=10)
     assert (hits, found) == ([], 0)
+
+
+def _decoded(spark, d, tomb=None):
+    from pyf_aggregator_spark.index.incremental import _decode_live_postings
+
+    seg = spark.read.parquet(f"{d}/segments")
+    return {
+        (r["term"], r["doc_id"]): (r["tf"], r["doc_len"], r["part_id"])
+        for r in _decode_live_postings(seg, tomb).collect()
+    }
+
+
+def test_decode_live_postings_reproduces_tokenization(spark, tmp_path):
+    """Decoding every block of a fresh build gives back exactly the
+    (term, doc_id, tf, doc_len) postings of tokenizing the corpus."""
+    from collections import Counter
+
+    from pyf_aggregator_spark.functions.tokenize import tokenize_py
+
+    docs = assign_doc_ids(transcripts_df(spark, 400), num_partitions=2).select(
+        "doc_id", "text"
+    )
+    d = str(tmp_path / "dec")
+    build_segments(docs, d, num_partitions=3, block_size=16, lineage="b")
+    want = {}
+    for r in docs.collect():
+        toks = tokenize_py(r["text"] or "")
+        for term, tf in Counter(toks).items():
+            want[(term, r["doc_id"])] = (tf, len(toks))
+    got = _decoded(spark, d)
+    assert {k: v[:2] for k, v in got.items()} == want
+    assert len({v[2] for v in got.values()}) == 3
+
+
+def test_decode_live_postings_applies_scoped_tombstones(spark, tmp_path):
+    """A tombstone hides its doc's postings in parts below its scope
+    only: scope above every part removes the doc, scope 0 keeps it."""
+    docs = assign_doc_ids(transcripts_df(spark, 300), num_partitions=2).select(
+        "doc_id", "text"
+    )
+    d = str(tmp_path / "tomb")
+    build_segments(docs, d, num_partitions=2, lineage="b")
+    full = _decoded(spark, d)
+    dead, kept = 3, 4
+    assert {doc for _t, doc in full} >= {dead, kept}
+    tomb = spark.createDataFrame(
+        [(dead, 99, "delete"), (kept, 0, "upsert")],
+        "doc_id long, scope_part long, kind string",
+    )
+    got = _decoded(spark, d, tomb)
+    assert got == {k: v for k, v in full.items() if k[1] != dead}

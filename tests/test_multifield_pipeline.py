@@ -251,3 +251,49 @@ def test_grouped_search_wand_matches_df_engine(spark, sf_dir):
     ).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
     assert len(a) > 0
+
+
+def test_multifield_overcap_fallback_keys_field_part_pairs(
+    spark, tmp_path, monkeypatch
+):
+    """Above the salt-map cap the encode shuffle hashes each (field,
+    part) pair into over-provisioned buckets: the artifact is byte-
+    identical to the salted build, and the fields of one part spread
+    over several encode tasks instead of sharing the part's bucket."""
+    import glob
+    import os
+    import re
+
+    from pyf_aggregator_spark.index import placement
+    from pyf_aggregator_spark.index.segments import build_multifield_segments
+
+    fields = ["name", "title", "body"]
+    n_parts = 2
+    rows = [
+        (i, f"pkg{i}", f"title w{i % 7}", f"body w{i % 5} w{i % 11} filler")
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, name string, title string, body string"
+    )
+
+    def checksums(d):
+        return sorted(
+            (r["field"], r["part_id"], r["checksum"])
+            for r in spark.read.parquet(f"{d}/meta").collect()
+        )
+
+    salted = str(tmp_path / "salted")
+    build_multifield_segments(df, salted, fields, num_partitions=n_parts)
+    monkeypatch.setattr(placement, "SALT_MAP_MAX_GROUPS", 0)
+    hashed = str(tmp_path / "hashed")
+    build_multifield_segments(df, hashed, fields, num_partitions=n_parts)
+
+    assert len(checksums(salted)) == n_parts * len(fields)
+    assert checksums(hashed) == checksums(salted)
+    # every segment file is named after the encode task that wrote it
+    tasks = {
+        re.match(r"part-(\d+)", os.path.basename(p)).group(1)
+        for p in glob.glob(f"{hashed}/segments/*/*/part-*.parquet")
+    }
+    assert len(tasks) > n_parts

@@ -321,3 +321,34 @@ def test_score_matches_slots_equals_slot_topk_full(built):
         ).collect()
     }
     assert got == want and len(got) > 0
+
+
+def test_term_dict_equals_row_collect(built, tmp_path):
+    """The Arrow-collected in-RAM dictionary equals the one built from
+    Row objects, for term keys (single-field) and (field, term) keys
+    (multifield)."""
+    from pyf_aggregator_spark.index.segments import build_multifield_segments
+    from pyf_aggregator_spark.search.wand import _term_dict, load_multifield_index
+
+    spark, _, index_dir, _, _ = built
+    idx = load_index(spark, index_dir)
+    want = {
+        r["term"]: r["idf"]
+        for r in idx["term_stats"].select("term", "idf").collect()
+    }
+    assert len(want) > 100
+    assert _term_dict(idx) == want
+
+    rows = [(i, f"pkg{i} w{i % 3}", f"body w{i % 5} filler") for i in range(30)]
+    d = str(tmp_path / "mf")
+    build_multifield_segments(
+        spark.createDataFrame(rows, "doc_id long, name string, body string"),
+        d, ["name", "body"], num_partitions=2,
+    )
+    mf = load_multifield_index(spark, d)
+    want_mf = {
+        (r["field"], r["term"]): r["idf"]
+        for r in mf["term_stats"].select("field", "term", "idf").collect()
+    }
+    assert ("name", "pkg7") in want_mf and ("body", "filler") in want_mf
+    assert _term_dict(mf) == want_mf
