@@ -14,9 +14,12 @@ Phases: build_parts, cache_parts, batch, wand_lat, headline, facade, upsert
 ``upsert`` builds a fresh index over the corpus, runs one 500-doc
 ``upsert_docs`` (250 existing ids with new text, 250 new ids) and prints
 one JSON line with the seconds and Spark job count of each upsert stage:
-preamble (input scalars, updated-id lookup), build_segments (the delta
-part), stats_writes (tombstones, term_stats with the old-postings
-decode, doc_stats) and commit. ``--phases upsert`` runs it alone.
+preamble (input scalars, updated-id lookup), write_segments (the delta
+part, and term_stats merged with the old-postings decode),
+stats_writes (tombstones, doc_stats) and commit. It does so for both
+index kinds: a single-field index over ``text`` and a two-field index
+over ``role`` and ``text`` (one line each). ``--phases upsert`` runs it
+alone.
 """
 
 from __future__ import annotations
@@ -49,81 +52,105 @@ def noop(df):
     df.write.format("noop").mode("overwrite").save()
 
 
-UPSERT_STAGES = ("preamble", "build_segments", "stats_writes", "commit")
+UPSERT_STAGES = ("preamble", "write_segments", "stats_writes", "commit")
+UPSERT_FIELDS = ["role", "text"]  # the two-field index of the multifield run
 
 
-def upsert_phase(spark, corpus_path: str) -> dict:
-    """One 500-doc upsert_docs on a freshly built index, split into the
-    stages of UPSERT_STAGES. Stage boundaries are the calls upsert_docs
-    makes to build_segments and _commit_staged; each stage runs under
-    its own job group (and job description), so the status tracker
-    counts its jobs."""
+def upsert_phase(spark, corpus_path: str) -> list[dict]:
+    """One 500-doc upsert_docs per index kind — a single-field index
+    over ``text`` and a two-field index over UPSERT_FIELDS, each freshly
+    built — split into the stages of UPSERT_STAGES. Stage boundaries
+    are the calls upsert_docs makes to the segment writer and to
+    _commit_staged; each stage runs under its own job group (and job
+    description), so the status tracker counts its jobs. Prints one
+    JSON line per kind."""
     import numpy as np
 
     from pyf_aggregator_spark.index import incremental
     from pyf_aggregator_spark.index.builder import assign_doc_ids
-    from pyf_aggregator_spark.index.segments import build_segments
+    from pyf_aggregator_spark.index.segments import (
+        build_multifield_segments,
+        build_segments,
+    )
 
     sc = spark.sparkContext
-    docs = assign_doc_ids(spark.read.parquet(corpus_path)).select("doc_id", "text")
-    index_dir = tempfile.mkdtemp(prefix="pyfagg_bx_ups_")
-    build_segments(docs, index_dir, lineage="bx")
-    n = spark.read.parquet(f"{index_dir}/doc_stats").count()
+    docs = assign_doc_ids(spark.read.parquet(corpus_path)).select(
+        "doc_id", *UPSERT_FIELDS
+    ).persist()
+    n = docs.count()
     rng = np.random.default_rng(1)
     existing = [int(i) for i in rng.choice(n, 250, replace=False)]
-    rows = [(i, f"updated w{i % 97:05d} text{i}") for i in existing] + [
-        (n + j, f"inserted w{j % 13:05d} doc{j}") for j in range(250)
+    rows = [(i, "user", f"updated w{i % 97:05d} text{i}") for i in existing] + [
+        (n + j, "tool", f"inserted w{j % 13:05d} doc{j}") for j in range(250)
     ]
-    up = spark.createDataFrame(rows, "doc_id long, text string")
+    kinds = {
+        "single": (
+            lambda d: build_segments(docs.select("doc_id", "text"), d, lineage="bx"),
+            spark.createDataFrame([(i, t) for i, _, t in rows], "doc_id long, text string"),
+        ),
+        "multifield": (
+            lambda d: build_multifield_segments(
+                docs, d, UPSERT_FIELDS, num_partitions=sc.defaultParallelism,
+                lineage="bx",
+            ),
+            spark.createDataFrame(rows, "doc_id long, role string, text string"),
+        ),
+    }
+    results = []
+    for kind, (build, up) in kinds.items():
+        index_dir = tempfile.mkdtemp(prefix=f"pyfagg_bx_ups_{kind}_")
+        build(index_dir)
+        marks: list[tuple[str, float]] = []
+        tag = f"bx-upsert-{kind}-{os.getpid()}"
 
-    marks: list[tuple[str, float]] = []
-    tag = f"bx-upsert-{os.getpid()}"
+        def enter(stage, marks=marks, tag=tag):
+            sc.setJobGroup(f"{tag}.{stage}", f"upsert_docs: {stage}")
+            marks.append((stage, time.monotonic()))
 
-    def enter(stage):
-        sc.setJobGroup(f"{tag}.{stage}", f"upsert_docs: {stage}")
-        marks.append((stage, time.monotonic()))
+        def staged(fn, stage, after, enter=enter):
+            def wrapped(*a, **kw):
+                enter(stage)
+                try:
+                    return fn(*a, **kw)
+                finally:
+                    if after:
+                        enter(after)
+            return wrapped
 
-    def staged(fn, stage, after):
-        def wrapped(*a, **kw):
-            enter(stage)
-            try:
-                return fn(*a, **kw)
-            finally:
-                if after:
-                    enter(after)
-        return wrapped
+        real = incremental._write_segments, incremental._commit_staged
+        incremental._write_segments = staged(real[0], "write_segments", "stats_writes")
+        incremental._commit_staged = staged(real[1], "commit", None)
+        try:
+            enter("preamble")
+            incremental.upsert_docs(spark, index_dir, up)
+            marks.append(("", time.monotonic()))
+        finally:
+            incremental._write_segments, incremental._commit_staged = real
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+            shutil.rmtree(index_dir, ignore_errors=True)
 
-    real = incremental.build_segments, incremental._commit_staged
-    incremental.build_segments = staged(real[0], "build_segments", "stats_writes")
-    incremental._commit_staged = staged(real[1], "commit", None)
-    try:
-        enter("preamble")
-        incremental.upsert_docs(spark, index_dir, up)
-        marks.append(("", time.monotonic()))
-    finally:
-        incremental.build_segments, incremental._commit_staged = real
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setJobDescription(None)
-        shutil.rmtree(index_dir, ignore_errors=True)
-
-    tracker = sc.statusTracker()
-    stages = {
-        stage: {
-            "s": round(t1 - t0, 3),
-            "jobs": len(tracker.getJobIdsForGroup(f"{tag}.{stage}")),
+        tracker = sc.statusTracker()
+        stages = {
+            stage: {
+                "s": round(t1 - t0, 3),
+                "jobs": len(tracker.getJobIdsForGroup(f"{tag}.{stage}")),
+            }
+            for (stage, t0), (_, t1) in zip(marks, marks[1:])
         }
-        for (stage, t0), (_, t1) in zip(marks, marks[1:])
-    }
-    res = {
-        "phase": "upsert",
-        "n_index_docs": n,
-        "n_upserted": len(rows),
-        "s": round(marks[-1][1] - marks[0][1], 3),
-        "jobs": sum(v["jobs"] for v in stages.values()),
-        "stages": {k: stages[k] for k in UPSERT_STAGES},
-    }
-    print(json.dumps(res))
-    return res
+        res = {
+            "phase": "upsert",
+            "kind": kind,
+            "n_index_docs": n,
+            "n_upserted": len(rows),
+            "s": round(marks[-1][1] - marks[0][1], 3),
+            "jobs": sum(v["jobs"] for v in stages.values()),
+            "stages": {k: stages[k] for k in UPSERT_STAGES},
+        }
+        print(json.dumps(res))
+        results.append(res)
+    docs.unpersist()
+    return results
 
 
 def main() -> None:
@@ -154,8 +181,8 @@ def main() -> None:
     spark.read.parquet(corpus_path).limit(1000).groupBy("role").count().collect()
 
     if "upsert" in phases:
-        res = upsert_phase(spark, corpus_path)
-        out["upsert"] = res["s"]
+        for res in upsert_phase(spark, corpus_path):
+            out[f"upsert_{res['kind']}"] = res["s"]
         if phases == {"upsert"}:
             spark.stop()
             return

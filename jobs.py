@@ -293,17 +293,14 @@ def main() -> None:
                "sec": round(time.monotonic() - t0, 2)}
 
     elif args.cmd == "query-multifield":
-        from pyf_aggregator_spark.search.wand import (
-            load_multifield_index,
-            wand_topk,
-        )
+        from pyf_aggregator_spark.search.wand import load_index, wand_topk
 
         weights = {
             kv.split("=")[0].strip(): float(kv.split("=")[1])
             for kv in args.weights.split(",")
             if kv.strip()
         }
-        idx = load_multifield_index(spark, args.index_dir)
+        idx = load_index(spark, args.index_dir)
         rows = wand_topk(idx, args.query, k=args.k, weights=weights).collect()
         out = {
             "cmd": "query-multifield",

@@ -56,6 +56,15 @@ def _doc_len_col(text_col: str = "text"):
     ).cast("long")
 
 
+def _idf_col(n_docs):
+    """BM25 idf of the ``df`` column over ``n_docs`` documents (an int,
+    or a column when the count travels with the rows) — the one idf
+    expression of every index table."""
+    return F.log(
+        F.lit(1.0) + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    ).alias("idf")
+
+
 def explode_token_rle(
     df: DataFrame, text_col: str = "text", keep: list[str] | None = None
 ) -> DataFrame:
@@ -305,11 +314,7 @@ def build_index(
         .select(
             "term",
             "df",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ).alias("idf"),
+            _idf_col(F.col("n_docs")),
         )
     )
     return CorpusIndex(

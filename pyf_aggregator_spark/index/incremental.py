@@ -7,10 +7,15 @@ new documents arrive as a DELTA batch; we
   1. assign delta docIDs from a fresh base ABOVE the existing range
      (old part files are immutable — the zero-downtime append analog
      of the versioned-collection alias swap, typesense_util.py:174-319),
-  2. build delta segment partitions (part_base above existing parts,
-     per-partition checkpoints exactly like the full build),
+  2. build delta segment partitions (part_base above existing parts)
+     through the same writer as the full build
+     (segments._write_segments),
   3. merge stats ADDITIVELY: df/cf/n_docs/total_len are sums, idf is
      recomputed from the merged counts — no rescan of old postings.
+
+upsert_docs, delete_docs and compact serve both index kinds (the
+index's corpus table says which); append_segments takes single-field
+deltas.
 
 Query-side, nothing changes: wand_topk sees more partitions. The only
 subtlety is pruning safety: old blocks stored max_norm computed under
@@ -27,13 +32,23 @@ import contextlib
 import fcntl
 import glob
 import json
+import math
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyf_aggregator_spark.index.segments import build_segments
+from pyf_aggregator_spark.index.builder import _doc_len_col
+from pyf_aggregator_spark.index.segments import (
+    _by_key,
+    _docs_per_part,
+    _melt,
+    _read_corpus,
+    _write_segments,
+    _write_stats,
+    write_corpus_stats,
+)
 
 
 # ------------------------------------------------- upsert crash recovery
@@ -397,7 +412,9 @@ def append_segments(
     lineage: str = "delta",
 ) -> dict:
     """delta_docs(doc_id dense from 0, text) → appended delta partitions
-    + merged stats. Returns counters incl. the docID base used.
+    + merged stats on a single-field index (a multifield index takes
+    new documents through upsert_docs). Returns counters incl. the
+    docID base used.
 
     Crash-safe like upsert_docs: the delta partitions, merged
     term_stats, delta doc_stats and corpus scalars are all staged, then
@@ -406,6 +423,9 @@ def append_segments(
     stale stats."""
     spark: SparkSession = delta_docs.sparkSession
     _reconcile_pending_blocking(index_dir)
+    keys, corpus_old = _read_corpus(spark, index_dir)
+    if keys:
+        raise ValueError("append_segments: multifield index; use upsert_docs")
     meta = spark.read.parquet(f"{index_dir}/meta")
     part_base = int(meta.agg(F.max("part_id")).collect()[0][0]) + 1
     # doc_base comes from doc_stats, not meta doc_hi: meta only covers
@@ -421,86 +441,35 @@ def append_segments(
         + 1
     )
 
-    corpus_old = spark.read.parquet(f"{index_dir}/corpus").collect()[0]
-
     shifted = delta_docs.select(
         (F.col("doc_id") + F.lit(doc_base)).cast("long").alias("doc_id"), "text"
     )
-    n_delta, delta_len = (
-        shifted.select(
-            "doc_id",
-            F.size(
-                F.filter(
-                    F.split(F.lower("text"), r"[\s.\-_@/]+"),
-                    lambda t: t != F.lit(""),
-                )
-            ).alias("dl"),
-        )
-        .agg(F.count("*"), F.coalesce(F.sum("dl"), F.lit(0)))
-        .collect()[0]
-    )
-    n_docs_new = corpus_old["n_docs"] + n_delta
-    total_len_new = corpus_old["total_len"] + delta_len
-    avgdl_new = total_len_new / n_docs_new
+    delta_stats = shifted.select("doc_id", _doc_len_col("text").alias("doc_len"))
+    n_delta, delta_len, max_doc = delta_stats.agg(
+        F.count("*"), F.coalesce(F.sum("doc_len"), F.lit(0)), F.max("doc_id")
+    ).collect()[0]
+    n_docs = corpus_old[None]["n_docs"] + n_delta
 
     # delta segments: blocks encoded under the MERGED avgdl so their
     # stored max_norm needs no inflation; old parts keep avgdl_build.
     # Staged — nothing touches the live dirs until the commit below.
     staging = index_dir + f"__apstage{part_base}"
     shutil.rmtree(staging, ignore_errors=True)
-    stats = build_segments(
-        shifted,
-        staging,
-        num_partitions=num_partitions,
-        lineage=lineage,
-        doc_base=doc_base,
-        part_base=part_base,
-        write_stats=False,
-        avgdl_override=avgdl_new,
+    avgdl = write_corpus_stats(
+        staging, [], {None: (n_docs, corpus_old[None]["total_len"] + delta_len)}
     )
-
-    # ---- merge stats additively
-    tokens = shifted.select(
-        "doc_id",
-        F.explode(F.split(F.lower("text"), r"[\s.\-_@/]+")).alias("term"),
-    ).filter(F.col("term") != "")
-    tf = tokens.groupBy("term", "doc_id").agg(F.count("*").cast("long").alias("tf"))
-    delta_term = tf.groupBy("term").agg(
-        F.count("*").cast("long").alias("df_d"),
-        F.sum("tf").cast("long").alias("cf_d"),
+    span = max_doc - doc_base + 1
+    docs_per_part = _docs_per_part(
+        n_delta, span, num_partitions or spark.sparkContext.defaultParallelism
     )
-    old_term = spark.read.parquet(f"{index_dir}/term_stats").select(
-        "term", "df", "cf"
+    parts = [part_base + p for p in range(math.ceil(span / docs_per_part))]
+    # stats merge ADDITIVELY: old df/cf plus the delta's encode partials
+    _write_segments(
+        shifted, staging, [], parts, docs_per_part, avgdl, {None: lineage},
+        doc_base=doc_base, part_base=part_base, n_docs=n_docs,
+        adjust=spark.read.parquet(f"{index_dir}/term_stats"),
     )
-    merged = (
-        old_term.join(delta_term, "term", "full_outer")
-        .select(
-            "term",
-            (F.coalesce("df", F.lit(0)) + F.coalesce("df_d", F.lit(0))).alias("df"),
-            (F.coalesce("cf", F.lit(0)) + F.coalesce("cf_d", F.lit(0))).alias("cf"),
-        )
-        .select(
-            "term", "df", "cf",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(n_docs_new) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ).alias("idf"),
-        )
-    )
-    merged.write.mode("overwrite").parquet(f"{staging}/term_stats")
-
-    delta_doc_stats = (
-        shifted.select("doc_id")
-        .join(tf.groupBy("doc_id").agg(F.sum("tf").alias("doc_len")), "doc_id", "left")
-        .select(
-            "doc_id", F.coalesce("doc_len", F.lit(0)).cast("long").alias("doc_len")
-        )
-    )
-    delta_doc_stats.write.mode("overwrite").parquet(f"{staging}/doc_stats")
-
-    from pyf_aggregator_spark.index.segments import write_corpus_stats
-
-    write_corpus_stats(staging, n_docs_new, total_len_new, avgdl_new)
+    delta_stats.write.mode("overwrite").parquet(f"{staging}/doc_stats")
 
     _commit_staged(
         index_dir, staging, part_base, "append",
@@ -509,11 +478,11 @@ def append_segments(
     )
 
     return {
-        **stats,
+        "n_parts": len(parts),
         "doc_base": doc_base,
         "part_base": part_base,
         "n_delta_docs": int(n_delta),
-        "avgdl": float(avgdl_new),
+        "avgdl": float(avgdl[None]),
     }
 
 
@@ -572,72 +541,101 @@ def upsert_docs(
     index_dir: str,
     docs: DataFrame,
     num_partitions: int = 1,
+    lineage: str | None = None,
 ) -> dict:
     """K2/K5 insert-or-update by doc_id in one call (reference
     queue.py:128-141 point upsert; github.py:378-397 partial update —
     in a table-native engine a partial field update materializes as the
-    full new document row).
+    full new document row), on either index kind: ``docs`` is (doc_id,
+    text) for a single-field index and (doc_id, one column per field)
+    for a multifield one — the index's own corpus table says which. A
+    document version is atomic: every field is replaced at once.
 
     Existing ids: the old version's postings are tombstoned scoped to
-    the pre-upsert parts, the new text is appended as a fresh partition
-    REUSING the same doc_id, and term/doc/corpus stats are adjusted
-    exactly both ways (subtract the decoded old postings, add the new
-    tokenization) — so queries after upsert are rank-identical to a
-    fresh rebuild over the modified corpus, with no drift left for
-    compaction to reconcile. New ids are plain inserts.
+    the pre-upsert parts (one tombstone per doc — it dies in every
+    field), the new text is appended as fresh partitions REUSING the
+    same doc_id, encoded under the merged avgdl of each key, and
+    term/doc/corpus stats are adjusted exactly both ways (subtract the
+    decoded old postings, add the new tokenization, re-derive idf) —
+    so queries after upsert are rank-identical to a fresh rebuild over
+    the modified corpus, with no drift left for compaction to
+    reconcile. New ids are plain inserts. ``lineage`` stamps the new
+    meta rows (default ``upsert-<part_base>``; the streaming
+    exactly-once guard passes its batch id).
 
     The maintenance math is all DataFrame algebra: the only driver
-    values are two aggregate rows (one over the input, one over the
-    updated ids) + the affected part list (partition pruning for the
-    old-postings decode)."""
-    from pyf_aggregator_spark import TOKEN_SEP_RE
-    from pyf_aggregator_spark.index.builder import _doc_len_col
-
+    values are two per-key aggregates (one over the input, one over
+    the updated ids) + the affected part list (partition pruning for
+    the old-postings decode)."""
     _reconcile_pending_blocking(index_dir)
+    keys, corpus_old = _read_corpus(spark, index_dir)
+    fields = list(corpus_old) if keys else None
     # doc_len is a per-row expression (token count == Σ tf), so the new
     # doc_stats rows are a projection of the input — no tf groupBy/join
-    docs = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "text",
-        _doc_len_col("text").alias("doc_len"),
-    ).persist()
+    docs = (
+        _melt(docs.withColumn("doc_id", F.col("doc_id").cast("long")), fields)
+        .withColumn("doc_len", _doc_len_col("text"))
+        .persist()
+    )
     # every input scalar in ONE job over the persisted input
-    n_upsert, n_distinct, lo, hi, new_len = docs.agg(
-        F.count("*"),
-        F.count_distinct("doc_id"),
-        F.min("doc_id"),
-        F.max("doc_id"),
-        F.coalesce(F.sum("doc_len"), F.lit(0)),
-    ).collect()[0]
+    new = _by_key(
+        docs.groupBy(*keys)
+        .agg(
+            F.count("*").alias("n"),
+            F.count_distinct("doc_id").alias("ids"),
+            F.min("doc_id").alias("lo"),
+            F.max("doc_id").alias("hi"),
+            F.coalesce(F.sum("doc_len"), F.lit(0)).alias("len"),
+        )
+        .collect(),
+        keys,
+    )
     # one version per id per call — duplicate ids would double-count in
     # the stats adjustment (callers sequence multiple versions as
     # separate upsert calls, like the reference's queue of point
     # upserts). Hard error, not assert: -O must not strip the guard.
-    if n_distinct != n_upsert:
+    if any(r["n"] != r["ids"] for r in new.values()):
         docs.unpersist()
         raise ValueError("upsert_docs: input contains duplicate doc_ids")
-    if n_upsert == 0:
+    first = next(iter(new.values()), None)
+    if first is None or first["n"] == 0:
         docs.unpersist()
         return {"n_upserted": 0, "n_new": 0, "n_updated": 0}
 
     meta = spark.read.parquet(f"{index_dir}/meta")
     part_base = int(meta.agg(F.max("part_id")).collect()[0][0]) + 1
     old_doc_stats = spark.read.parquet(f"{index_dir}/doc_stats")
-    corpus_old = spark.read.parquet(f"{index_dir}/corpus").collect()[0]
     tomb = load_tombstones(spark, index_dir)
 
-    ids = docs.select("doc_id")
+    # one row per document (a multifield input has one per field)
+    ids = (docs.filter(F.col("field") == fields[0]) if keys else docs).select(
+        "doc_id"
+    )
     existing = ids.join(old_doc_stats.select("doc_id"), "doc_id", "left_semi").persist()
     # the updated docs' OLD rows give both the count and the length to
-    # subtract (doc_stats holds one row per doc) in one job
-    n_updated, old_len = (
+    # subtract (doc_stats holds one row per doc and key) in one job
+    old = _by_key(
         old_doc_stats.join(existing, "doc_id", "left_semi")
-        .agg(F.count("*"), F.coalesce(F.sum("doc_len"), F.lit(0)))
-        .collect()[0]
+        .groupBy(*keys)
+        .agg(
+            F.count("*").alias("n"),
+            F.coalesce(F.sum("doc_len"), F.lit(0)).alias("len"),
+        )
+        .collect(),
+        keys,
     )
-    n_new = n_upsert - n_updated
+    n_updated = next(iter(old.values()))["n"] if old else 0
+    n_new = first["n"] - n_updated
+    n_docs = next(iter(corpus_old.values()))["n_docs"] + n_new
+    totals = {
+        k: (n_docs, r["total_len"] - (old[k]["len"] if k in old else 0) + new[k]["len"])
+        for k, r in corpus_old.items()
+    }
 
-    # ---- old live postings of the updated docs (partition-pruned scan)
+    # exact term stats adjustment: the old table, minus one document and
+    # tf occurrences per decoded old live posting of an updated doc
+    # (partition-pruned scan); the writer adds the new tokenization
+    adjust = spark.read.parquet(f"{index_dir}/term_stats")
     if n_updated:
         ranges = meta.select("part_id", "doc_lo", "doc_hi")
         hit_parts = [
@@ -657,48 +655,26 @@ def upsert_docs(
         old_rows = _decode_live_postings(seg, tomb).join(
             existing, "doc_id", "left_semi"
         )
-        old_term = old_rows.groupBy("term").agg(
-            F.count("*").cast("long").alias("df_sub"),
-            F.sum("tf").cast("long").alias("cf_sub"),
+        adjust = adjust.select(*keys, "term", "df", "cf").unionByName(
+            old_rows.select(
+                *keys, "term", F.lit(-1).cast("long").alias("df"),
+                (-F.col("tf")).alias("cf"),
+            )
         )
-    else:
-        old_term = None
-
-    # ---- new tokenization stats
-    tokens = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), TOKEN_SEP_RE)).alias("term")
-    ).filter(F.col("term") != "")
-    new_term = (
-        tokens.groupBy("term", "doc_id")
-        .agg(F.count("*").cast("long").alias("tf"))
-        .groupBy("term")
-        .agg(
-            F.count("*").cast("long").alias("df_add"),
-            F.sum("tf").cast("long").alias("cf_add"),
-        )
-    )
-    new_doc_stats = docs.select("doc_id", "doc_len")
-
-    n_docs_new = int(corpus_old["n_docs"]) + n_new
-    total_len_new = int(corpus_old["total_len"]) - int(old_len) + int(new_len)
-    avgdl_new = total_len_new / n_docs_new
 
     # ---- STAGE every artifact; live dirs stay untouched until commit
-    span = hi - lo + 1
-    import math as _math
-
     staging = index_dir + f"__upstage{part_base}"
     shutil.rmtree(staging, ignore_errors=True)
-    build_segments(
-        docs,
-        staging,
-        num_partitions=num_partitions,
-        lineage=f"upsert-{part_base}",
-        doc_base=lo,
-        part_base=part_base,
-        write_stats=False,
-        avgdl_override=avgdl_new,
-        docs_per_part=max(1, _math.ceil(span / num_partitions)),
+    avgdl = write_corpus_stats(staging, keys, totals)
+    span = first["hi"] - first["lo"] + 1
+    docs_per_part = max(1, math.ceil(span / num_partitions))
+    parts = [part_base + p for p in range(math.ceil(span / docs_per_part))]
+    _write_segments(
+        docs.select(*keys, "doc_id", "text"), staging, keys, parts,
+        docs_per_part, avgdl,
+        {k: lineage or f"upsert-{part_base}" for k in avgdl},
+        doc_base=first["lo"], part_base=part_base, n_docs=n_docs,
+        adjust=adjust,
     )
     if n_updated:
         existing.withColumn(
@@ -706,46 +682,10 @@ def upsert_docs(
         ).withColumn("kind", F.lit("upsert")).write.mode("overwrite").parquet(
             f"{staging}/tombstones"
         )
-
-    # exact stats adjustment (subtract old, add new, re-derive idf) —
-    # the staged writes below EXECUTE the reads of the live tables
-    old_stats = spark.read.parquet(f"{index_dir}/term_stats").select("term", "df", "cf")
-    merged = old_stats.join(new_term, "term", "full_outer")
-    if old_term is not None:
-        merged = merged.join(old_term, "term", "full_outer")
-    else:
-        merged = merged.withColumn("df_sub", F.lit(0)).withColumn("cf_sub", F.lit(0))
-    merged = (
-        merged.select(
-            "term",
-            (
-                F.coalesce("df", F.lit(0))
-                - F.coalesce("df_sub", F.lit(0))
-                + F.coalesce("df_add", F.lit(0))
-            ).alias("df"),
-            (
-                F.coalesce("cf", F.lit(0))
-                - F.coalesce("cf_sub", F.lit(0))
-                + F.coalesce("cf_add", F.lit(0))
-            ).alias("cf"),
-        )
-        .filter(F.col("df") > 0)
-        .select(
-            "term", "df", "cf",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(n_docs_new) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ).alias("idf"),
-        )
-    )
-    merged.write.mode("overwrite").parquet(f"{staging}/term_stats")
     kept = old_doc_stats.join(ids, "doc_id", "left_anti")
-    kept.unionByName(new_doc_stats).write.mode("overwrite").parquet(
-        f"{staging}/doc_stats"
-    )
-    from pyf_aggregator_spark.index.segments import write_corpus_stats
-
-    write_corpus_stats(staging, n_docs_new, total_len_new, avgdl_new)
+    kept.unionByName(docs.select(*keys, "doc_id", "doc_len")).write.mode(
+        "overwrite"
+    ).parquet(f"{staging}/doc_stats")
 
     # ---- COMMIT: marker first (records every live file the commit
     # creates), then pure renames, marker removed last. A crash at any
@@ -759,295 +699,33 @@ def upsert_docs(
     docs.unpersist()
     existing.unpersist()
     return {
-        "n_upserted": int(n_upsert),
+        "n_upserted": int(first["n"]),
         "n_new": int(n_new),
         "n_updated": int(n_updated),
         "part_base": part_base,
-        "avgdl": float(avgdl_new),
-    }
-
-
-def upsert_multifield(
-    spark: SparkSession,
-    index_dir: str,
-    fields_df: DataFrame,
-    field_names: list[str],
-    lineage: str | None = None,
-) -> dict:
-    """Incremental maintenance for the BUILD-TIME multifield artifact
-    (VERDICT r3 missing #5 / NOTES known gap): insert-or-update whole
-    documents (all fields at once — a document version is atomic, like
-    the reference's point upsert of a full Typesense document,
-    queue.py:128-141) WITHOUT a full rebuild, so the single-field index
-    and the 5-field artifact stay in agreement after an upsert.
-
-    Mirrors upsert_docs exactly, per field: existing ids are tombstoned
-    scoped to the pre-upsert parts (one shared tombstone set — the doc
-    dies in every field), the new field texts land as one fresh
-    (field, part_base) partition each, encoded under the field's merged
-    avgdl, and per-field term/doc/corpus stats are adjusted exactly
-    (subtract the decoded old live postings, add the new tokenization).
-    Rank-identity to a fresh build over the modified field table is the
-    test gate (test_multifield_pipeline).
-
-    Same staged two-phase commit as upsert_docs (_commit_staged handles
-    the nested field=*/part_id=* layout); same single-writer model."""
-    from pyf_aggregator_spark import TOKEN_SEP_RE
-    from pyf_aggregator_spark.index.segments import (
-        SEGMENT_SCHEMA,
-        _encode_partition,
-    )
-    from pyf_aggregator_spark.session import ensure_py_files
-
-    import pandas as pd
-
-    ensure_py_files(spark)
-    _reconcile_pending_blocking(index_dir)
-    fields_df = fields_df.select(
-        F.col("doc_id").cast("long").alias("doc_id"), *field_names
-    ).persist()
-    n_upsert = fields_df.count()
-    if fields_df.select("doc_id").distinct().count() != n_upsert:
-        fields_df.unpersist()
-        raise ValueError("upsert_multifield: input contains duplicate doc_ids")
-    if n_upsert == 0:
-        fields_df.unpersist()
-        return {"n_upserted": 0, "n_new": 0, "n_updated": 0}
-
-    meta = spark.read.parquet(f"{index_dir}/meta")
-    part_base = int(meta.agg(F.max("part_id")).collect()[0][0]) + 1
-    old_doc_stats = spark.read.parquet(f"{index_dir}/doc_stats")
-    corpus_old = {
-        r["field"]: r
-        for r in spark.read.parquet(f"{index_dir}/corpus").collect()
-    }
-    tomb = load_tombstones(spark, index_dir)
-
-    ids = fields_df.select("doc_id")
-    existing = ids.join(
-        old_doc_stats.select("doc_id").distinct(), "doc_id", "left_semi"
-    ).persist()
-    n_updated = existing.count()
-    n_new = n_upsert - n_updated
-
-    # ---- old live postings of the updated docs (field+part-pruned scan)
-    if n_updated:
-        ranges = meta.select("field", "part_id", "doc_lo", "doc_hi")
-        hit = [
-            (r["field"], r["part_id"])
-            for r in existing.join(
-                F.broadcast(ranges),
-                (F.col("doc_id") >= F.col("doc_lo"))
-                & (F.col("doc_id") <= F.col("doc_hi")),
-            )
-            .select("field", "part_id")
-            .distinct()
-            .collect()
-        ]
-        hit_parts = sorted({p for _f, p in hit})
-        seg = spark.read.parquet(f"{index_dir}/segments").filter(
-            F.col("part_id").isin(hit_parts) if hit_parts else F.lit(False)
-        )
-        old_rows = _decode_live_postings(seg, tomb).join(
-            existing, "doc_id", "left_semi"
-        )
-        old_term = old_rows.groupBy("field", "term").agg(
-            F.count("*").cast("long").alias("df_sub"),
-            F.sum("tf").cast("long").alias("cf_sub"),
-        )
-        old_len = {
-            r["field"]: r["s"]
-            for r in old_doc_stats.join(existing, "doc_id", "left_semi")
-            .groupBy("field")
-            .agg(F.coalesce(F.sum("doc_len"), F.lit(0)).alias("s"))
-            .collect()
-        }
-    else:
-        old_term = None
-        old_len = {}
-
-    # ---- new tokenization stats (one melt pass over all fields)
-    stack_expr = "stack({}, {}) as (field, text)".format(
-        len(field_names), ", ".join(f"'{f}', {f}" for f in field_names)
-    )
-    melted = fields_df.select("doc_id", F.expr(stack_expr))
-    tokens = melted.select(
-        "doc_id", "field",
-        F.explode(F.split(F.lower("text"), TOKEN_SEP_RE)).alias("term"),
-    ).filter(F.col("term") != "")
-    tf_new = tokens.groupBy("field", "term", "doc_id").agg(
-        F.count("*").cast("long").alias("tf")
-    ).persist()
-    new_term = tf_new.groupBy("field", "term").agg(
-        F.count("*").cast("long").alias("df_add"),
-        F.sum("tf").cast("long").alias("cf_add"),
-    )
-    new_doc_stats = (
-        melted.select("field", "doc_id")
-        .join(
-            tf_new.groupBy("field", "doc_id").agg(F.sum("tf").alias("doc_len")),
-            ["field", "doc_id"],
-            "left",
-        )
-        .select(
-            "field", "doc_id",
-            F.coalesce("doc_len", F.lit(0)).cast("long").alias("doc_len"),
-        )
-        .persist()
-    )
-    new_len = {
-        r["field"]: r["s"]
-        for r in new_doc_stats.groupBy("field")
-        .agg(F.coalesce(F.sum("doc_len"), F.lit(0)).alias("s"))
-        .collect()
-    }
-
-    n_docs_new = int(next(iter(corpus_old.values()))["n_docs"]) + n_new
-    total_len_new = {
-        f: int(corpus_old[f]["total_len"])
-        - int(old_len.get(f, 0))
-        + int(new_len.get(f, 0))
-        for f in field_names
-    }
-    avgdl_new = {f: total_len_new[f] / n_docs_new for f in field_names}
-
-    # ---- STAGE: one delta partition per field, encoded under the
-    # field's merged avgdl (stored max_norms need no inflation)
-    staging = index_dir + f"__mfstage{part_base}"
-    shutil.rmtree(staging, ignore_errors=True)
-
-    lineage = lineage or f"mfupsert-{part_base}"
-
-    def mf_encode(pdf):
-        fld = pdf["field"].iloc[0]
-        out = _encode_partition(avgdl_new[fld], 128, lineage)(pdf)
-        out.insert(0, "field", fld)
-        return out
-
-    postings = tf_new.join(new_doc_stats, ["field", "doc_id"]).withColumn(
-        "part_id", F.lit(part_base).cast("int")
-    )
-    encoded = postings.groupBy("field", "part_id").applyInPandas(
-        mf_encode, "field string, " + SEGMENT_SCHEMA
-    ).persist()
-    encoded.filter(F.col("block_id") >= 0).write.mode("overwrite").partitionBy(
-        "field", "part_id"
-    ).parquet(f"{staging}/segments")
-    parts = F.split("payload", r"\|")
-    encoded.filter(F.col("block_id") == -1).select(
-        "field", "part_id", F.col("term").alias("payload")
-    ).select(
-        "field", "part_id",
-        parts.getItem(0).cast("long").alias("doc_lo"),
-        parts.getItem(1).cast("long").alias("doc_hi"),
-        parts.getItem(2).cast("long").alias("n_postings"),
-        parts.getItem(3).cast("long").alias("n_tokens"),
-        parts.getItem(4).cast("long").alias("n_terms"),
-        parts.getItem(5).cast("long").alias("n_blocks"),
-        parts.getItem(6).alias("checksum"),
-        parts.getItem(7).alias("lineage"),
-        parts.getItem(8).cast("double").alias("avgdl_build"),
-    ).write.mode("overwrite").parquet(f"{staging}/meta")
-    if n_updated:
-        existing.withColumn(
-            "scope_part", F.lit(part_base).cast("long")
-        ).withColumn("kind", F.lit("upsert")).write.mode("overwrite").parquet(
-            f"{staging}/tombstones"
-        )
-
-    # exact per-field stats adjustment
-    old_stats = spark.read.parquet(f"{index_dir}/term_stats").select(
-        "field", "term", "df", "cf"
-    )
-    merged = old_stats.join(new_term, ["field", "term"], "full_outer")
-    if old_term is not None:
-        merged = merged.join(old_term, ["field", "term"], "full_outer")
-    else:
-        merged = merged.withColumn("df_sub", F.lit(0)).withColumn(
-            "cf_sub", F.lit(0)
-        )
-    merged = (
-        merged.select(
-            "field", "term",
-            (
-                F.coalesce("df", F.lit(0))
-                - F.coalesce("df_sub", F.lit(0))
-                + F.coalesce("df_add", F.lit(0))
-            ).alias("df"),
-            (
-                F.coalesce("cf", F.lit(0))
-                - F.coalesce("cf_sub", F.lit(0))
-                + F.coalesce("cf_add", F.lit(0))
-            ).alias("cf"),
-        )
-        .filter(F.col("df") > 0)
-        .select(
-            "field", "term", "df", "cf",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(n_docs_new) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ).alias("idf"),
-        )
-    )
-    merged.write.mode("overwrite").parquet(f"{staging}/term_stats")
-    kept = old_doc_stats.join(ids, "doc_id", "left_anti")
-    kept.unionByName(new_doc_stats).write.mode("overwrite").parquet(
-        f"{staging}/doc_stats"
-    )
-    corpus_dir = f"{staging}/corpus"
-    os.makedirs(corpus_dir, exist_ok=True)
-    pd.DataFrame(
-        [
-            (f, n_docs_new, total_len_new[f], avgdl_new[f])
-            for f in field_names
-        ],
-        columns=["field", "n_docs", "total_len", "avgdl"],
-    ).to_parquet(f"{corpus_dir}/part-00000.parquet", index=False)
-
-    _commit_staged(
-        index_dir, staging, part_base, "mfupsert",
-        move_subdirs=["meta", "tombstones"],
-        swap_tables=["term_stats", "doc_stats", "corpus"],
-    )
-
-    encoded.unpersist()
-    tf_new.unpersist()
-    new_doc_stats.unpersist()
-    fields_df.unpersist()
-    existing.unpersist()
-    return {
-        "n_upserted": int(n_upsert),
-        "n_new": int(n_new),
-        "n_updated": int(n_updated),
-        "part_base": part_base,
-        "avgdl": {f: float(avgdl_new[f]) for f in field_names},
+        "avgdl": avgdl if keys else float(avgdl[None]),
     }
 
 
 def compact(spark: SparkSession, index_dir: str, num_partitions: int | None = None) -> dict:
-    """T5 reconciliation/compaction: rebuild the index FROM ITSELF,
-    physically dropping tombstoned postings and recomputing stats
-    (df/cf/doc_len/N/avgdl/idf) over the surviving corpus — the analog
-    of the reference's periodic full refresh (queue.py:776-986) and the
-    versioned-collection swap (typesense_util.py:174-319).
+    """T5 reconciliation/compaction, on either index kind: rebuild the
+    index FROM ITSELF, physically dropping tombstoned postings and
+    recomputing stats (df/cf/doc_len/N/avgdl/idf) over the surviving
+    corpus — the analog of the reference's periodic full refresh
+    (queue.py:776-986) and the versioned-collection swap
+    (typesense_util.py:174-319).
 
-    The index is self-contained: segments decode back to (term, doc_id,
-    tf, doc_len) without the original corpus. Output replaces the index
-    dirs atomically (write-new + dir swap)."""
-    from pyf_aggregator_spark.session import ensure_py_files
-
-    ensure_py_files(spark)
+    The index is self-contained: segments decode back to ([field,]
+    term, doc_id, tf, doc_len) without the original corpus, and feed
+    the segment writer directly. Output replaces the index dirs
+    atomically (write-new + dir swap)."""
     _reconcile_pending_blocking(index_dir)
-    seg = spark.read.parquet(f"{index_dir}/segments")
     tomb = load_tombstones(spark, index_dir)
-    postings = _decode_live_postings(seg, tomb).drop("part_id")
-    # reconstruct a pseudo-docs frame: build_segments only needs
-    # (doc_id, text) to tokenize — here we already HAVE tf, so rebuild
-    # via a synthetic text of repeated terms would be wasteful; instead
-    # write postings to a staging dir and rebuild directly.
+    postings = _decode_live_postings(
+        spark.read.parquet(f"{index_dir}/segments"), tomb
+    ).drop("part_id")
     staging = index_dir + "__compact"
     shutil.rmtree(staging, ignore_errors=True)
-    postings.write.mode("overwrite").parquet(f"{staging}/postings_src")
     # doc_stats carries forward from the OLD table (minus docs whose
     # LATEST tombstone is a delete — upsert tombstones mean a live newer
     # version exists), not from surviving postings: token-less docs have
@@ -1057,18 +735,20 @@ def compact(spark: SparkSession, index_dir: str, num_partitions: int | None = No
     if tomb is not None:
         dead = tomb.filter(F.col("kind") == "delete").select("doc_id")
         surviving = surviving.join(dead, "doc_id", "left_anti")
-    surviving.write.mode("overwrite").parquet(f"{staging}/doc_stats_src")
-    built = build_segments_from_postings(
-        spark,
-        f"{staging}/postings_src",
-        staging,
-        num_partitions,
-        doc_stats_path=f"{staging}/doc_stats_src",
+    keys = ["field"] if "field" in surviving.columns else []
+    n_docs, max_doc, avgdl = _write_stats(
+        surviving.select(*keys, "doc_id", "doc_len"), staging, keys
     )
-    # the decoded-postings staging table is index-sized — drop it
-    # before publishing (it must not ride into the live dir)
-    shutil.rmtree(f"{staging}/postings_src", ignore_errors=True)
-    shutil.rmtree(f"{staging}/doc_stats_src", ignore_errors=True)
+    # compaction renumbers partitions over the surviving doc range
+    docs_per_part = _docs_per_part(
+        max_doc + 1, max_doc + 1,
+        num_partitions or spark.sparkContext.defaultParallelism,
+    )
+    parts = list(range(math.ceil((max_doc + 1) / docs_per_part)))
+    _write_segments(
+        postings, staging, keys, parts, docs_per_part, avgdl,
+        {k: "compact" for k in avgdl}, n_docs=n_docs,
+    )
     # atomic-ish swap of the whole index dir; a crash between the two
     # renames is rolled FORWARD by _reconcile_pending (staging is
     # complete once meta/ exists — it is written last)
@@ -1080,93 +760,4 @@ def compact(spark: SparkSession, index_dir: str, num_partitions: int | None = No
         os.rename(index_dir, old)
         os.rename(staging, index_dir)
     shutil.rmtree(old, ignore_errors=True)
-    return built
-
-
-def build_segments_from_postings(
-    spark: SparkSession, postings_path: str, index_dir: str,
-    num_partitions: int | None = None, lineage: str = "compact",
-    doc_stats_path: str | None = None,
-) -> dict:
-    """Segment build variant whose input is already (term, doc_id, tf,
-    doc_len) rows — used by compaction. Shares the partition encoder
-    with the tokenizing build. ``doc_stats_path``, when given, is the
-    authoritative per-doc table (it includes zero-posting docs that the
-    postings alone can't reconstruct)."""
-    import math
-
-    from pyf_aggregator_spark.index.segments import (
-        SEGMENT_SCHEMA,
-        _encode_partition,
-    )
-
-    tf = spark.read.parquet(postings_path).persist()
-    if doc_stats_path is not None:
-        doc_stats = spark.read.parquet(doc_stats_path).select(
-            "doc_id", "doc_len"
-        ).persist()
-    else:
-        doc_stats = tf.select("doc_id", "doc_len").distinct().persist()
-    n_docs, total_len = doc_stats.agg(
-        F.count("*"), F.coalesce(F.sum("doc_len"), F.lit(0))
-    ).collect()[0]
-    avgdl = total_len / n_docs
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    # compaction renumbers partitions over the surviving doc range;
-    # ranges capped like build_segments (bounded encode-task memory)
-    from pyf_aggregator_spark.index.segments import _max_docs_per_part
-
-    max_doc = doc_stats.agg(F.max("doc_id")).collect()[0][0]
-    docs_per_part = min(
-        max(1, math.ceil((max_doc + 1) / num_partitions)),
-        _max_docs_per_part(),
-    )
-
-    term_stats = (
-        tf.groupBy("term")
-        .agg(F.count("*").cast("long").alias("df"),
-             F.sum("tf").cast("long").alias("cf"))
-        .select(
-            "term", "df", "cf",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ).alias("idf"),
-        )
-    )
-    term_stats.write.mode("overwrite").parquet(f"{index_dir}/term_stats")
-    doc_stats.write.mode("overwrite").parquet(f"{index_dir}/doc_stats")
-    from pyf_aggregator_spark.index.segments import write_corpus_stats
-
-    write_corpus_stats(index_dir, n_docs, total_len, avgdl)
-
-    encoded = (
-        tf.withColumn("part_id", (F.col("doc_id") / docs_per_part).cast("int"))
-        .groupBy("part_id")
-        .applyInPandas(_encode_partition(avgdl, 128, lineage), SEGMENT_SCHEMA)
-        .persist()
-    )
-    encoded.filter(F.col("block_id") >= 0).write.mode("overwrite").partitionBy(
-        "part_id"
-    ).parquet(f"{index_dir}/segments")
-    parts = F.split("payload", r"\|")
-    encoded.filter(F.col("block_id") == -1).select(
-        "part_id", F.col("term").alias("payload")
-    ).select(
-        "part_id",
-        parts.getItem(0).cast("long").alias("doc_lo"),
-        parts.getItem(1).cast("long").alias("doc_hi"),
-        parts.getItem(2).cast("long").alias("n_postings"),
-        parts.getItem(3).cast("long").alias("n_tokens"),
-        parts.getItem(4).cast("long").alias("n_terms"),
-        parts.getItem(5).cast("long").alias("n_blocks"),
-        parts.getItem(6).alias("checksum"),
-        parts.getItem(7).alias("lineage"),
-        parts.getItem(8).cast("double").alias("avgdl_build"),
-    ).write.mode("overwrite").parquet(f"{index_dir}/meta")
-    n_parts = encoded.filter(F.col("block_id") == -1).count()
-    encoded.unpersist()
-    tf.unpersist()
-    doc_stats.unpersist()
-    return {"n_parts": int(n_parts), "n_docs": int(n_docs)}
+    return {"n_parts": len(parts), "n_docs": int(n_docs)}

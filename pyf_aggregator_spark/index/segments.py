@@ -1,7 +1,7 @@
 """Segment files: compressed, block-structured posting lists on disk.
 
-The durable form of the index (SURVEY §7 phase 2-3). Layout under
-``<index_dir>/``:
+The durable form of the index (SURVEY §7 phase 2-3). Layout of a
+single-field index under ``<index_dir>/``:
 
   segments/     parquet, partitioned by part_id — one row per
                 (term, block): docID-delta+varbyte docs, varbyte tfs,
@@ -13,6 +13,19 @@ The durable form of the index (SURVEY §7 phase 2-3). Layout under
   term_stats/   term, df, cf, idf
   doc_stats/    doc_id, doc_len
   corpus/       n_docs, total_len, avgdl
+
+A multifield index (build_multifield_segments — one document, several
+searchable fields) is the same layout with a ``field`` key in front:
+segments partitioned by field=*/part_id=* (a query's scan prunes to its
+fields), one meta row per (field, part_id), term_stats (field, term,
+df, cf, idf), doc_stats (field, doc_id, doc_len) and one corpus row
+per field. Its fields share one doc-id space and one part geometry, so
+a weighted query folds into a single per-part WAND pass. The corpus
+table tells the kinds apart: it has a ``field`` column or not.
+
+Every segment write — both builds, the staged delta of an upsert or an
+append, and compaction — goes through ``_write_segments``, keyed by
+``keys`` (``[]`` or ``["field"]``).
 
 Partitioning: docIDs are dense (assign_doc_ids), so part_id =
 doc_id // docs_per_part gives contiguous, deterministic doc ranges
@@ -33,13 +46,15 @@ from __future__ import annotations
 import hashlib
 import math
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyf_aggregator_spark import B, K1, TOKEN_SEP_RE
+from pyf_aggregator_spark.index.builder import _doc_len_col, _idf_col
 from pyf_aggregator_spark.index.codec import varbyte_encode_with_offsets
 
 BLOCK_SIZE = 128
@@ -70,19 +85,6 @@ def _min_capped_waves() -> int:
     return int(os.environ.get("PYFAGG_MIN_CAPPED_WAVES", "8"))
 
 
-# Doc-range parts per core when the CALLER leaves geometry unpinned
-# (num_partitions=None) and the memory cap does not bind. Finer parts
-# smooth the encode-stage hash assignment, but the r6 A/B measured the
-# query side paying for it dearly: at 4 parts/core every WAND kernel
-# ran 4× the per-part setup (wand_batch_200 9.8 s vs 4.9 s, seq 17.4 s
-# vs 11.8 s) for no build win — so the default stays 1 part/core and
-# the encode balance is addressed by over-provisioning shuffle BUCKETS
-# (3× the part count, below) instead of parts. Env-overridable for
-# experiments.
-def _parts_per_core() -> int:
-    return int(os.environ.get("PYFAGG_PARTS_PER_CORE", "1"))
-
-
 # Upper bound on the encode shuffle's bucket count (3× live parts for a
 # near-collision-free part→task assignment; beyond this, extra buckets
 # are pure scheduling overhead). Env-overridable for very large
@@ -102,15 +104,38 @@ META_SCHEMA = (
 )
 
 
-def write_corpus_stats(index_dir: str, n_docs: int, total_len: int, avgdl: float) -> None:
-    """The corpus table is 3 scalars — writing it through a Spark job
-    costs a whole fixed-latency action; write the parquet driver-side
-    instead (schema matches `n_docs long, total_len long, avgdl double`
-    so spark.read.parquet sees the identical table)."""
-    import shutil
+def _by_key(rows, keys: list[str]) -> dict:
+    """Rows of a per-key table or aggregate → {key value: row}; the key
+    value is ``None`` on a single-field index."""
+    return {(r[keys[0]] if keys else None): r for r in rows}
 
-    import pandas as pd
 
+def _read_corpus(spark: SparkSession, index_dir: str) -> tuple[list[str], dict]:
+    """→ (keys, {key value: corpus row}) — the index kind comes from the
+    corpus table itself: ``keys`` is ``["field"]`` on a multifield
+    index and ``[]`` on a single-field one."""
+    corpus = spark.read.parquet(f"{index_dir}/corpus")
+    keys = ["field"] if "field" in corpus.columns else []
+    return keys, _by_key(corpus.collect(), keys)
+
+
+def write_corpus_stats(index_dir: str, keys: list[str], totals: dict) -> dict:
+    """Write the corpus table from ``totals`` = {key value: (n_docs,
+    total_len)} and return {key value: avgdl}.
+
+    The table is a few scalars — writing it through a Spark job costs a
+    whole fixed-latency action; write the parquet driver-side instead
+    (schema ``[field string,] n_docs long, total_len long, avgdl
+    double`` so spark.read.parquet sees the identical table)."""
+    avgdl = {k: t / n for k, (n, t) in totals.items()}
+    pdf = pd.DataFrame(
+        {
+            **({keys[0]: list(totals)} if keys else {}),
+            "n_docs": [int(n) for n, _ in totals.values()],
+            "total_len": [int(t) for _, t in totals.values()],
+            "avgdl": [float(a) for a in avgdl.values()],
+        }
+    ).astype({"n_docs": "int64", "total_len": "int64", "avgdl": "float64"})
     path = os.path.join(index_dir, "corpus")
     # stage-then-rename (same discipline as incremental._commit_staged
     # swaps): a crash or a
@@ -119,18 +144,68 @@ def write_corpus_stats(index_dir: str, n_docs: int, total_len: int, avgdl: float
     tmp = path + "__new"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp, exist_ok=True)
-    pd.DataFrame(
-        {"n_docs": [int(n_docs)], "total_len": [int(total_len)],
-         "avgdl": [float(avgdl)]}
-    ).astype(
-        {"n_docs": "int64", "total_len": "int64", "avgdl": "float64"}
-    ).to_parquet(os.path.join(tmp, "part-00000.parquet"), index=False)
+    pdf.to_parquet(os.path.join(tmp, "part-00000.parquet"), index=False)
     old = path + "__old"
     shutil.rmtree(old, ignore_errors=True)
     if os.path.exists(path):
         os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old, ignore_errors=True)
+    return avgdl
+
+
+def _write_stats(doc_stats: DataFrame, index_dir: str, keys: list[str]):
+    """Write doc_stats ([field,] doc_id, doc_len), aggregate the (tiny)
+    written table — the corpus scalars cost a parquet re-read instead
+    of a second tokenize pass over the text — and write the corpus
+    table. → (n_docs, max_doc, {key value: avgdl})."""
+    spark = doc_stats.sparkSession
+    doc_stats.write.mode("overwrite").parquet(f"{index_dir}/doc_stats")
+    rows = (
+        spark.read.parquet(f"{index_dir}/doc_stats")
+        .groupBy(*keys)
+        .agg(
+            F.count("*").alias("n"),
+            F.coalesce(F.sum("doc_len"), F.lit(0)).alias("len"),
+            F.max("doc_id").alias("hi"),
+        )
+        .collect()
+    )
+    totals = {k: (r["n"], r["len"]) for k, r in _by_key(rows, keys).items()}
+    # every document has every field, so n_docs is the same per key
+    return rows[0]["n"], max(r["hi"] for r in rows), write_corpus_stats(
+        index_dir, keys, totals
+    )
+
+
+def _docs_per_part(n_docs: int, span: int, num_partitions: int) -> int:
+    """Doc-range width for ``n_docs`` documents whose ids cover ``span``
+    consecutive ids. Ranges are capped at _max_docs_per_part so
+    encode-task memory is bounded by DATA geometry, not cluster size
+    (see the constant's note); callers cut ceil(span / width) parts, so
+    a sparse id range never loses its top-of-range docs."""
+    docs_per_part = max(1, math.ceil(n_docs / num_partitions))
+    cap = _max_docs_per_part()
+    if docs_per_part > cap:
+        # cap binds → big corpus relative to the cluster. Also floor the
+        # task count at _min_capped_waves() waves/core so the last-wave
+        # straggler tail amortizes (see the note at the constants)
+        target_tasks = max(
+            math.ceil(span / cap), num_partitions * _min_capped_waves()
+        )
+        docs_per_part = max(1, math.ceil(span / target_tasks))
+    return docs_per_part
+
+
+def _melt(docs: DataFrame, fields: list[str] | None) -> DataFrame:
+    """(doc_id, text) rows as they are; (doc_id, one column per field)
+    rows → one (doc_id, field, text) row per field."""
+    if not fields:
+        return docs.select("doc_id", "text")
+    stack_expr = "stack({}, {}) as (field, text)".format(
+        len(fields), ", ".join(f"'{f}', {f}" for f in fields)
+    )
+    return docs.select("doc_id", F.expr(stack_expr))
 
 
 def _norm(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
@@ -142,13 +217,17 @@ TERMSTAT_BLOCK_ID = -4  # sentinel rows carrying per-partition (term, df, cf)
 
 
 def _encode_partition(
-    avgdl: float, block_size: int, lineage: str,
+    avgdl: dict, block_size: int, lineage: dict,
     emit_term_stats: bool = False,
 ):
     """applyInPandas kernel: one doc-range partition → segment rows + meta.
 
     Deterministic: input sorted by (term, doc_id); blocks cut at fixed
     boundaries; checksum = md5 over payload bytes in that order.
+
+    A multifield group carries a ``field`` column: its value selects
+    the group's entry in ``avgdl`` and ``lineage`` (keyed by None on a
+    single-field index) and leads every output row.
 
     ``emit_term_stats``: additionally emit one sentinel row per term
     (block_id = TERMSTAT_BLOCK_ID, n = local df, first_doc = local cf)
@@ -159,6 +238,8 @@ def _encode_partition(
     not part of the checksum (stats tables are overwritten per build)."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        kv = pdf["field"].iloc[0] if "field" in pdf.columns else None
+        group_avgdl = avgdl[kv]
         part_id = int(pdf["part_id"].iloc[0])
         pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
         n_rows = len(pdf)
@@ -203,7 +284,7 @@ def _encode_partition(
         docs_bin, docs_off = varbyte_encode_with_offsets(deltas)
         tfs_bin, tfs_off = varbyte_encode_with_offsets(tfs)
         dls_bin, dls_off = varbyte_encode_with_offsets(dls)
-        norms = _norm(tfs, dls, avgdl)
+        norms = _norm(tfs, dls, group_avgdl)
         block_max = np.maximum.reduceat(norms, starts)
         block_id = (in_run_pos[starts] // block_size).astype(np.int64)
 
@@ -240,7 +321,7 @@ def _encode_partition(
             for x in (
                 int(pdf["doc_id"].min()), int(pdf["doc_id"].max()),
                 len(pdf), n_tokens, pdf["term"].nunique(), len(rows),
-                h.hexdigest(), lineage, repr(avgdl),
+                h.hexdigest(), lineage[kv], repr(group_avgdl),
             )
         )
         meta_row = pd.DataFrame(
@@ -279,9 +360,142 @@ def _encode_partition(
                     }
                 )
             )
-        return pd.concat(parts, ignore_index=True)
+        out = pd.concat(parts, ignore_index=True)
+        if kv is not None:
+            out.insert(0, "field", kv)
+        return out
 
     return fn
+
+
+def _write_segments(
+    docs: DataFrame,
+    index_dir: str,
+    keys: list[str],
+    parts: list[int],
+    docs_per_part: int,
+    avgdl: dict,
+    lineage: dict,
+    *,
+    doc_base: int = 0,
+    part_base: int = 0,
+    block_size: int = BLOCK_SIZE,
+    n_docs: int | None = None,
+    adjust: DataFrame | None = None,
+) -> None:
+    """The one segment writer. ``docs`` holds ([field,] doc_id, text)
+    rows, or already-counted ([field,] doc_id, term, tf, doc_len)
+    postings (compaction); doc_id lands in part ``part_base + (doc_id -
+    doc_base) // docs_per_part`` and only ``parts`` are written.
+    ``avgdl`` and ``lineage`` map each key value (None on a
+    single-field index) to its encode avgdl and meta lineage.
+
+    Plan shape (r6, guide §2.3/§2.4): the heavy payload crosses the bus
+    ONCE. Placement: the live (key, part) groups are known, so the
+    group→task assignment is solved EXACTLY (placement.perfect_salts):
+    repartitioning on the salted _kb column gives one task per group,
+    no empty buckets and no collision stragglers (guide §2.5 — hashing
+    P parts into even 3x buckets left ~P/6 double buckets whose tasks
+    ran the whole encode twice); very large group counts fall back to
+    hash over-provisioning (literal salt map capped). Tokenize →
+    tf-aggregate → varbyte-encode all run partition-local behind that
+    exchange (HashPartitioning(_kb) satisfies both the groupBy
+    aggregation and the applyInPandas clustering, so Catalyst inserts
+    no further exchange).
+
+    Writes segments (appended, partitioned by keys + part_id), then —
+    when ``n_docs`` is given — term_stats from the encode kernel's
+    per-term partials (a vocabulary-sized aggregation, idf over
+    ``n_docs``), plus the signed ([field,] term, df, cf) rows of
+    ``adjust`` (an incremental merge: old stats, minus replaced
+    postings), then meta last: a part's meta row is its commit point."""
+    from pyf_aggregator_spark.index.placement import (
+        SALT_MAP_MAX_GROUPS,
+        perfect_salts,
+        salt_col,
+    )
+    from pyf_aggregator_spark.session import ensure_py_files
+
+    # the encode kernel imports this package on workers
+    ensure_py_files(docs.sparkSession)
+    keyed = docs.withColumn(
+        "part_id",
+        (F.lit(part_base) + (F.col("doc_id") - doc_base) / docs_per_part).cast(
+            "int"
+        ),
+    ).filter(F.col("part_id").isin(parts))
+    if keys:
+        groups = [f"{k}#{p}" for k in avgdl for p in parts]
+        group_col = F.concat_ws("#", *keys, "part_id")
+    else:
+        groups, group_col = parts, F.col("part_id")
+    if len(groups) <= SALT_MAP_MAX_GROUPS:
+        salts = perfect_salts(groups)
+        parted = keyed.withColumn(
+            "_kb", salt_col(salts, group_col).cast("int")
+        ).repartition(len(salts), "_kb")
+    else:
+        parted = keyed.withColumn("_kb", group_col).repartition(
+            int(min(3 * len(groups), _max_encode_buckets())), "_kb"
+        )
+    if "text" in docs.columns:
+        tokens = parted.select(
+            "_kb",
+            *keys,
+            "part_id",
+            "doc_id",
+            F.explode(F.split(F.lower("text"), TOKEN_SEP_RE)).alias("term"),
+        ).filter(F.col("term") != "")
+        # no doc_len column here: the encode kernel derives it as Σ tf
+        # per doc (every posting of a doc lives in its doc-range
+        # partition), so the pipeline neither re-tokenizes per token row
+        # nor joins doc_stats
+        parted = tokens.groupBy("_kb", *keys, "part_id", "term", "doc_id").agg(
+            F.count("*").cast("long").alias("tf"),
+        )
+    encoded = parted.groupBy("_kb", *keys, "part_id").applyInPandas(
+        _encode_partition(
+            avgdl, block_size, lineage, emit_term_stats=n_docs is not None
+        ),
+        "".join(f"{k} string, " for k in keys) + SEGMENT_SCHEMA,
+    )
+    encoded = encoded.cache()
+    encoded.filter(F.col("block_id") >= 0).write.mode("append").partitionBy(
+        *keys, "part_id"
+    ).parquet(f"{index_dir}/segments")
+    if n_docs is not None:
+        partials = encoded.filter(F.col("block_id") == TERMSTAT_BLOCK_ID)
+        if adjust is not None:
+            partials = partials.select(*keys, "term", "n", "first_doc").unionByName(
+                adjust.select(
+                    *keys, "term", F.col("df").alias("n"),
+                    F.col("cf").alias("first_doc"),
+                )
+            )
+        stats = partials.groupBy(*keys, "term").agg(
+            F.sum("n").cast("long").alias("df"),
+            F.sum("first_doc").cast("long").alias("cf"),
+        )
+        if adjust is not None:
+            # a term whose every posting was replaced leaves the table;
+            # rows sorted by term compress better (as a merge join left them)
+            stats = stats.filter(F.col("df") > 0).sortWithinPartitions(*keys, "term")
+        stats.select(*keys, "term", "df", "cf", _idf_col(n_docs)).write.mode(
+            "overwrite"
+        ).parquet(f"{index_dir}/term_stats")
+    payload = F.split("payload", r"\|")
+    meta_cols = [c.split() for c in META_SCHEMA.split(", ")[1:]]
+    encoded.filter(F.col("block_id") == -1).select(
+        *keys, "part_id", F.col("term").alias("payload")
+    ).select(
+        *keys,
+        "part_id",
+        *(
+            (payload.getItem(i) if t == "string" else payload.getItem(i).cast(t)).alias(c)
+            for i, (c, t) in enumerate(meta_cols)
+        ),
+    ).write.mode("append").parquet(f"{index_dir}/meta")
+    encoded.unpersist()
 
 
 def build_multifield_segments(
@@ -296,158 +510,27 @@ def build_multifield_segments(
     in ONE pass (the reference splits description fields at *index*
     time — description_splitter.py:256-291; queries only read them).
 
-    fields_df(doc_id, <field columns>) → one combined artifact under
-    ``index_dir``: segments/meta/term_stats/doc_stats carry a ``field``
-    column (segments partitioned by field,part_id so a query's scan
-    prunes to its fields), corpus holds one row per field. Doc-range
-    partitions share one doc-id space across fields, so a multifield
-    query folds into a single per-partition WAND pass. BM25 stats are
-    per field: df/idf over the field's postings, avgdl over the field's
-    lengths, N = n_docs (every doc has every field, possibly empty —
-    matching the DataFrame-engine/oracle definition)."""
-    spark = fields_df.sparkSession
-    from pyf_aggregator_spark.index.builder import _doc_len_col
-    from pyf_aggregator_spark.session import ensure_py_files
-
-    ensure_py_files(spark)
-    stack_expr = "stack({}, {}) as (field, text)".format(
-        len(field_names), ", ".join(f"'{f}', {f}" for f in field_names)
+    fields_df(doc_id, <field columns>) → one combined multifield index
+    under ``index_dir`` (layout in the module docstring), replacing any
+    index there. BM25 stats are per field: df/idf over the field's
+    postings, avgdl over the field's lengths, N = n_docs (every doc has
+    every field, possibly empty — matching the DataFrame-engine/oracle
+    definition)."""
+    texts = _melt(fields_df, field_names)
+    n_docs, max_doc, avgdl = _write_stats(
+        texts.select("field", "doc_id", _doc_len_col("text").alias("doc_len")),
+        index_dir, ["field"],
     )
-    melted = fields_df.select("doc_id", F.expr(stack_expr))
-    # doc_len per (field, doc) is a per-row EXPRESSION (token count ==
-    # Σ tf) — one narrow pass writes doc_stats, the corpus scalars
-    # aggregate the written table, and the encode pipeline never joins
-    # doc_stats (the kernel re-derives lengths as Σ tf per doc within
-    # its (field, part) group) — same restructure as build_segments
-    # (guide §2.3/§2.4: one payload shuffle, no postings-sized joins).
-    doc_stats = melted.select(
-        "field", "doc_id", _doc_len_col("text").alias("doc_len")
+    docs_per_part = _docs_per_part(n_docs, max_doc + 1, num_partitions)
+    for sub in ("segments", "meta"):  # a rebuild replaces, never resumes
+        shutil.rmtree(f"{index_dir}/{sub}", ignore_errors=True)
+    _write_segments(
+        texts, index_dir, ["field"],
+        list(range(math.ceil((max_doc + 1) / docs_per_part))), docs_per_part,
+        avgdl, {f: f"{lineage}-{f}" for f in avgdl},
+        block_size=block_size, n_docs=n_docs,
     )
-    doc_stats.write.mode("overwrite").parquet(f"{index_dir}/doc_stats")
-    corpus_rows = (
-        spark.read.parquet(f"{index_dir}/doc_stats")
-        .groupBy("field")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.coalesce(F.sum("doc_len"), F.lit(0)).cast("long").alias("total_len"),
-        )
-        .collect()
-    )
-    avgdl_by_field = {
-        r["field"]: r["total_len"] / r["n_docs"] for r in corpus_rows
-    }
-    n_docs = corpus_rows[0]["n_docs"]  # identical across fields
-    docs_per_part = min(
-        max(1, math.ceil(n_docs / num_partitions)), _max_docs_per_part()
-    )
-    pd.DataFrame(
-        [
-            (r["field"], int(r["n_docs"]), int(r["total_len"]),
-             avgdl_by_field[r["field"]])
-            for r in corpus_rows
-        ],
-        columns=["field", "n_docs", "total_len", "avgdl"],
-    ).to_parquet(_fresh_dir(f"{index_dir}/corpus") + "/part-00000.parquet", index=False)
-
-    def mf_encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        fld = pdf["field"].iloc[0]
-        out = _encode_partition(
-            avgdl_by_field[fld], block_size, f"{lineage}-{fld}",
-            emit_term_stats=True,
-        )(pdf)
-        out.insert(0, "field", fld)
-        return out
-
-    n_parts = math.ceil(n_docs / docs_per_part)
-    # exact (field, part)→task placement, same scheme as build_segments:
-    # the driver knows every live (field, part) pair, so one salted _kb
-    # per pair places each encode group alone in its own task — no
-    # collision stragglers, no empty buckets (guide §2.5)
-    from pyf_aggregator_spark.index.placement import (
-        SALT_MAP_MAX_GROUPS,
-        perfect_salts,
-        salt_col,
-    )
-
-    pairs = [f"{f}#{p}" for f in field_names for p in range(n_parts)]
-    keyed = melted.withColumn(
-        "part_id", (F.col("doc_id") / docs_per_part).cast("int")
-    )
-    pair_col = F.concat_ws("#", F.col("field"), F.col("part_id"))
-    if len(pairs) <= SALT_MAP_MAX_GROUPS:
-        salts = perfect_salts(pairs)
-        parted = keyed.withColumn(
-            "_kb", salt_col(salts, pair_col).cast("int")
-        ).repartition(len(salts), "_kb")
-    else:
-        n_buckets = int(
-            min(
-                max(3 * n_parts * len(field_names), num_partitions),
-                _max_encode_buckets(),
-            )
-        )
-        # hash the (field, part) pair, not part_id alone: keying on the
-        # part would send every field of a part to one encode bucket
-        parted = keyed.withColumn("_kb", F.hash(pair_col)).repartition(
-            n_buckets, "_kb"
-        )
-    tokens = parted.select(
-        "_kb", "field", "part_id", "doc_id",
-        F.explode(F.split(F.lower("text"), TOKEN_SEP_RE)).alias("term"),
-    ).filter(F.col("term") != "")
-    tf = tokens.groupBy("_kb", "field", "part_id", "term", "doc_id").agg(
-        F.count("*").cast("long").alias("tf")
-    )
-    encoded = tf.groupBy("_kb", "field", "part_id").applyInPandas(
-        mf_encode, "field string, " + SEGMENT_SCHEMA
-    ).persist()
-    encoded.filter(F.col("block_id") >= 0).write.mode("overwrite").partitionBy(
-        "field", "part_id"
-    ).parquet(f"{index_dir}/segments")
-    # per-field term_stats from the encode kernel's per-term partials —
-    # a vocabulary-sized aggregation instead of a second postings pass
-    (
-        encoded.filter(F.col("block_id") == TERMSTAT_BLOCK_ID)
-        .groupBy("field", "term")
-        .agg(
-            F.sum("n").cast("long").alias("df"),
-            F.sum("first_doc").cast("long").alias("cf"),
-        )
-        .select(
-            "field", "term", "df", "cf",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ).alias("idf"),
-        )
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/term_stats")
-    )
-    parts = F.split("payload", r"\|")
-    encoded.filter(F.col("block_id") == -1).select(
-        "field", "part_id", F.col("term").alias("payload")
-    ).select(
-        "field", "part_id",
-        parts.getItem(0).cast("long").alias("doc_lo"),
-        parts.getItem(1).cast("long").alias("doc_hi"),
-        parts.getItem(2).cast("long").alias("n_postings"),
-        parts.getItem(3).cast("long").alias("n_tokens"),
-        parts.getItem(4).cast("long").alias("n_terms"),
-        parts.getItem(5).cast("long").alias("n_blocks"),
-        parts.getItem(6).alias("checksum"),
-        parts.getItem(7).alias("lineage"),
-        parts.getItem(8).cast("double").alias("avgdl_build"),
-    ).write.mode("overwrite").parquet(f"{index_dir}/meta")
-    encoded.unpersist()
     return {"n_docs": int(n_docs), "fields": list(field_names)}
-
-
-def _fresh_dir(path: str) -> str:
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
-    return path
 
 
 def build_segments(
@@ -457,93 +540,36 @@ def build_segments(
     block_size: int = BLOCK_SIZE,
     lineage: str = "",
     only_parts: list[int] | None = None,
-    doc_base: int = 0,
-    part_base: int = 0,
-    write_stats: bool = True,
-    avgdl_override: float | None = None,
-    docs_per_part: int | None = None,
 ) -> dict:
-    """docs(doc_id dense doc_base..doc_base+N-1, text) → segment files
-    + stats tables.
+    """docs(doc_id dense 0..N-1, text) → segment files + stats tables.
 
     Resumable: partitions already present in ``meta/`` (same lineage)
     are skipped; fresh partitions are appended. ``only_parts`` lets
-    tests simulate a mid-build failure. ``doc_base``/``part_base``/
-    ``write_stats=False`` support delta (incremental) builds — see
-    index/incremental.py. Returns summary counters.
+    tests simulate a mid-build failure. Returns summary counters.
 
-    Plan shape (r6, guide §2.3/§2.4): the heavy payload crosses the bus
-    ONCE. doc_stats/corpus come from a narrow doc_len EXPRESSION over
-    the docs scan (token count == sum(tf); no explode, no shuffle);
-    the encode pipeline repartitions the raw (doc_id, text) rows by
-    part_id — a text-sized exchange, several times smaller than the
-    exploded postings — and tokenize → tf-aggregate → varbyte-encode
-    all run partition-local behind it (HashPartitioning(part_id)
-    satisfies both the groupBy(part_id, term, doc_id) aggregation and
-    the applyInPandas clustering, so Catalyst inserts no further
-    exchange). A FULL build also derives term_stats from per-term
-    partials the encode kernel emits (vocabulary-sized aggregation);
-    only the rare resume/partial path recomputes them with the old
-    postings-sized pass, because partials then cover only the rebuilt
-    parts."""
+    doc_stats/corpus come from a narrow doc_len EXPRESSION over the
+    docs scan (token count == sum(tf); no explode, no shuffle); the
+    encode pipeline repartitions the raw (doc_id, text) rows by part —
+    a text-sized exchange, several times smaller than the exploded
+    postings (see _write_segments). A FULL build derives term_stats
+    from per-term partials the encode kernel emits; only the rare
+    resume/partial path recomputes them with a postings-sized pass,
+    because partials then cover only the rebuilt parts. An explicit
+    ``num_partitions`` keeps the exact requested geometry (tests pin
+    checksums/part counts on it); left unset, it is the cluster's
+    default parallelism — one part per core: the salted placement
+    already gives every part its own task, and finer parts slow the
+    query kernels via per-part setup (OPTIMIZATION_r06.md)."""
     spark = docs.sparkSession
-    from pyf_aggregator_spark.index.builder import _doc_len_col
-    from pyf_aggregator_spark.session import ensure_py_files
-
-    ensure_py_files(spark)  # the encode kernel imports this package on workers
-    auto_parts = num_partitions is None
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
 
     base = docs.select("doc_id", "text")
-    doc_stats = base.select(
-        "doc_id", _doc_len_col("text").alias("doc_len")
+    n_docs, max_doc, avgdl = _write_stats(
+        base.select("doc_id", _doc_len_col("text").alias("doc_len")), index_dir, []
     )
-    if write_stats:
-        # write first, then aggregate the (tiny) written table — the
-        # corpus scalars cost a parquet re-read instead of a second
-        # tokenize pass over the text
-        doc_stats.write.mode("overwrite").parquet(f"{index_dir}/doc_stats")
-        stats_src = spark.read.parquet(f"{index_dir}/doc_stats")
-    else:
-        stats_src = doc_stats
-    n_docs, total_len, max_doc = stats_src.agg(
-        F.count("*"), F.coalesce(F.sum("doc_len"), F.lit(0)), F.max("doc_id")
-    ).collect()[0]
-    avgdl = avgdl_override if avgdl_override is not None else total_len / n_docs
-    if write_stats:
-        write_corpus_stats(index_dir, n_docs, total_len, avgdl)
-    if docs_per_part is None:
-        # partition by id RANGE. Part count covers the actual id span,
-        # not just n_docs: ids are dense 0-based in production
-        # (assign_doc_ids) where span == n_docs, but a sparse caller
-        # must not have its top-of-range docs silently dropped by a
-        # too-small part list (pre-r4 latent bug). Ranges are capped at
-        # _max_docs_per_part so encode-task memory is bounded by DATA
-        # geometry, not cluster size (see the constant's note).
-        # When the caller left the geometry to us (auto_parts), cut
-        # _parts_per_core() parts per core (default 1: the salted
-        # placement below already gives every part its own task, so
-        # finer parts no longer buy balance — the knob remains for
-        # per-task memory experiments; >1 measurably slows the query
-        # kernels via per-part setup). Explicit num_partitions keeps
-        # the exact requested geometry (tests pin checksums/part
-        # counts on it).
-        mult = _parts_per_core() if auto_parts else 1
-        docs_per_part = max(1, math.ceil(n_docs / (num_partitions * mult)))
-        cap = _max_docs_per_part()
-        if docs_per_part > cap:
-            # cap binds → big corpus relative to the cluster. Also
-            # floor the task count at _min_capped_waves() waves/core so
-            # the last-wave straggler tail amortizes (see the note at
-            # the constants above).
-            span = max_doc - doc_base + 1
-            target_tasks = max(
-                math.ceil(span / cap),
-                num_partitions * _min_capped_waves(),
-            )
-            docs_per_part = max(1, math.ceil(span / target_tasks))
-    n_parts = math.ceil((max_doc - doc_base + 1) / docs_per_part)
+    docs_per_part = _docs_per_part(n_docs, max_doc + 1, num_partitions)
+    n_parts = math.ceil((max_doc + 1) / docs_per_part)
 
     # ---- resume: skip partitions whose checkpoint row already exists
     done: set[int] = set()
@@ -553,20 +579,20 @@ def build_segments(
         meta_rows = spark.read.parquet(meta_path).select("part_id", "lineage").collect()
         committed = {r["part_id"] for r in meta_rows}
         done = {r["part_id"] for r in meta_rows if r["lineage"] == lineage}
-    part_ids = [part_base + p for p in range(n_parts)]
+    part_ids = list(range(n_parts))
     todo = [p for p in part_ids if p not in done]
     if only_parts is not None:
         todo = [p for p in todo if p in only_parts]
     # a FULL build's term_stats come from the encode kernel's per-term
     # partials; a resume/partial build's partials would only cover the
     # rebuilt parts, so that path recomputes over the whole corpus
-    full_build = write_stats and set(todo) == set(part_ids)
-    if write_stats and not full_build:
+    full_build = set(todo) == set(part_ids)
+    if not full_build:
         tokens_all = base.select(
             "doc_id",
             F.explode(F.split(F.lower("text"), TOKEN_SEP_RE)).alias("term"),
         ).filter(F.col("term") != "")
-        term_stats = (
+        (
             tokens_all.groupBy("term", "doc_id")
             .agg(F.count("*").cast("long").alias("tf"))
             .groupBy("term")
@@ -574,118 +600,22 @@ def build_segments(
                 F.count("*").cast("long").alias("df"),
                 F.sum("tf").cast("long").alias("cf"),
             )
-            .select(
-                "term", "df", "cf",
-                F.log(
-                    F.lit(1.0)
-                    + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                ).alias("idf"),
-            )
+            .select("term", "df", "cf", _idf_col(n_docs))
+            .write.mode("overwrite")
+            .parquet(f"{index_dir}/term_stats")
         )
-        term_stats.write.mode("overwrite").parquet(f"{index_dir}/term_stats")
     # reconcile: the commit point is the meta row (written AFTER segment
     # rows). A crash between the two writes leaves orphaned segment
     # blocks for partitions with no meta row; appending again would
     # duplicate their postings — drop the orphans before rebuilding.
-    import shutil as _shutil
-
     for p in todo:
         orphan = f"{index_dir}/segments/part_id={p}"
         if p not in committed and os.path.exists(orphan):
-            _shutil.rmtree(orphan, ignore_errors=True)
+            shutil.rmtree(orphan, ignore_errors=True)
     if not todo:
         return {"n_parts": n_parts, "built": 0, "skipped": len(done)}
-
-    # ---- the ONE payload exchange: raw (doc_id, text) rows placed by
-    # part. The live part ids are known, so the part→task assignment is
-    # solved EXACTLY (placement.perfect_salts): repartitioning on the
-    # salted _kb column gives len(todo) tasks, one part each, no empty
-    # buckets and no collision stragglers (guide §2.5 — hashing P parts
-    # into even 3x buckets left ~P/6 double buckets whose tasks ran the
-    # whole encode twice). Very large part counts fall back to plain
-    # hash over-provisioning (literal salt map capped).
-    from pyf_aggregator_spark.index.placement import (
-        SALT_MAP_MAX_GROUPS,
-        perfect_salts,
-        salt_col,
+    _write_segments(
+        base, index_dir, [], todo, docs_per_part, avgdl, {None: lineage},
+        block_size=block_size, n_docs=n_docs if full_build else None,
     )
-
-    keyed = base.withColumn(
-        "part_id",
-        (F.lit(part_base) + (F.col("doc_id") - doc_base) / docs_per_part).cast(
-            "int"
-        ),
-    ).filter(F.col("part_id").isin(todo))
-    if len(todo) <= SALT_MAP_MAX_GROUPS:
-        salts = perfect_salts(todo)
-        parted = keyed.withColumn(
-            "_kb", salt_col(salts, F.col("part_id")).cast("int")
-        ).repartition(len(salts), "_kb")
-    else:
-        n_buckets = int(
-            min(max(3 * len(todo), num_partitions), _max_encode_buckets())
-        )
-        parted = keyed.withColumn(
-            "_kb", F.col("part_id").cast("int")
-        ).repartition(n_buckets, "_kb")
-    tokens = parted.select(
-        "_kb",
-        "part_id",
-        "doc_id",
-        F.explode(F.split(F.lower("text"), TOKEN_SEP_RE)).alias("term"),
-    ).filter(F.col("term") != "")
-    # no doc_len column here: the encode kernel derives it as Σ tf per
-    # doc (every posting of a doc lives in its doc-range partition), so
-    # the pipeline neither re-tokenizes per token row nor joins doc_stats
-    tf = tokens.groupBy("_kb", "part_id", "term", "doc_id").agg(
-        F.count("*").cast("long").alias("tf"),
-    )
-    encoded = tf.groupBy("_kb", "part_id").applyInPandas(
-        _encode_partition(
-            avgdl, block_size, lineage, emit_term_stats=full_build
-        ),
-        SEGMENT_SCHEMA,
-    )
-    encoded = encoded.cache()
-    seg_rows = encoded.filter(F.col("block_id") >= 0)
-    meta_rows = encoded.filter(F.col("block_id") == -1).select(
-        "part_id", F.col("term").alias("payload")
-    )
-
-    seg_rows.write.mode("append").partitionBy("part_id").parquet(
-        f"{index_dir}/segments"
-    )
-    if full_build:
-        (
-            encoded.filter(F.col("block_id") == TERMSTAT_BLOCK_ID)
-            .groupBy("term")
-            .agg(
-                F.sum("n").cast("long").alias("df"),
-                F.sum("first_doc").cast("long").alias("cf"),
-            )
-            .select(
-                "term", "df", "cf",
-                F.log(
-                    F.lit(1.0)
-                    + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                ).alias("idf"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/term_stats")
-        )
-    parts = F.split("payload", r"\|")
-    meta_rows.select(
-        "part_id",
-        parts.getItem(0).cast("long").alias("doc_lo"),
-        parts.getItem(1).cast("long").alias("doc_hi"),
-        parts.getItem(2).cast("long").alias("n_postings"),
-        parts.getItem(3).cast("long").alias("n_tokens"),
-        parts.getItem(4).cast("long").alias("n_terms"),
-        parts.getItem(5).cast("long").alias("n_blocks"),
-        parts.getItem(6).alias("checksum"),
-        parts.getItem(7).alias("lineage"),
-        parts.getItem(8).cast("double").alias("avgdl_build"),
-    ).write.mode("append").parquet(meta_path)
-    built = len(todo)
-    encoded.unpersist()
-    return {"n_parts": n_parts, "built": built, "skipped": len(done)}
+    return {"n_parts": n_parts, "built": len(todo), "skipped": len(done)}

@@ -134,7 +134,7 @@ def documents_multifield_index(spark: SparkSession, sf_dir: str) -> dict:
     published with an atomic rename. Query-time cost is then a pure
     WAND pass — no re-tokenization, no per-call index construction."""
     from pyf_aggregator_spark.index.segments import build_multifield_segments
-    from pyf_aggregator_spark.search.wand import load_multifield_index
+    from pyf_aggregator_spark.search.wand import load_index
 
     key = (id(spark), sf_dir)
     if key not in _MF_CACHE:
@@ -158,7 +158,7 @@ def documents_multifield_index(spark: SparkSession, sf_dir: str) -> dict:
                 os.rename(staging, root)
             except OSError:
                 shutil.rmtree(staging, ignore_errors=True)
-        idx = load_multifield_index(spark, root)
+        idx = load_index(spark, root)
         idx["segments"] = idx["segments"].cache()
         _MF_CACHE[key] = idx
     return _MF_CACHE[key]

@@ -15,7 +15,7 @@ below the current k-th exact score, every remaining interval is
 prunable and decoding stops. Exact scores use the same float64 math as
 the DataFrame engine, so results stay rank-identical to the oracle.
 
-Entry points: ``load_index`` / ``load_multifield_index`` open a handle;
+Entry points: ``load_index`` opens a handle on either index kind;
 ``wand_topk``, ``wand_topk_with_found``, ``wand_match_ids`` and
 ``wand_score_matches`` answer one query on either handle kind, and
 ``wand_topk_batch`` answers many on a single-field handle. Every
@@ -837,8 +837,18 @@ def _partition_for_kernel(seg: DataFrame, part_ids: list[int]):
 
 
 def load_index(spark: SparkSession, index_dir: str) -> dict:
-    """Handles + scalars for a segment index directory. Rolls back any
-    upsert interrupted mid-commit before reading (crash recovery).
+    """Handles + scalars for a segment index directory of either kind
+    (the corpus table says which: a multifield handle carries
+    ``avgdl_by_field`` where a single-field one carries ``n_docs`` and
+    ``avgdl``). Rolls back any upsert interrupted mid-commit before
+    reading (crash recovery), and carries tombstones + per-part bound
+    factors so incrementally maintained indexes stay exact.
+
+    bound_factor is keyed by part_id only (the kernel groups by part_id
+    with field-namespaced terms), so it takes the MAX over the part's
+    fields of avgdl_now/avgdl_build — a safe upper bound for every
+    field's blocks in the part (norm is monotone in avgdl with ratio
+    bounded by the avgdl ratio).
 
     Reader-vs-writer safety (ADVICE r3): the commit window and
     reconciliation share a sibling flock (incremental._commit_lock) —
@@ -849,80 +859,40 @@ def load_index(spark: SparkSession, index_dir: str) -> dict:
     contract (the reference has the same model: one ingest queue owns
     the collection, queue.py; readers go through the serving alias);
     multi-writer deployments must serialize index mutation externally."""
-    from pyf_aggregator_spark.index.incremental import _reconcile_pending
-
-    _reconcile_pending(index_dir)
-    corpus = spark.read.parquet(f"{index_dir}/corpus").collect()[0]
-    avgdl = corpus["avgdl"]
-    bound_factor = {
-        r["part_id"]: max(1.0, avgdl / r["avgdl_build"])
-        for r in spark.read.parquet(f"{index_dir}/meta")
-        .select("part_id", "avgdl_build")
-        .collect()
-    }
-    from pyf_aggregator_spark.index.incremental import load_tombstones
-
-    segments, kb_expr = _partition_for_kernel(
-        spark.read.parquet(f"{index_dir}/segments"), sorted(bound_factor)
-    )
-    return {
-        "segments": segments,
-        "kb_expr": kb_expr,
-        "term_stats": spark.read.parquet(f"{index_dir}/term_stats"),
-        "meta_ranges": spark.read.parquet(f"{index_dir}/meta").select(
-            "part_id", "doc_lo", "doc_hi"
-        ),
-        "n_docs": corpus["n_docs"],
-        "avgdl": avgdl,
-        "bound_factor": bound_factor,
-        "tombstones": load_tombstones(spark, index_dir),
-        "dir": index_dir,
-    }
-
-
-def load_multifield_index(spark: SparkSession, index_dir: str) -> dict:
-    """Handles + per-field scalars for a multifield segment artifact
-    (see segments.build_multifield_segments). Like load_index: rolls
-    back torn commits, and carries tombstones + per-part bound factors
-    so incrementally-upserted artifacts (incremental.upsert_multifield)
-    stay exact.
-
-    bound_factor is keyed by part_id only (the kernel groups by
-    part_id with field-namespaced terms), so it takes the MAX over the
-    part's fields of avgdl_now/avgdl_build — a safe upper bound for
-    every field's blocks in the part (norm is monotone in avgdl with
-    ratio bounded by the avgdl ratio)."""
     from pyf_aggregator_spark.index.incremental import (
         _reconcile_pending,
         load_tombstones,
     )
+    from pyf_aggregator_spark.index.segments import _read_corpus
 
     _reconcile_pending(index_dir)
-    corpus = spark.read.parquet(f"{index_dir}/corpus").collect()
-    avgdl_by_field = {r["field"]: r["avgdl"] for r in corpus}
+    keys, corpus = _read_corpus(spark, index_dir)
     meta = spark.read.parquet(f"{index_dir}/meta")
     bound_factor: dict[int, float] = {}
-    for r in meta.select("field", "part_id", "avgdl_build").collect():
-        f = max(1.0, avgdl_by_field[r["field"]] / r["avgdl_build"])
-        bound_factor[r["part_id"]] = max(
-            bound_factor.get(r["part_id"], 1.0), f
-        )
-    meta_ranges = meta.groupBy("part_id").agg(
-        F.min("doc_lo").alias("doc_lo"), F.max("doc_hi").alias("doc_hi")
-    )
+    for r in meta.select(*keys, "part_id", "avgdl_build").collect():
+        f = corpus[r["field"] if keys else None]["avgdl"] / r["avgdl_build"]
+        bound_factor[r["part_id"]] = max(bound_factor.get(r["part_id"], 1.0), f)
     segments, kb_expr = _partition_for_kernel(
         spark.read.parquet(f"{index_dir}/segments"), sorted(bound_factor)
     )
-    return {
+    idx = {
         "segments": segments,
         "kb_expr": kb_expr,
         "term_stats": spark.read.parquet(f"{index_dir}/term_stats"),
-        "avgdl_by_field": avgdl_by_field,
-        "meta_ranges": meta_ranges,
+        "meta_ranges": meta.select("part_id", "doc_lo", "doc_hi"),
         "bound_factor": bound_factor,
         "tombstones": load_tombstones(spark, index_dir),
         "dir": index_dir,
     }
+    if keys:
+        idx["avgdl_by_field"] = {k: r["avgdl"] for k, r in corpus.items()}
+        # one meta row per (field, part): a part's range spans them all
+        idx["meta_ranges"] = meta.groupBy("part_id").agg(
+            F.min("doc_lo").alias("doc_lo"), F.max("doc_hi").alias("doc_hi")
+        )
+    else:
+        idx.update(n_docs=corpus[None]["n_docs"], avgdl=corpus[None]["avgdl"])
+    return idx
 
 
 def _query_spec(
@@ -1061,11 +1031,11 @@ def wand_topk(
     set of a prefix token is ONE slot and counts as one query token).
 
     ``weights`` ({field: weight}) is required on a multifield handle
-    (load_multifield_index): §2.8 query_by + query_by_weights on the
-    build-time artifact. The query folds into ONE block-max WAND pass
-    over the queried fields; block upper bounds Σ w_f·idf_f·max_norm_f
-    dominate every true score, so pruning never drops a winner, and
-    there is no per-field top-k merge error. ``mode='and'`` then
+    (``load_index`` of a multifield index): §2.8 query_by +
+    query_by_weights on the build-time artifact. The query folds into
+    ONE block-max WAND pass over the queried fields; block upper bounds
+    Σ w_f·idf_f·max_norm_f dominate every true score, so pruning never
+    drops a winner, and there is no per-field top-k merge error. ``mode='and'`` then
     requires every query token in at least one queried field; an
     expansion group scores its best completion per field, fields sum."""
     local = _local(idx, "topk", query, mode, allowed, slot_terms, weights, k)

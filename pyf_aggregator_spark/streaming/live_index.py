@@ -104,14 +104,16 @@ def stream_upsert_multifield(
     """Live maintenance for the 5-field artifact: a checkpointed stream
     of whole-document updates (doc_id + every query_by field — a
     document version is atomic, like the reference's point upsert of a
-    full Typesense document) drives ``upsert_multifield`` per
-    micro-batch. Same exactly-once layers as stream_append_to_index:
-    reconcile-first (torn commits roll back BEFORE the replay guard
-    reads meta), lineage ``stream-mf-<batch_id>`` committed atomically
-    with the batch's meta rows, replayed batches with live lineage
-    skipped. Multi-doc batches are ONE upsert commit — a replay is
-    all-or-nothing, never half a batch."""
-    from pyf_aggregator_spark.index.incremental import upsert_multifield
+    full Typesense document) drives ``upsert_docs`` per micro-batch
+    (the index's corpus table marks it multifield; queries open it
+    with ``wand.load_index``). Same exactly-once layers as
+    stream_append_to_index: reconcile-first (torn commits roll back
+    BEFORE the replay guard reads meta), lineage
+    ``stream-mf-<batch_id>`` committed atomically with the batch's meta
+    rows, replayed batches with live lineage skipped. Multi-doc batches
+    are ONE upsert commit — a replay is all-or-nothing, never half a
+    batch."""
+    from pyf_aggregator_spark.index.incremental import upsert_docs
 
     schema = schema or (
         "doc_id long, " + ", ".join(f"{f} string" for f in field_names)
@@ -126,9 +128,9 @@ def stream_upsert_multifield(
             return  # completed by a previous attempt — exactly-once skip
         if batch.isEmpty():
             return
-        upsert_multifield(
+        upsert_docs(
             spark, index_dir, batch.select("doc_id", *field_names),
-            field_names, lineage=lineage,
+            lineage=lineage,
         )
         applied.append(int(batch_id))
 

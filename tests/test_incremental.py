@@ -800,3 +800,45 @@ def test_decode_live_postings_applies_scoped_tombstones(spark, tmp_path):
     )
     got = _decoded(spark, d, tomb)
     assert got == {k: v for k, v in full.items() if k[1] != dead}
+
+
+@pytest.mark.parametrize("kind", ["single", "multifield"])
+def test_writer_releases_every_persist(spark, tmp_path, kind):
+    """Every persist the index writer takes is released: two rounds of
+    build → upsert → delete → compact leave the session's persisted RDD
+    count where it started, for both index kinds."""
+    from pyf_aggregator_spark.index.incremental import (
+        compact,
+        delete_docs,
+        upsert_docs,
+    )
+    from pyf_aggregator_spark.index.segments import build_multifield_segments
+
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    if kind == "single":
+        schema = "doc_id long, text string"
+        rows = [(i, f"w{i % 7:05d} doc{i}") for i in range(60)]
+        ups = [(2, "changed w00001"), (60, "new w00002")]
+
+        def build(d):
+            build_segments(spark.createDataFrame(rows, schema), d,
+                           num_partitions=2, lineage="b")
+    else:
+        schema = "doc_id long, name string, body string"
+        rows = [(i, f"pkg{i}", f"body w{i % 5}") for i in range(60)]
+        ups = [(2, "pkg2 changed", "body w1"), (60, "new", "w2")]
+
+        def build(d):
+            build_multifield_segments(spark.createDataFrame(rows, schema), d,
+                                      ["name", "body"], num_partitions=2)
+
+    start = persisted()
+    for rnd in range(2):
+        d = str(tmp_path / f"{kind}{rnd}")
+        build(d)
+        upsert_docs(spark, d, spark.createDataFrame(ups, schema))
+        delete_docs(spark, d, [5, 6])
+        compact(spark, d, num_partitions=2)
+    assert persisted() == start

@@ -120,10 +120,10 @@ def test_upsert_multifield_equals_rebuild(spark, tmp_path):
     the weighted query must be rank- and score-identical to a fresh
     build over the modified field table — including a second upsert on
     top of the first (tombstone scoping + exact per-field stats)."""
-    from pyf_aggregator_spark.index.incremental import upsert_multifield
+    from pyf_aggregator_spark.index.incremental import upsert_docs
     from pyf_aggregator_spark.index.segments import build_multifield_segments
     from pyf_aggregator_spark.search.wand import (
-        load_multifield_index,
+        load_index,
         wand_topk,
     )
 
@@ -144,15 +144,15 @@ def test_upsert_multifield_equals_rebuild(spark, tmp_path):
         (7, "pkg7", "", ""),  # all description fields emptied
         (40, "quantum-core", "brand new", "inserted body w3"),
     ]
-    upsert_multifield(
-        spark, d, spark.createDataFrame(ups1, schema), fields
+    upsert_docs(
+        spark, d, spark.createDataFrame(ups1, schema)
     )
     ups2 = [
         (3, "pkg3", "third version title", "body again"),  # re-update
         (41, "another-pkg", "quantum again", "w1 w2"),
     ]
-    upsert_multifield(
-        spark, d, spark.createDataFrame(ups2, schema), fields
+    upsert_docs(
+        spark, d, spark.createDataFrame(ups2, schema)
     )
 
     merged = {r[0]: r for r in base_rows}
@@ -162,8 +162,8 @@ def test_upsert_multifield_equals_rebuild(spark, tmp_path):
     d2 = str(tmp_path / "mfref")
     build_multifield_segments(ref_df, d2, fields, num_partitions=3, lineage="r")
 
-    idx = load_multifield_index(spark, d)
-    ref = load_multifield_index(spark, d2)
+    idx = load_index(spark, d)
+    ref = load_index(spark, d2)
     for q in ["quantum", "quantum w3", "title", "pkg3 body", "zzz-none"]:
         a = [
             (r["doc_id"], r["score"])
@@ -194,7 +194,7 @@ def test_multifield_delete_docs(spark, tmp_path):
     from pyf_aggregator_spark.index.incremental import delete_docs
     from pyf_aggregator_spark.index.segments import build_multifield_segments
     from pyf_aggregator_spark.search.wand import (
-        load_multifield_index,
+        load_index,
         wand_topk,
     )
 
@@ -220,7 +220,7 @@ def test_multifield_delete_docs(spark, tmp_path):
         ),
         d2, fields, num_partitions=2, lineage="r",
     )
-    idx, ref = load_multifield_index(spark, d), load_multifield_index(spark, d2)
+    idx, ref = load_index(spark, d), load_index(spark, d2)
     got = [
         r["doc_id"]
         for r in wand_topk(idx, "quantum", k=30, weights=weights).collect()
@@ -297,3 +297,59 @@ def test_multifield_overcap_fallback_keys_field_part_pairs(
         for p in glob.glob(f"{hashed}/segments/*/*/part-*.parquet")
     }
     assert len(tasks) > n_parts
+
+
+def test_multifield_compact_equals_rebuild(spark, tmp_path):
+    """Compaction keeps a multifield index multifield: after an upsert
+    and deletes, compact == a fresh build over the surviving documents
+    — term_stats, doc_stats and corpus identical row for row, and the
+    weighted query identical in both modes."""
+    from pyf_aggregator_spark.index.incremental import (
+        compact,
+        delete_docs,
+        upsert_docs,
+    )
+    from pyf_aggregator_spark.index.segments import build_multifield_segments
+    from pyf_aggregator_spark.search.wand import load_index, wand_topk_with_found
+
+    fields = ["name", "body"]
+    weights = {"name": 10.0, "body": 1.0}
+    schema = "doc_id long, name string, body string"
+    rows = {
+        i: (i, f"pkg{i} quantum" if i % 4 == 0 else f"pkg{i}",
+            f"body w{i % 5} quantum filler" if i % 3 else f"body w{i % 7}")
+        for i in range(30)
+    }
+    d = str(tmp_path / "mfcompact")
+    build_multifield_segments(
+        spark.createDataFrame(list(rows.values()), schema), d, fields,
+        num_partitions=2, lineage="b",
+    )
+    ups = [(3, "pkg3 quantum", "fresh body w1"), (30, "newpkg", "quantum w2")]
+    upsert_docs(spark, d, spark.createDataFrame(ups, schema))
+    rows.update({r[0]: r for r in ups})
+    delete_docs(spark, d, [0, 3, 7, 12])
+    for i in (0, 3, 7, 12):
+        rows.pop(i)
+    compact(spark, d, num_partitions=2)
+
+    d2 = str(tmp_path / "mfcompactref")
+    build_multifield_segments(
+        spark.createDataFrame(sorted(rows.values()), schema), d2, fields,
+        num_partitions=2, lineage="r",
+    )
+    for table in ("term_stats", "doc_stats", "corpus"):
+        a, b = (
+            sorted(tuple(r) for r in spark.read.parquet(f"{x}/{table}").collect())
+            for x in (d, d2)
+        )
+        assert a == b, table
+    idx, ref = load_index(spark, d), load_index(spark, d2)
+    assert idx["tombstones"] is None
+    for q in ["quantum", "quantum w1", "pkg30 body"]:
+        for mode in ("or", "and"):
+            assert wand_topk_with_found(
+                idx, q, k=10, mode=mode, weights=weights
+            ) == wand_topk_with_found(ref, q, k=10, mode=mode, weights=weights), (
+                q, mode,
+            )

@@ -328,7 +328,7 @@ def test_term_dict_equals_row_collect(built, tmp_path):
     Row objects, for term keys (single-field) and (field, term) keys
     (multifield)."""
     from pyf_aggregator_spark.index.segments import build_multifield_segments
-    from pyf_aggregator_spark.search.wand import _term_dict, load_multifield_index
+    from pyf_aggregator_spark.search.wand import _term_dict, load_index
 
     spark, _, index_dir, _, _ = built
     idx = load_index(spark, index_dir)
@@ -345,7 +345,7 @@ def test_term_dict_equals_row_collect(built, tmp_path):
         spark.createDataFrame(rows, "doc_id long, name string, body string"),
         d, ["name", "body"], num_partitions=2,
     )
-    mf = load_multifield_index(spark, d)
+    mf = load_index(spark, d)
     want_mf = {
         (r["field"], r["term"]): r["idf"]
         for r in mf["term_stats"].select("field", "term", "idf").collect()

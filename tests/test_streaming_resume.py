@@ -223,14 +223,14 @@ def test_stream_append_to_index_exactly_once(spark, tmp_path):
 
 def test_stream_upsert_multifield_exactly_once(spark, tmp_path):
     """Live maintenance of the 5-field artifact: a checkpointed stream
-    of whole-document updates drives upsert_multifield per micro-batch.
+    of whole-document updates drives upsert_docs per micro-batch.
     Two restarts on one checkpoint apply each batch once; a fresh
     checkpoint replaying already-committed content is skipped via the
     stream-mf-<id> lineage; the final artifact answers the weighted
     query rank-identically to a fresh build over the merged table."""
     from pyf_aggregator_spark.index.segments import build_multifield_segments
     from pyf_aggregator_spark.search.wand import (
-        load_multifield_index,
+        load_index,
         wand_topk,
     )
     from pyf_aggregator_spark.streaming.live_index import (
@@ -281,8 +281,8 @@ def test_stream_upsert_multifield_exactly_once(spark, tmp_path):
     ref_df = spark.createDataFrame(sorted(merged.values()), schema)
     d2 = str(tmp_path / "mfstreamref")
     build_multifield_segments(ref_df, d2, fields, num_partitions=2, lineage="r")
-    idx = load_multifield_index(spark, d)
-    ref = load_multifield_index(spark, d2)
+    idx = load_index(spark, d)
+    ref = load_index(spark, d2)
     for q in ["quantum", "quantum w3", "pkg3 body", "zzz-none"]:
         a = [
             (r["doc_id"], r["score"])
@@ -305,10 +305,10 @@ def test_stream_mf_replay_after_torn_commit_reapplies(
     import os as _os
 
     import pytest
-    from pyf_aggregator_spark.index.incremental import upsert_multifield
+    from pyf_aggregator_spark.index.incremental import upsert_docs
     from pyf_aggregator_spark.index.segments import build_multifield_segments
     from pyf_aggregator_spark.search.wand import (
-        load_multifield_index,
+        load_index,
         wand_topk,
     )
     from pyf_aggregator_spark.streaming.live_index import (
@@ -340,7 +340,7 @@ def test_stream_mf_replay_after_torn_commit_reapplies(
 
     monkeypatch.setattr(_os, "remove", rm)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        upsert_multifield(spark, d, upd, fields, lineage="stream-mf-0")
+        upsert_docs(spark, d, upd, lineage="stream-mf-0")
     monkeypatch.setattr(_os, "remove", real_remove)
     assert _os.listdir(f"{d}/pending")  # torn state on disk
 
@@ -359,7 +359,7 @@ def test_stream_mf_replay_after_torn_commit_reapplies(
         spark.createDataFrame(sorted(merged.values()), schema), d2, fields,
         num_partitions=2, lineage="r",
     )
-    idx, ref = load_multifield_index(spark, d), load_multifield_index(spark, d2)
+    idx, ref = load_index(spark, d), load_index(spark, d2)
     for q in ["quantum", "pkg2 body", "w1"]:
         a = [(r["doc_id"], r["score"])
              for r in wand_topk(idx, q, k=10, weights=weights).collect()]
