@@ -9,7 +9,8 @@ reproducible.
 
 Usage:
     python bench_extra.py [--sf-dir DIR] [--turns N] [--phases a,b,c]
-Phases: build_parts, cache_parts, batch, wand_lat, headline, facade, upsert
+Phases: build_parts, cache_parts, batch, wand_lat, headline, facade, upsert,
+typo
 
 ``upsert`` builds a fresh index over the corpus, runs one 500-doc
 ``upsert_docs`` (250 existing ids with new text, 250 new ids) and prints
@@ -20,6 +21,18 @@ stats_writes (tombstones, doc_stats) and commit. It does so for both
 index kinds: a single-field index over ``text`` and a two-field index
 over ``role`` and ``text`` (one line each). ``--phases upsert`` runs it
 alone.
+
+``typo`` times ``typo.correct_terms`` on an index whose deletion
+artifact already exists and prints one JSON line: seconds (min and
+median of ``--repeats``, at least 3) and Spark jobs per call, for a
+batch-shaped call (the token union of perfbench's 200-query
+``wand_topk_batch``, every 10th query misspelled) and a fuzzy-shaped
+one (perfbench's fuzzy request: two tokens, the first misspelled),
+plus the driver's resident set before the calls and its peak. The
+vocabulary is the perfbench corpus of ``--typo-seed`` (5k turns), or
+with ``--typo-vocab N`` a synthetic N-term one (random words over 16
+letters, df 1–100, the same shapes over its terms). ``--phases typo``
+runs it alone.
 """
 
 from __future__ import annotations
@@ -153,12 +166,120 @@ def upsert_phase(spark, corpus_path: str) -> list[dict]:
     return results
 
 
+def _rss_mb() -> float:
+    with open("/proc/self/status") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("VmRSS:"))
+    return round(kb / 1024, 1)
+
+
+def typo_phase(spark, seed: int, vocab_size: int, repeats: int) -> dict:
+    """Seconds and Spark jobs per ``correct_terms`` call, batch- and
+    fuzzy-shaped, on the perfbench corpus of ``seed`` (``vocab_size``
+    0) or on a synthetic ``vocab_size``-term vocabulary. Prints one
+    JSON line."""
+    import resource
+    import statistics
+
+    import numpy as np
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from pyf_aggregator_spark.index.segments import build_segments
+    from pyf_aggregator_spark.search.typo import correct_terms, write_deletion_table
+    from pyf_aggregator_spark.search.wand import _known_terms, load_index
+
+    sc = spark.sparkContext
+    work = tempfile.mkdtemp(prefix="pyfagg_bx_typo_")
+    index_dir = os.path.join(work, "index")
+    try:
+        if vocab_size:
+            # words of 5–12 letters over a–p, so misspellings have neighbors
+            word = F.translate(
+                F.substring(F.sha2(F.col("id").cast("string"), 256), 1,
+                            5 + F.col("id") % 8),
+                "0123456789", "ghijklmnop",
+            )
+            term_stats = spark.range(vocab_size).select(
+                word.alias("term"), (1 + F.col("id") % 100).alias("df")
+            ).dropDuplicates(["term"])
+            term_stats.write.parquet(f"{index_dir}/term_stats")
+            term_stats = spark.read.parquet(f"{index_dir}/term_stats")
+            pool = sorted(pq.read_table(
+                f"{index_dir}/term_stats", columns=["term"]
+            ).column("term").to_pylist())
+            vocab = set(pool)
+            rng = np.random.default_rng(seed)
+            picked = [pool[int(i)] for i in rng.choice(len(pool), 422, replace=False)]
+            batch = picked[:400] + [t[:3] + "x" + t[3:] for t in picked[400:420]]
+            fuzzy = [picked[420][:3] + "x" + picked[420][3:], picked[421]]
+
+            def known(toks):
+                return {t for t in toks if t in vocab}
+        else:
+            sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
+            from inputs import load_inputs
+            from workloads import _batch
+
+            inp = load_inputs(os.path.join(work, "inputs"), seed, 5_000)
+            docs = spark.read.parquet(inp.documents).select("doc_id", "text")
+            build_segments(docs, index_dir, lineage="bx")
+            idx = load_index(spark, index_dir)
+            term_stats = idx["term_stats"]
+            rng = inp.rng("search")
+            qs, _ = _batch(inp, rng, 200)
+            batch = [t for q in qs for t in q["query"].split()]
+            t1, t2 = inp.query_terms(rng, [2])[0]
+            fuzzy = [f"{t1}x", t2]
+
+            def known(toks):
+                return _known_terms(idx, toks)
+        write_deletion_table(term_stats, index_dir)
+        rss_before = _rss_mb()
+        res = {"phase": "typo", "vocab": "synthetic" if vocab_size else f"perfbench-seed{seed}",
+               "n_terms": term_stats.count()}
+        tracker = sc.statusTracker()
+        for shape, toks in (("batch", batch), ("fuzzy", fuzzy)):
+            def call(toks=toks):
+                return correct_terms(spark, index_dir, toks, term_stats,
+                                     num_typos=2, known_terms=known(toks))
+            mapping = call()  # untimed: loads the term dictionary
+            times, jobs = [], []
+            for rep in range(max(repeats, 3)):
+                group = f"bx-typo-{shape}-{rep}-{os.getpid()}"
+                sc.setJobGroup(group, f"correct_terms: {shape}")
+                try:
+                    t0 = time.monotonic()
+                    call()
+                    times.append(time.monotonic() - t0)
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                    sc.setJobDescription(None)
+                jobs.append(len(tracker.getJobIdsForGroup(group)))
+            res[shape] = {
+                "tokens": len(set(toks)),
+                "unknown": sum(1 for t, v in mapping.items() if v != t),
+                "corrected": sum(1 for t, v in mapping.items() if v not in (t, None)),
+                "s_min": round(min(times), 4),
+                "s_median": round(statistics.median(times), 4),
+                "jobs": max(jobs),
+            }
+        res["driver_rss_mb_before"] = rss_before
+        res["driver_peak_rss_mb"] = round(
+            resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024, 1)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    print(json.dumps(res))
+    return res
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--turns", type=int, default=None)
     ap.add_argument("--phases", default="build_parts,cache_parts,batch,wand_lat,headline")
     ap.add_argument("--repeats", type=int, default=2)
+    ap.add_argument("--typo-seed", type=int, default=1)
+    ap.add_argument("--typo-vocab", type=int, default=0)
     args = ap.parse_args()
     phases = set(args.phases.split(","))
 
@@ -176,6 +297,14 @@ def main() -> None:
     n_turns = args.turns or max(10_000, int(TRANSCRIPT_TURNS_PER_SF * sf))
     spark = get_spark(app_name="pyfagg-bench-extra")
     out: dict[str, float] = {}
+
+    if "typo" in phases:
+        res = typo_phase(spark, args.typo_seed, args.typo_vocab, args.repeats)
+        out["typo_batch"] = res["batch"]["s_median"]
+        out["typo_fuzzy"] = res["fuzzy"]["s_median"]
+        if phases == {"typo"}:
+            spark.stop()
+            return
 
     corpus_path = ensure_transcripts(spark, n_turns)
     spark.read.parquet(corpus_path).limit(1000).groupBy("role").count().collect()

@@ -7,7 +7,7 @@ than ``min_len_2typo``=7 get at most one edit.
 
 SymSpell-style deletion neighborhood (Garbe's algorithm: two strings
 are within edit distance d iff their depth-d deletion neighborhoods
-intersect), Spark-native:
+intersect), built in Spark and queried in the driver:
 
 - BUILD TIME: from term_stats alone, derive (variant, term, df) where
   variant ranges over the term, its single-character deletions, and —
@@ -16,15 +16,17 @@ intersect), Spark-native:
   sequence + flatten + explode), one shuffle-free map over the
   |vocabulary| table (tiny next to postings), written once beside the
   index.
-- QUERY TIME: a query term missing from the vocabulary joins the
-  deletion table on ITS OWN deletion neighborhood (depth gated by the
-  same length rules, broadcast), candidates are verified with exact
-  Levenshtein ≤ allowed (F.levenshtein, JVM), and the winner is the
-  LOWEST edit distance first (Typesense tries distance 1 before 2),
-  then highest df (popular corrections preferred), then term asc.
-  Known terms pass through untouched.
+- QUERY TIME: in the driver, no Spark job. A query term missing from
+  the vocabulary expands to ITS OWN deletion neighborhood (depth gated
+  by the same length rules, sliced by code point like the JVM
+  substr/length), pyarrow reads the artifact rows whose ``variant`` is
+  in the union of those neighborhoods (one ``isin`` filter over the
+  parquet files), candidates are verified with exact Levenshtein ≤
+  allowed, and the winner is the LOWEST edit distance first (Typesense
+  tries distance 1 before 2), then highest df (popular corrections
+  preferred), then term asc. Known terms pass through untouched.
 
-The Levenshtein verify keeps precision where the variant join
+The Levenshtein verify keeps precision where the variant lookup
 over-generates; the depth/length gates keep the artifact at
 O(Σ len²/2) rows over the vocabulary — megabytes where postings are
 terabytes.
@@ -32,7 +34,9 @@ terabytes.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+import os
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyf_aggregator_spark.functions.tokenize import tokenize_py
@@ -71,13 +75,46 @@ def _deletion_variants(col: str, max_depth_col: Column) -> Column:
     )
 
 
-def _allowed_typos(length: Column) -> Column:
+def _allowed_typos(length: int) -> int:
     """Typesense's per-token edit budget from its length gates."""
-    return (
-        F.when(length >= MIN_LEN_2TYPO, F.lit(2))
-        .when(length >= MIN_LEN_1TYPO, F.lit(1))
-        .otherwise(F.lit(0))
-    )
+    if length >= MIN_LEN_2TYPO:
+        return 2
+    if length >= MIN_LEN_1TYPO:
+        return 1
+    return 0
+
+
+def _variants(term: str, depth: int) -> set[str]:
+    """``term`` and its deletions up to ``depth`` — the driver-side twin
+    of _deletion_variants (Python slices code points, as the JVM
+    substr/length do)."""
+    out = level = {term}
+    for _ in range(depth):
+        level = {s[:i] + s[i + 1:] for s in level for i in range(len(s))}
+        out = out | level
+    return out
+
+
+def _levenshtein(a: str, b: str) -> int:
+    """Exact edit distance (insert, delete, substitute; code points)."""
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def _read_rows(path: str, columns: list[str], key: str, values) -> dict:
+    """The rows of the parquet dataset at ``path`` whose ``key`` is in
+    ``values``, read in the driver → {column: list}."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    return ds.dataset(path, format="parquet").to_table(
+        columns=columns, filter=pc.field(key).isin(sorted(values))
+    ).to_pydict()
 
 
 def build_deletion_table(term_stats: DataFrame) -> DataFrame:
@@ -106,7 +143,6 @@ def write_deletion_table(term_stats: DataFrame, index_dir: str) -> None:
     dir (cleaned on the next attempt), so an EXISTING artifact dir is
     always a complete one — the build-on-first-use existence check in
     correct_terms can trust it."""
-    import os
     import shutil
 
     staged = f"{index_dir}/{TYPO_DIR}.staged"
@@ -132,35 +168,26 @@ def correct_terms(
     exists (the token contributes nothing, like Typesense after typo
     expansion fails).
 
-    ``known_terms``: vocabulary membership already resolved by the
-    caller (the in-RAM term dictionary, wand._known_terms) — skips this
-    function's membership scan, so an all-known query costs ZERO Spark
-    jobs and a typo'd one costs only the deletion-neighborhood join."""
+    Runs in the driver and launches no Spark job once the artifact
+    exists: the variant lookup is a pyarrow read of the artifact.
+    ``term_stats`` is used only to build the artifact on first use;
+    ``spark`` is not used. ``known_terms``: vocabulary membership
+    already resolved by the caller (the in-RAM term dictionary,
+    wand._known_terms); without it membership is a pyarrow read of the
+    index's own term_stats."""
     terms = sorted(set(terms))
     if not terms:
         return {}
-    if known_terms is not None:
-        known = {t for t in terms if t in known_terms}
-    else:
-        known = {
-            r["term"]
-            for r in term_stats.filter(F.col("term").isin(terms))
-            .select("term")
-            .collect()
-        }
-    out: dict[str, str | None] = {t: t for t in known}
-    unknown = [t for t in terms if t not in known]
-    if not unknown:
+    if known_terms is None:
+        known_terms = set(
+            _read_rows(f"{index_dir}/term_stats", ["term"], "term", terms)["term"]
+        )
+    out: dict[str, str | None] = {t: t for t in terms if t in known_terms}
+    budget = {
+        t: min(_allowed_typos(len(t)), num_typos) for t in terms if t not in out
+    }
+    if not budget:
         return out
-    budget = F.least(_allowed_typos(F.length("qterm")), F.lit(num_typos))
-    qdf = spark.createDataFrame(
-        [(t,) for t in unknown], "qterm string"
-    ).select(
-        "qterm",
-        F.explode(_deletion_variants("qterm", budget)).alias("variant"),
-    )
-    import os
-
     if not os.path.exists(f"{index_dir}/{TYPO_DIR}"):
         # build-on-first-use: the artifact is derivable from term_stats
         # alone, so an index built before the typo layer existed (or
@@ -181,29 +208,24 @@ def correct_terms(
             # index_dir not lockable (read-only fixture dir): fall back
             # to the unlocked build — single-process test shape
             write_deletion_table(term_stats, index_dir)
-    dels = spark.read.parquet(f"{index_dir}/{TYPO_DIR}")
-    # the query side is ≤ Σ len(unknown terms)²/2 rows → broadcast; the
-    # candidate set after the variant equi-join is tiny (the deletion
-    # neighborhood of a handful of tokens)
-    lev = F.levenshtein("qterm", "term")
-    w = Window.partitionBy("qterm").orderBy(
-        F.asc("lev"), F.desc("df"), F.asc("term")
+    by_variant: dict[str, list[str]] = {}
+    for t, depth in budget.items():
+        for v in _variants(t, depth):
+            by_variant.setdefault(v, []).append(t)
+    rows = _read_rows(
+        f"{index_dir}/{TYPO_DIR}", ["variant", "term", "df"], "variant",
+        by_variant,
     )
-    cand = (
-        dels.join(F.broadcast(qdf), "variant")
-        .filter(
-            F.levenshtein("qterm", "term")
-            <= F.least(_allowed_typos(F.length("qterm")), F.lit(num_typos))
-        )
-        .select("qterm", "term", "df", lev.alias("lev"))
-        .distinct()
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("qterm", "term")
-    )
-    got = {r["qterm"]: r["term"] for r in cand.collect()}
-    for t in unknown:
-        out[t] = got.get(t)
+    best: dict[str, tuple[int, int, str]] = {}
+    for v, cand, df in zip(rows["variant"], rows["term"], rows["df"]):
+        for t in by_variant[v]:
+            if abs(len(t) - len(cand)) > budget[t]:
+                continue
+            lev = _levenshtein(t, cand)
+            if lev <= budget[t] and (t not in best or (lev, -df, cand) < best[t]):
+                best[t] = (lev, -df, cand)
+    for t in budget:
+        out[t] = best[t][2] if t in best else None
     return out
 
 

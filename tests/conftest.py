@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from pyf_aggregator_spark.session import get_spark
@@ -19,3 +21,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+def count_jobs(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` runs: it runs under a job group
+    of its own, and the status tracker lists that group's jobs."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count_jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

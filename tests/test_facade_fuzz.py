@@ -437,3 +437,22 @@ def test_seed1301_multifield_repeated_token_scores_per_slot(
         want = FacadeModel(docs).search({**params, "_clauses": []})
         assert want["hits"], "the pinned query must match"
         _assert_same(got, want, f"pinned seed={seed} params={params}")
+
+
+def test_prefix_typo_corrected_repeat_matches_model(spark, tmp_path_factory):
+    """A typo-corrected token that repeats another query token, under
+    prefix: 'vector vectr' corrects to 'vector vector', whose last token
+    then expands by prefix. Each token is one slot, so 'vector' scores
+    in both, as in the model; same for query_by."""
+    seed = 7
+    with _pinned_corpus(spark, tmp_path_factory, seed, "prefixtypo") as (
+        sf_dir, docs,
+    ):
+        model = FacadeModel(docs)
+        for q in ("vector vectr", "tables tablrs"):
+            for extra in ({}, {"query_by": "title,main_content"}):
+                params = {"q": q, "prefix": True, "num_typos": 2, **extra}
+                got = search(spark, sf_dir, dict(params))
+                want = model.search({**params, "_clauses": []})
+                assert want["hits"], f"the pinned query must match: {params}"
+                _assert_same(got, want, f"pinned seed={seed} params={params}")

@@ -5,6 +5,8 @@ corrected terms directly."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from pyf_aggregator_spark.fixtures.transcripts import transcripts_df
 from pyf_aggregator_spark.index.builder import assign_doc_ids
@@ -16,6 +18,11 @@ from pyf_aggregator_spark.search.typo import (
     write_deletion_table,
 )
 from pyf_aggregator_spark.search.wand import load_index, wand_topk
+
+from conftest import count_jobs
+from facade_model import MAX_TERM_LEN as MODEL_MAX_TERM_LEN
+from facade_model import _allowed_typos as model_allowed_typos
+from facade_model import levenshtein
 
 
 @pytest.fixture(scope="module")
@@ -187,3 +194,123 @@ def test_correct_terms_dictionary_membership_matches_scan(spark, tmp_path):
     assert via_dict == via_scan
     assert via_dict["alpha"] == "alpha" and via_dict["alphax"] == "alpha"
     assert via_dict["qqqqzzzz"] is None
+
+
+def test_correct_terms_runs_no_spark_job(typo_idx):
+    """Once the artifact exists, correcting an unknown token is a driver
+    read of it: no Spark job, with membership from the dictionary or
+    from the index's own term_stats."""
+    from pyf_aggregator_spark.search.wand import _known_terms
+
+    spark, d, idx = typo_idx
+    terms = ["w00000", "w0000x", "zzqqy"]
+    known = _known_terms(idx, terms)
+    got = {}
+    assert count_jobs(spark, lambda: got.update(
+        correct_terms(spark, d, terms, idx["term_stats"], known_terms=known)
+    )) == 0
+    assert got["w0000x"] is not None and got["zzqqy"] is None
+    assert count_jobs(
+        spark, lambda: correct_terms(spark, d, terms, idx["term_stats"])
+    ) == 0
+
+
+def test_batch_typo_correction_adds_no_job(typo_idx):
+    """wand_topk_batch(num_typos=2) runs exactly the jobs of the same
+    misspelled batch at num_typos=0: correction costs no Spark job."""
+    from pyf_aggregator_spark.search.wand import wand_topk_batch
+
+    spark, _, idx = typo_idx
+    qs = [
+        {"query_id": "a", "query": "w0000x w00001", "mode": "or", "k": 5},
+        {"query_id": "b", "query": "wx00000x", "mode": "or", "k": 5},
+        {"query_id": "c", "query": "w00002 w0000", "mode": "and", "k": 5},
+    ]
+    for n in (0, 2):  # warm the term dictionary and the artifact
+        wand_topk_batch(idx, qs, num_typos=n).collect()
+    plain = count_jobs(spark, lambda: wand_topk_batch(idx, qs, num_typos=0).collect())
+    typo = count_jobs(spark, lambda: wand_topk_batch(idx, qs, num_typos=2).collect())
+    assert plain > 0
+    assert typo == plain
+
+
+# a small alphabet makes neighbors and df ties common; é, ж and the
+# astral 𝔞 (two UTF-16 units, one code point) check that the JVM and
+# Python count characters alike
+_ALPHA = "abcé𝔞ж"
+_words = st.one_of(st.integers(1, 9), st.integers(1, 40)).flatmap(
+    lambda n: st.text(_ALPHA, min_size=n, max_size=n)
+)
+
+
+@st.composite
+def _typo_case(draw):
+    vocab = draw(st.dictionaries(_words, st.integers(1, 3), min_size=1, max_size=25))
+    queries = []
+    for _ in range(draw(st.integers(1, 8))):
+        t = draw(st.sampled_from(sorted(vocab)))
+        for _ in range(draw(st.integers(0, 3))):
+            op = draw(st.sampled_from("ids"))
+            c = draw(st.sampled_from(_ALPHA))
+            if op == "i":
+                pos = draw(st.integers(0, len(t)))
+                t = t[:pos] + c + t[pos:]
+            elif t:
+                pos = draw(st.integers(0, len(t) - 1))
+                t = t[:pos] + (c if op == "s" else "") + t[pos + 1:]
+        if t:
+            queries.append(t)
+    return vocab, queries, draw(st.sampled_from([1, 2])), draw(st.booleans())
+
+
+def _brute_force(vocab: dict, t: str, num_typos: int):
+    """FacadeModel._correct: every vocabulary term of length ≤
+    MAX_TERM_LEN within the budget, best by (lev, -df, term)."""
+    if t in vocab:
+        return t
+    budget = min(num_typos, model_allowed_typos(len(t)))
+    best = min(
+        (
+            (levenshtein(t, c), -df, c)
+            for c, df in vocab.items()
+            if len(c) <= MODEL_MAX_TERM_LEN and levenshtein(t, c) <= budget
+        ),
+        default=None,
+    )
+    return best[2] if best else None
+
+
+@settings(max_examples=20, deadline=None)
+@given(case=_typo_case())
+def test_driver_correction_matches_brute_force(spark, case):
+    """The driver route equals the brute-force rule on random
+    vocabularies (repeated df values, so ties occur; lengths past
+    MAX_TERM_LEN; non-ASCII letters) and 0–3-edit misspellings, with
+    membership from a caller's set or from term_stats. The Python
+    query-side variants of every vocabulary term equal the rows
+    build_deletion_table wrote for it at its build depth."""
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    from pyf_aggregator_spark.search.typo import TYPO_DIR, _variants
+
+    vocab, queries, num_typos, dict_membership = case
+    with tempfile.TemporaryDirectory() as d:
+        ts = spark.createDataFrame(sorted(vocab.items()), "term string, df long")
+        ts.write.parquet(f"{d}/term_stats")
+        write_deletion_table(ts, d)
+        got = correct_terms(
+            spark, d, queries, ts, num_typos=num_typos,
+            known_terms=set(vocab) if dict_membership else None,
+        )
+        rows = pq.read_table(f"{d}/{TYPO_DIR}").to_pydict()
+    assert got == {t: _brute_force(vocab, t, num_typos) for t in queries}
+    emitted: dict[str, set[str]] = {}
+    for v, t in zip(rows["variant"], rows["term"]):
+        emitted.setdefault(t, set()).add(v)
+    depth = {n: 2 if n >= 5 else 1 if n >= 3 else 0 for n in range(41)}
+    assert emitted == {
+        t: _variants(t, depth[len(t)])
+        for t in vocab if len(t) <= MODEL_MAX_TERM_LEN
+    }
