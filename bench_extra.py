@@ -29,8 +29,8 @@ batch-shaped call (the token union of perfbench's 200-query
 ``wand_topk_batch``, every 10th query misspelled) and a fuzzy-shaped
 one (perfbench's fuzzy request: two tokens, the first misspelled),
 plus the driver's resident set before the calls and its peak. The
-vocabulary is the perfbench corpus of ``--typo-seed`` (5k turns), or
-with ``--typo-vocab N`` a synthetic N-term one (random words over 16
+vocabulary is perfbench's seed-1 corpus (5k turns), or with
+``--typo-vocab N`` a synthetic N-term one (random words over 16
 letters, df 1–100, the same shapes over its terms). ``--phases typo``
 runs it alone.
 """
@@ -38,6 +38,7 @@ runs it alone.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import shutil
@@ -63,6 +64,28 @@ def timed(spark, label, fn, out):
 
 def noop(df):
     df.write.format("noop").mode("overwrite").save()
+
+
+@contextlib.contextmanager
+def stage_jobs(sc, tag: str):
+    """Count a block's Spark jobs per stage. Inside the block,
+    ``enter(stage)`` puts every job launched from then on in job group
+    ``{tag}.{stage}``; on exit the job group is cleared and ``jobs``
+    maps each entered stage to its job count."""
+    jobs: dict[str, int] = {}
+
+    def enter(stage: str) -> None:
+        sc.setJobGroup(f"{tag}.{stage}", f"{tag}: {stage}")
+        jobs[stage] = 0
+
+    try:
+        yield enter, jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+        tracker = sc.statusTracker()
+        for stage in jobs:
+            jobs[stage] = len(tracker.getJobIdsForGroup(f"{tag}.{stage}"))
 
 
 UPSERT_STAGES = ("preamble", "write_segments", "stats_writes", "commit")
@@ -114,41 +137,34 @@ def upsert_phase(spark, corpus_path: str) -> list[dict]:
         index_dir = tempfile.mkdtemp(prefix=f"pyfagg_bx_ups_{kind}_")
         build(index_dir)
         marks: list[tuple[str, float]] = []
-        tag = f"bx-upsert-{kind}-{os.getpid()}"
-
-        def enter(stage, marks=marks, tag=tag):
-            sc.setJobGroup(f"{tag}.{stage}", f"upsert_docs: {stage}")
-            marks.append((stage, time.monotonic()))
-
-        def staged(fn, stage, after, enter=enter):
-            def wrapped(*a, **kw):
-                enter(stage)
-                try:
-                    return fn(*a, **kw)
-                finally:
-                    if after:
-                        enter(after)
-            return wrapped
-
         real = incremental._write_segments, incremental._commit_staged
-        incremental._write_segments = staged(real[0], "write_segments", "stats_writes")
-        incremental._commit_staged = staged(real[1], "commit", None)
         try:
-            enter("preamble")
-            incremental.upsert_docs(spark, index_dir, up)
-            marks.append(("", time.monotonic()))
+            with stage_jobs(sc, f"bx-upsert-{kind}-{os.getpid()}") as (enter, jobs):
+                def mark(stage, enter=enter):
+                    enter(stage)
+                    marks.append((stage, time.monotonic()))
+
+                def staged(fn, stage, after, mark=mark):
+                    def wrapped(*a, **kw):
+                        mark(stage)
+                        try:
+                            return fn(*a, **kw)
+                        finally:
+                            if after:
+                                mark(after)
+                    return wrapped
+
+                incremental._write_segments = staged(real[0], "write_segments", "stats_writes")
+                incremental._commit_staged = staged(real[1], "commit", None)
+                mark("preamble")
+                incremental.upsert_docs(spark, index_dir, up)
+                marks.append(("", time.monotonic()))
         finally:
             incremental._write_segments, incremental._commit_staged = real
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setJobDescription(None)
             shutil.rmtree(index_dir, ignore_errors=True)
 
-        tracker = sc.statusTracker()
         stages = {
-            stage: {
-                "s": round(t1 - t0, 3),
-                "jobs": len(tracker.getJobIdsForGroup(f"{tag}.{stage}")),
-            }
+            stage: {"s": round(t1 - t0, 3), "jobs": jobs[stage]}
             for (stage, t0), (_, t1) in zip(marks, marks[1:])
         }
         res = {
@@ -172,11 +188,10 @@ def _rss_mb() -> float:
     return round(kb / 1024, 1)
 
 
-def typo_phase(spark, seed: int, vocab_size: int, repeats: int) -> dict:
+def typo_phase(spark, vocab_size: int, repeats: int) -> dict:
     """Seconds and Spark jobs per ``correct_terms`` call, batch- and
-    fuzzy-shaped, on the perfbench corpus of ``seed`` (``vocab_size``
-    0) or on a synthetic ``vocab_size``-term vocabulary. Prints one
-    JSON line."""
+    fuzzy-shaped, on perfbench's seed-1 corpus (``vocab_size`` 0) or on
+    a synthetic ``vocab_size``-term vocabulary. Prints one JSON line."""
     import resource
     import statistics
 
@@ -208,7 +223,7 @@ def typo_phase(spark, seed: int, vocab_size: int, repeats: int) -> dict:
                 f"{index_dir}/term_stats", columns=["term"]
             ).column("term").to_pylist())
             vocab = set(pool)
-            rng = np.random.default_rng(seed)
+            rng = np.random.default_rng(1)
             picked = [pool[int(i)] for i in rng.choice(len(pool), 422, replace=False)]
             batch = picked[:400] + [t[:3] + "x" + t[3:] for t in picked[400:420]]
             fuzzy = [picked[420][:3] + "x" + picked[420][3:], picked[421]]
@@ -220,7 +235,7 @@ def typo_phase(spark, seed: int, vocab_size: int, repeats: int) -> dict:
             from inputs import load_inputs
             from workloads import _batch
 
-            inp = load_inputs(os.path.join(work, "inputs"), seed, 5_000)
+            inp = load_inputs(os.path.join(work, "inputs"), 1, 5_000)
             docs = spark.read.parquet(inp.documents).select("doc_id", "text")
             build_segments(docs, index_dir, lineage="bx")
             idx = load_index(spark, index_dir)
@@ -235,33 +250,27 @@ def typo_phase(spark, seed: int, vocab_size: int, repeats: int) -> dict:
                 return _known_terms(idx, toks)
         write_deletion_table(term_stats, index_dir)
         rss_before = _rss_mb()
-        res = {"phase": "typo", "vocab": "synthetic" if vocab_size else f"perfbench-seed{seed}",
+        res = {"phase": "typo", "vocab": "synthetic" if vocab_size else "perfbench-seed1",
                "n_terms": term_stats.count()}
-        tracker = sc.statusTracker()
         for shape, toks in (("batch", batch), ("fuzzy", fuzzy)):
             def call(toks=toks):
-                return correct_terms(spark, index_dir, toks, term_stats,
+                return correct_terms(index_dir, toks, term_stats,
                                      num_typos=2, known_terms=known(toks))
             mapping = call()  # untimed: loads the term dictionary
-            times, jobs = [], []
-            for rep in range(max(repeats, 3)):
-                group = f"bx-typo-{shape}-{rep}-{os.getpid()}"
-                sc.setJobGroup(group, f"correct_terms: {shape}")
-                try:
+            times = []
+            with stage_jobs(sc, f"bx-typo-{shape}-{os.getpid()}") as (enter, jobs):
+                for rep in range(max(repeats, 3)):
+                    enter(str(rep))
                     t0 = time.monotonic()
                     call()
                     times.append(time.monotonic() - t0)
-                finally:
-                    sc.setLocalProperty("spark.jobGroup.id", None)
-                    sc.setJobDescription(None)
-                jobs.append(len(tracker.getJobIdsForGroup(group)))
             res[shape] = {
                 "tokens": len(set(toks)),
                 "unknown": sum(1 for t, v in mapping.items() if v != t),
                 "corrected": sum(1 for t, v in mapping.items() if v not in (t, None)),
                 "s_min": round(min(times), 4),
                 "s_median": round(statistics.median(times), 4),
-                "jobs": max(jobs),
+                "jobs": max(jobs.values()),
             }
         res["driver_rss_mb_before"] = rss_before
         res["driver_peak_rss_mb"] = round(
@@ -278,7 +287,6 @@ def main() -> None:
     ap.add_argument("--turns", type=int, default=None)
     ap.add_argument("--phases", default="build_parts,cache_parts,batch,wand_lat,headline")
     ap.add_argument("--repeats", type=int, default=2)
-    ap.add_argument("--typo-seed", type=int, default=1)
     ap.add_argument("--typo-vocab", type=int, default=0)
     args = ap.parse_args()
     phases = set(args.phases.split(","))
@@ -299,7 +307,7 @@ def main() -> None:
     out: dict[str, float] = {}
 
     if "typo" in phases:
-        res = typo_phase(spark, args.typo_seed, args.typo_vocab, args.repeats)
+        res = typo_phase(spark, args.typo_vocab, args.repeats)
         out["typo_batch"] = res["batch"]["s_median"]
         out["typo_fuzzy"] = res["fuzzy"]["s_median"]
         if phases == {"typo"}:

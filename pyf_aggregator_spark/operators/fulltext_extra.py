@@ -780,7 +780,7 @@ def ft_mf_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyf_aggregator_spark.search.wand import _known_terms
 
     mapping = correct_terms(
-        spark, mf["dir"], tokenize_py(_MF_TYPO_Q), sum_stats, num_typos=2,
+        mf["dir"], tokenize_py(_MF_TYPO_Q), sum_stats, num_typos=2,
         known_terms=_known_terms(mf, tokenize_py(_MF_TYPO_Q)),
     )
     corrected = sorted({v for v in mapping.values() if v is not None})

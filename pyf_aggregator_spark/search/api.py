@@ -706,7 +706,7 @@ def _search_one(spark: SparkSession, sf_dir: str, params: dict) -> dict:
         infix_mode = "off"
     if num_typos > 0:
         mapping = correct_terms(
-            spark, idx["dir"], terms, typo_stats, num_typos=num_typos,
+            idx["dir"], terms, typo_stats, num_typos=num_typos,
             known_terms=_known_terms(idx, terms),
         )
         if infix_mode == "off":

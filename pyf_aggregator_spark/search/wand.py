@@ -1168,7 +1168,7 @@ def wand_topk_batch(
             {t for q in queries for t in tokenize_py(q["query"])}
         )
         mapping = correct_terms(
-            spark, idx["dir"], union_terms, idx["term_stats"],
+            idx["dir"], union_terms, idx["term_stats"],
             num_typos=num_typos,
             known_terms=_known_terms(idx, union_terms),
         )

@@ -54,7 +54,7 @@ def test_correct_terms_edit1_cases(typo_idx):
     Corpus vocabulary contains w00000..w000NN tokens."""
     spark, d, idx = typo_idx
     got = correct_terms(
-        spark, d,
+        d,
         ["w00000",            # known → itself
          "w0000x",            # substitution of last char
          "w000001",           # insertion
@@ -73,7 +73,7 @@ def test_typo_search_rank_identical_to_corrected_query(typo_idx):
     spark, d, idx = typo_idx
     got = wand_topk_typo(idx, "w0000x w00001", k=10, mode="or").collect()
     mapping = correct_terms(
-        spark, d, ["w0000x", "w00001"], idx["term_stats"]
+        d, ["w0000x", "w00001"], idx["term_stats"]
     )
     direct = wand_topk(
         idx, f"{mapping['w0000x']} w00001", k=10, mode="or"
@@ -94,7 +94,7 @@ def test_correct_terms_edit2_and_distance_preference(typo_idx):
     ≥ 7 corrects; a distance-1 candidate beats any distance-2 one."""
     spark, d, idx = typo_idx
     got = correct_terms(
-        spark, d,
+        d,
         ["wx00000x",  # len 8: two insertions into w00000 → distance 2
          "w00001x"],  # len 7: dist 1 to w00001, dist 2 to w00000
         idx["term_stats"],
@@ -113,7 +113,7 @@ def test_correct_terms_length_gates(spark, tmp_path):
     idx = load_index(spark, d)
     write_deletion_table(idx["term_stats"], d)
     got = correct_terms(
-        spark, d,
+        d,
         ["bok",    # len 3 < 4 → no tolerance, despite lev 1 to 'book'
          "bokz",   # len 4 → budget 1, but lev('bokz','book') = 2 → None
          "bookz"],  # len 5 → budget 1, lev 1 → corrects
@@ -135,7 +135,7 @@ def test_correction_prefers_higher_df(spark, tmp_path):
     write_deletion_table(idx["term_stats"], d)
     # "colorz" is distance 1 from BOTH color (df 8, delete z) and
     # colors (df 2, substitute z→s) → the higher-df term wins
-    got = correct_terms(spark, d, ["colorz"], idx["term_stats"])
+    got = correct_terms(d, ["colorz"], idx["term_stats"])
     assert got["colorz"] == "color"
 
 
@@ -155,7 +155,7 @@ def test_typo_artifact_invalidated_on_upsert(spark, tmp_path):
     build_segments(docs, d, num_partitions=1, lineage="t")
     idx = load_index(spark, d)
     # build the artifact, then verify a future-vocab token fails now
-    got = correct_terms(spark, d, ["zephyrx"], idx["term_stats"])
+    got = correct_terms(d, ["zephyrx"], idx["term_stats"])
     assert got["zephyrx"] is None
     assert os.path.isdir(f"{d}/{TYPO_DIR}")
     # upsert introduces the new vocabulary word
@@ -166,7 +166,7 @@ def test_typo_artifact_invalidated_on_upsert(spark, tmp_path):
     # artifact was invalidated by the stats swap and self-heals
     assert not os.path.isdir(f"{d}/{TYPO_DIR}")
     idx2 = load_index(spark, d)
-    got2 = correct_terms(spark, d, ["zephyrx"], idx2["term_stats"])
+    got2 = correct_terms(d, ["zephyrx"], idx2["term_stats"])
     assert got2["zephyrx"] == "zephyr"
 
 
@@ -185,11 +185,11 @@ def test_correct_terms_dictionary_membership_matches_scan(spark, tmp_path):
     build_segments(docs, d, num_partitions=1, lineage="t")
     idx = load_index(spark, d)
     terms = ["alpha", "alphax", "beta", "qqqqzzzz"]
-    via_scan = correct_terms(spark, d, terms, idx["term_stats"])
+    via_scan = correct_terms(d, terms, idx["term_stats"])
     known = _known_terms(idx, terms)
     assert known == {"alpha", "beta"}  # dictionary resolved membership
     via_dict = correct_terms(
-        spark, d, terms, idx["term_stats"], known_terms=known
+        d, terms, idx["term_stats"], known_terms=known
     )
     assert via_dict == via_scan
     assert via_dict["alpha"] == "alpha" and via_dict["alphax"] == "alpha"
@@ -207,12 +207,66 @@ def test_correct_terms_runs_no_spark_job(typo_idx):
     known = _known_terms(idx, terms)
     got = {}
     assert count_jobs(spark, lambda: got.update(
-        correct_terms(spark, d, terms, idx["term_stats"], known_terms=known)
+        correct_terms(d, terms, idx["term_stats"], known_terms=known)
     )) == 0
     assert got["w0000x"] is not None and got["zzqqy"] is None
     assert count_jobs(
-        spark, lambda: correct_terms(spark, d, terms, idx["term_stats"])
+        spark, lambda: correct_terms(d, terms, idx["term_stats"])
     ) == 0
+
+
+def test_read_rows_streams_row_groups_in_batches(tmp_path, monkeypatch):
+    """The driver read filters batch by batch: one row group far larger
+    than a batch, across two files, gives exactly the matching rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyf_aggregator_spark.search import typo
+
+    d = tmp_path / "rows"
+    d.mkdir()
+    for part in range(2):
+        keys = [f"v{(i * 7 + part) % 300}" for i in range(1000)]
+        pq.write_table(
+            pa.table({"variant": keys, "df": list(range(1000))}),
+            d / f"part-{part}.parquet", row_group_size=1000,
+        )
+    (d / "_SUCCESS").write_text("")
+    monkeypatch.setattr(typo, "_READ_BATCH", 64)
+    wanted = {"v0", "v13", "v299", "absent"}
+    got = typo._read_rows(str(d), ["variant", "df"], "variant", wanted)
+    want = pq.read_table(d / "part-0.parquet").to_pylist() + pq.read_table(
+        d / "part-1.parquet"
+    ).to_pylist()
+    want = [r for r in want if r["variant"] in wanted]
+    assert sorted(zip(got["variant"], got["df"])) == sorted(
+        (r["variant"], r["df"]) for r in want
+    )
+    assert min(got["df"]) < 64 <= max(got["df"])  # hits in several batches
+
+
+def test_multifield_artifact_sums_df_over_fields(spark, tmp_path):
+    """On a multifield index the artifact ranks candidates by df summed
+    over fields, whichever caller builds it: the handle's per-field
+    term_stats (wand_topk_batch, wand_topk_typo) and the summed frame
+    of the facade give the same correction."""
+    from pyspark.sql import functions as F
+
+    from pyf_aggregator_spark.index.segments import build_multifield_segments
+
+    rows = [(0, "bravo", "bravo"), (1, "bravo", "bravo"),
+            (2, "bravz", "x"), (3, "bravz", "y"), (4, "bravz", "z")]
+    docs = spark.createDataFrame(rows, "doc_id long, a string, b string")
+    got = {}
+    for source in ("per_field", "summed"):
+        d = str(tmp_path / source)
+        build_multifield_segments(docs, d, ["a", "b"], num_partitions=1, lineage="m")
+        ts = load_index(spark, d)["term_stats"]
+        if source == "summed":
+            ts = ts.groupBy("term").agg(F.sum("df").alias("df"))
+        got[source] = correct_terms(d, ["bravq"], ts)
+    # bravo: df 2 in each field (4 summed); bravz: df 3 in one field
+    assert got == {"per_field": {"bravq": "bravo"}, "summed": {"bravq": "bravo"}}
 
 
 def test_batch_typo_correction_adds_no_job(typo_idx):
@@ -301,7 +355,7 @@ def test_driver_correction_matches_brute_force(spark, case):
         ts.write.parquet(f"{d}/term_stats")
         write_deletion_table(ts, d)
         got = correct_terms(
-            spark, d, queries, ts, num_typos=num_typos,
+            d, queries, ts, num_typos=num_typos,
             known_terms=set(vocab) if dict_membership else None,
         )
         rows = pq.read_table(f"{d}/{TYPO_DIR}").to_pydict()
