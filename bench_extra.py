@@ -12,6 +12,12 @@ Usage:
 Phases: build_parts, cache_parts, batch, wand_lat, headline, facade, upsert,
 typo
 
+``facade`` prints one JSON line with the seconds (min and median of
+``--repeats``, at least 3) and Spark jobs of one facade ``search()``
+request per shape on perfbench's seed-1 corpus (5k turns): the six
+perfbench request shapes plus a ranked sort_by, a quoted phrase and a
+curated (pinned + hidden) request. ``--phases facade`` runs it alone.
+
 ``upsert`` builds a fresh index over the corpus, runs one 500-doc
 ``upsert_docs`` (250 existing ids with new text, 250 new ids) and prints
 one JSON line with the seconds and Spark job count of each upsert stage:
@@ -281,6 +287,65 @@ def typo_phase(spark, vocab_size: int, repeats: int) -> dict:
     return res
 
 
+def facade_phase(spark, repeats: int) -> dict:
+    """Seconds and Spark jobs per facade ``search()`` request on
+    perfbench's seed-1 corpus (5k turns): its six request shapes, built
+    by perfbench's own request builder from one drawn term pair, plus a
+    ranked sort_by, a quoted phrase and a curated (pinned + hidden)
+    request. Each shape runs once untimed (index loads, typo artifact),
+    then ``repeats`` times (at least 3), each under its own job group.
+    Prints one JSON line."""
+    import statistics
+
+    from pyf_aggregator_spark.functions.tokenize import tokenize_py
+    from pyf_aggregator_spark.search.api import search
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
+    from inputs import load_inputs
+    from workloads import SHAPES, _request
+
+    sc = spark.sparkContext
+    work = tempfile.mkdtemp(prefix="pyfagg_bx_facade_")
+    old_cache = os.environ.get("PYFAGG_SEG_CACHE")
+    os.environ["PYFAGG_SEG_CACHE"] = os.path.join(work, "segcache")
+    try:
+        inp = load_inputs(os.path.join(work, "inputs"), 1, 5_000)
+        rng = inp.rng("search")
+        terms = inp.query_terms(rng, [2])[0]
+        shapes = {shape: _request(shape, terms, rng) for shape in SHAPES}
+        ranked = shapes["ranked"]
+        text = spark.read.parquet(inp.documents).select("text").first()["text"]
+        shapes.update(
+            sort={**ranked, "sort_by": "n_chars:desc", "facet_by": "lang"},
+            phrase={**ranked, "q": '"%s"' % " ".join(tokenize_py(text)[:2]),
+                    "facet_by": "lang"},
+            curated={**ranked, "pinned_hits": "1:1", "hidden_hits": "2"},
+        )
+        res = {"phase": "facade", "corpus": "perfbench-seed1", "shapes": {}}
+        for shape, params in shapes.items():
+            search(spark, inp.sf_dir, params)  # untimed warm-up
+            times = []
+            with stage_jobs(sc, f"bx-facade-{shape}-{os.getpid()}") as (enter, jobs):
+                for rep in range(max(repeats, 3)):
+                    enter(str(rep))
+                    t0 = time.monotonic()
+                    search(spark, inp.sf_dir, params)
+                    times.append(time.monotonic() - t0)
+            res["shapes"][shape] = {
+                "s_min": round(min(times), 4),
+                "s_median": round(statistics.median(times), 4),
+                "jobs": max(jobs.values()),
+            }
+    finally:
+        if old_cache is None:
+            os.environ.pop("PYFAGG_SEG_CACHE", None)
+        else:
+            os.environ["PYFAGG_SEG_CACHE"] = old_cache
+        shutil.rmtree(work, ignore_errors=True)
+    print(json.dumps(res))
+    return res
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -311,6 +376,13 @@ def main() -> None:
         out["typo_batch"] = res["batch"]["s_median"]
         out["typo_fuzzy"] = res["fuzzy"]["s_median"]
         if phases == {"typo"}:
+            spark.stop()
+            return
+
+    if "facade" in phases:
+        res = facade_phase(spark, args.repeats)
+        out.update({f"facade_{k}": v["s_median"] for k, v in res["shapes"].items()})
+        if phases == {"facade"}:
             spark.stop()
             return
 
@@ -423,31 +495,6 @@ def main() -> None:
                 timed(
                     spark, f"{name}[{rep}]",
                     lambda: fn(spark, args.sf_dir).collect(), out,
-                )
-
-    if "facade" in phases:
-        # the reference-shaped unified endpoint (search/api.py) — not a
-        # bench.py phase (bench.py is frozen); min-of-3 per param shape
-        from pyf_aggregator_spark.search.api import search as facade_search
-
-        for fname, fparams in [
-            ("facade_ranked", {"q": "spark vector", "per_page": 10,
-                               "num_typos": 0}),
-            ("facade_ranked_facets", {"q": "spark vector",
-                                      "facet_by": "lang", "per_page": 10,
-                                      "num_typos": 0}),
-            ("facade_grouped_facets", {"q": "spark vector",
-                                       "group_by": "source",
-                                       "facet_by": "lang",
-                                       "group_limit": 2, "num_typos": 0}),
-            ("facade_defaults_on", {"q": "spark vecto", "prefix": True,
-                                    "per_page": 10}),
-        ]:
-            for rep in range(3):
-                timed(
-                    spark, f"{fname}[{rep}]",
-                    lambda p=fparams: facade_search(spark, args.sf_dir, p),
-                    out,
                 )
 
     shutil.rmtree(seg_dir, ignore_errors=True)

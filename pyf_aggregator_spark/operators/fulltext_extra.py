@@ -271,42 +271,11 @@ def j5_topk_hydrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def grouped_from_scored(
-    scored: DataFrame, docs: DataFrame, group_col: str,
-    group_limit: int = 1, with_counts: bool = False,
-) -> DataFrame:
-    """Per-group top-N over a DISTRIBUTED scored match set: join the
-    group attribute, window top-``group_limit`` per group. One shuffle
-    keyed by the group column serves both windows (row_number + the
-    optional per-group match count); nothing is collected — the output
-    is groups × group_limit rows. ``with_counts`` adds ``group_found``
-    (that group's full match count), so Typesense's ``found`` =
-    Σ group_found over rank-1 rows without a second kernel pass."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(group_col).orderBy(F.desc("score"), F.asc("doc_id"))
-    out = (
-        scored.join(docs.select("doc_id", group_col), "doc_id")
-        .withColumn("rank_in_group", F.row_number().over(w))
-    )
-    cols = [group_col, "rank_in_group", "doc_id", "score"]
-    if with_counts:
-        out = out.withColumn(
-            "group_found", F.count("*").over(Window.partitionBy(group_col))
-        )
-        cols.append("group_found")
-    return (
-        out.filter(F.col("rank_in_group") <= group_limit)
-        .select(*cols)
-        .orderBy(group_col, "rank_in_group")
-    )
-
-
 def grouped_search(
     spark: SparkSession, sf_dir: str, query: str, group_col: str,
     group_limit: int = 1, engine: str = "wand",
     allowed: DataFrame | None = None, mode: str = "or",
-    slot_terms: list[list[str]] | None = None, with_counts: bool = False,
+    slot_terms: list[list[str]] | None = None,
 ) -> DataFrame:
     """§2.8 group_by + group_limit combined with ranking: up to
     ``group_limit`` best hits per facet group (db.py:266-290's grouped
@@ -349,9 +318,17 @@ def grouped_search(
         scored = scored.select(
             "doc_id", F.round("raw_score", SCORE_DECIMALS).alias("score")
         )
-    docs = load(spark, sf_dir, "documents")
-    return grouped_from_scored(
-        scored, docs, group_col, group_limit, with_counts=with_counts
+    from pyspark.sql import Window
+
+    # window top-group_limit per group: one shuffle keyed by the group
+    # column, nothing collected — groups × group_limit rows
+    w = Window.partitionBy(group_col).orderBy(F.desc("score"), F.asc("doc_id"))
+    return (
+        scored.join(load(spark, sf_dir, "documents").select("doc_id", group_col), "doc_id")
+        .withColumn("rank_in_group", F.row_number().over(w))
+        .filter(F.col("rank_in_group") <= group_limit)
+        .select(group_col, "rank_in_group", "doc_id", "score")
+        .orderBy(group_col, "rank_in_group")
     )
 
 
@@ -513,6 +490,17 @@ def _typesense_defaults_sql() -> str:
     )
 
 
+def _facade_hits(spark: SparkSession, resp: dict, name: str) -> DataFrame:
+    """A facade response's hits as (behavior, position, doc_id, score)."""
+    return spark.createDataFrame(
+        [
+            (i + 1, h["document"]["doc_id"], h["text_match"])
+            for i, h in enumerate(resp["hits"])
+        ],
+        "position int, doc_id long, score double",
+    ).select(F.lit(name).alias("behavior"), "position", "doc_id", "score")
+
+
 @register("ft_typesense_defaults", _typesense_defaults_sql())
 def ft_typesense_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8 default search semantics in one graded row:
@@ -572,17 +560,12 @@ def ft_typesense_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to the adjacency-verified match set — r5; num_typos left at its
     # default 2 grades that quoting disables correction); phrase_topk
     # is the DataFrame-engine twin, rank-identity pinned in pytest
-    ph = facade_search(
-        spark, sf_dir, {"q": f'"{_TS_PHRASE_Q}"', "per_page": _TS_K}
-    )
-    phrase = spark.createDataFrame(
-        [
-            (i + 1, h["document"]["doc_id"], h["text_match"])
-            for i, h in enumerate(ph["hits"])
-        ],
-        "position int, doc_id long, score double",
-    ).select(
-        F.lit("phrase").alias("behavior"), "position", "doc_id", "score"
+    phrase = _facade_hits(
+        spark,
+        facade_search(
+            spark, sf_dir, {"q": f'"{_TS_PHRASE_Q}"', "per_page": _TS_K}
+        ),
+        "phrase",
     )
     typo = _branch(
         wand_topk_typo(idx, _TS_TYPO_Q, k=_TS_K, mode="or"), "typo"
@@ -604,18 +587,8 @@ def ft_typesense_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocabulary words, and a successful correction would produce hits
     # and legitimately suppress the fallback (the typo × split_join
     # precedence is pytest-gated instead)
-    def _facade_positions(resp: dict, name: str) -> DataFrame:
-        return spark.createDataFrame(
-            [
-                (i + 1, h["document"]["doc_id"], h["text_match"])
-                for i, h in enumerate(resp["hits"])
-            ],
-            "position int, doc_id long, score double",
-        ).select(
-            F.lit(name).alias("behavior"), "position", "doc_id", "score"
-        )
-
-    join_b = _facade_positions(
+    join_b = _facade_hits(
+        spark,
         facade_search(
             spark, sf_dir,
             {"q": _TS_JOIN_Q, "split_join_tokens": "fallback",
@@ -623,7 +596,8 @@ def ft_typesense_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "join",
     )
-    split_b = _facade_positions(
+    split_b = _facade_hits(
+        spark,
         facade_search(
             spark, sf_dir,
             {"q": _TS_SPLIT_Q, "split_join_tokens": "fallback",
@@ -652,15 +626,7 @@ def ft_typesense_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
          "hidden_hits": str(top[0]),
          "pinned_hits": f"{top[4]}:1,{outsider}:3"},
     )
-    curation = spark.createDataFrame(
-        [
-            (i + 1, h["document"]["doc_id"], h["text_match"])
-            for i, h in enumerate(cur["hits"])
-        ],
-        "position int, doc_id long, score double",
-    ).select(
-        F.lit("curation").alias("behavior"), "position", "doc_id", "score"
-    )
+    curation = _facade_hits(spark, cur, "curation")
     return (
         phrase.unionByName(typo)
         .unionByName(drop)
@@ -753,7 +719,7 @@ def ft_mf_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyf_aggregator_spark.search.fallback import drop_tokens_with_found
     from pyf_aggregator_spark.search.infix import expand_infix
     from pyf_aggregator_spark.search.prefix import expand_prefix
-    from pyf_aggregator_spark.search.typo import correct_terms
+    from pyf_aggregator_spark.search.typo import correct_queries
     mf = documents_multifield_index(spark, sf_dir)
     sum_stats = mf["term_stats"].groupBy("term").agg(F.sum("df").alias("df"))
 
@@ -777,13 +743,7 @@ def ft_mf_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
         weights=_5F_WEIGHTS,
     ).select(F.lit("prefix").alias("behavior"), "doc_id", "score")
 
-    from pyf_aggregator_spark.search.wand import _known_terms
-
-    mapping = correct_terms(
-        mf["dir"], tokenize_py(_MF_TYPO_Q), sum_stats, num_typos=2,
-        known_terms=_known_terms(mf, tokenize_py(_MF_TYPO_Q)),
-    )
-    corrected = sorted({v for v in mapping.values() if v is not None})
+    [corrected] = correct_queries(mf, [tokenize_py(_MF_TYPO_Q)], num_typos=2)
     typo_side = wand_topk(
         mf, " ".join(corrected), k=_MF_K, mode="or", weights=_5F_WEIGHTS
     ).select(F.lit("typo").alias("behavior"), "doc_id", "score")
@@ -812,13 +772,7 @@ def ft_mf_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
              "split_join_tokens": "fallback", "num_typos": 0,
              "per_page": _MF_K},
         )
-        return spark.createDataFrame(
-            [
-                (h["document"]["doc_id"], h["text_match"])
-                for h in resp["hits"]
-            ],
-            "doc_id long, score double",
-        ).select(F.lit(name).alias("behavior"), "doc_id", "score")
+        return _facade_hits(spark, resp, name).drop("position")
 
     join_side = _mf_facade(_TS_JOIN_Q, "join")
     split_side = _mf_facade(_TS_SPLIT_Q, "split")

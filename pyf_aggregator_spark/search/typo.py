@@ -252,21 +252,38 @@ def correct_terms(
     return out
 
 
+def correct_queries(
+    idx: dict, queries: list[list[str]], num_typos: int = 2,
+    keep_uncorrectable: bool = False,
+) -> list[list[str]]:
+    """Each query's tokens after typo correction, from ONE correct_terms
+    call over the union of every query's tokens: a token becomes its
+    correction; a token with none contributes nothing and is dropped,
+    or with ``keep_uncorrectable`` stays as typed (the facade's rule
+    when infix is on: it may still match inside vocabulary words); a
+    query left with no token falls back to its typed form (a zero-hit
+    search, but a well-formed one)."""
+    from pyf_aggregator_spark.search.wand import _known_terms
+
+    union = sorted({t for q in queries for t in q})
+    mapping = correct_terms(
+        idx["dir"], union, idx["term_stats"], num_typos=num_typos,
+        known_terms=_known_terms(idx, union),
+    )
+    out = []
+    for toks in queries:
+        fixed = [mapping.get(t) or (t if keep_uncorrectable else None) for t in toks]
+        out.append([t for t in fixed if t is not None] or toks)
+    return out
+
+
 def wand_topk_typo(
     idx: dict, query: str, k: int = 10, mode: str = "or",
     num_typos: int = 2,
 ) -> DataFrame:
     """Typo-tolerant top-k: unknown query terms are corrected to their
     best ≤num_typos-edit vocabulary neighbor before the WAND pass."""
-    from pyf_aggregator_spark.search.wand import _known_terms, wand_topk
+    from pyf_aggregator_spark.search.wand import wand_topk
 
-    spark = idx["segments"].sparkSession
-    toks = tokenize_py(query)
-    mapping = correct_terms(
-        idx["dir"], toks, idx["term_stats"],
-        num_typos=num_typos, known_terms=_known_terms(idx, toks),
-    )
-    corrected = [v for v in mapping.values() if v is not None]
-    if not corrected:
-        return spark.createDataFrame([], "doc_id long, score double")
-    return wand_topk(idx, " ".join(sorted(set(corrected))), k=k, mode=mode)
+    [toks] = correct_queries(idx, [tokenize_py(query)], num_typos)
+    return wand_topk(idx, " ".join(toks), k=k, mode=mode)

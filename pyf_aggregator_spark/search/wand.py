@@ -1141,11 +1141,11 @@ def wand_topk_batch(
     batch.
 
     ``num_typos`` > 0 turns on typo correction for the WHOLE batch at
-    the cost of no Spark job: the union of all queries' unknown tokens
-    goes through a single correct_terms call (one driver-side read of
-    the deletion artifact), then each query rewrites under the
-    single-query contract — failed corrections drop the token; a query whose every
-    token fails falls back to its original (zero-hit) form."""
+    the cost of no Spark job: typo.correct_queries corrects the union
+    of all queries' tokens in one driver-side read of the deletion
+    artifact, under the single-query contract — failed corrections drop
+    the token; a query whose every token fails falls back to its
+    original (zero-hit) form."""
     from collections import Counter
 
     from pyspark.sql import Window
@@ -1162,22 +1162,13 @@ def wand_topk_batch(
 
     queries = [dict(q) for q in queries]
     if num_typos > 0:
-        from pyf_aggregator_spark.search.typo import correct_terms
+        from pyf_aggregator_spark.search.typo import correct_queries
 
-        union_terms = sorted(
-            {t for q in queries for t in tokenize_py(q["query"])}
+        fixed = correct_queries(
+            idx, [tokenize_py(q["query"]) for q in queries], num_typos
         )
-        mapping = correct_terms(
-            idx["dir"], union_terms, idx["term_stats"],
-            num_typos=num_typos,
-            known_terms=_known_terms(idx, union_terms),
-        )
-        for q in queries:
-            toks = tokenize_py(q["query"])
-            corrected = [
-                mapping[t] for t in toks if mapping.get(t) is not None
-            ]
-            q["query"] = " ".join(corrected or toks)
+        for q, toks in zip(queries, fixed):
+            q["query"] = " ".join(toks)
 
     all_terms = sorted(
         {t for q in queries for t in set(tokenize_py(q["query"]))}

@@ -1134,3 +1134,98 @@ def test_ranked_facets_single_kernel_pass(spark, sf_dir, monkeypatch):
          "per_page": 10, "num_typos": 0},
     )
     assert calls == {"score": 1, "ids": 0, "topk_found": 0}
+
+
+# ---------------- request shapes: job budgets and persist release
+
+_Q = "spark vector"
+_DROP = {"q": _Q + " zzzqqq", "mode": "and", "num_typos": 0,
+         "drop_tokens_threshold": 1}
+# one request per shape and the Spark jobs it runs on a warm session
+# (local[4], 8 shuffle partitions, sf0.001); a lower count is a plan
+# change worth pinning, a higher one a regression
+FACADE_SHAPES = {
+    "ranked": ({"q": _Q}, 4),
+    "filtered": ({"q": _Q, "filter_by": "lang:=en"}, 6),
+    "faceted": ({"q": _Q, "facet_by": "lang"}, 10),
+    "grouped": ({"q": _Q, "group_by": "source", "facet_by": "lang"}, 13),
+    "grouped_nofacet": ({"q": _Q, "group_by": "source"}, 9),
+    "fuzzy": ({"q": "sparkx vector", "prefix": True,
+               "drop_tokens_threshold": 1}, 7),
+    "match_all": ({"q": "*", "filter_by": "lang:=en",
+                   "sort_by": "n_chars:desc"}, 4),
+    "match_all_grouped": ({"q": "*", "group_by": "lang", "group_limit": 2,
+                           "facet_by": "source"}, 11),
+    "ranked_sort": ({"q": _Q, "sort_by": "n_chars:desc",
+                     "facet_by": "lang"}, 10),
+    "phrase": ({"q": f'"{_Q}"', "facet_by": "lang"}, 11),
+    "phrase_grouped": ({"q": f'"{_Q}"', "group_by": "lang",
+                        "group_limit": 2}, 11),
+    "curated": ({"q": _Q, "pinned_hits": "1:1", "hidden_hits": "2"}, 9),
+    "curated_faceted": ({"q": _Q, "pinned_hits": "1:1", "hidden_hits": "2",
+                         "facet_by": "lang"}, 13),
+    "drop_and": ({**_DROP, "facet_by": "lang"}, 7),
+    "drop_and_sort": ({**_DROP, "sort_by": "n_chars:desc"}, 4),
+    "drop_and_group": ({**_DROP, "group_by": "lang"}, 10),
+}
+
+
+def test_request_job_budgets(spark, sf_dir):
+    """Job counts are fixed by the plan, so each shape's count is pinned.
+    The fuzzy request warms the session first: it loads the segment
+    index and its term dictionary and builds the typo artifact."""
+    from conftest import count_jobs
+
+    search(spark, sf_dir, FACADE_SHAPES["fuzzy"][0])
+    counted = {
+        name: count_jobs(spark, lambda p=params: search(spark, sf_dir, p))
+        for name, (params, _) in FACADE_SHAPES.items()
+    }
+    assert counted == {name: jobs for name, (_, jobs) in FACADE_SHAPES.items()}
+
+
+_MATCH_KINDS = {"match_all": "*", "ranked": _Q, "phrase": f'"{_Q}"'}
+
+
+@pytest.mark.parametrize("kind", sorted(_MATCH_KINDS))
+def test_unknown_group_and_facet_fields_raise_value_error(spark, sf_dir, kind):
+    q = _MATCH_KINDS[kind]
+    with pytest.raises(ValueError, match="unknown group_by field: nosuch"):
+        search(spark, sf_dir, {"q": q, "group_by": "nosuch"})
+    with pytest.raises(ValueError, match="unknown facet_by field: nosuch"):
+        search(spark, sf_dir, {"q": q, "facet_by": "lang,nosuch"})
+
+
+def test_requests_release_every_persist(spark, sf_dir):
+    """Every frame a request persists is released, whether it raises or
+    returns: the session cache is empty after each request. The shared
+    index handles are warmed first and re-cached afterwards, so the
+    check sees only what the request itself persisted."""
+    from pyf_aggregator_spark import registry
+    from pyf_aggregator_spark.operators import fulltext_extra
+
+    raising = [
+        ({"q": _Q, "sort_by": "nosuchfield:desc"}, "unknown sort_by"),
+        ({"q": f'"{_Q}"', "sort_by": "n_chars:desc", "group_by": "lang"},
+         "match-all"),
+        ({"q": _Q, "group_by": "nosuch", "facet_by": "lang"},
+         "unknown group_by"),
+        ({"q": f'"{_Q}"', "facet_by": "nosuch"}, "unknown facet_by"),
+    ]
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    search(spark, sf_dir, {"q": _Q})  # loads the segment index
+    spark.catalog.clearCache()
+    try:
+        for params, msg in raising:
+            with pytest.raises(ValueError, match=msg):
+                search(spark, sf_dir, params)
+            assert cache.isEmpty(), params
+        for name, (params, _) in FACADE_SHAPES.items():
+            search(spark, sf_dir, params)
+            assert cache.isEmpty(), name
+    finally:
+        for idx in [*fulltext_extra._SEG_CACHE.values(),
+                    *fulltext_extra._MF_CACHE.values()]:
+            idx["segments"].cache()
+        for index in registry._INDEX_CACHE.values():
+            index.cache()
