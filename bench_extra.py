@@ -16,7 +16,10 @@ typo
 ``--repeats``, at least 3) and Spark jobs of one facade ``search()``
 request per shape on perfbench's seed-1 corpus (5k turns): the six
 perfbench request shapes plus a ranked sort_by, a quoted phrase and a
-curated (pinned + hidden) request. ``--phases facade`` runs it alone.
+curated (pinned + hidden) request. For the repeat with the median time
+it also lists each job as ``[call site, ms]`` (the job's name and its
+submission-to-completion time from Spark's status store), printed one
+line per job on stderr too. ``--phases facade`` runs it alone.
 
 ``upsert`` builds a fresh index over the corpus, runs one 500-doc
 ``upsert_docs`` (250 existing ids with new text, 250 new ids) and prints
@@ -92,6 +95,20 @@ def stage_jobs(sc, tag: str):
         tracker = sc.statusTracker()
         for stage in jobs:
             jobs[stage] = len(tracker.getJobIdsForGroup(f"{tag}.{stage}"))
+
+
+def job_sites(sc, group: str) -> list[tuple[str, int]]:
+    """``(call site, ms)`` of each job in job group ``group``, in job id
+    order: the job's name (its call site, with this repo's path cut off)
+    and its submission-to-completion time from Spark's status store."""
+    store = sc._jsc.sc().statusStore()
+    root = os.path.dirname(os.path.abspath(__file__)) + os.sep
+    out = []
+    for job_id in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+        job = store.job(job_id)
+        ms = job.completionTime().get().getTime() - job.submissionTime().get().getTime()
+        out.append((job.name().replace(root, ""), ms))
+    return out
 
 
 UPSERT_STAGES = ("preamble", "write_segments", "stats_writes", "commit")
@@ -294,7 +311,8 @@ def facade_phase(spark, repeats: int) -> dict:
     ranked sort_by, a quoted phrase and a curated (pinned + hidden)
     request. Each shape runs once untimed (index loads, typo artifact),
     then ``repeats`` times (at least 3), each under its own job group.
-    Prints one JSON line."""
+    Prints one JSON line, and the jobs of each shape's median repeat
+    (``job_sites``) one per line on stderr."""
     import statistics
 
     from pyf_aggregator_spark.functions.tokenize import tokenize_py
@@ -325,16 +343,22 @@ def facade_phase(spark, repeats: int) -> dict:
         for shape, params in shapes.items():
             search(spark, inp.sf_dir, params)  # untimed warm-up
             times = []
-            with stage_jobs(sc, f"bx-facade-{shape}-{os.getpid()}") as (enter, jobs):
+            tag = f"bx-facade-{shape}-{os.getpid()}"
+            with stage_jobs(sc, tag) as (enter, jobs):
                 for rep in range(max(repeats, 3)):
                     enter(str(rep))
                     t0 = time.monotonic()
                     search(spark, inp.sf_dir, params)
                     times.append(time.monotonic() - t0)
+            median_rep = sorted(range(len(times)), key=times.__getitem__)[len(times) // 2]
+            sites = job_sites(sc, f"{tag}.{median_rep}")
+            for site, ms in sites:
+                print(f"    {shape}: {site} {ms} ms", file=sys.stderr)
             res["shapes"][shape] = {
                 "s_min": round(min(times), 4),
                 "s_median": round(statistics.median(times), 4),
                 "jobs": max(jobs.values()),
+                "job_ms": sites,
             }
     finally:
         if old_cache is None:

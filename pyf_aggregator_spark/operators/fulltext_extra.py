@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from pyf_aggregator_spark.index.segments import build_segments
 from pyf_aggregator_spark.oracle import sql as osql
-from pyf_aggregator_spark.registry import documents_index, load, register
+from pyf_aggregator_spark.registry import documents_index, load, pinned, register
 from pyf_aggregator_spark.search.engine import bm25_topk
 from pyf_aggregator_spark.search.wand import load_index, wand_topk
 
@@ -50,7 +50,15 @@ def documents_segment_index(spark: SparkSession, sf_dir: str) -> dict:
         idx = load_index(spark, index_dir)
         idx["segments"] = idx["segments"].cache()
         _SEG_CACHE[key] = idx
-    return _SEG_CACHE[key]
+    return _repinned(_SEG_CACHE[key])
+
+
+def _repinned(idx: dict) -> dict:
+    """``idx`` with its segments pinned again after a session-wide
+    uncache (registry.pinned)."""
+    if not pinned(idx["segments"]):
+        idx["segments"].cache()
+    return idx
 
 
 # two segment-path cases mirror the DataFrame pair (same oracle → the
@@ -161,7 +169,7 @@ def documents_multifield_index(spark: SparkSession, sf_dir: str) -> dict:
         idx = load_index(spark, root)
         idx["segments"] = idx["segments"].cache()
         _MF_CACHE[key] = idx
-    return _MF_CACHE[key]
+    return _repinned(_MF_CACHE[key])
 
 
 @register(

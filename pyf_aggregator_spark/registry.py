@@ -31,6 +31,15 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
+def pinned(df: DataFrame) -> bool:
+    """Whether the session cache holds ``df``. A session-wide uncache
+    (``spark.catalog.clearCache()``) drops the entry while the frame's
+    own ``is_cached`` flag stays set, so the kept index handles ask the
+    cache manager on every lookup and pin themselves again."""
+    level = df.storageLevel
+    return level.useMemory or level.useDisk
+
+
 # One index per (session, sf_dir), cached — queries share the build.
 _INDEX_CACHE: dict[tuple[int, str], CorpusIndex] = {}
 
@@ -40,6 +49,8 @@ def documents_index(spark: SparkSession, sf_dir: str) -> CorpusIndex:
     if key not in _INDEX_CACHE:
         docs = load(spark, sf_dir, "documents")
         _INDEX_CACHE[key] = build_index(docs).cache()
+    elif not pinned(_INDEX_CACHE[key].postings):
+        _INDEX_CACHE[key].cache()
     return _INDEX_CACHE[key]
 
 

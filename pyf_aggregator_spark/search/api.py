@@ -122,11 +122,15 @@ the request returns or raises.
 
 Every component keeps its scale path: the filter rides into the WAND
 kernel as an allow-set, facets aggregate the term-pruned match set
-(never the corpus), hydration joins the k-row page only.
+(never the corpus), hydration scans only the page's ids (a literal
+``In`` filter that parquet applies in the scan). The documents frame is
+read once per session and table version (``_documents``), so a request
+pays no schema-inference job.
 """
 
 from __future__ import annotations
 
+import os
 import re
 import dataclasses
 
@@ -537,12 +541,50 @@ def _ranked_index(spark: SparkSession, sf_dir: str, params: dict):
     return idx, weights
 
 
+# (id(session), table path) → (table version, documents frame)
+_DOCS_CACHE: dict[tuple[int, str], tuple[tuple, DataFrame]] = {}
+
+
+def _table_version(path: str) -> tuple:
+    """The mtime and size of a parquet path and, for a directory, of
+    each file in it: an overwrite that recreates the directory changes
+    the first, a file rewritten in place the second."""
+    st = os.stat(path)
+    version = [("", st.st_mtime_ns, st.st_size)]
+    if os.path.isdir(path):
+        with os.scandir(path) as entries:
+            for e in entries:
+                est = e.stat()
+                version.append((e.name, est.st_mtime_ns, est.st_size))
+    return tuple(sorted(version))
+
+
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table as one frame per session and path, so a
+    request runs no parquet schema-inference job. The frame is re-read
+    when the table's version changes; its entry is replaced, never kept
+    beside the new one. A path that is not on the local file system is
+    read on every call. ``registry.load`` stays uncached: a query that
+    loads a table twice and joins the two results must not join one
+    frame with itself."""
+    from pyf_aggregator_spark.registry import load
+
+    path = f"{sf_dir}/documents.parquet"
+    try:
+        version = _table_version(path)
+    except OSError:
+        return load(spark, sf_dir, "documents")
+    key = (id(spark), path)
+    hit = _DOCS_CACHE.get(key)
+    if hit is None or hit[0] != version or hit[1].sparkSession is not spark:
+        hit = _DOCS_CACHE[key] = (version, load(spark, sf_dir, "documents"))
+    return hit[1]
+
+
 def _plan(spark: SparkSession, sf_dir: str, params: dict) -> _Plan:
     """Parse and validate every parameter, then (ranked q) rewrite the
     query and name the match source. Everything that can raise does so
     here, before any persist."""
-    from pyf_aggregator_spark.registry import load
-
     q = params.get("q", "*")
     ranked = q != "*" and bool(tokenize_py(q))
     sort_by, group_by = params.get("sort_by"), params.get("group_by")
@@ -555,7 +597,7 @@ def _plan(spark: SparkSession, sf_dir: str, params: dict) -> _Plan:
             "(not q='*', sort_by or group_by)"
         )
     clauses = parse_filter_by(params.get("filter_by"))
-    docs = load(spark, sf_dir, "documents")
+    docs = _documents(spark, sf_dir)
     include = _returned_fields(params, docs.columns)
     if ranked:
         phrase_terms = _phrase_terms(q, params)
@@ -731,7 +773,7 @@ def _search_one(spark: SparkSession, sf_dir: str, params: dict) -> dict:
         if plan.hold:
             source = _hold(held, source)
         if plan.page_kind == "grouped":
-            resp = _grouped_page(spark, plan, source, held)
+            resp = _grouped_page(plan, source, held)
         elif plan.page_kind == "sorted":
             resp = _sorted_page(plan, source)
         else:
@@ -809,9 +851,7 @@ def _sorted_page(plan: _Plan, source: DataFrame) -> dict:
     }
 
 
-def _grouped_page(
-    spark: SparkSession, plan: _Plan, source: DataFrame, held: list[DataFrame]
-) -> dict:
+def _grouped_page(plan: _Plan, source: DataFrame, held: list[DataFrame]) -> dict:
     """EXACT grouped search in Typesense's NESTED shape, the one every
     reference consumer walks (db.py:282-288, downloads.py:71-73: ``for
     group in r["grouped_hits"]: for item in group["hits"]``): groups
@@ -852,7 +892,7 @@ def _grouped_page(
             cond = cond | F.col(group_by).isNull()
         page_rows = g.filter(cond).collect()
     page_rows = sorted(page_rows, key=lambda r: r["rank_in_group"])
-    documents = _hydrate(spark, plan, sorted({r["doc_id"] for r in page_rows}))
+    documents = _hydrate(plan, sorted({r["doc_id"] for r in page_rows}))
     ranked = plan.source != "corpus"
     grouped_hits = [
         {
@@ -899,19 +939,19 @@ def _topk_page(spark: SparkSession, plan: _Plan, source: DataFrame | None) -> di
             weights=plan.weights,
         )
     if plan.pinned or plan.hidden:
-        # membership, score and existence of the curated ids against
-        # the FINAL query (post typo/prefix/drop rewriting) under the
-        # same filter the kernel saw — two jobs bounded by the
-        # curated-list size. Scores ride along, so a MATCHING pinned
-        # doc that ranks below the over-fetch still reports its true
-        # text_match
+        # membership and score of the curated ids against the FINAL
+        # query (post typo/prefix/drop rewriting) under the same filter
+        # the kernel saw, then their existence from an id-filtered docs
+        # scan — bounded by the curated-list size. Scores ride along, so
+        # a MATCHING pinned doc that ranks below the over-fetch still
+        # reports its true text_match
         curated_ids = sorted(plan.hidden | set(plan.pinned.values()))
-        tiny = spark.createDataFrame([(i,) for i in curated_ids], "doc_id long")
         if plan.source in ("phrase", "scored"):
             # the persisted match set is already filter-, tombstone- and
             # adjacency-exact: a bounded isin over it, no extra kernel pass
             m = source.filter(F.col("doc_id").isin(curated_ids))
         else:
+            tiny = spark.createDataFrame([(i,) for i in curated_ids], "doc_id long")
             m = wand_score_matches(
                 plan.idx, plan.query, mode=plan.mode,
                 allowed=tiny if plan.allowed is None else tiny.join(plan.allowed, "doc_id"),
@@ -920,14 +960,14 @@ def _topk_page(spark: SparkSession, plan: _Plan, source: DataFrame | None) -> di
         curated_scores = {r["doc_id"]: r["score"] for r in m.collect()}
         existing_ids = {
             r["doc_id"]
-            for r in F.broadcast(tiny).join(plan.docs.select("doc_id"), "doc_id").collect()
+            for r in plan.docs.select("doc_id").filter(F.col("doc_id").isin(curated_ids)).collect()
         }
         rows, found = _curate_rows(
             rows, found, plan.pinned, plan.hidden, curated_scores,
             existing_ids, plan.page * plan.per_page,
         )
     rows = rows[(plan.page - 1) * plan.per_page:]
-    documents = _hydrate(spark, plan, [r["doc_id"] for r in rows], highlight=plan.highlight)
+    documents = _hydrate(plan, [r["doc_id"] for r in rows], highlight=plan.highlight)
     hits = []
     for r in rows:
         hit = {"document": documents[r["doc_id"]], "text_match": r["score"]}
@@ -961,20 +1001,20 @@ def _doc_dict(row_dict: dict, include: list[str]) -> dict:
     return row_dict
 
 
-def _hydrate(
-    spark: SparkSession, plan: _Plan, ids: list[int], highlight: bool = False
-) -> dict[int, dict]:
-    """doc_id → returned document for the page's ids: one broadcast join
-    of the ≤ page ids against the include-pruned projection, with
-    <mark> highlights and a snippet of the text when ``highlight``. An
-    id absent from the corpus maps to its bare doc_id."""
+def _hydrate(plan: _Plan, ids: list[int], highlight: bool = False) -> dict[int, dict]:
+    """doc_id → returned document for the page's ids: ONE job, a scan of
+    the include-pruned projection (plus the text when ``highlight``)
+    filtered by the literal id list, which parquet applies in the scan —
+    no local relation, no broadcast exchange. ``highlight`` adds <mark>
+    highlights and a snippet of the text. Each document lists doc_id
+    first, then the other returned fields in table order. An id absent
+    from the corpus maps to its bare doc_id."""
     got = {}
     if ids:
-        base = _doc_cols(plan.docs, plan.include)
-        if highlight and "text" not in base.columns:
-            base = base.join(plan.docs.select("doc_id", "text"), "doc_id")
-        tiny = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-        out = F.broadcast(tiny).join(base, "doc_id")
+        cols = ["doc_id", *(plan.include or plan.docs.columns)]
+        if highlight:
+            cols.append("text")
+        out = plan.docs.select(*dict.fromkeys(cols)).filter(F.col("doc_id").isin(ids))
         if highlight:
             from pyf_aggregator_spark.search.highlight import highlight_col, snippet_col
 

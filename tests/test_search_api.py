@@ -1145,35 +1145,36 @@ _DROP = {"q": _Q + " zzzqqq", "mode": "and", "num_typos": 0,
 # (local[4], 8 shuffle partitions, sf0.001); a lower count is a plan
 # change worth pinning, a higher one a regression
 FACADE_SHAPES = {
-    "ranked": ({"q": _Q}, 4),
-    "filtered": ({"q": _Q, "filter_by": "lang:=en"}, 6),
-    "faceted": ({"q": _Q, "facet_by": "lang"}, 10),
-    "grouped": ({"q": _Q, "group_by": "source", "facet_by": "lang"}, 13),
-    "grouped_nofacet": ({"q": _Q, "group_by": "source"}, 9),
+    "ranked": ({"q": _Q}, 2),
+    "filtered": ({"q": _Q, "filter_by": "lang:=en"}, 4),
+    "faceted": ({"q": _Q, "facet_by": "lang"}, 8),
+    "grouped": ({"q": _Q, "group_by": "source", "facet_by": "lang"}, 11),
+    "grouped_nofacet": ({"q": _Q, "group_by": "source"}, 7),
     "fuzzy": ({"q": "sparkx vector", "prefix": True,
-               "drop_tokens_threshold": 1}, 7),
+               "drop_tokens_threshold": 1}, 5),
     "match_all": ({"q": "*", "filter_by": "lang:=en",
-                   "sort_by": "n_chars:desc"}, 4),
+                   "sort_by": "n_chars:desc"}, 3),
     "match_all_grouped": ({"q": "*", "group_by": "lang", "group_limit": 2,
-                           "facet_by": "source"}, 11),
+                           "facet_by": "source"}, 9),
     "ranked_sort": ({"q": _Q, "sort_by": "n_chars:desc",
-                     "facet_by": "lang"}, 10),
-    "phrase": ({"q": f'"{_Q}"', "facet_by": "lang"}, 11),
+                     "facet_by": "lang"}, 9),
+    "phrase": ({"q": f'"{_Q}"', "facet_by": "lang"}, 9),
     "phrase_grouped": ({"q": f'"{_Q}"', "group_by": "lang",
-                        "group_limit": 2}, 11),
-    "curated": ({"q": _Q, "pinned_hits": "1:1", "hidden_hits": "2"}, 9),
+                        "group_limit": 2}, 9),
+    "curated": ({"q": _Q, "pinned_hits": "1:1", "hidden_hits": "2"}, 6),
     "curated_faceted": ({"q": _Q, "pinned_hits": "1:1", "hidden_hits": "2",
-                         "facet_by": "lang"}, 13),
-    "drop_and": ({**_DROP, "facet_by": "lang"}, 7),
-    "drop_and_sort": ({**_DROP, "sort_by": "n_chars:desc"}, 4),
-    "drop_and_group": ({**_DROP, "group_by": "lang"}, 10),
+                         "facet_by": "lang"}, 10),
+    "drop_and": ({**_DROP, "facet_by": "lang"}, 5),
+    "drop_and_sort": ({**_DROP, "sort_by": "n_chars:desc"}, 3),
+    "drop_and_group": ({**_DROP, "group_by": "lang"}, 8),
 }
 
 
 def test_request_job_budgets(spark, sf_dir):
     """Job counts are fixed by the plan, so each shape's count is pinned.
-    The fuzzy request warms the session first: it loads the segment
-    index and its term dictionary and builds the typo artifact."""
+    The fuzzy request warms the session first: it reads the documents
+    frame, loads the segment index and its term dictionary and builds
+    the typo artifact."""
     from conftest import count_jobs
 
     search(spark, sf_dir, FACADE_SHAPES["fuzzy"][0])
@@ -1196,14 +1197,17 @@ def test_unknown_group_and_facet_fields_raise_value_error(spark, sf_dir, kind):
         search(spark, sf_dir, {"q": q, "facet_by": "lang,nosuch"})
 
 
+def _cached_plans(spark) -> list[str]:
+    """The plans the session cache holds, one string each."""
+    cached = spark._jsparkSession.sharedState().cacheManager().cachedData()
+    return sorted(cached.apply(i).plan().toString() for i in range(cached.size()))
+
+
 def test_requests_release_every_persist(spark, sf_dir):
     """Every frame a request persists is released, whether it raises or
-    returns: the session cache is empty after each request. The shared
-    index handles are warmed first and re-cached afterwards, so the
-    check sees only what the request itself persisted."""
-    from pyf_aggregator_spark import registry
-    from pyf_aggregator_spark.operators import fulltext_extra
-
+    returns: after each request the session cache holds what it held
+    after one warm request. Clearing the cache first leaves it holding
+    only the index handles that request pins again."""
     raising = [
         ({"q": _Q, "sort_by": "nosuchfield:desc"}, "unknown sort_by"),
         ({"q": f'"{_Q}"', "sort_by": "n_chars:desc", "group_by": "lang"},
@@ -1212,20 +1216,136 @@ def test_requests_release_every_persist(spark, sf_dir):
          "unknown group_by"),
         ({"q": f'"{_Q}"', "facet_by": "nosuch"}, "unknown facet_by"),
     ]
-    cache = spark._jsparkSession.sharedState().cacheManager()
-    search(spark, sf_dir, {"q": _Q})  # loads the segment index
     spark.catalog.clearCache()
-    try:
-        for params, msg in raising:
-            with pytest.raises(ValueError, match=msg):
-                search(spark, sf_dir, params)
-            assert cache.isEmpty(), params
-        for name, (params, _) in FACADE_SHAPES.items():
+    search(spark, sf_dir, {"q": _Q})  # pins the segment index again
+    warm = _cached_plans(spark)
+    for params, msg in raising:
+        with pytest.raises(ValueError, match=msg):
             search(spark, sf_dir, params)
-            assert cache.isEmpty(), name
-    finally:
-        for idx in [*fulltext_extra._SEG_CACHE.values(),
-                    *fulltext_extra._MF_CACHE.values()]:
-            idx["segments"].cache()
-        for index in registry._INDEX_CACHE.values():
-            index.cache()
+        assert _cached_plans(spark) == warm, params
+    for name, (params, _) in FACADE_SHAPES.items():
+        search(spark, sf_dir, params)
+        assert _cached_plans(spark) == warm, name
+
+
+def test_index_handles_pinned_again_after_clear_cache(spark, sf_dir):
+    """A session-wide uncache drops the kept index handles from the
+    session cache; the next lookup pins them again, so later queries
+    read the cached segments instead of parquet."""
+    from pyf_aggregator_spark import registry
+    from pyf_aggregator_spark.operators import fulltext_extra
+
+    def lookups():
+        search(spark, sf_dir, {"q": _Q})
+        search(spark, sf_dir, {"q": _Q, "query_by": "name,title"})
+        registry.documents_index(spark, sf_dir)
+
+    lookups()
+    spark.catalog.clearCache()
+    lookups()
+    key = (id(spark), sf_dir)
+    handles = {
+        "segments": fulltext_extra._SEG_CACHE[key]["segments"],
+        "multifield": fulltext_extra._MF_CACHE[key]["segments"],
+        "postings": registry._INDEX_CACHE[key].postings,
+    }
+    for name, df in handles.items():
+        level = df.storageLevel
+        assert level.useMemory or level.useDisk, name
+
+
+def test_documents_frame_follows_table_overwrite(spark, tmp_path):
+    """The facade keeps one documents frame per session and path; a
+    Spark overwrite of the table, or a part file rewritten in place,
+    replaces it, so the next request in the same session sees the new
+    rows."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyf_aggregator_spark.search import api
+
+    sf = str(tmp_path)
+    path = f"{sf}/documents.parquet"
+    schema = "doc_id long, text string, lang string, source string, n_chars long"
+
+    def write(rows):
+        spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(path)
+
+    def page():
+        resp = search(spark, sf, {"q": "*", "include_fields": "doc_id,text"})
+        return resp["found"], [h["document"] for h in resp["hits"]]
+
+    write([(i, f"old {i}", "en", "s1", 5) for i in range(3)])
+    assert page() == (3, [{"doc_id": i, "text": f"old {i}"} for i in range(3)])
+    assert api._documents(spark, sf) is api._documents(spark, sf)
+    write([(i, f"new {i}", "de", "s2", 5) for i in range(10, 14)])
+    assert page() == (4, [{"doc_id": i, "text": f"new {i}"} for i in range(10, 14)])
+    # part files rewritten under their own names leave the directory
+    # entries, and so the directory's mtime, as they were (the checksum
+    # files go first: the rewrite would not match them). The first part
+    # grows past the length a stale file listing would read up to
+    for crc in glob.glob(f"{path}/.*.crc"):
+        os.remove(crc)
+    kept = api._documents(spark, sf)
+    parts = sorted(glob.glob(f"{path}/part-*.parquet"))
+    schema = pq.read_schema(parts[0])
+    for part in parts:
+        pq.write_table(schema.empty_table(), part)
+    rows = [{"doc_id": i, "text": f"grown {i} " + "pad " * 500, "lang": "de",
+             "source": "s2", "n_chars": 5} for i in range(20, 70)]
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), parts[0])
+    assert api._documents(spark, sf) is not kept
+    found, docs = page()
+    assert (found, [d["doc_id"] for d in docs]) == (50, list(range(20, 30)))
+    assert [k for k in api._DOCS_CACHE if k[1] == path] == [(id(spark), path)]
+
+
+def _arrow_docs(sf_dir: str, ids) -> dict[int, dict]:
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(f"{sf_dir}/documents.parquet", filters=[("doc_id", "in", list(ids))])
+    return {r["doc_id"]: r for r in table.to_pylist()}
+
+
+def test_hydrate_matches_arrow_read(spark, sf_dir):
+    """The page is hydrated by one id-filtered scan. Its documents equal
+    a plain pyarrow read of the same ids, field order included, where
+    the pushed-down filter differs from a join: above Spark's 10-value
+    InSet conversion and parquet's In pushdown threshold, with a
+    highlight whose text the include list leaves out, and with a pinned
+    id absent from the corpus."""
+    from pyf_aggregator_spark.search.highlight import highlight_col, snippet_col
+
+    resp = search(spark, sf_dir, {"q": _Q, "per_page": 25, "num_typos": 0})
+    docs = [h["document"] for h in resp["hits"]]
+    assert len(docs) == 25
+    want = _arrow_docs(sf_dir, [d["doc_id"] for d in docs])
+    assert [list(d.items()) for d in docs] == [list(want[d["doc_id"]].items()) for d in docs]
+
+    resp = search(spark, sf_dir, {"q": _Q, "per_page": 25, "num_typos": 0,
+                                  "highlight": True, "include_fields": "doc_id,lang"})
+    docs = [h["document"] for h in resp["hits"]]
+    want = _arrow_docs(sf_dir, [d["doc_id"] for d in docs])
+    marked = {
+        r["doc_id"]: (r["highlight"], r["snippet"])
+        for r in spark.createDataFrame(list(want.values()))
+        .select("doc_id", highlight_col(F.col("text"), _Q.split()).alias("highlight"),
+                snippet_col(F.col("text"), _Q.split()).alias("snippet"))
+        .collect()
+    }
+    assert [list(d) for d in docs] == [["doc_id", "lang", "highlight", "snippet"]] * 25
+    for d in docs:
+        assert d["lang"] == want[d["doc_id"]]["lang"]
+        assert (d["highlight"], d["snippet"]) == marked[d["doc_id"]]
+
+    plain = search(spark, sf_dir, {"q": _Q, "num_typos": 0})
+    absent = search(spark, sf_dir, {"q": _Q, "num_typos": 0, "pinned_hits": "999999:1"})
+    assert absent == plain
+    pinned = search(spark, sf_dir, {"q": _Q, "num_typos": 0, "pinned_hits": "999999:1,3:2"})
+    docs = [h["document"] for h in pinned["hits"]]
+    assert docs[1]["doc_id"] == 3 and pinned["hits"][1]["curated"]
+    want = _arrow_docs(sf_dir, [d["doc_id"] for d in docs])
+    assert docs == [want[d["doc_id"]] for d in docs]
