@@ -10,7 +10,7 @@ reproducible.
 Usage:
     python bench_extra.py [--sf-dir DIR] [--turns N] [--phases a,b,c]
 Phases: build_parts, cache_parts, batch, wand_lat, headline, facade, upsert,
-typo
+typo, route
 
 ``facade`` prints one JSON line with the seconds (min and median of
 ``--repeats``, at least 3) and Spark jobs of one facade ``search()``
@@ -42,6 +42,19 @@ vocabulary is perfbench's seed-1 corpus (5k turns), or with
 ``--typo-vocab N`` a synthetic N-term one (random words over 16
 letters, df 1–100, the same shapes over its terms). ``--phases typo``
 runs it alone.
+
+``route`` times each single query on both routes of ``wand.py::_local``
+and prints one JSON line per query: the read volume the route rule
+counts (segment rows, postings = Σ df of the scan terms, tombstone
+rows), the Spark jobs and the milliseconds (median of ``--repeats``, at
+least 3) of ``wand_topk_with_found`` in the driver and distributed.
+The indexes: perfbench's seed-1 corpus (5k turns) after churn's first
+cycle (one 500-doc upsert, 50 deletes, an uncached reload), then the
+synthetic transcript corpus at each size of ``--route-turns``. 24
+perfbench ``_mixed_queries`` run on each, then four OR queries of the
+index's 2, 4, 8 and 16 highest-df terms, which sweep the read volume.
+A last line per index gives the medians of the 24, so the crossover
+behind ``_DRIVER_ROUTE_MAX_ROWS`` is one command. ``--phases route`` runs it alone.
 """
 
 from __future__ import annotations
@@ -370,6 +383,99 @@ def facade_phase(spark, repeats: int) -> dict:
     return res
 
 
+def route_phase(spark, turns: list[int], repeats: int) -> list[dict]:
+    """Per-query ms and jobs of ``wand_topk_with_found`` on the driver
+    and the distributed route, for the perfbench churn-shaped index and
+    one synthetic index per size in ``turns``; one JSON line per query
+    and one summary line per index."""
+    import statistics
+
+    import numpy as np
+    import pandas as pd
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
+    from inputs import load_inputs
+    from workloads import _mixed_queries, _new_text
+
+    from pyf_aggregator_spark.index import incremental
+    from pyf_aggregator_spark.index.builder import assign_doc_ids
+    from pyf_aggregator_spark.index.segments import build_segments
+    from pyf_aggregator_spark.search import wand
+
+    sc = spark.sparkContext
+    work = tempfile.mkdtemp(prefix="pyfagg_bx_route_")
+    budget = wand._DRIVER_ROUTE_MAX_ROWS
+    summaries = []
+    try:
+        inp = load_inputs(os.path.join(work, "inputs"), 1, 5_000)
+        rng = inp.rng("churn")
+        queries = _mixed_queries(inp, rng, 24)
+        indexes = [("perfbench-seed1-churn", 5_000, inp.transcripts)]
+        indexes += [(f"synthetic-{n}", n, None) for n in turns]
+        for name, n_turns, path in indexes:
+            index_dir = os.path.join(work, name)
+            src = path or ensure_transcripts(spark, n_turns)
+            docs = assign_doc_ids(spark.read.parquet(src))
+            build_segments(docs.select("doc_id", "text"), index_dir)
+            if path:
+                n = docs.count()
+                ids = np.random.default_rng(1).permutation(n)
+                up = pd.DataFrame({
+                    "doc_id": [int(i) for i in ids[:250]] + list(range(n, n + 250)),
+                    "text": [_new_text(inp, rng) for _ in range(500)],
+                })
+                incremental.upsert_docs(
+                    spark, index_dir,
+                    spark.createDataFrame(up, "doc_id long, text string"),
+                )
+                incremental.delete_docs(spark, index_dir, [int(i) for i in ids[250:300]])
+            idx = wand.load_index(spark, index_dir)
+            snap = idx["driver"]
+            seg_rows = sum(f[3] for f in snap["segments"])
+            df = wand._load_term_dict(idx)[2]
+            # and the hottest terms, 2 to 16 of them in one query, so
+            # the read volume sweeps past the crossover
+            hot = sorted(df, key=df.get, reverse=True)
+            sweep = [(" ".join(hot[:n]), "or") for n in (2, 4, 8, 16)]
+            rows = []
+            for qi, (q, mode) in enumerate(queries + sweep):
+                line = {"phase": "route", "index": name, "query": q, "mode": mode,
+                        "segment_rows": seg_rows,
+                        "postings": sum(df.get(t, 0) for t in set(q.split())),
+                        "tombstone_rows": snap["tombstone_rows"]}
+                answers = {}
+                for route, rows_max in (("driver", 1 << 62), ("spark", -1)):
+                    wand._DRIVER_ROUTE_MAX_ROWS = rows_max
+                    times = []
+                    with stage_jobs(
+                        sc, f"bx-route-{name}-{qi}-{route}-{os.getpid()}"
+                    ) as (enter, jobs):
+                        for rep in range(max(repeats, 3)):
+                            enter(str(rep))
+                            t0 = time.monotonic()
+                            answers[route] = wand.wand_topk_with_found(idx, q, 10, mode)
+                            times.append(time.monotonic() - t0)
+                    line[f"{route}_ms"] = round(statistics.median(times) * 1e3, 1)
+                    line[f"{route}_jobs"] = max(jobs.values())
+                line["identical"] = answers["driver"] == answers["spark"]
+                print(json.dumps(line))
+                rows.append(line)
+            summary = {
+                "phase": "route", "index": name, "turns": n_turns,
+                "segment_rows": seg_rows, "tombstone_rows": snap["tombstone_rows"],
+                "postings_median": statistics.median(r["postings"] for r in rows[:len(queries)]),
+                "driver_ms_median": statistics.median(r["driver_ms"] for r in rows[:len(queries)]),
+                "spark_ms_median": statistics.median(r["spark_ms"] for r in rows[:len(queries)]),
+                "identical": sum(r["identical"] for r in rows), "queries": len(rows),
+            }
+            print(json.dumps(summary))
+            summaries.append(summary)
+    finally:
+        wand._DRIVER_ROUTE_MAX_ROWS = budget
+        shutil.rmtree(work, ignore_errors=True)
+    return summaries
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -377,6 +483,7 @@ def main() -> None:
     ap.add_argument("--phases", default="build_parts,cache_parts,batch,wand_lat,headline")
     ap.add_argument("--repeats", type=int, default=2)
     ap.add_argument("--typo-vocab", type=int, default=0)
+    ap.add_argument("--route-turns", default="50000,200000")
     args = ap.parse_args()
     phases = set(args.phases.split(","))
 
@@ -400,6 +507,14 @@ def main() -> None:
         out["typo_batch"] = res["batch"]["s_median"]
         out["typo_fuzzy"] = res["fuzzy"]["s_median"]
         if phases == {"typo"}:
+            spark.stop()
+            return
+
+    if "route" in phases:
+        turns = [int(t) for t in args.route_turns.split(",") if t]
+        for res in route_phase(spark, turns, args.repeats):
+            out[f"route_{res['index']}"] = res["driver_ms_median"]
+        if phases == {"route"}:
             spark.stop()
             return
 

@@ -14,43 +14,95 @@ from pyspark.sql import functions as F
 
 from pyf_aggregator_spark.index.segments import build_segments
 from pyf_aggregator_spark.oracle import sql as osql
-from pyf_aggregator_spark.registry import documents_index, load, pinned, register
+from pyf_aggregator_spark.registry import (
+    documents_index, load, pinned, register, table_version,
+)
 from pyf_aggregator_spark.search.engine import bm25_topk
 from pyf_aggregator_spark.search.wand import load_index, wand_topk
 
 _SEG_CACHE: dict[tuple[int, str], dict] = {}
+_MANIFEST = "_source.json"
+
+
+def _source(sf_dir: str) -> dict:
+    """What an index cached for ``sf_dir`` was built from: the absolute
+    documents path and its table version (None where ``os.stat`` cannot
+    see it)."""
+    path = os.path.abspath(f"{sf_dir}/documents.parquet")
+    try:
+        version = [list(v) for v in table_version(path)]
+    except OSError:
+        version = None
+    return {"documents": path, "version": version}
+
+
+def _cached_index(
+    spark: SparkSession, sf_dir: str, cache: dict, suffix: str, build
+) -> dict:
+    """The index handle for ``sf_dir`` kept in ``cache`` per (session,
+    sf_dir) and on disk under ``$PYFAGG_SEG_CACHE/<basename><suffix>``.
+
+    The on-disk index carries a manifest of its source (_source),
+    checked on every lookup; a directory built from another documents
+    table (a same-named tier elsewhere) or from an older version of
+    this one is rebuilt, and the session entry is replaced.
+    ``build(dir)`` writes the index into a process-unique staging dir,
+    published with a rename, so concurrent driver processes can't
+    interleave half-built parquet under the shared path."""
+    import json
+    import shutil
+
+    # version suffix: bump when the segment/meta format changes so a
+    # cached index from an older format is never half-read
+    index_dir = os.path.join(
+        os.environ.get("PYFAGG_SEG_CACHE", "/tmp/pyfagg_segidx_v2"),
+        os.path.basename(sf_dir.rstrip("/")) + suffix,
+    )
+    key, source = (id(spark), sf_dir), _source(sf_dir)
+    hit = cache.get(key)
+    try:
+        with open(os.path.join(index_dir, _MANIFEST)) as fh:
+            current = json.load(fh) == source
+    except (OSError, ValueError):
+        current = False
+    if current and hit is not None and hit["source"] == source:
+        return _repinned(hit)
+    if not current:
+        staging = f"{index_dir}__pid{os.getpid()}"
+        shutil.rmtree(staging, ignore_errors=True)
+        build(staging)
+        with open(os.path.join(staging, _MANIFEST), "w") as fh:
+            json.dump(source, fh)
+        os.makedirs(os.path.dirname(index_dir), exist_ok=True)
+        stale = f"{index_dir}__stale{os.getpid()}"
+        if os.path.exists(index_dir):
+            os.rename(index_dir, stale)
+        try:
+            os.rename(staging, index_dir)
+        except OSError:
+            # another process published first — use theirs
+            shutil.rmtree(staging, ignore_errors=True)
+        shutil.rmtree(stale, ignore_errors=True)
+    if hit is not None:
+        hit["segments"].unpersist()
+    idx = load_index(spark, index_dir)
+    idx["segments"] = idx["segments"].cache()
+    idx["source"] = source
+    cache[key] = idx
+    return idx
 
 
 def documents_segment_index(spark: SparkSession, sf_dir: str) -> dict:
     """Segment index over the sf documents table, built once per tier
-    under /tmp (deterministic content — resumable on reuse)."""
-    key = (id(spark), sf_dir)
-    if key not in _SEG_CACHE:
-        tier = os.path.basename(sf_dir.rstrip("/"))
-        # version suffix: bump when the segment/meta format changes so a
-        # cached index from an older format is never half-read
-        index_dir = os.path.join(
-            os.environ.get("PYFAGG_SEG_CACHE", "/tmp/pyfagg_segidx_v2"), tier
-        )
-        if not os.path.exists(f"{index_dir}/meta"):
-            # build in a process-unique staging dir, publish via rename —
-            # concurrent driver processes can't interleave half-built
-            # parquet under the shared path
-            staging = f"{index_dir}__pid{os.getpid()}"
-            docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-            build_segments(docs, staging, lineage=f"documents-{tier}")
-            os.makedirs(os.path.dirname(index_dir), exist_ok=True)
-            try:
-                os.rename(staging, index_dir)
-            except OSError:
-                # another process published first — use theirs
-                import shutil
+    and documents version (deterministic content — resumable on
+    reuse)."""
+    tier = os.path.basename(sf_dir.rstrip("/"))
 
-                shutil.rmtree(staging, ignore_errors=True)
-        idx = load_index(spark, index_dir)
-        idx["segments"] = idx["segments"].cache()
-        _SEG_CACHE[key] = idx
-    return _repinned(_SEG_CACHE[key])
+    def build(staging: str) -> None:
+        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+        build_segments(docs, staging, lineage=f"documents-{tier}")
+
+    return _cached_index(spark, sf_dir, _SEG_CACHE, "", build)
 
 
 def _repinned(idx: dict) -> dict:
@@ -139,37 +191,21 @@ def documents_multifield_index(spark: SparkSession, sf_dir: str) -> dict:
     *index* time; only queries hit the fields afterwards). All five
     per-field posting sets are built in ONE pass over a shared doc-id
     space (segments.build_multifield_segments), cached per tier and
-    published with an atomic rename. Query-time cost is then a pure
-    WAND pass — no re-tokenization, no per-call index construction."""
+    published with an atomic rename (_cached_index). Query-time cost is
+    then a pure WAND pass — no re-tokenization, no per-call index
+    construction."""
     from pyf_aggregator_spark.index.segments import build_multifield_segments
-    from pyf_aggregator_spark.search.wand import load_index
 
-    key = (id(spark), sf_dir)
-    if key not in _MF_CACHE:
-        tier = os.path.basename(sf_dir.rstrip("/"))
-        root = os.path.join(
-            os.environ.get("PYFAGG_SEG_CACHE", "/tmp/pyfagg_segidx_v2"),
-            f"{tier}__mf",
+    tier = os.path.basename(sf_dir.rstrip("/"))
+
+    def build(staging: str) -> None:
+        fields = _five_field_docs(load(spark, sf_dir, "documents"))
+        build_multifield_segments(
+            fields, staging, list(_5F_WEIGHTS), num_partitions=8,
+            lineage=f"mf-{tier}",
         )
-        if not os.path.exists(os.path.join(root, "meta")):
-            staging = f"{root}__pid{os.getpid()}"
-            import shutil
 
-            shutil.rmtree(staging, ignore_errors=True)
-            fields = _five_field_docs(load(spark, sf_dir, "documents"))
-            build_multifield_segments(
-                fields, staging, list(_5F_WEIGHTS), num_partitions=8,
-                lineage=f"mf-{tier}",
-            )
-            os.makedirs(os.path.dirname(root), exist_ok=True)
-            try:
-                os.rename(staging, root)
-            except OSError:
-                shutil.rmtree(staging, ignore_errors=True)
-        idx = load_index(spark, root)
-        idx["segments"] = idx["segments"].cache()
-        _MF_CACHE[key] = idx
-    return _repinned(_MF_CACHE[key])
+    return _cached_index(spark, sf_dir, _MF_CACHE, "__mf", build)
 
 
 @register(

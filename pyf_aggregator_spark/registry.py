@@ -8,6 +8,7 @@ driver's compare hashes values under sorted column names.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +30,20 @@ def register(name: str, sql: str | None):
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+
+
+def table_version(path: str) -> tuple:
+    """The mtime and size of a parquet path and, for a directory, of
+    each file in it: an overwrite that recreates the directory changes
+    the first, a file rewritten in place the second."""
+    st = os.stat(path)
+    version = [("", st.st_mtime_ns, st.st_size)]
+    if os.path.isdir(path):
+        with os.scandir(path) as entries:
+            for e in entries:
+                est = e.stat()
+                version.append((e.name, est.st_mtime_ns, est.st_size))
+    return tuple(sorted(version))
 
 
 def pinned(df: DataFrame) -> bool:

@@ -138,6 +138,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyf_aggregator_spark.functions.tokenize import tokenize_py
+from pyf_aggregator_spark.registry import table_version
 
 
 def _split_outside_backticks(s: str, sep: str) -> list[str]:
@@ -545,20 +546,6 @@ def _ranked_index(spark: SparkSession, sf_dir: str, params: dict):
 _DOCS_CACHE: dict[tuple[int, str], tuple[tuple, DataFrame]] = {}
 
 
-def _table_version(path: str) -> tuple:
-    """The mtime and size of a parquet path and, for a directory, of
-    each file in it: an overwrite that recreates the directory changes
-    the first, a file rewritten in place the second."""
-    st = os.stat(path)
-    version = [("", st.st_mtime_ns, st.st_size)]
-    if os.path.isdir(path):
-        with os.scandir(path) as entries:
-            for e in entries:
-                est = e.stat()
-                version.append((e.name, est.st_mtime_ns, est.st_size))
-    return tuple(sorted(version))
-
-
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The documents table as one frame per session and path, so a
     request runs no parquet schema-inference job. The frame is re-read
@@ -571,7 +558,7 @@ def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = f"{sf_dir}/documents.parquet"
     try:
-        version = _table_version(path)
+        version = table_version(path)
     except OSError:
         return load(spark, sf_dir, "documents")
     key = (id(spark), path)

@@ -21,9 +21,24 @@ Entry points: ``load_index`` opens a handle on either index kind;
 ``wand_topk_batch`` answers many on a single-field handle. Every
 single-query call runs the same three steps: ``_query_spec`` turns the
 query (or prefix/infix ``slot_terms``, plus ``weights`` on multifield
-handles) into plain kernel inputs, ``_kernel_input`` scans the blocks
-and unions the sentinel rows, and ``_kernel`` builds the one
-``applyInPandas`` function for the requested output kind.
+handles) into plain kernel inputs, and ``_kernel`` builds the one
+kernel function for the requested output kind. ``_local`` then picks
+one of two routes for that function:
+
+- driver: an unfiltered query whose read volume (the segment rows of
+  the files read, the scan terms' postings Σ df, the tombstone rows)
+  is at most ``_DRIVER_ROUTE_MAX_ROWS`` runs the kernel in the driver,
+  once per part, over blocks read with pyarrow from the file list that
+  ``load_index`` recorded (``_driver_answers``). No Spark job: at small
+  sizes a query is bound by job launch, not by data.
+- distributed: otherwise ``_kernel_input`` scans the blocks and unions
+  the sentinel rows, and one ``applyInPandas`` pass runs the kernel per
+  doc-range partition.
+
+The kernel function, its input rows and the snapshot are the same on
+both routes, so their answers are identical by construction.
+``wand_topk_batch`` and filtered queries always take the distributed
+route.
 """
 
 from __future__ import annotations
@@ -130,8 +145,9 @@ def _termdict_max() -> int:
     """Vocabulary sizes up to this load into an in-driver term→idf
     dictionary (the in-RAM dictionary component every inverted index
     keeps — Lucene's FST, Typesense's art tree); bigger vocabularies
-    fall back to a per-query pushed-down scan. ~60 B/term: the default
-    2M caps the dictionary at ~120 MB of driver memory."""
+    fall back to a per-query pushed-down scan. ~110 B/term with the df
+    dictionary beside it: the default 2M caps both at ~220 MB of driver
+    memory."""
     return int(os.environ.get("PYFAGG_TERMDICT_MAX", "2000000"))
 
 
@@ -140,50 +156,59 @@ def _term_stats_version(idx: dict) -> float | None:
     mtime changes on every overwrite/commit swap (incremental.py swaps
     whole staged dirs into place), so a mutated index invalidates the
     cached dictionary on the next lookup."""
-    d = idx.get("dir")
-    if not d:
-        return None
     try:
-        return os.path.getmtime(os.path.join(d, "term_stats"))
+        return os.path.getmtime(os.path.join(idx["dir"], "term_stats"))
     except OSError:
         return None
 
 
-def _term_dict(idx: dict):
-    """term→idf (single-field) or (field, term)→idf (multifield)
-    dictionary for this index, loaded ONCE per term_stats version and
-    cached on the idx handle. Returns None when the vocabulary exceeds
-    _termdict_max() — callers then use the pushed-down per-query scan.
+def _load_term_dict(idx: dict) -> tuple | None:
+    """(version, key→idf, key→df) for this index, read ONCE per
+    term_stats version with pyarrow in the driver and cached on the
+    handle; None when the vocabulary exceeds _termdict_max() (a footer
+    count, no data read). Keys are terms (single-field) or (field,
+    term) pairs (multifield).
 
     Why: every kernel query paid a whole Spark job (plan + schedule +
     parquet scan) just to fetch ≤|q| idf scalars before the real kernel
     job — half the per-query latency on the sequential path. The
     dictionary is vocabulary-sized (MB where postings are GB/TB), which
-    is exactly the piece real engines pin in RAM."""
+    is exactly the piece real engines pin in RAM. Read in the driver,
+    the first query after a reload runs no job for it either; ``df``
+    rides along so the route rule (_driver_route) needs no scan."""
+    import pyarrow.dataset as ds
+
     ver = _term_stats_version(idx)
     cached = idx.get("_term_dict")
     if cached is not None and cached[0] == ver:
-        return cached[1]
+        return cached
     if idx.get("_term_dict_too_big") == ver:
         return None
-    n = idx["term_stats"].count()
-    if n > _termdict_max():
+    data = ds.dataset(os.path.join(idx["dir"], "term_stats"), format="parquet")
+    if data.count_rows() > _termdict_max():
         idx["_term_dict_too_big"] = ver
         return None
-    # collected as Arrow columns, not Row objects: the dictionary is
-    # vocabulary-sized and rebuilt on the first query after every reload
-    multifield = "field" in idx["term_stats"].columns
-    tbl = (
-        idx["term_stats"]
-        .select(*(["field"] if multifield else []), "term", "idf")
-        .toArrow()
+    multifield = "field" in data.schema.names
+    tbl = data.to_table(
+        columns=[*(["field"] if multifield else []), "term", "idf", "df"]
     )
     keys = tbl.column("term").to_pylist()
     if multifield:
-        keys = zip(tbl.column("field").to_pylist(), keys)
-    d = dict(zip(keys, tbl.column("idf").to_pylist()))
-    idx["_term_dict"] = (ver, d)
-    return d
+        keys = list(zip(tbl.column("field").to_pylist(), keys))
+    idx["_term_dict"] = (
+        ver,
+        dict(zip(keys, tbl.column("idf").to_pylist())),
+        dict(zip(keys, tbl.column("df").to_pylist())),
+    )
+    return idx["_term_dict"]
+
+
+def _term_dict(idx: dict):
+    """term→idf (single-field) or (field, term)→idf (multifield)
+    dictionary for this index, or None when the vocabulary exceeds
+    _termdict_max() — callers then use the pushed-down per-query scan."""
+    loaded = _load_term_dict(idx)
+    return None if loaded is None else loaded[1]
 
 
 def _known_terms(idx: dict, terms: list[str]) -> set[str] | None:
@@ -788,6 +813,175 @@ def _kernel_input(
     return out
 
 
+# The driver route (see _local). A single unfiltered query whose read
+# volume is at most this many rows runs _kernel in the driver over
+# blocks read with pyarrow, and no Spark job. The volume counts every
+# segment row of the files read (each part file is one row group, so
+# the term filter reads the term column of every part), the postings
+# of the scan terms (Σ df) and the tombstone rows. Measured with
+# ``bench_extra.py --phases route --route-turns 200000`` (4-vCPU VM,
+# local[2], 2 GB driver, median of 3 calls of wand_topk_with_found):
+# perfbench's churn index (34k rows) 26 ms in the driver against 443 ms
+# distributed; the 200k-turn index (100k rows) 99 ms against 329 ms;
+# its hot-term sweep 0.79M rows 428 against 495 ms, 1.28M rows 1,180
+# against 1,183 ms (the crossover), 1.92M rows 3,010 against 2,120 ms.
+_DRIVER_ROUTE_MAX_ROWS = 1_000_000
+
+
+def _local_paths(frame: DataFrame) -> list[str] | None:
+    """The local file paths behind ``frame`` (its file listing, taken
+    when the frame was read), or None when one of them is not a local
+    file — the driver route is then off for the handle."""
+    from urllib.parse import unquote, urlparse
+
+    paths = []
+    for uri in frame.inputFiles():
+        url = urlparse(uri)
+        path = unquote(url.path)
+        if url.scheme not in ("", "file") or not os.path.isfile(path):
+            return None
+        paths.append(path)
+    return paths
+
+
+def _driver_snapshot(
+    segments: DataFrame, tombstones: DataFrame | None, ranges: dict
+) -> dict | None:
+    """What the driver route reads, fixed at load_index from the very
+    file listings the Spark frames hold, so both routes see one
+    snapshot: each segment file with its part_id, field (None on a
+    single-field index) and footer row count; the tombstone files and
+    their row count; each part's (doc_lo, doc_hi). Footer reads only,
+    no Spark job. Must be taken before the frames are cached: a cached
+    frame lists no input files."""
+    import pyarrow.parquet as pq
+    from urllib.parse import unquote
+
+    seg_paths = _local_paths(segments)
+    tomb_paths = [] if tombstones is None else _local_paths(tombstones)
+    if not seg_paths or tomb_paths is None:
+        return None
+    files = []
+    for path in seg_paths:
+        part_dir = os.path.dirname(path)
+        field_dir = os.path.basename(os.path.dirname(part_dir))
+        files.append((
+            path,
+            int(os.path.basename(part_dir).split("=", 1)[1]),
+            unquote(field_dir[6:]) if field_dir.startswith("field=") else None,
+            pq.read_metadata(path).num_rows,
+        ))
+    return {
+        "segments": files,
+        "tombstones": tomb_paths,
+        "tombstone_rows": sum(pq.read_metadata(p).num_rows for p in tomb_paths),
+        "ranges": ranges,
+    }
+
+
+def _driver_route(idx: dict, spec: dict) -> bool:
+    """The route rule: segment rows of the queried fields + Σ df of the
+    scan terms + tombstone rows ≤ _DRIVER_ROUTE_MAX_ROWS. Off when the
+    handle has no local snapshot or the vocabulary is too big for the
+    in-RAM dictionary (no df to count)."""
+    snap, loaded = idx.get("driver"), _load_term_dict(idx)
+    if snap is None or loaded is None:
+        return False
+    fields, df = spec["fields"], loaded[2]
+    keys = (
+        spec["scan_terms"] if fields is None
+        else [(f, t) for f in fields for t in spec["scan_terms"]]
+    )
+    rows = sum(
+        n for _p, _part, field, n in snap["segments"]
+        if fields is None or field in fields
+    )
+    return (
+        rows + sum(df.get(key, 0) for key in keys) + snap["tombstone_rows"]
+        <= _DRIVER_ROUTE_MAX_ROWS
+    )
+
+
+def _driver_tombstones(snap: dict) -> tuple[np.ndarray, np.ndarray]:
+    """(doc_id, scope_part) with each doc's widest scope — the
+    load_tombstones rule — read once per handle."""
+    if "_tombstones" not in snap:
+        import pyarrow.parquet as pq
+
+        ids, scopes = np.empty(0, np.int64), np.empty(0, np.int64)
+        if snap["tombstones"]:
+            tbl = pd.concat(
+                pq.read_table(p, columns=["doc_id", "scope_part"]).to_pandas()
+                for p in snap["tombstones"]
+            ).groupby("doc_id")["scope_part"].max()
+            ids = tbl.index.to_numpy(np.int64)
+            scopes = tbl.to_numpy(np.int64)
+        snap["_tombstones"] = (ids, scopes)
+    return snap["_tombstones"]
+
+
+def _tombstone_frame(part_id: int, ids: np.ndarray) -> pd.DataFrame:
+    """_sentinel_rows' tombstone rows for one part, as a pandas frame
+    with the segment columns' dtypes."""
+    n = ids.size
+    return pd.DataFrame({
+        "part_id": np.full(n, part_id, np.int32),
+        "term": [""] * n,
+        "block_id": np.full(n, TOMBSTONE_BLOCK_ID, np.int32),
+        "n": np.ones(n, np.int32),
+        "first_doc": ids,
+        "last_doc": ids,
+        "max_norm": np.zeros(n),
+        "docs_vb": [b""] * n,
+        "tfs_vb": [b""] * n,
+        "dls_vb": [b""] * n,
+    })
+
+
+def _driver_answers(idx: dict, spec: dict, kind: str, k: int) -> pd.DataFrame:
+    """_kernel run in the driver, once per part, over the part's blocks
+    of the scan terms (read with pyarrow from the load-time snapshot,
+    field-pruned and ``field␟term``-namespaced like _kernel_input) plus
+    its tombstone sentinel rows (_sentinel_rows' scope and range rule)
+    → the same per-partition answers the applyInPandas pass returns."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    snap, fields = idx["driver"], spec["fields"]
+    value_set = pa.array(spec["scan_terms"], pa.string())
+    by_part: dict[int, list[pd.DataFrame]] = {}
+    for path, part_id, field, _n in snap["segments"]:
+        if fields is not None and field not in fields:
+            continue
+        tbl = pq.read_table(path, columns=_SEG_COLS[1:])
+        tbl = tbl.filter(pc.is_in(tbl.column("term"), value_set=value_set))
+        if tbl.num_rows == 0:
+            continue
+        pdf = tbl.to_pandas()
+        if field is not None:
+            pdf["term"] = field + FIELD_SEP + pdf["term"]
+        pdf.insert(0, "part_id", np.full(len(pdf), part_id, np.int32))
+        by_part.setdefault(part_id, []).append(pdf)
+    tomb_ids, tomb_scope = _driver_tombstones(snap)
+    fn = _kernel(spec, kind, k, idx.get("bound_factor", {}), False)
+    outs = []
+    for part_id, frames in sorted(by_part.items()):
+        lo, hi = snap["ranges"][part_id]
+        dead = tomb_ids[
+            (tomb_scope > part_id) & (tomb_ids >= lo) & (tomb_ids <= hi)
+        ]
+        if dead.size:
+            frames.append(_tombstone_frame(part_id, dead))
+        outs.append(fn(pd.concat(frames, ignore_index=True)))
+    cols = {"doc_id": "int64"} if kind == "ids" else {
+        "doc_id": "int64", "raw_score": "float64"
+    }
+    if not outs:
+        return pd.DataFrame({c: pd.Series(dtype=t) for c, t in cols.items()})
+    return pd.concat(outs, ignore_index=True).astype(cols)
+
+
 from pyf_aggregator_spark.index.placement import (  # noqa: E402
     SALT_MAP_MAX_GROUPS as _SALT_MAP_MAX_PARTS,
     mm3_int as _mm3_int,
@@ -869,19 +1063,27 @@ def load_index(spark: SparkSession, index_dir: str) -> dict:
     keys, corpus = _read_corpus(spark, index_dir)
     meta = spark.read.parquet(f"{index_dir}/meta")
     bound_factor: dict[int, float] = {}
-    for r in meta.select(*keys, "part_id", "avgdl_build").collect():
+    ranges: dict[int, tuple[int, int]] = {}
+    for r in meta.select(
+        *keys, "part_id", "avgdl_build", "doc_lo", "doc_hi"
+    ).collect():
+        part = r["part_id"]
         f = corpus[r["field"] if keys else None]["avgdl"] / r["avgdl_build"]
-        bound_factor[r["part_id"]] = max(bound_factor.get(r["part_id"], 1.0), f)
-    segments, kb_expr = _partition_for_kernel(
-        spark.read.parquet(f"{index_dir}/segments"), sorted(bound_factor)
-    )
+        bound_factor[part] = max(bound_factor.get(part, 1.0), f)
+        lo, hi = ranges.get(part, (r["doc_lo"], r["doc_hi"]))
+        ranges[part] = (min(lo, r["doc_lo"]), max(hi, r["doc_hi"]))
+    segments = spark.read.parquet(f"{index_dir}/segments")
+    tombstones = load_tombstones(spark, index_dir)
+    driver = _driver_snapshot(segments, tombstones, ranges)
+    segments, kb_expr = _partition_for_kernel(segments, sorted(bound_factor))
     idx = {
         "segments": segments,
         "kb_expr": kb_expr,
         "term_stats": spark.read.parquet(f"{index_dir}/term_stats"),
         "meta_ranges": meta.select("part_id", "doc_lo", "doc_hi"),
         "bound_factor": bound_factor,
-        "tombstones": load_tombstones(spark, index_dir),
+        "tombstones": tombstones,
+        "driver": driver,
         "dir": index_dir,
     }
     if keys:
@@ -982,15 +1184,28 @@ def _query_spec(
 def _local(
     idx: dict, kind: str, query: str, mode: str,
     allowed: DataFrame | None, slot_terms, weights, k: int = 0,
-) -> DataFrame | None:
-    """Spec → kernel input → one applyInPandas pass: the per-partition
-    answers of one query, or None when it cannot match."""
-    from pyf_aggregator_spark.session import ensure_py_files
+) -> DataFrame | pd.DataFrame | None:
+    """The per-partition answers of one query, or None when it cannot
+    match. One spec, one kernel function, two routes:
 
-    ensure_py_files(idx["segments"].sparkSession)  # kernel imports this package
+    - driver: when ``allowed`` is None and _driver_route's read volume
+      is at most _DRIVER_ROUTE_MAX_ROWS, _kernel runs in the driver
+      over pyarrow-read blocks (_driver_answers) → a pandas frame. No
+      Spark job, and no package shipped to workers.
+    - distributed: otherwise spec → kernel input → one applyInPandas
+      pass → a lazy Spark frame.
+
+    Both routes run the same ``_kernel`` over the same rows of the same
+    load-time snapshot, so their answers are identical by
+    construction."""
     spec = _query_spec(idx, query, slot_terms, mode, weights)
     if spec is None:
         return None
+    if allowed is None and _driver_route(idx, spec):
+        return _driver_answers(idx, spec, kind, k)
+    from pyf_aggregator_spark.session import ensure_py_files
+
+    ensure_py_files(idx["segments"].sparkSession)  # kernel imports this package
     return (
         _kernel_input(idx, spec["scan_terms"], spec["fields"], allowed)
         .groupBy("_kb", "part_id")
@@ -999,9 +1214,27 @@ def _local(
                 spec, kind, k, idx.get("bound_factor", {}),
                 allowed is not None,
             ),
-            "doc_id long" if kind == "ids" else "doc_id long, raw_score double",
+            _ANSWER_SCHEMA[kind],
         )
     )
+
+
+_ANSWER_SCHEMA = {
+    "ids": "doc_id long",
+    "scores": "doc_id long, raw_score double",
+    "topk": "doc_id long, raw_score double",
+    "found": "doc_id long, raw_score double",
+}
+
+
+def _frame(idx: dict, local: DataFrame | pd.DataFrame, kind: str) -> DataFrame:
+    """_local's answers as a Spark frame: a driver-route answer becomes
+    a local relation (no job to create it)."""
+    if isinstance(local, pd.DataFrame):
+        return idx["segments"].sparkSession.createDataFrame(
+            local, _ANSWER_SCHEMA[kind]
+        )
+    return local
 
 
 def _rounded(local: DataFrame) -> DataFrame:
@@ -1043,7 +1276,11 @@ def wand_topk(
         return idx["segments"].sparkSession.createDataFrame(
             [], "doc_id long, score double"
         )
-    return _rounded(local).orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return (
+        _rounded(_frame(idx, local, "topk"))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+    )
 
 
 def wand_topk_with_found(
@@ -1060,19 +1297,22 @@ def wand_topk_with_found(
 
     The per-partition match counts ride the kernel output as sentinel
     rows (doc_id = COUNT_DOC_ID); the driver merges ≤ (k+1)·P rows —
-    one Spark job, no second engine, no corpus-proportional scoring
-    (VERDICT r3 "what's wrong" #2). Partitions are disjoint doc ranges,
+    one Spark job (none on the driver route), no second engine, no
+    corpus-proportional scoring (VERDICT r3 "what's wrong" #2). Partitions are disjoint doc ranges,
     so the count sum is exact. Parameters as for wand_topk."""
     local = _local(idx, "found", query, mode, allowed, slot_terms, weights, k)
     if local is None:
         return [], 0
-    rows = local.collect()
-    found = int(sum(r["raw_score"] for r in rows if r["doc_id"] == COUNT_DOC_ID))
-    cand = [
-        {"doc_id": r["doc_id"], "score": float(_rnd(r["raw_score"]))}
-        for r in rows
-        if r["doc_id"] != COUNT_DOC_ID
-    ]
+    if isinstance(local, pd.DataFrame):
+        rows = zip(local["doc_id"].tolist(), local["raw_score"].tolist())
+    else:
+        rows = [(r["doc_id"], r["raw_score"]) for r in local.collect()]
+    found, cand = 0, []
+    for doc_id, raw in rows:
+        if doc_id == COUNT_DOC_ID:
+            found += int(raw)
+        else:
+            cand.append({"doc_id": doc_id, "score": float(_rnd(raw))})
     cand.sort(key=lambda h: (-h["score"], h["doc_id"]))
     return cand[:k], found
 
@@ -1096,7 +1336,7 @@ def wand_match_ids(
     local = _local(idx, "ids", query, mode, allowed, slot_terms, weights)
     if local is None:
         return idx["segments"].sparkSession.createDataFrame([], "doc_id long")
-    return local
+    return _frame(idx, local, "ids")
 
 
 def wand_score_matches(
@@ -1119,7 +1359,7 @@ def wand_score_matches(
         return idx["segments"].sparkSession.createDataFrame(
             [], "doc_id long, score double"
         )
-    return _rounded(local)
+    return _rounded(_frame(idx, local, "scores"))
 
 
 def wand_topk_batch(

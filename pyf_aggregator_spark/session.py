@@ -10,6 +10,7 @@ via spark-submit --conf).
 from __future__ import annotations
 
 import os
+import weakref
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -17,12 +18,23 @@ from pyspark.sql import SparkSession
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
+# the SparkContexts this process has shipped the package zip to
+_SHIPPED: weakref.WeakSet = weakref.WeakSet()
+
+
 def ensure_py_files(spark: SparkSession) -> None:
     """Ship this package to Python workers (the local analog of
     ``spark-submit --py-files``). Required whenever an applyInPandas /
     mapInPandas kernel references package modules: workers unpickle the
     kernel by module reference and must be able to import it regardless
-    of their working directory."""
+    of their working directory.
+
+    The zip is added once per SparkContext: every ``addPyFile`` appends
+    to ``sc._python_includes`` (pickled into every UDF) and to
+    ``sys.path``, so a per-call add grew both with uptime."""
+    sc = spark.sparkContext
+    if sc in _SHIPPED:
+        return
     zip_path = os.path.join(
         "/tmp", f"pyf_aggregator_spark_pyfiles_{os.getpid()}.zip"
     )
@@ -40,7 +52,8 @@ def ensure_py_files(spark: SparkSession) -> None:
                     )
                     zf.write(full, rel)
         os.replace(tmp, zip_path)
-    spark.sparkContext.addPyFile(zip_path)
+    sc.addPyFile(zip_path)
+    _SHIPPED.add(sc)
 
 
 def get_spark(

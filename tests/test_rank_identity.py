@@ -145,3 +145,44 @@ def test_batch_duplicate_query_ids_pair_deterministically(corpus, spark):
         for rank, d, _ in oracle.topk(q, k=k, mode=mode)
     )
     assert got == want
+
+
+@pytest.fixture(scope="module")
+def segment_index(spark, tmp_path_factory):
+    from pyf_aggregator_spark.index.segments import build_segments
+
+    docs = assign_doc_ids(transcripts_df(spark, N_TURNS))
+    d = str(tmp_path_factory.mktemp("rank_segidx"))
+    build_segments(docs.select("doc_id", "text"), d, num_partitions=4)
+    pdf = docs.select("doc_id", "text").toPandas()
+    return d, NumpyBM25.fit(list(zip(pdf["doc_id"], pdf["text"])))
+
+
+@pytest.mark.parametrize("route", ["driver", "distributed"])
+def test_wand_rank_identity_on_both_routes(spark, segment_index, route, monkeypatch):
+    """The segment engine's top-k and found equal the NumPy oracle's on
+    the reference query set, whichever route answers the query."""
+    from conftest import count_jobs
+    from pyf_aggregator_spark.search import wand
+
+    if route == "distributed":
+        monkeypatch.setattr(wand, "_DRIVER_ROUTE_MAX_ROWS", -1)
+    d, oracle = segment_index
+    idx = wand.load_index(spark, d)
+    jobs = []
+    for q in reference_queries():
+        golden = oracle.topk(q["query"], k=q["k"], mode=q["mode"])
+        out = []
+        jobs.append(count_jobs(spark, lambda: out.append(wand.wand_topk_with_found(
+            idx, q["query"], k=q["k"], mode=q["mode"]
+        ))))
+        rows, found = out[0]
+        assert [(i + 1, r["doc_id"]) for i, r in enumerate(rows)] == [
+            (r, d) for r, d, _ in golden
+        ], q
+        for r, (_, _, s_gold) in zip(rows, golden):
+            assert r["score"] == pytest.approx(s_gold, rel=1e-6), q
+        assert found == len(oracle.topk(q["query"], k=10**9, mode=q["mode"])), q
+    # the driver route runs no job; the distributed one a kernel job for
+    # every query with an indexed term
+    assert (max(jobs) == 0) == (route == "driver"), jobs
