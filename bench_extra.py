@@ -54,7 +54,8 @@ synthetic transcript corpus at each size of ``--route-turns``. 24
 perfbench ``_mixed_queries`` run on each, then four OR queries of the
 index's 2, 4, 8 and 16 highest-df terms, which sweep the read volume.
 A last line per index gives the medians of the 24, so the crossover
-behind ``_DRIVER_ROUTE_MAX_ROWS`` is one command. ``--phases route`` runs it alone.
+behind ``_DRIVER_ROUTE_MAX_ROWS`` is one command. ``--phases route``
+runs it alone.
 """
 
 from __future__ import annotations

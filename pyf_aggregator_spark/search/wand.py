@@ -1298,8 +1298,9 @@ def wand_topk_with_found(
     The per-partition match counts ride the kernel output as sentinel
     rows (doc_id = COUNT_DOC_ID); the driver merges ≤ (k+1)·P rows —
     one Spark job (none on the driver route), no second engine, no
-    corpus-proportional scoring (VERDICT r3 "what's wrong" #2). Partitions are disjoint doc ranges,
-    so the count sum is exact. Parameters as for wand_topk."""
+    corpus-proportional scoring (VERDICT r3 "what's wrong" #2).
+    Partitions are disjoint doc ranges, so the count sum is exact.
+    Parameters as for wand_topk."""
     local = _local(idx, "found", query, mode, allowed, slot_terms, weights, k)
     if local is None:
         return [], 0

@@ -161,9 +161,8 @@ def test_kernel_calls_ship_the_package_once(spark, small_index, monkeypatch):
     SparkContext, however many kernel jobs run."""
     from pyf_aggregator_spark.session import ensure_py_files
 
-    # kernel jobs: the distributed route (an index with no driver route
-    # keeps the distributed one)
-    monkeypatch.setattr(wand, "_DRIVER_ROUTE_MAX_ROWS", -1, raising=False)
+    # the distributed route, so that every query runs a kernel job
+    monkeypatch.setattr(wand, "_DRIVER_ROUTE_MAX_ROWS", -1)
     idx = wand.load_index(spark, small_index)
     sc = spark.sparkContext
     ensure_py_files(spark)
