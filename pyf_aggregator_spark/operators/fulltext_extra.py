@@ -584,7 +584,7 @@ def ft_typesense_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from pyf_aggregator_spark.search.api import search as facade_search
-    from pyf_aggregator_spark.search.fallback import wand_topk_drop_tokens
+    from pyf_aggregator_spark.search.fallback import drop_tokens_with_found
     from pyf_aggregator_spark.search.infix import wand_topk_infix
     from pyf_aggregator_spark.search.prefix import wand_topk_prefix
     from pyf_aggregator_spark.search.typo import wand_topk_typo
@@ -614,10 +614,16 @@ def ft_typesense_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     typo = _branch(
         wand_topk_typo(idx, _TS_TYPO_Q, k=_TS_K, mode="or"), "typo"
     )
-    dropped, _used = wand_topk_drop_tokens(
+    dropped, _used, _found = drop_tokens_with_found(
         idx, _TS_DROP_Q, k=_TS_K, mode="and", threshold=1
     )
-    drop = _branch(dropped, "drop")
+    drop = _branch(
+        spark.createDataFrame(
+            [(h["doc_id"], h["score"]) for h in dropped],
+            "doc_id long, score double",
+        ),
+        "drop",
+    )
     prefix = _branch(
         wand_topk_prefix(idx, _TS_PREFIX_Q, k=_TS_K, mode="or"), "prefix"
     )

@@ -12,37 +12,7 @@ the query length, not the corpus.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
 from pyf_aggregator_spark.functions.tokenize import tokenize_py
-
-
-def wand_topk_drop_tokens(
-    idx: dict,
-    query: str,
-    k: int = 10,
-    mode: str = "and",
-    threshold: int = 1,
-    allowed: DataFrame | None = None,
-) -> tuple[DataFrame, list[str]]:
-    """→ (result, used_terms): retries with the rightmost token dropped
-    until ≥ threshold hits (or one token remains). Returns the term set
-    that produced the result so callers can surface "searched for"
-    feedback like Typesense does."""
-    from pyf_aggregator_spark.search.wand import wand_topk
-
-    terms = tokenize_py(query)
-    spark = idx["segments"].sparkSession
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double"), []
-    while True:
-        out = wand_topk(idx, " ".join(terms), k=k, mode=mode, allowed=allowed)
-        if len(terms) == 1:
-            return out, terms
-        # bounded collect: k rows max — cheap membership of "enough"
-        if len(out.limit(threshold).collect()) >= threshold:
-            return out, terms
-        terms = terms[:-1]  # right-to-left, Typesense's default
 
 
 def drop_tokens_with_found(
@@ -54,7 +24,10 @@ def drop_tokens_with_found(
     allowed=None,
     weights: dict[str, float] | None = None,
 ) -> tuple[list[dict], list[str], int]:
-    """Facade variant: → (hits, used_terms, found). Each retry is one
+    """→ (hits, used_terms, found): retries with the rightmost token
+    dropped until ≥ threshold matches (or one token remains); the term
+    set that produced the hits lets callers surface "searched for"
+    feedback like Typesense does. Each retry is one
     wand_topk_with_found pass, so the threshold check uses the EXACT
     match count (no extra probe job) and the final ``found`` is
     Typesense's — all from the same kernel passes. ``weights`` makes it

@@ -18,12 +18,15 @@ the DataFrame engine, so results stay rank-identical to the oracle.
 Entry points: ``load_index`` opens a handle on either index kind;
 ``wand_topk``, ``wand_topk_with_found``, ``wand_match_ids`` and
 ``wand_score_matches`` answer one query on either handle kind, and
-``wand_topk_batch`` answers many on a single-field handle. Every
-single-query call runs the same three steps: ``_query_spec`` turns the
-query (or prefix/infix ``slot_terms``, plus ``weights`` on multifield
+``wand_topk_batch`` answers many on a single-field handle. All five
+share one spec builder and one kernel: ``_query_spec`` turns a query
+(or prefix/infix ``slot_terms``, plus ``weights`` on multifield
 handles) into plain kernel inputs, and ``_kernel`` builds the one
-kernel function for the requested output kind. ``_local`` then picks
-one of two routes for that function:
+kernel function for the requested output kind over a list of query
+entries (a spec plus its query_id, k and filter flag). A single query
+is a list of one entry; a batch is the list of its queries, answered
+against each partition's blocks with shared decodes. ``_local`` picks
+one of two routes for a single query:
 
 - driver: an unfiltered query whose read volume (the segment rows of
   the files read, the scan terms' postings Σ df, the tombstone rows)
@@ -31,9 +34,9 @@ one of two routes for that function:
   once per part, over blocks read with pyarrow from the file list that
   ``load_index`` recorded (``_driver_answers``). No Spark job: at small
   sizes a query is bound by job launch, not by data.
-- distributed: otherwise ``_kernel_input`` scans the blocks and unions
-  the sentinel rows, and one ``applyInPandas`` pass runs the kernel per
-  doc-range partition.
+- distributed: otherwise ``_kernel_job``: ``_kernel_input`` scans the
+  blocks and unions the sentinel rows, and one ``applyInPandas`` pass
+  runs the kernel per doc-range partition.
 
 The kernel function, its input rows and the snapshot are the same on
 both routes, so their answers are identical by construction.
@@ -104,7 +107,8 @@ def _rnd(x):
 
 
 class _PartitionBlocks:
-    """Per-partition decode state shared across queries in a batch.
+    """One partition's blocks, decoded and scored once per term on first
+    use and shared by every query entry of the kernel call.
 
     ``avgdl`` is a float for single-field indexes, or a per-term dict
     for the multifield path (field-namespaced terms score under their
@@ -266,10 +270,9 @@ def _split_tombstones(
     ships every query's filter to its partitions. No driver-side set,
     no closure bloat (VERDICT r1 'what's wrong' #2).
 
-    Returns (blocks, tomb_ids, allowed_map); allowed_map is None when no
-    filter rows arrived (a filtered query with an empty per-partition
-    allow set is handled by the caller's `filtered` flag — it correctly
-    matches nothing)."""
+    Returns (blocks, tomb_ids, allowed_map); allowed_map has no entry
+    for an owner whose filter sent no rows here (the caller's
+    ``filtered`` flag then makes that query match nothing)."""
     bid = pdf["block_id"].to_numpy()
     tomb_mask = bid == TOMBSTONE_BLOCK_ID
     allow_mask = bid == ALLOWED_BLOCK_ID
@@ -278,7 +281,7 @@ def _split_tombstones(
         if tomb_mask.any()
         else np.empty(0, dtype=np.int64)
     )
-    allowed_map = None
+    allowed_map = {}
     if allow_mask.any():
         allowed_map = {
             owner: np.unique(g.to_numpy(np.int64))
@@ -610,12 +613,17 @@ def _score_matches_one_query(
     return uids, sums
 
 
-def _kernel(
-    spec: dict, kind: str, k: int, bound_factor: dict[int, float],
-    filtered: bool,
-):
-    """The single-query applyInPandas kernel: blocks of one doc-range
-    partition → the ``kind`` of local answer the caller reduces.
+def _kernel(entries: list[dict], kind: str, bound_factor: dict[int, float]):
+    """The one applyInPandas kernel: blocks of one doc-range partition →
+    the ``kind`` of local answer, for every query entry.
+
+    An entry is a ``_query_spec`` spec plus its ``query_id``, ``k`` and
+    ``filtered`` flag: the single-query entry points pass one entry
+    (query_id ''), ``wand_topk_batch`` passes all of its queries. Each
+    partition decodes one _PartitionBlocks over the entries' merged
+    idf/avgdl maps (sound on single-field handles, where idf is global
+    per term; a multifield handle only ever passes one entry) and
+    answers every entry against it, so a batch shares block decodes.
 
     - ``topk``: local top-k by block-max WAND. ``bound_factor[part_id]``
       inflates stored block maxima when the corpus avgdl grew past the
@@ -630,94 +638,74 @@ def _kernel(
       (grouped-search input: nothing is pruned, so block maxima and
       bound factors are unused).
 
-    Tombstones and the optional filter allow-set arrive as sentinel
-    rows in the same partition group (see _split_tombstones);
-    ``filtered`` marks the filter active so a partition with an EMPTY
-    allow set matches nothing instead of everything. The closure holds
+    Answer rows carry their entry's ``query_id``. Tombstones and the
+    allow-sets arrive as sentinel rows in the same partition group (see
+    _split_tombstones); an entry's allow-set is the one its query_id
+    owns, and a ``filtered`` entry with no allow-set rows in a partition
+    matches nothing there instead of everything. The closure holds
     plain Python values only — never the handle or a DataFrame."""
-    idf_map, avgdl, mode = spec["idf_map"], spec["avgdl"], spec["mode"]
-    terms, n_groups = sorted(idf_map), spec["n_groups"]
-    slots, groups = spec["slots"], spec["groups"]
-    cols = ["doc_id"] if kind == "ids" else ["doc_id", "raw_score"]
+    idf_map = {t: v for e in entries for t, v in e["idf_map"].items()}
+    avgdl = entries[0]["avgdl"]
+    if isinstance(avgdl, dict):
+        avgdl = {t: v for e in entries for t, v in e["avgdl"].items()}
+    queries = [
+        (e["query_id"], e["k"], e["filtered"], e["mode"], sorted(e["idf_map"]),
+         e["n_groups"], e["slots"], e["groups"])
+        for e in entries
+    ]
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        part_id = int(pdf["part_id"].iloc[0])
+        factor = bound_factor.get(int(pdf["part_id"].iloc[0]), 1.0)
         pdf, tomb_ids, allowed_map = _split_tombstones(pdf)
-        allowed = (allowed_map or {}).get("")
-        if filtered and allowed is None:
-            allowed = np.empty(0, dtype=np.int64)
-        if pdf.empty or (filtered and allowed.size == 0):
-            return pd.DataFrame(
-                {"doc_id": np.empty(0, np.int64), "raw_score": np.empty(0)}
-            )[cols]
-        blocks = _PartitionBlocks(pdf, idf_map, avgdl)
-        if kind == "ids":
-            return pd.DataFrame({"doc_id": _match_ids_one_query(
-                blocks, terms, mode, n_groups, tomb_ids, allowed, groups
-            )})
-        if kind == "scores":
-            ids, scores = _score_matches_one_query(
-                blocks, terms, mode, n_groups, tomb_ids, allowed, slots,
-                groups,
-            )
-            return pd.DataFrame({"doc_id": ids, "raw_score": scores})
-        hits = _topk_one_query(
-            blocks, terms, k, mode, n_groups, bound_factor.get(part_id, 1.0),
-            tomb_ids, allowed, slots, groups,
-        )
-        ids = [d for d, _ in hits]
-        scores = [s for _, s in hits]
-        if kind == "found":
-            n = _match_ids_one_query(
-                blocks, terms, mode, n_groups, tomb_ids, allowed, groups
-            ).size
-            ids.append(COUNT_DOC_ID)
-            scores.append(float(n))
-        return pd.DataFrame({"doc_id": ids, "raw_score": scores})
-
-    return fn
-
-
-def _wand_partition_batch(
-    queries: list[dict], idf_map: dict[str, float], avgdl: float,
-    bound_factor: dict[int, float],
-):
-    """Batch kernel: ALL queries against one partition's blocks — block
-    decodes shared across queries (the q/s capacity path)."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        part_id = int(pdf["part_id"].iloc[0])
-        factor = bound_factor.get(part_id, 1.0)
-        pdf, tomb_ids, allowed_map = _split_tombstones(pdf)
-        allowed_map = allowed_map or {}
-        if pdf.empty:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "raw_score": []}).astype(
-                {"query_id": "str", "doc_id": "int64", "raw_score": "float64"}
-            )
-        blocks = _PartitionBlocks(pdf, idf_map, avgdl)
         out_q, out_d, out_s = [], [], []
-        for q in queries:
-            if q.get("filtered"):
-                # per-query allow-set (§2.8 filter_by in a batch): an
-                # absent entry means NO allowed docs in this partition
-                allowed = allowed_map.get(q["query_id"])
-                if allowed is None:
-                    continue
+        blocks = None
+        for qid, k, filtered, mode, terms, n_groups, slots, groups in queries:
+            allowed = allowed_map.get(qid) if filtered else None
+            if pdf.empty or (filtered and allowed is None):
+                continue
+            if blocks is None:
+                blocks = _PartitionBlocks(pdf, idf_map, avgdl)
+            scores = None
+            if kind == "ids":
+                ids = _match_ids_one_query(
+                    blocks, terms, mode, n_groups, tomb_ids, allowed, groups
+                )
+            elif kind == "scores":
+                ids, scores = _score_matches_one_query(
+                    blocks, terms, mode, n_groups, tomb_ids, allowed, slots,
+                    groups,
+                )
             else:
-                allowed = None
-            hits = _topk_one_query(
-                blocks, q["terms"], q["k"], q["mode"], q["n_terms"],
-                factor, tomb_ids, allowed,
-            )
-            for d, s in hits:
-                out_q.append(q["query_id"])
-                out_d.append(d)
-                out_s.append(s)
-        return pd.DataFrame(
-            {"query_id": out_q, "doc_id": out_d, "raw_score": out_s}
-        )
+                hits = _topk_one_query(
+                    blocks, terms, k, mode, n_groups, factor, tomb_ids,
+                    allowed, slots, groups,
+                )
+                ids = [d for d, _ in hits]
+                scores = [s for _, s in hits]
+                if kind == "found":
+                    ids.append(COUNT_DOC_ID)
+                    scores.append(float(_match_ids_one_query(
+                        blocks, terms, mode, n_groups, tomb_ids, allowed,
+                        groups,
+                    ).size))
+            out_q.append(np.full(len(ids), qid, dtype=object))
+            out_d.append(np.asarray(ids, dtype=np.int64))
+            if scores is not None:
+                out_s.append(np.asarray(scores, dtype=np.float64))
+        return _answer_frame(kind, out_q, out_d, out_s)
 
     return fn
+
+
+def _answer_frame(kind: str, qids: list, ids: list, scores: list) -> pd.DataFrame:
+    """Per-entry answer arrays → the kernel's typed answer frame."""
+    out = {
+        "query_id": np.concatenate([np.empty(0, object), *qids]),
+        "doc_id": np.concatenate([np.empty(0, np.int64), *ids]),
+    }
+    if kind != "ids":
+        out["raw_score"] = np.concatenate([np.empty(0), *scores])
+    return pd.DataFrame(out)
 
 
 _SEG_COLS = [
@@ -938,18 +926,19 @@ def _tombstone_frame(part_id: int, ids: np.ndarray) -> pd.DataFrame:
     })
 
 
-def _driver_answers(idx: dict, spec: dict, kind: str, k: int) -> pd.DataFrame:
-    """_kernel run in the driver, once per part, over the part's blocks
-    of the scan terms (read with pyarrow from the load-time snapshot,
-    field-pruned and ``field␟term``-namespaced like _kernel_input) plus
-    its tombstone sentinel rows (_sentinel_rows' scope and range rule)
-    → the same per-partition answers the applyInPandas pass returns."""
+def _driver_answers(idx: dict, entry: dict, kind: str) -> pd.DataFrame:
+    """_kernel run in the driver on one entry, once per part, over the
+    part's blocks of the scan terms (read with pyarrow from the
+    load-time snapshot, field-pruned and ``field␟term``-namespaced like
+    _kernel_input) plus its tombstone sentinel rows (_sentinel_rows'
+    scope and range rule) → the same per-partition answers the
+    applyInPandas pass returns."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    snap, fields = idx["driver"], spec["fields"]
-    value_set = pa.array(spec["scan_terms"], pa.string())
+    snap, fields = idx["driver"], entry["fields"]
+    value_set = pa.array(entry["scan_terms"], pa.string())
     by_part: dict[int, list[pd.DataFrame]] = {}
     for path, part_id, field, _n in snap["segments"]:
         if fields is not None and field not in fields:
@@ -964,7 +953,7 @@ def _driver_answers(idx: dict, spec: dict, kind: str, k: int) -> pd.DataFrame:
         pdf.insert(0, "part_id", np.full(len(pdf), part_id, np.int32))
         by_part.setdefault(part_id, []).append(pdf)
     tomb_ids, tomb_scope = _driver_tombstones(snap)
-    fn = _kernel(spec, kind, k, idx.get("bound_factor", {}), False)
+    fn = _kernel([entry], kind, idx.get("bound_factor", {}))
     outs = []
     for part_id, frames in sorted(by_part.items()):
         lo, hi = snap["ranges"][part_id]
@@ -974,12 +963,7 @@ def _driver_answers(idx: dict, spec: dict, kind: str, k: int) -> pd.DataFrame:
         if dead.size:
             frames.append(_tombstone_frame(part_id, dead))
         outs.append(fn(pd.concat(frames, ignore_index=True)))
-    cols = {"doc_id": "int64"} if kind == "ids" else {
-        "doc_id": "int64", "raw_score": "float64"
-    }
-    if not outs:
-        return pd.DataFrame({c: pd.Series(dtype=t) for c, t in cols.items()})
-    return pd.concat(outs, ignore_index=True).astype(cols)
+    return pd.concat([_answer_frame(kind, [], [], []), *outs], ignore_index=True)
 
 
 from pyf_aggregator_spark.index.placement import (  # noqa: E402
@@ -1103,10 +1087,13 @@ def _query_spec(
     slot_terms: list[list[str]] | None,
     mode: str,
     weights: dict[str, float] | None,
+    idf: dict | None = None,
 ) -> dict | None:
     """The one spec builder: a query → plain-Python kernel inputs, or
     None when the query cannot match (no term present; and-mode with a
-    token group that has no live member).
+    token group that has no live member). ``idf`` is an _idf_lookup
+    result that already covers the query's terms (the batch looks up
+    the union of its queries' terms once); None looks them up here.
 
     Token groups come from ``slot_terms`` (prefix/infix expansion sets)
     or one singleton group per distinct query token. A term may belong
@@ -1146,7 +1133,7 @@ def _query_spec(
         return None
     n_groups = len(slot_terms)
     fields = sorted(weights) if mf else None
-    present = _idf_lookup(idx, list(term_groups), fields)
+    present = _idf_lookup(idx, list(term_groups), fields) if idf is None else idf
     idf_map, slots, groups = {}, {}, {}
     avgdl = {} if mf else idx["avgdl"]
     for fi, fld in enumerate(fields or [None]):
@@ -1186,14 +1173,13 @@ def _local(
     allowed: DataFrame | None, slot_terms, weights, k: int = 0,
 ) -> DataFrame | pd.DataFrame | None:
     """The per-partition answers of one query, or None when it cannot
-    match. One spec, one kernel function, two routes:
+    match. One spec, one kernel entry (query_id ''), two routes:
 
     - driver: when ``allowed`` is None and _driver_route's read volume
       is at most _DRIVER_ROUTE_MAX_ROWS, _kernel runs in the driver
       over pyarrow-read blocks (_driver_answers) → a pandas frame. No
       Spark job, and no package shipped to workers.
-    - distributed: otherwise spec → kernel input → one applyInPandas
-      pass → a lazy Spark frame.
+    - distributed: otherwise _kernel_job → a lazy Spark frame.
 
     Both routes run the same ``_kernel`` over the same rows of the same
     load-time snapshot, so their answers are identical by
@@ -1201,20 +1187,28 @@ def _local(
     spec = _query_spec(idx, query, slot_terms, mode, weights)
     if spec is None:
         return None
+    entry = dict(spec, query_id="", k=k, filtered=allowed is not None)
     if allowed is None and _driver_route(idx, spec):
-        return _driver_answers(idx, spec, kind, k)
+        return _driver_answers(idx, entry, kind)
+    return _kernel_job(idx, [entry], kind, allowed)
+
+
+def _kernel_job(
+    idx: dict, entries: list[dict], kind: str, allowed: DataFrame | None
+) -> DataFrame:
+    """The distributed route: kernel input over the entries' scan terms
+    (and allow-set sentinels) → one applyInPandas pass of _kernel → a
+    lazy frame of (query_id, answer columns)."""
     from pyf_aggregator_spark.session import ensure_py_files
 
     ensure_py_files(idx["segments"].sparkSession)  # kernel imports this package
+    scan_terms = list(dict.fromkeys(t for e in entries for t in e["scan_terms"]))
     return (
-        _kernel_input(idx, spec["scan_terms"], spec["fields"], allowed)
+        _kernel_input(idx, scan_terms, entries[0]["fields"], allowed)
         .groupBy("_kb", "part_id")
         .applyInPandas(
-            _kernel(
-                spec, kind, k, idx.get("bound_factor", {}),
-                allowed is not None,
-            ),
-            _ANSWER_SCHEMA[kind],
+            _kernel(entries, kind, idx.get("bound_factor", {})),
+            f"query_id string, {_ANSWER_SCHEMA[kind]}",
         )
     )
 
@@ -1228,13 +1222,14 @@ _ANSWER_SCHEMA = {
 
 
 def _frame(idx: dict, local: DataFrame | pd.DataFrame, kind: str) -> DataFrame:
-    """_local's answers as a Spark frame: a driver-route answer becomes
-    a local relation (no job to create it)."""
+    """One query's _local answers as a Spark frame without the query_id
+    column: a driver-route answer becomes a local relation (no job to
+    create it)."""
     if isinstance(local, pd.DataFrame):
         return idx["segments"].sparkSession.createDataFrame(
-            local, _ANSWER_SCHEMA[kind]
+            local.drop(columns="query_id"), _ANSWER_SCHEMA[kind]
         )
-    return local
+    return local.drop("query_id")
 
 
 def _rounded(local: DataFrame) -> DataFrame:
@@ -1367,12 +1362,14 @@ def wand_topk_batch(
     idx: dict, queries: list[dict], num_typos: int = 0
 ) -> DataFrame:
     """Batch segment-path execution: [{query_id, query, mode, k,
-    allowed?}] → DataFrame(query_id, rank, doc_id, score), ONE Spark job
-    for the whole set. The segment scan filters on the union of all
-    query terms (pushed down), each partition answers every query
-    against its blocks with shared decodes, and a per-query window takes
-    the final top-k. ``query_id`` must be unique in the batch
-    (ValueError otherwise).
+    allowed?}] → DataFrame(query_id, rank, doc_id, score), ONE kernel
+    job for the whole set. Every query becomes a ``_query_spec`` entry
+    (one idf lookup over the union of the batch's terms); the single
+    query path's kernel job then scans the union of their terms (pushed
+    down), each partition answers every entry against its blocks with
+    shared decodes, and a per-query window takes the final top-k.
+    Single-field handles only (ValueError on a multifield one).
+    ``query_id`` must be unique in the batch (ValueError otherwise).
 
     ``allowed`` (optional per query, DataFrame of doc_id) is the §2.8
     filter_by pushdown on the batch path: every query's allow-set rides
@@ -1391,15 +1388,12 @@ def wand_topk_batch(
 
     from pyspark.sql import Window
 
-    from pyf_aggregator_spark.session import ensure_py_files
-
     # a repeated id would give ``ks`` two rows for it: the join below
     # doubles every hit and one window ranks both queries' hits together
     dup = [i for i, n in Counter(q["query_id"] for q in queries).items() if n > 1]
     if dup:
         raise ValueError(f"wand_topk_batch: duplicate query_id {dup}")
     spark = idx["segments"].sparkSession
-    ensure_py_files(spark)
 
     queries = [dict(q) for q in queries]
     if num_typos > 0:
@@ -1411,53 +1405,36 @@ def wand_topk_batch(
         for q, toks in zip(queries, fixed):
             q["query"] = " ".join(toks)
 
-    all_terms = sorted(
-        {t for q in queries for t in set(tokenize_py(q["query"]))}
+    # one idf lookup over the union of the batch's terms
+    idf = _idf_lookup(
+        idx, sorted({t for q in queries for t in tokenize_py(q["query"])})
     )
-    idf_map = _idf_lookup(idx, all_terms)
-    qspec = []
-    allow_parts = []
+    entries, allow_parts = [], []
     for q in queries:
-        terms = sorted(set(tokenize_py(q["query"])))
-        present = [t for t in terms if t in idf_map]
-        if not present or (q["mode"] == "and" and len(present) < len(terms)):
+        spec = _query_spec(idx, q["query"], None, q["mode"], None, idf)
+        if spec is None:
             continue  # zero-hit by construction
-        qspec.append(
-            {
-                "query_id": q["query_id"],
-                "terms": present,
-                "mode": q["mode"],
-                "k": q.get("k", 10),
-                "n_terms": len(terms),
-                "filtered": q.get("allowed") is not None,
-            }
-        )
-        if q.get("allowed") is not None:
+        filtered = q.get("allowed") is not None
+        entries.append(dict(
+            spec, query_id=q["query_id"], k=q.get("k", 10), filtered=filtered
+        ))
+        if filtered:
             allow_parts.append(
                 q["allowed"].select(
                     F.col("doc_id").cast("long").alias("doc_id"),
                     F.lit(q["query_id"]).alias("owner"),
                 )
             )
-    if not qspec:
+    if not entries:
         return spark.createDataFrame(
             [], "query_id string, rank int, doc_id long, score double"
         )
     allowed = None
-    if allow_parts:
-        allowed = allow_parts[0]
-        for a in allow_parts[1:]:
-            allowed = allowed.unionByName(a)
-    local = _kernel_input(idx, list(idf_map), allowed=allowed).groupBy(
-        "_kb", "part_id"
-    ).applyInPandas(
-        _wand_partition_batch(
-            qspec, idf_map, idx["avgdl"], idx.get("bound_factor", {})
-        ),
-        "query_id string, doc_id long, raw_score double",
-    )
+    for a in allow_parts:
+        allowed = a if allowed is None else allowed.unionByName(a)
+    local = _kernel_job(idx, entries, "topk", allowed)
     ks = spark.createDataFrame(
-        [(q["query_id"], q["k"]) for q in qspec], "query_id string, k int"
+        [(e["query_id"], e["k"]) for e in entries], "query_id string, k int"
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("doc_id")

@@ -9,6 +9,8 @@ via spark-submit --conf).
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import weakref
 import zipfile
@@ -20,6 +22,13 @@ _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 
 # the SparkContexts this process has shipped the package zip to
 _SHIPPED: weakref.WeakSet = weakref.WeakSet()
+# the zip this process has built (its path carries the pid)
+_BUILT: set[str] = set()
+
+
+def _remove(path: str) -> None:
+    with contextlib.suppress(OSError):  # a caller may have removed it
+        os.remove(path)
 
 
 def ensure_py_files(spark: SparkSession) -> None:
@@ -38,8 +47,11 @@ def ensure_py_files(spark: SparkSession) -> None:
     zip_path = os.path.join(
         "/tmp", f"pyf_aggregator_spark_pyfiles_{os.getpid()}.zip"
     )
-    # rebuilt once per process so code edits never ship a stale zip
-    if not os.path.exists(zip_path):
+    # built the first time this process ships it, over any file already
+    # at the path (an earlier process with the same pid may have left
+    # its own code there), and removed at interpreter exit, not sooner:
+    # local executors fetch the file by its path on their first task
+    if zip_path not in _BUILT:
         tmp = zip_path + ".tmp"
         with zipfile.ZipFile(tmp, "w") as zf:
             for root, _dirs, files in os.walk(_PKG_DIR):
@@ -52,6 +64,8 @@ def ensure_py_files(spark: SparkSession) -> None:
                     )
                     zf.write(full, rel)
         os.replace(tmp, zip_path)
+        atexit.register(_remove, zip_path)
+        _BUILT.add(zip_path)
     sc.addPyFile(zip_path)
     _SHIPPED.add(sc)
 

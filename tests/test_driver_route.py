@@ -104,6 +104,29 @@ def test_routes_identical_after_upsert_and_delete(
             driver = _answers(*args)
             _distributed(m)
             assert _answers(*args) == driver, (query, mode, k, slot_terms)
+    # the batch runs the same kernel: each of its queries ranks as the
+    # single query does over the mutated index
+    plain = {
+        f"q{i}": (" ".join(terms), mode, k)
+        for i, (terms, mode, k, slotted) in enumerate(queries)
+        if not slotted and not multifield
+    }
+    if plain:
+        batch = wand.wand_topk_batch(idx, [
+            {"query_id": qid, "query": query, "mode": mode, "k": k}
+            for qid, (query, mode, k) in plain.items()
+        ]).collect()
+        for qid, (query, mode, k) in plain.items():
+            got = sorted(
+                (r["rank"], r["doc_id"], r["score"])
+                for r in batch if r["query_id"] == qid
+            )
+            want = [
+                (rank, r["doc_id"], r["score"]) for rank, r in enumerate(
+                    wand.wand_topk(idx, query, k=k, mode=mode).collect(), 1
+                )
+            ]
+            assert got == want, (query, mode, k)
 
 
 @pytest.fixture(scope="module")
@@ -171,3 +194,49 @@ def test_kernel_calls_ship_the_package_once(spark, small_index, monkeypatch):
         wand.wand_topk_with_found(idx, q)
         ensure_py_files(spark)
     assert (len(sc._python_includes), len(sys.path)) == sizes
+
+
+_SHIP_PROBE = """
+import json, os, zipfile
+from pyf_aggregator_spark import session
+
+# what an earlier process with this pid could have left at the path
+stale = f"/tmp/pyf_aggregator_spark_pyfiles_{os.getpid()}.zip"
+with zipfile.ZipFile(stale, "w") as zf:
+    zf.writestr("stale.py", "")
+
+class Context:
+    def addPyFile(self, path):
+        with zipfile.ZipFile(path) as zf:
+            print(json.dumps({"path": path, "names": zf.namelist()}))
+
+class Session:
+    sparkContext = Context()
+
+session.ensure_py_files(Session())
+"""
+
+
+def test_shipped_zip_is_built_by_its_process_and_removed_at_exit():
+    """A file left at the zip's path is overwritten with this process's
+    package, not shipped as it is, and the zip is gone once the process
+    has exited."""
+    import json
+    import os
+    import subprocess
+
+    import pyf_aggregator_spark
+
+    root = os.path.dirname(os.path.dirname(pyf_aggregator_spark.__file__))
+    out = subprocess.run(
+        [sys.executable, "-c", _SHIP_PROBE], capture_output=True, text=True,
+        env={**os.environ, "PYTHONPATH": root}, check=True, timeout=120,
+    ).stdout
+    shipped = json.loads(out.strip().splitlines()[-1])
+    try:
+        assert "pyf_aggregator_spark/search/wand.py" in shipped["names"]
+        assert "stale.py" not in shipped["names"]
+        assert not os.path.exists(shipped["path"])
+    finally:
+        if os.path.exists(shipped["path"]):
+            os.remove(shipped["path"])

@@ -163,24 +163,22 @@ def test_prefix_no_completion_no_hits(prefix_idx):
 def test_drop_tokens_fallback(prefix_idx):
     """An over-specified AND query falls back by dropping tokens
     right-to-left until hits appear (Typesense drop_tokens_threshold)."""
-    from pyf_aggregator_spark.search.fallback import wand_topk_drop_tokens
+    from pyf_aggregator_spark.search.fallback import drop_tokens_with_found
 
     _, idx = prefix_idx
     # "plone api zzzq" has zero AND hits; dropping zzzq leaves a real
     # conjunction
-    out, used = wand_topk_drop_tokens(idx, "plone api zzzq", k=10)
+    hits, used, _found = drop_tokens_with_found(idx, "plone api zzzq", k=10)
     assert used == ["plone", "api"]
-    rows = out.collect()
+    rows = [(h["doc_id"], h["score"]) for h in hits]
     assert len(rows) > 0
     # full match short-circuits without dropping
-    out2, used2 = wand_topk_drop_tokens(idx, "plone api", k=10)
+    hits2, used2, _found2 = drop_tokens_with_found(idx, "plone api", k=10)
     assert used2 == ["plone", "api"]
-    assert [(r["doc_id"], r["score"]) for r in out2.collect()] == [
-        (r["doc_id"], r["score"]) for r in rows
-    ]
+    assert [(h["doc_id"], h["score"]) for h in hits2] == rows
     # all-garbage bottoms out at one token with zero hits
-    out3, used3 = wand_topk_drop_tokens(idx, "zzzq yyxx", k=5)
-    assert used3 == ["zzzq"] and out3.collect() == []
+    hits3, used3, _found3 = drop_tokens_with_found(idx, "zzzq yyxx", k=5)
+    assert used3 == ["zzzq"] and hits3 == []
 
 
 def test_highlight_and_snippet(spark):

@@ -135,6 +135,36 @@ def test_wand_batch_rejects_duplicate_query_ids(built):
         wand_topk_batch(idx, qs)
 
 
+def test_wand_batch_job_count(built, tmp_path, monkeypatch):
+    """A batch is one idf lookup over the union of its terms and one
+    kernel job. Its job count is pinned; with the term dictionary off,
+    where every lookup is a term_stats scan job, a 3-query batch runs
+    exactly the jobs of a 1-query batch. The index is built here: a
+    segment frame another test cached would serve this one's plan too
+    and save its input exchange."""
+    from conftest import count_jobs
+    from pyf_aggregator_spark.search.wand import wand_topk_batch
+
+    spark, docs, _, _, _ = built
+    index_dir = str(tmp_path / "batchjobs")
+    build_segments(docs, index_dir, num_partitions=4)
+    qs = [
+        {"query_id": "a", "query": "w00000 w00001", "mode": "or", "k": 5},
+        {"query_id": "b", "query": "w00002", "mode": "or", "k": 5},
+        {"query_id": "c", "query": "w00003 w00004", "mode": "and", "k": 5},
+    ]
+
+    def jobs(idx, batch):
+        return count_jobs(spark, lambda: wand_topk_batch(idx, batch).collect())
+
+    idx = load_index(spark, index_dir)
+    jobs(idx, qs)  # loads the term dictionary
+    assert jobs(idx, qs) == 4
+    monkeypatch.setenv("PYFAGG_TERMDICT_MAX", "0")
+    idx = load_index(spark, index_dir)
+    assert jobs(idx, qs) == jobs(idx, qs[:1])
+
+
 def test_query_spec_slots_only_when_a_term_is_shared(built):
     """Plain queries keep the kernel's no-slots/no-groups path; a term
     in two groups (a repeated token under prefix) keeps its slots, so it
