@@ -10,7 +10,7 @@ reproducible.
 Usage:
     python bench_extra.py [--sf-dir DIR] [--turns N] [--phases a,b,c]
 Phases: build_parts, cache_parts, batch, wand_lat, headline, facade, upsert,
-typo, route
+typo, route, vocab
 
 ``facade`` prints one JSON line with the seconds (min and median of
 ``--repeats``, at least 3) and Spark jobs of one facade ``search()``
@@ -42,6 +42,18 @@ vocabulary is perfbench's seed-1 corpus (5k turns), or with
 ``--typo-vocab N`` a synthetic N-term one (random words over 16
 letters, df 1–100, the same shapes over its terms). ``--phases typo``
 runs it alone.
+
+``vocab`` loads the driver vocabulary (search/vocab.py) once and
+prints one JSON line: the load's milliseconds, the driver's resident
+set growth right after it and 3 s later (and per term, from the
+latter), then per probe kind (a 3-letter
+prefix, a 1-letter prefix, a 3-letter infix, 60 exact terms in one
+call, and the split-join candidates of a 3-token query) the median
+milliseconds of ``--repeats`` (at least 3) and the Spark jobs, from
+the driver table and from the Spark fallback (``PYFAGG_TERMDICT_MAX``
+set to 0), and whether the two answered alike. The vocabulary is
+perfbench's seed-1 index (5k turns), or with ``--typo-vocab N`` the
+typo phase's synthetic N-term one. ``--phases vocab`` runs it alone.
 
 ``route`` times each single query on both routes of ``wand.py::_local``
 and prints one JSON line per query: the read volume the route rule
@@ -225,6 +237,37 @@ def _rss_mb() -> float:
     return round(kb / 1024, 1)
 
 
+def _synthetic_term_stats(spark, vocab_size: int, index_dir: str):
+    """Write and read back a synthetic term_stats of up to
+    ``vocab_size`` terms (duplicate words dropped): words of 5–12
+    letters over a–p, so misspellings have neighbors, df 1–100."""
+    from pyspark.sql import functions as F
+
+    word = F.translate(
+        F.substring(F.sha2(F.col("id").cast("string"), 256), 1, 5 + F.col("id") % 8),
+        "0123456789", "ghijklmnop",
+    )
+    df = 1 + F.col("id") % 100
+    spark.range(vocab_size).select(
+        word.alias("term"), df.alias("df"), F.log(1.0 + vocab_size / df).alias("idf")
+    ).dropDuplicates(["term"]).write.parquet(f"{index_dir}/term_stats")
+    return spark.read.parquet(f"{index_dir}/term_stats")
+
+
+def _perfbench_index(spark, work: str, index_dir: str):
+    """perfbench's seed-1 inputs (5k turns) and a segment index over
+    their documents at ``index_dir``."""
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
+    from inputs import load_inputs
+
+    from pyf_aggregator_spark.index.segments import build_segments
+
+    inp = load_inputs(os.path.join(work, "inputs"), 1, 5_000)
+    docs = spark.read.parquet(inp.documents).select("doc_id", "text")
+    build_segments(docs, index_dir, lineage="bx")
+    return inp
+
+
 def typo_phase(spark, vocab_size: int, repeats: int) -> dict:
     """Seconds and Spark jobs per ``correct_terms`` call, batch- and
     fuzzy-shaped, on perfbench's seed-1 corpus (``vocab_size`` 0) or on
@@ -234,28 +277,17 @@ def typo_phase(spark, vocab_size: int, repeats: int) -> dict:
 
     import numpy as np
     import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
 
-    from pyf_aggregator_spark.index.segments import build_segments
     from pyf_aggregator_spark.search.typo import correct_terms, write_deletion_table
-    from pyf_aggregator_spark.search.wand import _known_terms, load_index
+    from pyf_aggregator_spark.search.vocab import known_terms
+    from pyf_aggregator_spark.search.wand import load_index
 
     sc = spark.sparkContext
     work = tempfile.mkdtemp(prefix="pyfagg_bx_typo_")
     index_dir = os.path.join(work, "index")
     try:
         if vocab_size:
-            # words of 5–12 letters over a–p, so misspellings have neighbors
-            word = F.translate(
-                F.substring(F.sha2(F.col("id").cast("string"), 256), 1,
-                            5 + F.col("id") % 8),
-                "0123456789", "ghijklmnop",
-            )
-            term_stats = spark.range(vocab_size).select(
-                word.alias("term"), (1 + F.col("id") % 100).alias("df")
-            ).dropDuplicates(["term"])
-            term_stats.write.parquet(f"{index_dir}/term_stats")
-            term_stats = spark.read.parquet(f"{index_dir}/term_stats")
+            term_stats = _synthetic_term_stats(spark, vocab_size, index_dir)
             pool = sorted(pq.read_table(
                 f"{index_dir}/term_stats", columns=["term"]
             ).column("term").to_pylist())
@@ -268,13 +300,9 @@ def typo_phase(spark, vocab_size: int, repeats: int) -> dict:
             def known(toks):
                 return {t for t in toks if t in vocab}
         else:
-            sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
-            from inputs import load_inputs
+            inp = _perfbench_index(spark, work, index_dir)
             from workloads import _batch
 
-            inp = load_inputs(os.path.join(work, "inputs"), 1, 5_000)
-            docs = spark.read.parquet(inp.documents).select("doc_id", "text")
-            build_segments(docs, index_dir, lineage="bx")
             idx = load_index(spark, index_dir)
             term_stats = idx["term_stats"]
             rng = inp.rng("search")
@@ -284,7 +312,7 @@ def typo_phase(spark, vocab_size: int, repeats: int) -> dict:
             fuzzy = [f"{t1}x", t2]
 
             def known(toks):
-                return _known_terms(idx, toks)
+                return known_terms(idx, toks)
         write_deletion_table(term_stats, index_dir)
         rss_before = _rss_mb()
         res = {"phase": "typo", "vocab": "synthetic" if vocab_size else "perfbench-seed1",
@@ -313,6 +341,92 @@ def typo_phase(spark, vocab_size: int, repeats: int) -> dict:
         res["driver_peak_rss_mb"] = round(
             resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024, 1)
     finally:
+        shutil.rmtree(work, ignore_errors=True)
+    print(json.dumps(res))
+    return res
+
+
+def vocab_phase(spark, vocab_size: int, repeats: int) -> dict:
+    """Load cost of the driver vocabulary (search/vocab.py) and the ms
+    and Spark jobs per probe kind, from the driver table and from the
+    Spark fallback above the cap, on perfbench's seed-1 index
+    (``vocab_size`` 0) or a synthetic ``vocab_size``-term vocabulary.
+    Prints one JSON line."""
+    import gc
+    import statistics
+
+    from pyspark.sql import functions as F
+
+    from pyf_aggregator_spark.search import splitjoin, vocab
+    from pyf_aggregator_spark.search.wand import load_index
+
+    sc = spark.sparkContext
+    work = tempfile.mkdtemp(prefix="pyfagg_bx_vocab_")
+    index_dir = os.path.join(work, "index")
+    old_cap = os.environ.get("PYFAGG_TERMDICT_MAX")
+    try:
+        if vocab_size:
+            idx = {"dir": index_dir,
+                   "term_stats": _synthetic_term_stats(spark, vocab_size, index_dir)}
+        else:
+            _perfbench_index(spark, work, index_dir)
+            idx = load_index(spark, index_dir)
+        n_terms = idx["term_stats"].count()
+        # probe tokens from the 1000 highest-df terms, read in Spark so
+        # the driver's resident set holds no vocabulary before the load
+        top = [r["term"] for r in idx["term_stats"].orderBy(
+            F.desc("df"), F.asc("term")).limit(1000).collect()]
+        probes = {
+            "prefix": [("prefix", top[500][:3])],
+            "prefix_1char": [("prefix", top[0][:1])],
+            "infix": [("infix", top[500][1:4])],
+            "exact_60": [("exact", t) for t in top[::16][:60]],
+        }
+        sj_toks = [top[10] + top[20], top[30], top[40]]
+        gc.collect()
+        rss_before = _rss_mb()
+        t0 = time.monotonic()
+        vocab.load(idx)
+        load_ms = (time.monotonic() - t0) * 1e3
+        gc.collect()
+        rss_delta = _rss_mb() - rss_before
+        time.sleep(3)  # the allocator returns the load's freed temporaries
+        rss_settled = _rss_mb() - rss_before
+        res = {"phase": "vocab",
+               "vocab": f"synthetic-{vocab_size}" if vocab_size else "perfbench-seed1",
+               "n_terms": n_terms, "load_ms": round(load_ms, 1),
+               "rss_delta_mb": round(rss_delta, 1),
+               "rss_settled_mb": round(rss_settled, 1),
+               "bytes_per_term": round(rss_settled * 2**20 / n_terms, 1)}
+        calls = {kind: (lambda p=p: vocab.probe(idx, p)) for kind, p in probes.items()}
+        calls["splitjoin"] = lambda: splitjoin.vocab_probe(idx, sj_toks)
+        answers = {}
+        for route, cap in (("driver", old_cap), ("fallback", "0")):
+            if cap is None:
+                os.environ.pop("PYFAGG_TERMDICT_MAX", None)
+            else:
+                os.environ["PYFAGG_TERMDICT_MAX"] = cap
+            idx.pop("_vocab", None)
+            vocab.load(idx)
+            for kind, call in calls.items():
+                times = []
+                with stage_jobs(sc, f"bx-vocab-{kind}-{route}-{os.getpid()}") as (enter, jobs):
+                    for rep in range(max(repeats, 3)):
+                        enter(str(rep))
+                        t0 = time.monotonic()
+                        answers[(kind, route)] = call()
+                        times.append(time.monotonic() - t0)
+                res.setdefault(kind, {})[route] = {
+                    "ms_median": round(statistics.median(times) * 1e3, 2),
+                    "jobs": max(jobs.values()),
+                }
+        for kind in calls:
+            res[kind]["identical"] = answers[(kind, "driver")] == answers[(kind, "fallback")]
+    finally:
+        if old_cap is None:
+            os.environ.pop("PYFAGG_TERMDICT_MAX", None)
+        else:
+            os.environ["PYFAGG_TERMDICT_MAX"] = old_cap
         shutil.rmtree(work, ignore_errors=True)
     print(json.dumps(res))
     return res
@@ -401,7 +515,7 @@ def route_phase(spark, turns: list[int], repeats: int) -> list[dict]:
     from pyf_aggregator_spark.index import incremental
     from pyf_aggregator_spark.index.builder import assign_doc_ids
     from pyf_aggregator_spark.index.segments import build_segments
-    from pyf_aggregator_spark.search import wand
+    from pyf_aggregator_spark.search import vocab, wand
 
     sc = spark.sparkContext
     work = tempfile.mkdtemp(prefix="pyfagg_bx_route_")
@@ -433,7 +547,8 @@ def route_phase(spark, turns: list[int], repeats: int) -> list[dict]:
             idx = wand.load_index(spark, index_dir)
             snap = idx["driver"]
             seg_rows = sum(f[3] for f in snap["segments"])
-            df = wand._load_term_dict(idx)[2]
+            summed = vocab.load(idx).summed
+            df = dict(zip(summed["term"].to_pylist(), summed["df"].to_pylist()))
             # and the hottest terms, 2 to 16 of them in one query, so
             # the read volume sweeps past the crossover
             hot = sorted(df, key=df.get, reverse=True)
@@ -508,6 +623,13 @@ def main() -> None:
         out["typo_batch"] = res["batch"]["s_median"]
         out["typo_fuzzy"] = res["fuzzy"]["s_median"]
         if phases == {"typo"}:
+            spark.stop()
+            return
+
+    if "vocab" in phases:
+        res = vocab_phase(spark, args.typo_vocab, args.repeats)
+        out["vocab_load_ms"] = res["load_ms"]
+        if phases == {"vocab"}:
             spark.stop()
             return
 

@@ -760,18 +760,17 @@ def ft_mf_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
       best matched word per (doc, field), fields sum under their
       weights (same slot shape as prefix);
     - ``join`` / ``split``: split_join_tokens=fallback through the
-      FACADE with query_by — the rewrite probes the artifact's
-      summed-df vocabulary and the retried query runs the weighted
-      multifield kernel; the oracle replays the zero-hit gate and the
+      FACADE with query_by — the rewrite probes the summed-df
+      vocabulary and the retried query runs the weighted multifield
+      kernel; the oracle replays the zero-hit gate and the
       df-chosen rewrite from mfvocab in SQL
       (oracle/sql.py::split_join_multifield_sql)."""
     from pyf_aggregator_spark.functions.tokenize import tokenize_py
     from pyf_aggregator_spark.search.fallback import drop_tokens_with_found
-    from pyf_aggregator_spark.search.infix import expand_infix
-    from pyf_aggregator_spark.search.prefix import expand_prefix
+    from pyf_aggregator_spark.search.infix import infix_slot_terms
+    from pyf_aggregator_spark.search.prefix import prefix_slot_terms
     from pyf_aggregator_spark.search.typo import correct_queries
     mf = documents_multifield_index(spark, sf_dir)
-    sum_stats = mf["term_stats"].groupBy("term").agg(F.sum("df").alias("df"))
 
     and_side = wand_topk(
         mf, _MF_AND_Q, k=_MF_K, mode="and", weights=_5F_WEIGHTS
@@ -785,11 +784,8 @@ def ft_mf_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id long, score double",
     ).select(F.lit("drop").alias("behavior"), "doc_id", "score")
 
-    *fixed, last = tokenize_py(_MF_PREFIX_Q)
-    expansions = expand_prefix(sum_stats, last) or [last]
-    slot_terms = [[t] for t in dict.fromkeys(fixed)] + [expansions]
     prefix_side = wand_topk(
-        mf, "", k=_MF_K, mode="or", slot_terms=slot_terms,
+        mf, "", k=_MF_K, mode="or", slot_terms=prefix_slot_terms(mf, _MF_PREFIX_Q),
         weights=_5F_WEIGHTS,
     ).select(F.lit("prefix").alias("behavior"), "doc_id", "score")
 
@@ -798,17 +794,14 @@ def ft_mf_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
         mf, " ".join(corrected), k=_MF_K, mode="or", weights=_5F_WEIGHTS
     ).select(F.lit("typo").alias("behavior"), "doc_id", "score")
 
-    infix_slot = list(
-        dict.fromkeys([_MF_INFIX_Q] + expand_infix(sum_stats, _MF_INFIX_Q))
-    )
     infix_side = wand_topk(
-        mf, "", k=_MF_K, mode="or", slot_terms=[infix_slot],
+        mf, "", k=_MF_K, mode="or", slot_terms=infix_slot_terms(mf, _MF_INFIX_Q),
         weights=_5F_WEIGHTS,
     ).select(F.lit("infix").alias("behavior"), "doc_id", "score")
 
     # split_join × query_by through the FACADE (the wrapper probes the
-    # artifact's summed-df vocabulary and the retry runs the multifield
-    # kernel); num_typos=0 keeps correction out of the probe, as in the
+    # summed-df vocabulary and the retry runs the multifield kernel);
+    # num_typos=0 keeps correction out of the probe, as in the
     # single-field graded branches
     from pyf_aggregator_spark.search.api import search as facade_search
 

@@ -205,7 +205,7 @@ def _mf_scaffold(
 def _mf_vocab_cte(n_fields: int) -> str:
     """mfvocab(term, df): document frequency summed across fields —
     the vocabulary the engine's multifield typo/prefix paths use
-    (facade: mf term_stats groupBy(term).sum(df))."""
+    (search/vocab.py's summed view)."""
     union = " UNION ALL ".join(
         f"SELECT term, df FROM f{i}_dfreq" for i in range(n_fields)
     )
@@ -668,13 +668,6 @@ def term_stats_sql() -> str:
 
 def doc_stats_sql() -> str:
     return f"WITH {TOKENS_CTE} SELECT doc_id, doc_len FROM dl ORDER BY doc_id"
-
-
-def corpus_stats_sql() -> str:
-    return (
-        f"WITH {TOKENS_CTE} "
-        "SELECT n_docs, total_len, round(avgdl, 6) AS avgdl FROM corpus"
-    )
 
 
 def _or_hits_cte(name: str, in_expr: str) -> str:

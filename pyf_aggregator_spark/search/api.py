@@ -409,15 +409,7 @@ def _split_join_terms(
     from pyf_aggregator_spark.search.splitjoin import split_join_rewrite
 
     idx, _ = _ranked_index(spark, sf_dir, params)
-    return split_join_rewrite(_vocabulary(idx), tokenize_py(params.get("q", "")))
-
-
-def _vocabulary(idx: dict) -> DataFrame:
-    """The index's term_stats; a multifield one summed to one df per
-    term across fields."""
-    if "avgdl_by_field" not in idx:
-        return idx["term_stats"]
-    return idx["term_stats"].groupBy("term").agg(F.sum("df").alias("df"))
+    return split_join_rewrite(idx, tokenize_py(params.get("q", "")))
 
 
 # ---------------------------------------------------------------- plan
@@ -677,10 +669,11 @@ def _expand_slots(plan: _Plan, prefix: bool, infix_mode: str) -> list[list[str]]
     expands the LAST token against startswith; infix expands tokens
     against contains ("always": all tokens, "fallback": only tokens
     absent from the vocabulary). All probes (prefix + per-token infix +
-    known-token equality) run as ONE vocabulary job (expand_many).
-    → the slots, or None when nothing expanded (every token known under
-    infix=fallback), so the plain path and its drop cascade still run."""
-    from pyf_aggregator_spark.search.prefix import expand_many
+    known-token equality) go to the driver vocabulary in one call
+    (vocab.probe). → the slots, or None when nothing expanded (every
+    token known under infix=fallback), so the plain path and its drop
+    cascade still run."""
+    from pyf_aggregator_spark.search import vocab
 
     *fixed, last = plan.terms
     fixed = list(dict.fromkeys(fixed))
@@ -689,12 +682,15 @@ def _expand_slots(plan: _Plan, prefix: bool, infix_mode: str) -> list[list[str]]
     if infix_mode == "always":
         probes += [("infix", t) for t in distinct]
     elif infix_mode == "fallback":
-        # exact + infix probes submitted together: one job decides
+        # exact + infix probes submitted together: one call decides
         # known-ness AND has the expansion ready for unknown tokens
         probes += [("exact", t) for t in distinct] + [("infix", t) for t in distinct]
     if prefix:
         probes.append(("prefix", last))
-    exp_map = expand_many(_vocabulary(plan.idx), probes)
+    exp_map = {
+        p: [term for term, _df in hits]
+        for p, hits in vocab.probe(plan.idx, probes).items()
+    }
     known = {t for (k, t), v in exp_map.items() if k == "exact" and v}
 
     def _expand(t: str, is_last: bool) -> list[str]:

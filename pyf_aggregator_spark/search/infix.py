@@ -2,17 +2,15 @@
 fallback | always; typesense-api docs: "vent" finds "preventive" when
 the field has infix indexing enabled).
 
-Spark-native: Typesense builds a dedicated infix index per field; here
-the VOCABULARY is the infix index — a query token expands against
-term_stats with a ``contains`` filter, capped at ``max_expansions`` by
-document frequency (most frequent words first, matching the prefix
-expansion's ordering), and the expansion set scores as ONE slot in the
-WAND kernel (per-doc max over the matched words — the same
-best-completion semantics as prefix). The vocabulary is millions of
-rows where the corpus is 10^12 turns, so the expansion lookup is noise
-next to the search itself; ``contains`` cannot push down like
-``startswith``, but a full vocabulary scan is already the lookup's
-worst case and stays corpus-independent.
+Typesense builds a dedicated infix index per field; here the
+VOCABULARY is the infix index — a query token expands against the
+driver vocabulary (search/vocab.py: ``pyarrow.compute.match_substring``
+over the sorted terms), capped at ``max_expansions`` by document
+frequency (most frequent words first, matching the prefix expansion's
+ordering), and the expansion set scores as ONE slot in the WAND kernel
+(per-doc max over the matched words — the same best-completion
+semantics as prefix). A substring probe scans the whole vocabulary,
+which is vocabulary-sized, not corpus-sized.
 
 Mode semantics on the facade (search/api.py):
 - ``fallback``: only tokens ABSENT from the vocabulary expand (the
@@ -27,25 +25,17 @@ is kept (instead of dropped) so it can still match as an infix.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from pyf_aggregator_spark.functions.tokenize import tokenize_py
-from pyf_aggregator_spark.search.prefix import MAX_EXPANSIONS
+from pyf_aggregator_spark.search import vocab
+from pyf_aggregator_spark.search.vocab import MAX_EXPANSIONS
 
 
-def expand_infix(
-    term_stats: DataFrame, token: str, max_expansions: int = MAX_EXPANSIONS
-) -> list[str]:
+def expand_infix(idx: dict, token: str, max_expansions: int = MAX_EXPANSIONS) -> list[str]:
     """token → up to max_expansions vocabulary terms CONTAINING it,
-    most frequent first (ties: lexicographic)."""
-    rows = (
-        term_stats.filter(F.col("term").contains(token))
-        .orderBy(F.desc("df"), F.asc("term"))
-        .limit(max_expansions)
-        .select("term")
-        .collect()
-    )
-    return [r["term"] for r in rows]
+    most frequent first (ties: lexicographic); df summed over fields on
+    a multifield handle."""
+    return vocab.expand(idx, "infix", token, max_expansions)
 
 
 def infix_slot_terms(
@@ -55,11 +45,7 @@ def infix_slot_terms(
     expansion set (the token itself first, then the df-ranked words
     containing it) is one shared slot."""
     return [
-        list(
-            dict.fromkeys(
-                [t] + expand_infix(idx["term_stats"], t, max_expansions)
-            )
-        )
+        list(dict.fromkeys([t] + expand_infix(idx, t, max_expansions)))
         for t in dict.fromkeys(tokenize_py(query))
     ]
 
@@ -74,8 +60,5 @@ def wand_topk_infix(
     ``ft_typesense_defaults`` infix branch."""
     from pyf_aggregator_spark.search.wand import wand_topk
 
-    spark = idx["segments"].sparkSession
     slot_terms = infix_slot_terms(idx, query, max_expansions)
-    if not slot_terms:
-        return spark.createDataFrame([], "doc_id long, score double")
     return wand_topk(idx, "", k=k, mode=mode, slot_terms=slot_terms)

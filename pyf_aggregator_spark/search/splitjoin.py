@@ -32,23 +32,21 @@ oracle):
 
 Scale shape: the rewrite needs one bounded vocabulary probe — the
 candidate set (pair concatenations + every split half + the tokens
-themselves) is O(query_len × token_len) literals, pushed into the
-term_stats scan as an IN filter; the collect returns at most that many
-(term, df) rows. The retry is one ordinary kernel pass over the
-rewritten query. Nothing is corpus-proportional driver-side.
+themselves) is O(query_len × token_len) literals, each an exact probe
+of the driver vocabulary (search/vocab.py: a sorted lookup returning
+its df, summed over fields on a multifield handle). The retry is one
+ordinary kernel pass over the rewritten query.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-MODES = ("off", "fallback", "always")
+from pyf_aggregator_spark.search import vocab
 
 
-def vocab_probe(term_stats: DataFrame, toks: list[str]) -> dict[str, int]:
-    """One bounded job: df for every candidate literal the rewrite can
-    consult (tokens, adjacent-pair concatenations, all split halves)."""
+def vocab_probe(idx: dict, toks: list[str]) -> dict[str, int]:
+    """df for every candidate literal the rewrite can consult (tokens,
+    adjacent-pair concatenations, all split halves) that the index
+    vocabulary holds."""
     cands: set[str] = set(toks)
     for a, b in zip(toks, toks[1:]):
         cands.add(a + b)
@@ -56,12 +54,8 @@ def vocab_probe(term_stats: DataFrame, toks: list[str]) -> dict[str, int]:
         for i in range(1, len(t)):
             cands.add(t[:i])
             cands.add(t[i:])
-    rows = (
-        term_stats.filter(F.col("term").isin(sorted(cands)))
-        .select("term", "df")
-        .collect()
-    )
-    return {r["term"]: int(r["df"]) for r in rows}
+    found = vocab.probe(idx, [("exact", c) for c in sorted(cands)])
+    return {t: df for hits in found.values() for t, df in hits}
 
 
 def best_split(tok: str, df: dict[str, int]) -> tuple[str, str] | None:
@@ -107,10 +101,8 @@ def rewrite_tokens(
     return out if changed else None
 
 
-def split_join_rewrite(
-    term_stats: DataFrame, toks: list[str]
-) -> list[str] | None:
+def split_join_rewrite(idx: dict, toks: list[str]) -> list[str] | None:
     """Probe the vocabulary and rewrite in one call (facade entry)."""
     if not toks:
         return None
-    return rewrite_tokens(toks, vocab_probe(term_stats, toks))
+    return rewrite_tokens(toks, vocab_probe(idx, toks))

@@ -191,12 +191,11 @@ def correct_terms(
     Runs in the driver and launches no Spark job once the artifact
     exists: the variant lookup is a pyarrow read of the artifact.
 
-    One vocabulary, two views of it: ``term_stats`` is a frame over
-    the table at ``{index_dir}/term_stats`` (an index handle's
-    ``term_stats``; a multifield one is summed per term), read only to
-    build the artifact on first use; membership is ``known_terms``
-    when the caller has it (the in-RAM term dictionary,
-    wand._known_terms), otherwise a pyarrow read of that same table's
+    ``term_stats`` is a frame over the table at
+    ``{index_dir}/term_stats`` (an index handle's ``term_stats``),
+    read only to build the artifact on first use. Membership is
+    ``known_terms`` when the caller has it (the driver vocabulary,
+    vocab.known_terms), otherwise a pyarrow read of that table's
     ``term`` column."""
     terms = sorted(set(terms))
     if not terms:
@@ -263,12 +262,12 @@ def correct_queries(
     when infix is on: it may still match inside vocabulary words); a
     query left with no token falls back to its typed form (a zero-hit
     search, but a well-formed one)."""
-    from pyf_aggregator_spark.search.wand import _known_terms
+    from pyf_aggregator_spark.search import vocab
 
     union = sorted({t for q in queries for t in q})
     mapping = correct_terms(
         idx["dir"], union, idx["term_stats"], num_typos=num_typos,
-        known_terms=_known_terms(idx, union),
+        known_terms=vocab.known_terms(idx, union),
     )
     out = []
     for toks in queries:

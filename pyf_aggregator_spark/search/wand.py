@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from pyf_aggregator_spark import B, K1
 from pyf_aggregator_spark.functions.tokenize import tokenize_py
 from pyf_aggregator_spark.index.codec import decode_blocks
+from pyf_aggregator_spark.search import vocab
 from pyf_aggregator_spark.search.engine import SCORE_DECIMALS
 
 
@@ -145,107 +146,16 @@ TOMBSTONE_BLOCK_ID = -2
 ALLOWED_BLOCK_ID = -3
 
 
-def _termdict_max() -> int:
-    """Vocabulary sizes up to this load into an in-driver term→idf
-    dictionary (the in-RAM dictionary component every inverted index
-    keeps — Lucene's FST, Typesense's art tree); bigger vocabularies
-    fall back to a per-query pushed-down scan. ~110 B/term with the df
-    dictionary beside it: the default 2M caps both at ~220 MB of driver
-    memory."""
-    return int(os.environ.get("PYFAGG_TERMDICT_MAX", "2000000"))
-
-
-def _term_stats_version(idx: dict) -> float | None:
-    """Freshness token for the dictionary: the term_stats directory
-    mtime changes on every overwrite/commit swap (incremental.py swaps
-    whole staged dirs into place), so a mutated index invalidates the
-    cached dictionary on the next lookup."""
-    try:
-        return os.path.getmtime(os.path.join(idx["dir"], "term_stats"))
-    except OSError:
-        return None
-
-
-def _load_term_dict(idx: dict) -> tuple | None:
-    """(version, key→idf, key→df) for this index, read ONCE per
-    term_stats version with pyarrow in the driver and cached on the
-    handle; None when the vocabulary exceeds _termdict_max() (a footer
-    count, no data read). Keys are terms (single-field) or (field,
-    term) pairs (multifield).
-
-    Why: every kernel query paid a whole Spark job (plan + schedule +
-    parquet scan) just to fetch ≤|q| idf scalars before the real kernel
-    job — half the per-query latency on the sequential path. The
-    dictionary is vocabulary-sized (MB where postings are GB/TB), which
-    is exactly the piece real engines pin in RAM. Read in the driver,
-    the first query after a reload runs no job for it either; ``df``
-    rides along so the route rule (_driver_route) needs no scan."""
-    import pyarrow.dataset as ds
-
-    ver = _term_stats_version(idx)
-    cached = idx.get("_term_dict")
-    if cached is not None and cached[0] == ver:
-        return cached
-    if idx.get("_term_dict_too_big") == ver:
-        return None
-    data = ds.dataset(os.path.join(idx["dir"], "term_stats"), format="parquet")
-    if data.count_rows() > _termdict_max():
-        idx["_term_dict_too_big"] = ver
-        return None
-    multifield = "field" in data.schema.names
-    tbl = data.to_table(
-        columns=[*(["field"] if multifield else []), "term", "idf", "df"]
-    )
-    keys = tbl.column("term").to_pylist()
-    if multifield:
-        keys = list(zip(tbl.column("field").to_pylist(), keys))
-    idx["_term_dict"] = (
-        ver,
-        dict(zip(keys, tbl.column("idf").to_pylist())),
-        dict(zip(keys, tbl.column("df").to_pylist())),
-    )
-    return idx["_term_dict"]
-
-
-def _term_dict(idx: dict):
-    """term→idf (single-field) or (field, term)→idf (multifield)
-    dictionary for this index, or None when the vocabulary exceeds
-    _termdict_max() — callers then use the pushed-down per-query scan."""
-    loaded = _load_term_dict(idx)
-    return None if loaded is None else loaded[1]
-
-
-def _known_terms(idx: dict, terms: list[str]) -> set[str] | None:
-    """Vocabulary membership for ``terms`` from the in-RAM dictionary —
-    None when the dictionary is unavailable (callers then keep their
-    scan). For multifield dictionaries ((field, term) keys) membership
-    means ANY field has the term, matching the summed-vocabulary
-    term_stats the typo layer queries; the flattened term set is cached
-    per term_stats version alongside the dictionary."""
-    d = _term_dict(idx)
-    if d is None:
-        return None
-    if d and isinstance(next(iter(d)), tuple):
-        ver = _term_stats_version(idx)
-        cached = idx.get("_vocab_set")
-        if cached is None or cached[0] != ver:
-            idx["_vocab_set"] = (ver, {t for (_f, t) in d})
-        vocab = idx["_vocab_set"][1]
-    else:
-        vocab = d
-    return {t for t in terms if t in vocab}
-
-
 def _idf_lookup(
     idx: dict, terms: list[str], fields: list[str] | None = None
 ) -> dict:
     """idf of the keys present in the index: ``{term: idf}``, or
     ``{(field, term): idf}`` when ``fields`` is given (multifield) —
-    dictionary hit when loaded, pushed-down term_stats scan otherwise."""
-    d = _term_dict(idx)
-    keys = terms if fields is None else [(f, t) for f in fields for t in terms]
-    if d is not None:
-        return {key: d[key] for key in keys if key in d}
+    from the driver vocabulary (search/vocab.py) when loaded, a
+    pushed-down term_stats scan otherwise."""
+    found = vocab.lookup(idx, terms, fields)
+    if found is not None:
+        return {key: idf for key, (idf, _df) in found.items()}
     cond = F.col("term").isin(terms)
     if fields is None:
         rows = idx["term_stats"].filter(cond).select("term", "idf").collect()
@@ -871,21 +781,17 @@ def _driver_route(idx: dict, spec: dict) -> bool:
     """The route rule: segment rows of the queried fields + Σ df of the
     scan terms + tombstone rows ≤ _DRIVER_ROUTE_MAX_ROWS. Off when the
     handle has no local snapshot or the vocabulary is too big for the
-    in-RAM dictionary (no df to count)."""
-    snap, loaded = idx.get("driver"), _load_term_dict(idx)
-    if snap is None or loaded is None:
+    driver vocabulary (no df to count)."""
+    snap, fields = idx.get("driver"), spec["fields"]
+    found = None if snap is None else vocab.lookup(idx, spec["scan_terms"], fields)
+    if found is None:
         return False
-    fields, df = spec["fields"], loaded[2]
-    keys = (
-        spec["scan_terms"] if fields is None
-        else [(f, t) for f in fields for t in spec["scan_terms"]]
-    )
     rows = sum(
         n for _p, _part, field, n in snap["segments"]
         if fields is None or field in fields
     )
     return (
-        rows + sum(df.get(key, 0) for key in keys) + snap["tombstone_rows"]
+        rows + sum(df for _idf, df in found.values()) + snap["tombstone_rows"]
         <= _DRIVER_ROUTE_MAX_ROWS
     )
 
@@ -1388,8 +1294,9 @@ def wand_topk_batch(
 
     from pyspark.sql import Window
 
-    # a repeated id would give ``ks`` two rows for it: the join below
-    # doubles every hit and one window ranks both queries' hits together
+    # a repeated id would put two keys in the k map below (Spark
+    # refuses duplicate map keys) and one window would rank both
+    # queries' hits together
     dup = [i for i, n in Counter(q["query_id"] for q in queries).items() if n > 1]
     if dup:
         raise ValueError(f"wand_topk_batch: duplicate query_id {dup}")
@@ -1433,9 +1340,8 @@ def wand_topk_batch(
     for a in allow_parts:
         allowed = a if allowed is None else allowed.unionByName(a)
     local = _kernel_job(idx, entries, "topk", allowed)
-    ks = spark.createDataFrame(
-        [(e["query_id"], e["k"]) for e in entries], "query_id string, k int"
-    )
+    # each query's k as a map literal: no local relation to ship and join
+    k_of = F.create_map(*[F.lit(v) for e in entries for v in (e["query_id"], e["k"])])
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("doc_id")
     )
@@ -1444,8 +1350,7 @@ def wand_topk_batch(
             "query_id", "doc_id",
             F.round("raw_score", SCORE_DECIMALS).alias("score"),
         )
-        .join(F.broadcast(ks), "query_id")
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
+        .filter(F.col("rank") <= k_of[F.col("query_id")])
         .select("query_id", "rank", "doc_id", "score")
     )

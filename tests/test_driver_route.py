@@ -147,7 +147,7 @@ def test_small_query_runs_no_job_from_first_call(spark, small_index):
     idx = wand.load_index(spark, small_index)
     for q in ("ant bee", "cat", "dog eel fox"):
         assert count_jobs(spark, lambda: wand.wand_topk_with_found(idx, q)) == 0
-    assert "_term_dict" in idx
+    assert "_vocab" in idx
 
 
 def test_over_budget_query_runs_distributed(spark, small_index, monkeypatch):

@@ -91,11 +91,11 @@ def prefix_idx(spark, sf_dir, tmp_path_factory):
 
 def test_expand_prefix_df_order(prefix_idx):
     _, idx = prefix_idx
-    got = expand_prefix(idx["term_stats"], "plon")
+    got = expand_prefix(idx, "plon")
     # most frequent completion first
     assert got[0] == "plone"
     assert set(got) == {"plone", "plonetheme", "plon"}
-    assert expand_prefix(idx["term_stats"], "zzz") == []
+    assert expand_prefix(idx, "zzz") == []
 
 
 def _bm25_contrib(ref, term: str, d: int) -> float:
@@ -213,12 +213,12 @@ def test_expand_infix_contains_and_order(prefix_idx):
     from pyf_aggregator_spark.search.infix import expand_infix
 
     _, idx = prefix_idx
-    got = expand_infix(idx["term_stats"], "lon")
+    got = expand_infix(idx, "lon")
     # most frequent containing word first, contains ≠ startswith
     assert got[0] == "plone"
     assert set(got) == {"plone", "plonetheme", "plon"}
-    assert expand_infix(idx["term_stats"], "heme") == ["plonetheme"]
-    assert expand_infix(idx["term_stats"], "zzz") == []
+    assert expand_infix(idx, "heme") == ["plonetheme"]
+    assert expand_infix(idx, "zzz") == []
 
 
 def test_infix_search_scores_best_word(prefix_idx):

@@ -185,13 +185,13 @@ def test_batch_allow_set_rides_shuffle_not_broadcast(spark, tmp_path):
         plan = plan_of(df)
         # with auto-broadcast off, any BroadcastExchange left is an
         # EXPLICIT hint — the only ones in this plan are the tiny P-row
-        # meta ranges (sentinel routing) and the per-query k table; the
-        # kernel input (blocks + sentinels) must reach applyInPandas
-        # through the partition-keyed exchange
+        # meta ranges (sentinel routing); the kernel input (blocks +
+        # sentinels) must reach applyInPandas through the
+        # partition-keyed exchange
         assert "FlatMapGroupsInPandas" in plan
         # formatted explain lists each node twice (tree + detail
-        # section): 3 distinct tiny broadcasts = sentinel meta-ranges
-        # (tombstone + allow routing) and the per-query k table
+        # section): at most 3 distinct tiny broadcasts, the sentinel
+        # meta-ranges (tombstone + allow routing)
         assert plan.count("BroadcastExchange") <= 6, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

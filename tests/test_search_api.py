@@ -499,11 +499,8 @@ def test_search_query_by_prefix_uses_slot_scoring(spark, sf_dir):
          )},
     )
     mf = documents_multifield_index(spark, sf_dir)
-    sum_stats = mf["term_stats"].groupBy("term").agg(
-        F.sum("df").alias("df")
-    )
     *fixed, last = tokenize_py(q)
-    expansions = expand_prefix(sum_stats, last) or [last]
+    expansions = expand_prefix(mf, last) or [last]
     slot_terms = [[t] for t in dict.fromkeys(fixed)] + [expansions]
     direct = wand_topk(
         mf, "", k=10, mode="or", slot_terms=slot_terms, weights=_5F_WEIGHTS
@@ -849,7 +846,7 @@ def test_search_infix_fallback_expands_unknown_token(spark, sf_dir):
     from pyf_aggregator_spark.search.wand import wand_topk
 
     idx, sub = _infix_probe(spark, sf_dir)
-    exp = expand_infix(idx["term_stats"], sub)
+    exp = expand_infix(idx, sub)
     assert exp  # the probe substring matches vocabulary words
     res = search(spark, sf_dir,
                  {"q": sub, "per_page": 5, "num_typos": 0,
@@ -893,7 +890,7 @@ def test_search_infix_always_expands_known_token(spark, sf_dir):
 
     idx = documents_segment_index(spark, sf_dir)
     slots = [
-        list(dict.fromkeys([t] + expand_infix(idx["term_stats"], t)))
+        list(dict.fromkeys([t] + expand_infix(idx, t)))
         for t in ["spark", "vector"]
     ]
     res = search(spark, sf_dir,
@@ -1151,7 +1148,7 @@ FACADE_SHAPES = {
     "grouped": ({"q": _Q, "group_by": "source", "facet_by": "lang"}, 11),
     "grouped_nofacet": ({"q": _Q, "group_by": "source"}, 7),
     "fuzzy": ({"q": "sparkx vector", "prefix": True,
-               "drop_tokens_threshold": 1}, 4),
+               "drop_tokens_threshold": 1}, 1),
     "match_all": ({"q": "*", "filter_by": "lang:=en",
                    "sort_by": "n_chars:desc"}, 3),
     "match_all_grouped": ({"q": "*", "group_by": "lang", "group_limit": 2,

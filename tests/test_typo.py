@@ -172,10 +172,11 @@ def test_typo_artifact_invalidated_on_upsert(spark, tmp_path):
 
 def test_correct_terms_dictionary_membership_matches_scan(spark, tmp_path):
     """The r6 dictionary-served known/unknown split (known_terms kwarg
-    via wand._known_terms) must produce the exact mapping the
+    via vocab.known_terms) must produce the exact mapping the
     term_stats scan path produces — including known tokens, correctable
     typos, and hopeless tokens."""
-    from pyf_aggregator_spark.search.wand import _known_terms, load_index
+    from pyf_aggregator_spark.search.vocab import known_terms
+    from pyf_aggregator_spark.search.wand import load_index
 
     d = str(tmp_path / "idx")
     docs = spark.createDataFrame(
@@ -186,7 +187,7 @@ def test_correct_terms_dictionary_membership_matches_scan(spark, tmp_path):
     idx = load_index(spark, d)
     terms = ["alpha", "alphax", "beta", "qqqqzzzz"]
     via_scan = correct_terms(d, terms, idx["term_stats"])
-    known = _known_terms(idx, terms)
+    known = known_terms(idx, terms)
     assert known == {"alpha", "beta"}  # dictionary resolved membership
     via_dict = correct_terms(
         d, terms, idx["term_stats"], known_terms=known
@@ -200,11 +201,11 @@ def test_correct_terms_runs_no_spark_job(typo_idx):
     """Once the artifact exists, correcting an unknown token is a driver
     read of it: no Spark job, with membership from the dictionary or
     from the index's own term_stats."""
-    from pyf_aggregator_spark.search.wand import _known_terms
+    from pyf_aggregator_spark.search.vocab import known_terms
 
     spark, d, idx = typo_idx
     terms = ["w00000", "w0000x", "zzqqy"]
-    known = _known_terms(idx, terms)
+    known = known_terms(idx, terms)
     got = {}
     assert count_jobs(spark, lambda: got.update(
         correct_terms(d, terms, idx["term_stats"], known_terms=known)
