@@ -28,8 +28,11 @@ preamble (input scalars, updated-id lookup), write_segments (the delta
 part, and term_stats merged with the old-postings decode),
 stats_writes (tombstones, doc_stats) and commit. It does so for both
 index kinds: a single-field index over ``text`` and a two-field index
-over ``role`` and ``text`` (one line each). ``--phases upsert`` runs it
-alone.
+over ``role`` and ``text`` (one line each). Each line also gives the
+seconds and jobs of one ``append_segments`` of 500 new documents into
+the upserted index (the all-new branch of ``upsert_docs``), with each
+job listed as ``[call site, ms]`` (also printed one line per job on
+stderr). ``--phases upsert`` runs it alone.
 
 ``typo`` times ``typo.correct_terms`` on an index whose deletion
 artifact already exists and prints one JSON line: seconds (min and
@@ -144,11 +147,12 @@ UPSERT_FIELDS = ["role", "text"]  # the two-field index of the multifield run
 def upsert_phase(spark, corpus_path: str) -> list[dict]:
     """One 500-doc upsert_docs per index kind — a single-field index
     over ``text`` and a two-field index over UPSERT_FIELDS, each freshly
-    built — split into the stages of UPSERT_STAGES. Stage boundaries
-    are the calls upsert_docs makes to the segment writer and to
-    _commit_staged; each stage runs under its own job group (and job
-    description), so the status tracker counts its jobs. Prints one
-    JSON line per kind."""
+    built — split into the stages of UPSERT_STAGES, then one 500-doc
+    append_segments of new documents, each job listed by call site.
+    Stage boundaries are the calls upsert_docs makes to the segment
+    writer and to _commit_staged; each stage runs under its own job
+    group (and job description), so the status tracker counts its
+    jobs. Prints one JSON line per kind."""
     import numpy as np
 
     from pyf_aggregator_spark.index import incremental
@@ -168,6 +172,17 @@ def upsert_phase(spark, corpus_path: str) -> list[dict]:
     rows = [(i, "user", f"updated w{i % 97:05d} text{i}") for i in existing] + [
         (n + j, "tool", f"inserted w{j % 13:05d} doc{j}") for j in range(250)
     ]
+    # the all-new append: 500 docs with dense ids from 0, which
+    # append_segments shifts above the index's max doc id
+    fresh = [(j, "assistant", f"appended w{j % 11:05d} doc{j}") for j in range(500)]
+    new_docs = {
+        "single": spark.createDataFrame(
+            [(j, t) for j, _, t in fresh], "doc_id long, text string"
+        ),
+        "multifield": spark.createDataFrame(
+            fresh, "doc_id long, role string, text string"
+        ),
+    }
     kinds = {
         "single": (
             lambda d: build_segments(docs.select("doc_id", "text"), d, lineage="bx"),
@@ -210,7 +225,19 @@ def upsert_phase(spark, corpus_path: str) -> list[dict]:
                 marks.append(("", time.monotonic()))
         finally:
             incremental._write_segments, incremental._commit_staged = real
+        group = f"bx-append-{kind}-{os.getpid()}"
+        sc.setJobGroup(group, f"{group}: append_segments")
+        try:
+            t0 = time.monotonic()
+            incremental.append_segments(new_docs[kind], index_dir)
+            append_s = time.monotonic() - t0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
             shutil.rmtree(index_dir, ignore_errors=True)
+        sites = job_sites(sc, group)
+        for site, ms in sites:
+            print(f"    append {kind}: {ms:6d} ms  {site}", file=sys.stderr)
 
         stages = {
             stage: {"s": round(t1 - t0, 3), "jobs": jobs[stage]}
@@ -224,6 +251,7 @@ def upsert_phase(spark, corpus_path: str) -> list[dict]:
             "s": round(marks[-1][1] - marks[0][1], 3),
             "jobs": sum(v["jobs"] for v in stages.values()),
             "stages": {k: stages[k] for k in UPSERT_STAGES},
+            "append": {"s": round(append_s, 3), "jobs": len(sites), "job_sites": sites},
         }
         print(json.dumps(res))
         results.append(res)

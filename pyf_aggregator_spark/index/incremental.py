@@ -2,20 +2,25 @@
 
 The reference maintains its collection with RSS-triggered point upserts
 and weekly refreshes (queue.py:590-986, §3.3). Spark-native analog:
-new documents arrive as a DELTA batch; we
+documents arrive as a batch of (doc_id, text) rows — one text column
+per field on a multifield index; we
 
-  1. assign delta docIDs from a fresh base ABOVE the existing range
+  1. tombstone the old version of every id the index already holds
      (old part files are immutable — the zero-downtime append analog
      of the versioned-collection alias swap, typesense_util.py:174-319),
-  2. build delta segment partitions (part_base above existing parts)
-     through the same writer as the full build
+  2. build the batch's segment partitions (part_base above existing
+     parts) through the same writer as the full build
      (segments._write_segments),
-  3. merge stats ADDITIVELY: df/cf/n_docs/total_len are sums, idf is
-     recomputed from the merged counts — no rescan of old postings.
+  3. merge stats exactly: the batch's df/cf/n_docs/total_len are
+     added, the replaced versions' decoded postings subtracted, and idf
+     is recomputed from the merged counts.
 
-upsert_docs, delete_docs and compact serve both index kinds (the
-index's corpus table says which); append_segments takes single-field
-deltas.
+upsert_docs is the one insert path and serves both index kinds (the
+index's corpus table says which), as do delete_docs and compact.
+append_segments is upsert_docs of a delta whose dense ids are shifted
+above the index's max doc id; such an all-new input takes the cheap
+branch of steps 1-3 (no old postings to subtract, doc_stats rows moved
+in as delta files).
 
 Query-side, nothing changes: wand_topk sees more partitions. The only
 subtlety is pruning safety: old blocks stored max_norm computed under
@@ -42,6 +47,7 @@ from pyspark.sql import functions as F
 from pyf_aggregator_spark.index.builder import _doc_len_col
 from pyf_aggregator_spark.index.segments import (
     _by_key,
+    _column_max,
     _docs_per_part,
     _melt,
     _read_corpus,
@@ -322,14 +328,7 @@ def delete_docs(
     newly tombstoned ids."""
     _reconcile_pending_blocking(index_dir)
     if scope_part is None:
-        scope_part = (
-            int(
-                spark.read.parquet(f"{index_dir}/meta")
-                .agg(F.max("part_id"))
-                .collect()[0][0]
-            )
-            + 1
-        )
+        scope_part = _column_max(f"{index_dir}/meta", "part_id") + 1
     if isinstance(doc_ids, list):
         df = spark.createDataFrame([(int(d),) for d in doc_ids], "doc_id long")
     else:
@@ -411,78 +410,31 @@ def append_segments(
     num_partitions: int | None = None,
     lineage: str = "delta",
 ) -> dict:
-    """delta_docs(doc_id dense from 0, text) → appended delta partitions
-    + merged stats on a single-field index (a multifield index takes
-    new documents through upsert_docs). Returns counters incl. the
+    """delta_docs(doc_id dense from 0, text — or one column per field on
+    a multifield index) → the delta's docs as new documents, with ids
+    shifted above the index's own, through upsert_docs (whose all-new
+    branch publishes them as delta files). ``num_partitions`` defaults
+    to the cluster's default parallelism. Returns counters incl. the
     docID base used.
 
-    Crash-safe like upsert_docs: the delta partitions, merged
-    term_stats, delta doc_stats and corpus scalars are all staged, then
-    published through _commit_staged (pending marker + pure renames) —
-    a crash mid-append can no longer leave delta segments live with
-    stale stats."""
+    doc_base comes from doc_stats, not meta doc_hi: meta only covers
+    docs WITH postings, so token-less docs at the top of the existing id
+    range would otherwise collide with delta ids (two distinct docs
+    sharing an id merges their postings). doc_stats carries every doc."""
     spark: SparkSession = delta_docs.sparkSession
     _reconcile_pending_blocking(index_dir)
-    keys, corpus_old = _read_corpus(spark, index_dir)
-    if keys:
-        raise ValueError("append_segments: multifield index; use upsert_docs")
-    meta = spark.read.parquet(f"{index_dir}/meta")
-    part_base = int(meta.agg(F.max("part_id")).collect()[0][0]) + 1
-    # doc_base comes from doc_stats, not meta doc_hi: meta only covers
-    # docs WITH postings, so token-less docs at the top of the existing
-    # id range would otherwise collide with delta ids (two distinct docs
-    # sharing an id merges their postings). doc_stats carries every doc.
-    doc_base = (
-        int(
-            spark.read.parquet(f"{index_dir}/doc_stats")
-            .agg(F.max("doc_id"))
-            .collect()[0][0]
-        )
-        + 1
+    doc_base = _column_max(f"{index_dir}/doc_stats", "doc_id") + 1
+    info = upsert_docs(
+        spark, index_dir,
+        delta_docs.withColumn("doc_id", (F.col("doc_id") + doc_base).cast("long")),
+        num_partitions or spark.sparkContext.defaultParallelism, lineage,
     )
-
-    shifted = delta_docs.select(
-        (F.col("doc_id") + F.lit(doc_base)).cast("long").alias("doc_id"), "text"
-    )
-    delta_stats = shifted.select("doc_id", _doc_len_col("text").alias("doc_len"))
-    n_delta, delta_len, max_doc = delta_stats.agg(
-        F.count("*"), F.coalesce(F.sum("doc_len"), F.lit(0)), F.max("doc_id")
-    ).collect()[0]
-    n_docs = corpus_old[None]["n_docs"] + n_delta
-
-    # delta segments: blocks encoded under the MERGED avgdl so their
-    # stored max_norm needs no inflation; old parts keep avgdl_build.
-    # Staged — nothing touches the live dirs until the commit below.
-    staging = index_dir + f"__apstage{part_base}"
-    shutil.rmtree(staging, ignore_errors=True)
-    avgdl = write_corpus_stats(
-        staging, [], {None: (n_docs, corpus_old[None]["total_len"] + delta_len)}
-    )
-    span = max_doc - doc_base + 1
-    docs_per_part = _docs_per_part(
-        n_delta, span, num_partitions or spark.sparkContext.defaultParallelism
-    )
-    parts = [part_base + p for p in range(math.ceil(span / docs_per_part))]
-    # stats merge ADDITIVELY: old df/cf plus the delta's encode partials
-    _write_segments(
-        shifted, staging, [], parts, docs_per_part, avgdl, {None: lineage},
-        doc_base=doc_base, part_base=part_base, n_docs=n_docs,
-        adjust=spark.read.parquet(f"{index_dir}/term_stats"),
-    )
-    delta_stats.write.mode("overwrite").parquet(f"{staging}/doc_stats")
-
-    _commit_staged(
-        index_dir, staging, part_base, "append",
-        move_subdirs=["meta", "doc_stats"],  # doc_stats delta is an append
-        swap_tables=["term_stats", "corpus"],
-    )
-
     return {
-        "n_parts": len(parts),
+        "n_parts": info.get("n_parts", 0),
         "doc_base": doc_base,
-        "part_base": part_base,
-        "n_delta_docs": int(n_delta),
-        "avgdl": float(avgdl[None]),
+        "part_base": info.get("part_base"),
+        "n_delta_docs": info["n_upserted"],
+        "avgdl": info.get("avgdl"),
     }
 
 
@@ -561,14 +513,21 @@ def upsert_docs(
     the modified corpus, with no drift left for compaction to
     reconcile. New ids are plain inserts. ``lineage`` stamps the new
     meta rows (default ``upsert-<part_base>``; the streaming
-    exactly-once guard passes its batch id).
+    exactly-once guard passes its batch id). Parts are cut by
+    _docs_per_part over the input's id span and ``num_partitions``.
 
-    The maintenance math is all DataFrame algebra: the only driver
-    values are two per-key aggregates (one over the input, one over
-    the updated ids) + the affected part list (partition pruning for
-    the old-postings decode)."""
+    An input whose smallest id is above the index's max doc id is all
+    new (append_segments shifts its delta there): it skips the
+    updated-id lookup and the old-postings decode, and its doc_stats
+    rows are moved in as delta files instead of rewriting the table.
+
+    The maintenance math is all DataFrame algebra. The index's scalars
+    (corpus, max part id, max doc id) are read with pyarrow; the Spark
+    driver values are one per-key aggregate over the input and, unless
+    the input is all new, one over the updated ids + the affected part
+    list (partition pruning for the old-postings decode)."""
     _reconcile_pending_blocking(index_dir)
-    keys, corpus_old = _read_corpus(spark, index_dir)
+    keys, corpus_old = _read_corpus(index_dir)
     fields = list(corpus_old) if keys else None
     # doc_len is a per-row expression (token count == Σ tf), so the new
     # doc_stats rows are a projection of the input — no tf groupBy/join
@@ -602,28 +561,33 @@ def upsert_docs(
         docs.unpersist()
         return {"n_upserted": 0, "n_new": 0, "n_updated": 0}
 
-    meta = spark.read.parquet(f"{index_dir}/meta")
-    part_base = int(meta.agg(F.max("part_id")).collect()[0][0]) + 1
-    old_doc_stats = spark.read.parquet(f"{index_dir}/doc_stats")
-    tomb = load_tombstones(spark, index_dir)
-
-    # one row per document (a multifield input has one per field)
-    ids = (docs.filter(F.col("field") == fields[0]) if keys else docs).select(
-        "doc_id"
-    )
-    existing = ids.join(old_doc_stats.select("doc_id"), "doc_id", "left_semi").persist()
-    # the updated docs' OLD rows give both the count and the length to
-    # subtract (doc_stats holds one row per doc and key) in one job
-    old = _by_key(
-        old_doc_stats.join(existing, "doc_id", "left_semi")
-        .groupBy(*keys)
-        .agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum("doc_len"), F.lit(0)).alias("len"),
+    part_base = _column_max(f"{index_dir}/meta", "part_id") + 1
+    # ids above the index's max doc id cannot be updates: an all-new
+    # input skips the updated-id lookup and the old-postings decode,
+    # and its doc_stats rows are published as delta files (an append)
+    all_new = first["lo"] > _column_max(f"{index_dir}/doc_stats", "doc_id")
+    old = {}
+    if not all_new:
+        old_doc_stats = spark.read.parquet(f"{index_dir}/doc_stats")
+        # one row per document (a multifield input has one per field)
+        ids = (docs.filter(F.col("field") == fields[0]) if keys else docs).select(
+            "doc_id"
         )
-        .collect(),
-        keys,
-    )
+        existing = ids.join(
+            old_doc_stats.select("doc_id"), "doc_id", "left_semi"
+        ).persist()
+        # the updated docs' OLD rows give both the count and the length
+        # to subtract (doc_stats holds one row per doc and key) in one job
+        old = _by_key(
+            old_doc_stats.join(existing, "doc_id", "left_semi")
+            .groupBy(*keys)
+            .agg(
+                F.count("*").alias("n"),
+                F.coalesce(F.sum("doc_len"), F.lit(0)).alias("len"),
+            )
+            .collect(),
+            keys,
+        )
     n_updated = next(iter(old.values()))["n"] if old else 0
     n_new = first["n"] - n_updated
     n_docs = next(iter(corpus_old.values()))["n_docs"] + n_new
@@ -637,7 +601,9 @@ def upsert_docs(
     # (partition-pruned scan); the writer adds the new tokenization
     adjust = spark.read.parquet(f"{index_dir}/term_stats")
     if n_updated:
-        ranges = meta.select("part_id", "doc_lo", "doc_hi")
+        ranges = spark.read.parquet(f"{index_dir}/meta").select(
+            "part_id", "doc_lo", "doc_hi"
+        )
         hit_parts = [
             r["part_id"]
             for r in existing.join(
@@ -652,9 +618,9 @@ def upsert_docs(
         seg = spark.read.parquet(f"{index_dir}/segments").filter(
             F.col("part_id").isin(hit_parts) if hit_parts else F.lit(False)
         )
-        old_rows = _decode_live_postings(seg, tomb).join(
-            existing, "doc_id", "left_semi"
-        )
+        old_rows = _decode_live_postings(
+            seg, load_tombstones(spark, index_dir)
+        ).join(existing, "doc_id", "left_semi")
         adjust = adjust.select(*keys, "term", "df", "cf").unionByName(
             old_rows.select(
                 *keys, "term", F.lit(-1).cast("long").alias("df"),
@@ -667,7 +633,7 @@ def upsert_docs(
     shutil.rmtree(staging, ignore_errors=True)
     avgdl = write_corpus_stats(staging, keys, totals)
     span = first["hi"] - first["lo"] + 1
-    docs_per_part = max(1, math.ceil(span / num_partitions))
+    docs_per_part = _docs_per_part(first["n"], span, num_partitions)
     parts = [part_base + p for p in range(math.ceil(span / docs_per_part))]
     _write_segments(
         docs.select(*keys, "doc_id", "text"), staging, keys, parts,
@@ -676,33 +642,38 @@ def upsert_docs(
         doc_base=first["lo"], part_base=part_base, n_docs=n_docs,
         adjust=adjust,
     )
-    if n_updated:
-        existing.withColumn(
-            "scope_part", F.lit(part_base).cast("long")
-        ).withColumn("kind", F.lit("upsert")).write.mode("overwrite").parquet(
-            f"{staging}/tombstones"
-        )
-    kept = old_doc_stats.join(ids, "doc_id", "left_anti")
-    kept.unionByName(docs.select(*keys, "doc_id", "doc_len")).write.mode(
-        "overwrite"
-    ).parquet(f"{staging}/doc_stats")
+    new_stats = docs.select(*keys, "doc_id", "doc_len")
+    if all_new:
+        new_stats.write.mode("overwrite").parquet(f"{staging}/doc_stats")
+        moves, swaps = ["meta", "doc_stats"], ["term_stats", "corpus"]
+    else:
+        if n_updated:
+            existing.withColumn(
+                "scope_part", F.lit(part_base).cast("long")
+            ).withColumn("kind", F.lit("upsert")).write.mode("overwrite").parquet(
+                f"{staging}/tombstones"
+            )
+        old_doc_stats.join(ids, "doc_id", "left_anti").unionByName(
+            new_stats
+        ).write.mode("overwrite").parquet(f"{staging}/doc_stats")
+        moves, swaps = ["meta", "tombstones"], list(_SWAP_TABLES)
+        existing.unpersist()
 
     # ---- COMMIT: marker first (records every live file the commit
     # creates), then pure renames, marker removed last. A crash at any
     # point is rolled back by _reconcile_pending on the next call.
     _commit_staged(
-        index_dir, staging, part_base, "upsert",
-        move_subdirs=["meta", "tombstones"],
-        swap_tables=list(_SWAP_TABLES),
+        index_dir, staging, part_base, "append" if all_new else "upsert",
+        move_subdirs=moves, swap_tables=swaps,
     )
 
     docs.unpersist()
-    existing.unpersist()
     return {
         "n_upserted": int(first["n"]),
         "n_new": int(n_new),
         "n_updated": int(n_updated),
         "part_base": part_base,
+        "n_parts": len(parts),
         "avgdl": avgdl if keys else float(avgdl[None]),
     }
 

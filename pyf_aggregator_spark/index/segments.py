@@ -50,7 +50,9 @@ import shutil
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyf_aggregator_spark import B, K1, TOKEN_SEP_RE
@@ -110,13 +112,25 @@ def _by_key(rows, keys: list[str]) -> dict:
     return {(r[keys[0]] if keys else None): r for r in rows}
 
 
-def _read_corpus(spark: SparkSession, index_dir: str) -> tuple[list[str], dict]:
+def _read_table(path: str | list[str], columns: list[str]) -> list[dict]:
+    """A small index table's ``columns`` as row dicts, read in the
+    driver with pyarrow — the table itself or a list of its files (a
+    frame's own ``inputFiles()`` listing) — and no Spark job."""
+    return pq.read_table(path, columns=columns).to_pylist()
+
+
+def _column_max(path: str, column: str) -> int:
+    """max(``column``) of a parquet table, read with pyarrow."""
+    return pc.max(pq.read_table(path, columns=[column]).column(column)).as_py()
+
+
+def _read_corpus(index_dir: str) -> tuple[list[str], dict]:
     """→ (keys, {key value: corpus row}) — the index kind comes from the
     corpus table itself: ``keys`` is ``["field"]`` on a multifield
     index and ``[]`` on a single-field one."""
-    corpus = spark.read.parquet(f"{index_dir}/corpus")
-    keys = ["field"] if "field" in corpus.columns else []
-    return keys, _by_key(corpus.collect(), keys)
+    corpus = pq.read_table(f"{index_dir}/corpus")
+    keys = ["field"] if "field" in corpus.column_names else []
+    return keys, _by_key(corpus.to_pylist(), keys)
 
 
 def write_corpus_stats(index_dir: str, keys: list[str], totals: dict) -> dict:
@@ -180,21 +194,21 @@ def _write_stats(doc_stats: DataFrame, index_dir: str, keys: list[str]):
 
 def _docs_per_part(n_docs: int, span: int, num_partitions: int) -> int:
     """Doc-range width for ``n_docs`` documents whose ids cover ``span``
-    consecutive ids. Ranges are capped at _max_docs_per_part so
-    encode-task memory is bounded by DATA geometry, not cluster size
-    (see the constant's note); callers cut ceil(span / width) parts, so
-    a sparse id range never loses its top-of-range docs."""
-    docs_per_part = max(1, math.ceil(n_docs / num_partitions))
+    consecutive ids (the one geometry rule of builds, upserts, appends
+    and compaction). Below the cap — at most _max_docs_per_part docs per
+    partition — the ranges are ``ceil(span / num_partitions)`` wide.
+    When the document count says the cap binds, the part count is
+    ``ceil(n_docs / cap)``, floored at _min_capped_waves() waves per
+    partition (see the notes at the constants), and the range width is
+    span over that, so encode-task memory is bounded by DATA geometry,
+    not cluster size. Callers cut ceil(span / width) parts, so a sparse
+    id range never loses its top-of-range docs. On dense ids (n_docs ==
+    span, as in builds, appends and compaction) count and span agree."""
     cap = _max_docs_per_part()
-    if docs_per_part > cap:
-        # cap binds → big corpus relative to the cluster. Also floor the
-        # task count at _min_capped_waves() waves/core so the last-wave
-        # straggler tail amortizes (see the note at the constants)
-        target_tasks = max(
-            math.ceil(span / cap), num_partitions * _min_capped_waves()
-        )
-        docs_per_part = max(1, math.ceil(span / target_tasks))
-    return docs_per_part
+    if math.ceil(n_docs / num_partitions) <= cap:
+        return max(1, math.ceil(span / num_partitions))
+    tasks = max(math.ceil(n_docs / cap), num_partitions * _min_capped_waves())
+    return max(1, math.ceil(span / tasks))
 
 
 def _melt(docs: DataFrame, fields: list[str] | None) -> DataFrame:

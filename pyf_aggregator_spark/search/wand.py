@@ -947,16 +947,19 @@ def load_index(spark: SparkSession, index_dir: str) -> dict:
         _reconcile_pending,
         load_tombstones,
     )
-    from pyf_aggregator_spark.index.segments import _read_corpus
+    from pyf_aggregator_spark.index.segments import _read_corpus, _read_table
 
     _reconcile_pending(index_dir)
-    keys, corpus = _read_corpus(spark, index_dir)
+    keys, corpus = _read_corpus(index_dir)
     meta = spark.read.parquet(f"{index_dir}/meta")
     bound_factor: dict[int, float] = {}
     ranges: dict[int, tuple[int, int]] = {}
-    for r in meta.select(
-        *keys, "part_id", "avgdl_build", "doc_lo", "doc_hi"
-    ).collect():
+    # the meta rows come from the frame's own file listing, so the
+    # Spark frame and this driver read see one snapshot
+    for r in _read_table(
+        _local_paths(meta) or f"{index_dir}/meta",
+        [*keys, "part_id", "avgdl_build", "doc_lo", "doc_hi"],
+    ):
         part = r["part_id"]
         f = corpus[r["field"] if keys else None]["avgdl"] / r["avgdl_build"]
         bound_factor[part] = max(bound_factor.get(part, 1.0), f)

@@ -3,16 +3,21 @@
 as Structured Streaming driving the segment index itself.
 
 A checkpointed file-source stream of new documents feeds foreachBatch;
-each micro-batch is appended through the crash-safe incremental commit
-(index/incremental.py). Exactly-once effect from three layers:
+each micro-batch is written through the crash-safe incremental commit
+(index/incremental.py). Both sinks — new documents
+(stream_append_to_index) and whole-document upserts
+(stream_upsert_multifield) — run one loop, _exactly_once, with the
+exactly-once effect from three layers:
 
   1. the checkpointed source replays a failed micro-batch with the
      SAME batch_id and the same content (at-least-once delivery, T2);
-  2. append_segments publishes atomically (staged artifacts + pending
-     marker; a torn append rolls back on the next index access), so a
-     replay never sees a half-applied batch;
-  3. the batch's lineage stamp (``stream-<batch_id>``) lands in meta/
-     inside that same atomic commit — the replay guard: a batch whose
+  2. upsert_docs (which append_segments calls with the delta's ids
+     shifted above the index's) publishes atomically (staged artifacts
+     + pending marker; a torn commit rolls back on the next index
+     access), so a replay never sees a half-applied batch;
+  3. the batch's lineage stamp (``<prefix>-<batch_id>``) lands in meta/
+     inside that same atomic commit — the replay guard, a pyarrow read
+     of meta's lineage column after the reconcile: a batch whose
      lineage already exists in meta is complete and is skipped.
 
 So: crash before commit → rollback + re-append; crash after commit →
@@ -21,13 +26,17 @@ lineage check skips the replay. No separate ledger, no double docs.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyf_aggregator_spark.index.incremental import (
     _reconcile_pending_blocking,
     append_segments,
+    upsert_docs,
 )
+from pyf_aggregator_spark.index.segments import _read_table
 
 
 def _dense_ids(batch: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -42,42 +51,41 @@ def _dense_ids(batch: DataFrame, key_cols: list[str]) -> DataFrame:
     )
 
 
-def stream_append_to_index(
+def _exactly_once(
     spark: SparkSession,
     src_dir: str,
     index_dir: str,
     ckpt_dir: str,
-    schema: str = "conv_id string, turn_idx int, text string",
-    key_cols: list[str] | None = None,
+    schema: str,
+    prefix: str,
+    write: Callable[[DataFrame, str], object],
 ) -> list[int]:
-    """Drain all available document files into the index (AvailableNow);
-    returns the batch ids applied this run (replay-skipped batches are
-    excluded)."""
-    key_cols = key_cols or ["conv_id", "turn_idx"]
+    """The one exactly-once loop: drain all available files of
+    ``src_dir`` (AvailableNow, one file per micro-batch) and apply each
+    batch with ``write(batch, lineage)``, lineage ``<prefix>-<batch_id>``.
+    Returns the batch ids applied this run (replay-skipped and empty
+    batches are excluded)."""
     applied: list[int] = []
 
     def handle_batch(batch: DataFrame, batch_id: int) -> None:
-        lineage = f"stream-{batch_id}"
+        lineage = f"{prefix}-{batch_id}"
         # Roll back any torn commit BEFORE consulting meta/ for the
         # replay guard: a crash inside _commit_staged can leave the
         # batch's meta rows renamed live while the pending marker still
         # exists. Reading meta first would see the lineage, skip the
-        # replay, and the next append's reconcile would roll the
+        # replay, and the next write's reconcile would roll the
         # uncommitted batch back — losing it forever. Reconciling first
         # means a torn commit is undone here, the lineage is absent,
         # and the replayed batch re-applies.
         _reconcile_pending_blocking(index_dir)
-        meta = spark.read.parquet(f"{index_dir}/meta")
-        if meta.filter(F.col("lineage") == lineage).count() > 0:
+        if any(
+            r["lineage"] == lineage
+            for r in _read_table(f"{index_dir}/meta", ["lineage"])
+        ):
             return  # completed by a previous attempt — exactly-once skip
         if batch.isEmpty():
             return
-        append_segments(
-            _dense_ids(batch, key_cols),
-            index_dir,
-            num_partitions=1,
-            lineage=lineage,
-        )
+        write(batch, lineage)
         applied.append(int(batch_id))
 
     q = (
@@ -91,6 +99,27 @@ def stream_append_to_index(
     )
     q.awaitTermination()
     return applied
+
+
+def stream_append_to_index(
+    spark: SparkSession,
+    src_dir: str,
+    index_dir: str,
+    ckpt_dir: str,
+    schema: str = "conv_id string, turn_idx int, text string",
+    key_cols: list[str] | None = None,
+) -> list[int]:
+    """Drain all available document files into the index (AvailableNow)
+    as new documents, lineage ``stream-<batch_id>``; returns the batch
+    ids applied this run (replay-skipped batches are excluded)."""
+    key_cols = key_cols or ["conv_id", "turn_idx"]
+    return _exactly_once(
+        spark, src_dir, index_dir, ckpt_dir, schema, "stream",
+        lambda batch, lineage: append_segments(
+            _dense_ids(batch, key_cols), index_dir, num_partitions=1,
+            lineage=lineage,
+        ),
+    )
 
 
 def stream_upsert_multifield(
@@ -106,42 +135,17 @@ def stream_upsert_multifield(
     document version is atomic, like the reference's point upsert of a
     full Typesense document) drives ``upsert_docs`` per micro-batch
     (the index's corpus table marks it multifield; queries open it
-    with ``wand.load_index``). Same exactly-once layers as
-    stream_append_to_index: reconcile-first (torn commits roll back
-    BEFORE the replay guard reads meta), lineage
-    ``stream-mf-<batch_id>`` committed atomically with the batch's meta
-    rows, replayed batches with live lineage skipped. Multi-doc batches
-    are ONE upsert commit — a replay is all-or-nothing, never half a
-    batch."""
-    from pyf_aggregator_spark.index.incremental import upsert_docs
-
+    with ``wand.load_index``). Same exactly-once loop as
+    stream_append_to_index, lineage ``stream-mf-<batch_id>``. Multi-doc
+    batches are ONE upsert commit — a replay is all-or-nothing, never
+    half a batch."""
     schema = schema or (
         "doc_id long, " + ", ".join(f"{f} string" for f in field_names)
     )
-    applied: list[int] = []
-
-    def handle_batch(batch: DataFrame, batch_id: int) -> None:
-        lineage = f"stream-mf-{batch_id}"
-        _reconcile_pending_blocking(index_dir)
-        meta = spark.read.parquet(f"{index_dir}/meta")
-        if meta.filter(F.col("lineage") == lineage).count() > 0:
-            return  # completed by a previous attempt — exactly-once skip
-        if batch.isEmpty():
-            return
-        upsert_docs(
+    return _exactly_once(
+        spark, src_dir, index_dir, ckpt_dir, schema, "stream-mf",
+        lambda batch, lineage: upsert_docs(
             spark, index_dir, batch.select("doc_id", *field_names),
             lineage=lineage,
-        )
-        applied.append(int(batch_id))
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
-    q.awaitTermination()
-    return applied

@@ -805,8 +805,9 @@ def test_decode_live_postings_applies_scoped_tombstones(spark, tmp_path):
 @pytest.mark.parametrize("kind", ["single", "multifield"])
 def test_writer_releases_every_persist(spark, tmp_path, kind):
     """Every persist the index writer takes is released: two rounds of
-    build → upsert → delete → compact leave the session's persisted RDD
-    count where it started, for both index kinds."""
+    build → upsert → all-new upsert → delete → compact leave the
+    session's persisted RDD count where it started, for both index
+    kinds."""
     from pyf_aggregator_spark.index.incremental import (
         compact,
         delete_docs,
@@ -821,6 +822,7 @@ def test_writer_releases_every_persist(spark, tmp_path, kind):
         schema = "doc_id long, text string"
         rows = [(i, f"w{i % 7:05d} doc{i}") for i in range(60)]
         ups = [(2, "changed w00001"), (60, "new w00002")]
+        fresh = [(61, "fresh w00003"), (62, "fresh w00004")]
 
         def build(d):
             build_segments(spark.createDataFrame(rows, schema), d,
@@ -829,6 +831,7 @@ def test_writer_releases_every_persist(spark, tmp_path, kind):
         schema = "doc_id long, name string, body string"
         rows = [(i, f"pkg{i}", f"body w{i % 5}") for i in range(60)]
         ups = [(2, "pkg2 changed", "body w1"), (60, "new", "w2")]
+        fresh = [(61, "fresh", "w3"), (62, "fresh2", "w4")]
 
         def build(d):
             build_multifield_segments(spark.createDataFrame(rows, schema), d,
@@ -839,6 +842,53 @@ def test_writer_releases_every_persist(spark, tmp_path, kind):
         d = str(tmp_path / f"{kind}{rnd}")
         build(d)
         upsert_docs(spark, d, spark.createDataFrame(ups, schema))
+        # ids above the index's max doc id: the all-new branch
+        upsert_docs(spark, d, spark.createDataFrame(fresh, schema))
         delete_docs(spark, d, [5, 6])
         compact(spark, d, num_partitions=2)
     assert persisted() == start
+
+
+def test_write_job_budgets(spark, tmp_path):
+    """Job counts of the write path are fixed by the plan, so they are
+    pinned on one small index: an append, an all-new upsert_docs of the
+    same delta at the same shifted ids (the branch append_segments
+    takes, so the two cost the same and leave the same tables) and a
+    mixed upsert (half updated ids, half new)."""
+    import shutil
+
+    from conftest import count_jobs
+    from pyf_aggregator_spark.index.incremental import upsert_docs
+
+    base = assign_doc_ids(transcripts_df(spark, 600), num_partitions=2).select(
+        "doc_id", "text"
+    )
+    d = str(tmp_path / "base")
+    build_segments(base, d, num_partitions=2, lineage="b")
+    n = spark.read.parquet(f"{d}/doc_stats").count()
+    dirs = {k: str(tmp_path / k) for k in ("append", "all_new", "mixed")}
+    for p in dirs.values():
+        shutil.copytree(d, p)
+    rows = [(i, f"delta w{i % 13:05d} doc{i}") for i in range(60)]
+    schema = "doc_id long, text string"
+    delta = spark.createDataFrame(rows, schema)
+    shifted = spark.createDataFrame([(n + i, t) for i, t in rows], schema)
+    mixed = spark.createDataFrame(
+        [(i * 7, t) for i, t in rows[:30]] + [(n + i, t) for i, t in rows[30:]],
+        schema,
+    )
+    jobs = {
+        "append": count_jobs(spark, lambda: append_segments(
+            delta, dirs["append"], num_partitions=2, lineage="x")),
+        "all_new": count_jobs(spark, lambda: upsert_docs(
+            spark, dirs["all_new"], shifted, num_partitions=2, lineage="x")),
+        "mixed": count_jobs(spark, lambda: upsert_docs(
+            spark, dirs["mixed"], mixed, lineage="x")),
+    }
+    assert jobs == {"append": 12, "all_new": 12, "mixed": 26}
+    for t in ("segments", "meta", "term_stats", "corpus", "doc_stats"):
+        a, b = (
+            sorted(map(tuple, spark.read.parquet(f"{dirs[k]}/{t}").collect()))
+            for k in ("append", "all_new")
+        )
+        assert a == b, t

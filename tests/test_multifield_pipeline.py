@@ -119,7 +119,8 @@ def test_upsert_multifield_equals_rebuild(spark, tmp_path):
     gap): upsert whole documents (update + insert) WITHOUT a rebuild;
     the weighted query must be rank- and score-identical to a fresh
     build over the modified field table — including a second upsert on
-    top of the first (tombstone scoping + exact per-field stats)."""
+    top of the first (tombstone scoping + exact per-field stats) and an
+    append_segments of new documents on top of both."""
     from pyf_aggregator_spark.index.incremental import upsert_docs
     from pyf_aggregator_spark.index.segments import build_multifield_segments
     from pyf_aggregator_spark.search.wand import (
@@ -155,8 +156,22 @@ def test_upsert_multifield_equals_rebuild(spark, tmp_path):
         spark, d, spark.createDataFrame(ups2, schema)
     )
 
+    # new documents through append_segments: dense ids from 0, shifted
+    # above the index's max doc id
+    from pyf_aggregator_spark.index.incremental import append_segments
+
+    delta = [
+        (0, "appended-pkg", "quantum appended", "w2 appended body"),
+        (1, "pkg-b", "", "quantum body w3"),
+    ]
+    info = append_segments(
+        spark.createDataFrame(delta, schema), d, num_partitions=2, lineage="ap"
+    )
+    assert info["doc_base"] == 42 and info["n_delta_docs"] == 2
+    appended = [(i + info["doc_base"], *rest) for i, *rest in delta]
+
     merged = {r[0]: r for r in base_rows}
-    for r in ups1 + ups2:
+    for r in ups1 + ups2 + appended:
         merged[r[0]] = r
     ref_df = spark.createDataFrame(sorted(merged.values()), schema)
     d2 = str(tmp_path / "mfref")

@@ -274,6 +274,47 @@ def test_wand_batch_filtered_empty_allowed(built):
     assert (got["query_id"] == "u").sum() == 5
 
 
+def test_docs_per_part_widths(monkeypatch):
+    """One geometry rule for dense and sparse ids. Dense ids (n_docs ==
+    span) get the widths of sizing by document count; below the cap a
+    sparse id range is cut into ceil(span / num_partitions)-wide
+    ranges; above the cap, ranges over evenly spread sparse ids hold
+    at most cap docs each."""
+    import math
+
+    from pyf_aggregator_spark.index.segments import _docs_per_part
+
+    cap, waves = 100, 8
+    monkeypatch.setenv("PYFAGG_DOCS_PER_PART", str(cap))
+    monkeypatch.setenv("PYFAGG_MIN_CAPPED_WAVES", str(waves))
+
+    def by_count(n, num_partitions):
+        width = max(1, math.ceil(n / num_partitions))
+        if width > cap:
+            tasks = max(math.ceil(n / cap), num_partitions * waves)
+            width = max(1, math.ceil(n / tasks))
+        return width
+
+    for n in (1, 7, 99, 100, 101, 399, 400, 1_000, 12_345):
+        for num_partitions in (1, 2, 3, 4, 8):
+            assert _docs_per_part(n, n, num_partitions) == by_count(
+                n, num_partitions
+            ), (n, num_partitions)
+    # below the cap: the span decides (an upsert of 60 ids spread over a
+    # 5,000-id range stays one part at one partition)
+    assert _docs_per_part(60, 5_000, 1) == 5_000
+    assert _docs_per_part(150, 1_000, 2) == 500
+    assert _docs_per_part(150, 1_001, 4) == 251
+    # above the cap: every third id of a 3,000-id range
+    for num_partitions in (1, 2, 4):
+        ids = list(range(0, 3_000, 3))
+        width = _docs_per_part(len(ids), ids[-1] + 1, num_partitions)
+        per_part: dict[int, int] = {}
+        for i in ids:
+            per_part[i // width] = per_part.get(i // width, 0) + 1
+        assert max(per_part.values()) <= cap, num_partitions
+
+
 def test_docs_per_part_cap_bounds_task_memory(built, tmp_path, monkeypatch):
     """The r4 scale fix: when the caller doesn't pin geometry, doc
     ranges are capped at PYFAGG_DOCS_PER_PART so encode-task memory is
